@@ -1,16 +1,26 @@
 package graft.index
 
-/** Bounded top-k buffer for blocked (mapPartitions) kernels: insertion-
-  * sorted primitive arrays ordered ascending by (dist, id) — the engine's
-  * deterministic tie-break (flat.go:106-108 refined, SURVEY.md §7.3).
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
+
+/** Bounded top-k buffer: insertion-sorted primitive arrays ordered
+  * ascending by (dist, id) — the engine's deterministic tie-break
+  * (flat.go:106-108 refined, SURVEY.md §7.3). Keys compare the way
+  * Spark's sort compares doubles (`SQLOrderingUtil.compareDoubles`):
+  * -0.0 equals 0.0 and NaN sorts after +∞, so a heap ranks exactly like
+  * the `row_number()` window of [[FlatIndex.topK]].
   *
   * A candidate is accepted iff the buffer has room or it beats the
   * current k-th entry; inserts are O(k) shifts on primitive arrays (no
-  * boxing, no allocation after construction). Shared by every blocked
-  * kernel (flat / PQ-ADC / IVF / IVFPQ / LSH) and the serving merge so
-  * the tie-break semantics can't drift between paths.
+  * boxing, no allocation after construction). Every blocked kernel,
+  * server and in-process scan fills these, and [[BoundedTopK.merge]] is
+  * the one cross-partition merge, so the order can't drift between
+  * paths.
   */
-private[graft] final class BoundedTopK(k: Int) {
+private[graft] final class BoundedTopK(k: Int) extends Serializable {
   // k == 0 would make insert() read dists(-1); callers clamp k <= 0 to the
   // "all rows" path before constructing (flat.go:82-84), so fail loudly here
   require(k > 0, s"BoundedTopK requires k > 0, got $k")
@@ -20,10 +30,12 @@ private[graft] final class BoundedTopK(k: Int) {
 
   def insert(id: Long, d: Double): Unit = {
     val sz = size
-    if (sz < k || d < dists(sz - 1) || (d == dists(sz - 1) && id < ids(sz - 1))) {
+    // the hot reject: one comparison while the k-th key is a number; a
+    // NaN on either side falls through to the full order below
+    if (sz == k && d > dists(sz - 1)) return
+    if (sz < k || BoundedTopK.before(d, id, dists(sz - 1), ids(sz - 1))) {
       var pos = if (sz < k) sz else k - 1
-      while (pos > 0 && (dists(pos - 1) > d ||
-          (dists(pos - 1) == d && ids(pos - 1) > id))) {
+      while (pos > 0 && BoundedTopK.before(d, id, dists(pos - 1), ids(pos - 1))) {
         dists(pos) = dists(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
       }
       dists(pos) = d; ids(pos) = id
@@ -44,20 +56,120 @@ private[graft] final class BoundedTopK(k: Int) {
     insert(id, d)
   }
 
-  /** This buffer's (id, dist) entries, ascending. */
-  def drainIterator: Iterator[(Long, Double)] =
-    (0 until size).iterator.map(r => (ids(r), dists(r)))
+  /** Insert every entry of `other` (distinct-by-id when `distinct`). The
+    * result is insertion-order independent: the k smallest under the
+    * total (dist, id) order. */
+  def mergeFrom(other: BoundedTopK, distinct: Boolean): Unit = {
+    var r = 0
+    while (r < other.size) {
+      if (distinct) insertDistinct(other.ids(r), other.dists(r))
+      else insert(other.ids(r), other.dists(r))
+      r += 1
+    }
+  }
 
-  /** (id, dist, rank) with rank 1..size. */
-  def ranked: Array[(Long, Double, Int)] =
-    Array.tabulate(size)(r => (ids(r), dists(r), r + 1))
+  /** (id, finish(dist), rank) with rank 1..size; `finish` is the
+    * metric's last step on a rank key (√ for L2). */
+  def ranked(finish: Double => Double): Array[(Long, Double, Int)] =
+    Array.tabulate(size)(r => (ids(r), finish(dists(r)), r + 1))
 }
 
 private[graft] object BoundedTopK {
-  /** Flatten one partition's per-query heaps into the partial-result rows
-    * every blocked kernel emits: (query_id, neighbor_id, rank_key). */
-  def drain(heaps: Array[BoundedTopK], qids: Array[Long]): Iterator[(Long, Long, Double)] =
-    heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-      (0 until h.size).iterator.map(r => (qids(qi), h.ids(r), h.dists(r)))
+
+  /** (d, id) strictly before (d2, id2): Spark's double order, then id. */
+  @inline def before(d: Double, id: Long, d2: Double, id2: Long): Boolean =
+    if (d < d2) true
+    else if (d > d2) false
+    else if (d == d2) id < id2
+    else { // a NaN is involved: NaN after every number, NaN equals NaN
+      val c = java.lang.Double.compare(d, d2)
+      c < 0 || (c == 0 && id < id2)
     }
+
+  /** The query batch on the driver: LONG `query_id`s and primitive
+    * `qvec`s, in collect order. A duplicate id is rejected — its two
+    * queries' results would be indistinguishable in the output. */
+  def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Double]]) = {
+    val rows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
+    val ids = rows.map(_.getLong(0))
+    val seen = new scala.collection.mutable.LongMap[Unit](ids.length * 2)
+    ids.foreach { q =>
+      require(!seen.contains(q), s"duplicate query_id $q in the query batch")
+      seen(q) = ()
+    }
+    (ids, rows.map(_.getSeq[Double](1).toArray))
+  }
+
+  /** The one top-k merge. `scan` runs once per partition of `rows` and
+    * returns that partition's heaps, one per query (or none for a
+    * partition with nothing to offer); `treeAggregate` at depth 1 folds
+    * them into `nq` heaps on the driver as the task results arrive. Its
+    * zero is `nq` empty heaps, so a corpus with zero partitions — or only
+    * empty ones — yields empty heaps rather than an error. One job, no
+    * shuffle: the driver receives at most k entries per query per
+    * partition. `distinct` skips ids already merged (the replicated
+    * routed graph, where one id can surface from several partitions with
+    * the same rank key). */
+  def merge[T](rows: RDD[T], nq: Int, k: Int, distinct: Boolean = false)(
+      scan: Iterator[T] => Array[BoundedTopK]): Array[BoundedTopK] = {
+    if (nq == 0) return Array.empty
+    val combine = (acc: Array[BoundedTopK], part: Array[BoundedTopK]) => {
+      var qi = 0
+      while (qi < part.length) { acc(qi).mergeFrom(part(qi), distinct); qi += 1 }
+      acc
+    }
+    rows.mapPartitions(it => Iterator.single(scan(it)))
+      .treeAggregate(Array.fill(nq)(new BoundedTopK(k)))(combine, combine, depth = 1)
+  }
+
+  /** Merged heaps → the kNN result as one local relation:
+    * (query_id, neighbor_id, distance, rank), rank 1..k per query,
+    * `finish` applied to each rank key (the metric's sqrt for L2). Its
+    * EXPLAIN shows the plan of `scanned`, the table the heaps came from. */
+  def toFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK],
+      finish: Double => Double): DataFrame =
+    org.apache.spark.sql.graftx.ResultFrames.knn(scanned, qids.indices.flatMap { qi =>
+      heaps(qi).ranked(finish).map { case (id, d, r) => (qids(qi), id, d, r) }
+    })
+}
+
+/** Rows grouped by a non-negative int tag (IVF cluster id, LSH bucket):
+  * one primitive sort of packed `tag<<32|row` keys — no boxing, stable
+  * within a tag — and a per-tag start offset table. Grouped row `r` is
+  * source row `order(r)`; its tag run is `tags(t)` over rows
+  * `[starts(t), starts(t + 1))`. Each caller permutes its own payload
+  * with [[gather]]. */
+private[graft] final class TagGroups(rowTags: Array[Int]) {
+  val order: Array[Int] = {
+    val n = rowTags.length
+    val keys = new Array[Long](n)
+    var r = 0
+    while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
+    java.util.Arrays.sort(keys)
+    keys.map(key => (key & 0xFFFFFFFFL).toInt)
+  }
+
+  val (tags: Array[Int], starts: Array[Int]) = {
+    val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
+    val startList = scala.collection.mutable.ArrayBuilder.make[Int]
+    var r = 0
+    while (r < order.length) {
+      val tag = rowTags(order(r))
+      if (r == 0 || tag != rowTags(order(r - 1))) { tagList += tag; startList += r }
+      r += 1
+    }
+    startList += order.length
+    (tagList.result(), startList.result())
+  }
+
+  /** `src` (rows of `width` elements) in grouped row order. */
+  def gather[A: ClassTag](src: Array[A], width: Int): Array[A] = {
+    val out = new Array[A](order.length * width)
+    var r = 0
+    while (r < order.length) {
+      System.arraycopy(src, order(r) * width, out, r * width, width)
+      r += 1
+    }
+    out
+  }
 }

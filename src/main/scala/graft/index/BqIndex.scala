@@ -29,8 +29,8 @@ import graft.core.Metric
   * bit-identical by construction.
   *
   * 100 TB: model = dim doubles broadcast; encode is a pure projection;
-  * the scan reads dim/8 bytes per row; the blocked kernel bounds the
-  * merge at ≤ k·partitions rows per query.
+  * the scan reads dim/8 bytes per row; the blocked kernel merges one
+  * bounded heap per query per partition on the driver.
   */
 final case class BqModel(thresholds: Seq[Double], metric: Metric) {
   def dim: Int = thresholds.size
@@ -103,70 +103,63 @@ object BqIndex {
   }
 
   /** Blocked serving kernel — result-identical to [[knn]] (same packed
-    * words, same (hamming, id) tie-break), ≤ k·partitions rows per query
-    * reach the merge. */
+    * words, same (hamming, id) tie-break): each partition fills one heap
+    * per query and [[BoundedTopK.merge]] combines them on the driver into
+    * a local relation, so the scan job runs when this is called. */
   def knnBlocked(codes: DataFrame, model: BqModel, queries: DataFrame, k: Int): DataFrame = {
     if (k <= 0) return knn(codes, model, queries, k)
     val spark = codes.sparkSession
     import spark.implicits._
     val th = model.thresholdArray
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qcodes = qRows.map(r => packLocal(r.getSeq[Double](1).toArray, th))
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val qcodes = qvecs.map(packLocal(_, th))
     val words = model.words
-    val bc = spark.sparkContext.broadcast((qids, qcodes))
-    val partials = codes.select(col("id").cast("long"), col("code"))
+    val bc = spark.sparkContext.broadcast(qcodes)
+    val scanned = codes.select(col("id").cast("long"), col("code"))
       .as[(Long, Array[Long])] // primitive decode — no per-element boxing
-      .mapPartitions { it =>
-        // Flat-pack the partition's words once, then scan QUERY-OUTER
-        // (query words in registers, rows contiguous, ONE resident heap)
-        // — the rows-outer form touched all nq heaps + nq query arrays
-        // per row and lost 5× task-CPU to LLC thrash at 32 threads
-        // (VERDICT r12 wrong #1). Heap contents are insertion-order
-        // independent, so partials are bit-identical.
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val wordsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        while (it.hasNext) {
-          val (id, code) = it.next()
-          require(code.length == words,
-            s"code row for id=$id has ${code.length} words, model has $words")
-          idsB += id
-          wordsB ++= code
-        }
-        val ids = idsB.result()
-        val data = wordsB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val (qidArr, qs) = bc.value
-          qs.indices.iterator.flatMap { qi =>
-            val qc = qs(qi)
-            val h = new BoundedTopK(k)
-            var r = 0
-            var off = 0
-            while (r < n) {
-              var d = 0L
-              var w = 0
-              while (w < words) {
-                d += java.lang.Long.bitCount(data(off + w) ^ qc(w))
-                w += 1
-              }
-              h.insert(ids(r), d.toDouble)
-              r += 1
-              off += words
-            }
-            val qid = qidArr(qi)
-            (0 until h.size).iterator.map(s => (qid, h.ids(s), h.dists(s)))
-          }
-        }
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
+      // Flat-pack the partition's words once, then scan QUERY-OUTER
+      // (query words in registers, rows contiguous, ONE resident heap)
+      // — the rows-outer form touched all nq heaps + nq query arrays
+      // per row and lost 5× task-CPU to LLC thrash at 32 threads
+      // (VERDICT r12 wrong #1). Heap contents are insertion-order
+      // independent, so heaps are bit-identical.
+      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      val wordsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      while (it.hasNext) {
+        val (id, code) = it.next()
+        require(code.length == words,
+          s"code row for id=$id has ${code.length} words, model has $words")
+        idsB += id
+        wordsB ++= code
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    val w = Window.partitionBy("query_id").orderBy(col("rank_key"), col("neighbor_id"))
-    partials
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      val ids = idsB.result()
+      val data = wordsB.result()
+      val n = ids.length
+      val qs = bc.value
+      if (n == 0) Array.empty[BoundedTopK]
+      else Array.tabulate(qs.length) { qi =>
+        val qc = qs(qi)
+        val h = new BoundedTopK(k)
+        var r = 0
+        var off = 0
+        while (r < n) {
+          var d = 0L
+          var w = 0
+          while (w < words) {
+            d += java.lang.Long.bitCount(data(off + w) ^ qc(w))
+            w += 1
+          }
+          h.insert(ids(r), d.toDouble)
+          r += 1
+          off += words
+        }
+        h
+      }
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, identity)
       .select(col("query_id"), col("neighbor_id"),
-        col("rank_key").cast("long").as("hamming"), col("rank"))
+        col("distance").cast("long").as("hamming"), col("rank"))
   }
 
   /** Driver-side packing of one query — same MSB-first fold as

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,8 @@ import graft.core.Metric
   *
   * At 100 TB the corpus side streams straight off parquet with only the
   * `id`/`vec` columns read; the only shuffle is the final per-query top-k
-  * reduction.
+  * reduction, which [[knnBlocked]] replaces with a driver merge of
+  * per-partition heaps.
   */
 object FlatIndex {
 
@@ -39,87 +40,60 @@ object FlatIndex {
         col("id").as("neighbor_id"),
         metric.rankKey(col("qvec"), col("vec")).as("rank_key"))
 
-  /** Batch kNN via the bounded partial aggregator
-    * ([[graft.functions.TopKAggregator]]): map-side combine cuts the
-    * top-k shuffle from n·q rows to ≤ k·partitions per query — the
-    * formulation that survives 100 TB. Result-identical to [[knn]]. */
-  def knnAgg(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame =
-    topKAgg(distanceJoin(corpus, queries, metric), k, metric)
-
-  /** Aggregator-based per-query top-k (shuffle-lean variant of [[topK]]). */
-  def topKAgg(distances: DataFrame, k: Int, metric: Metric = Metric.L2): DataFrame = {
-    val tk = graft.functions.TopKAggregator.topk(k)
-    distances
-      .groupBy(col("query_id"))
-      .agg(tk(col("neighbor_id"), col("rank_key")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "nn")))
-      .select(
-        col("query_id"),
-        col("nn.id").as("neighbor_id"),
-        metric.finishRank(col("nn.dist")).as("distance"),
-        (col("pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Batch kNN via a blocked mapPartitions kernel: the corpus partition
-    * streams once through a primitive-array loop holding a bounded
-    * (dist, id)-ordered buffer per query — the n·q candidate rows are
-    * never materialized, and the final top-k merge sees at most
-    * k·partitions rows per query. This is the BLAS-style kernel every
-    * batch brute-force scan wants; results are identical to [[knn]]
-    * (same rank-key arithmetic, same tie-break). Queries must fit in a
-    * broadcast (they are the small side by construction). */
+  /** Batch kNN via a blocked scan: each corpus partition is packed once
+    * into a flat primitive block and scanned query-outer into one bounded
+    * (dist, id) heap per query — the n·q candidate rows are never
+    * materialized — and [[BoundedTopK.merge]] combines the partitions'
+    * heaps on the driver. Result-identical to [[knn]] (same rank-key
+    * arithmetic, same tie-break) and returned as a local relation: the
+    * scan job runs when this is called. Queries must fit on the driver
+    * (they are the small side by construction). */
   def knnBlocked(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame = {
     if (k <= 0) return knn(corpus, queries, k, metric) // clamp-to-all path
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast((qids, qvecs))
-    val partials = corpus.select(col("id").cast("long"), col("vec"))
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val bc = spark.sparkContext.broadcast(qvecs)
+    val scanned = corpus.select(col("id").cast("long"), col("vec"))
       .as[(Long, Array[Double])] // primitive decode — no per-element boxing
-      .mapPartitions { it =>
-        // Pack the partition ONCE into a flat primitive block (the
-        // ServeBlock layout), then scan QUERY-OUTER: one resident heap
-        // and one contiguous row walk per query. The r5 rows-outer loop
-        // touched all nq heaps per row — ~nq scattered cache lines per
-        // row, a working set that thrashed the shared LLC once 32 tasks
-        // ran it (VERDICT r12 wrong #1: the quantized-family QPS rows
-        // read FASTER at 8 cores than 32; measured: the same scan cost
-        // 5× the task-CPU at 32 threads). Heap CONTENTS are insertion-
-        // order independent (k smallest by total (dist, id) order), so
-        // the transposed loop emits bit-identical partials.
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-        var dim = -1
-        while (it.hasNext) {
-          val (id, v) = it.next()
-          idsB += id
-          if (dim < 0) dim = v.length
-          require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-          dataB ++= v
-        }
-        val ids = idsB.result()
-        val data = dataB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val (qidArr, qs) = bc.value
-          qs.indices.iterator.flatMap { qi =>
-            val q = qs(qi)
-            val h = new BoundedTopK(k)
-            var r = 0
-            while (r < n) {
-              h.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-              r += 1
-            }
-            val qid = qidArr(qi)
-            (0 until h.size).iterator.map(s => (qid, h.ids(s), h.dists(s)))
-          }
-        }
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
+      // Pack the partition ONCE into a flat primitive block (the
+      // ServeBlock layout), then scan QUERY-OUTER: one resident heap
+      // and one contiguous row walk per query. The r5 rows-outer loop
+      // touched all nq heaps per row — ~nq scattered cache lines per
+      // row, a working set that thrashed the shared LLC once 32 tasks
+      // ran it (VERDICT r12 wrong #1: the quantized-family QPS rows
+      // read FASTER at 8 cores than 32; measured: the same scan cost
+      // 5× the task-CPU at 32 threads). Heap CONTENTS are insertion-
+      // order independent (k smallest by total (dist, id) order), so
+      // the transposed loop gives bit-identical heaps.
+      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
+      var dim = -1
+      while (it.hasNext) {
+        val (id, v) = it.next()
+        idsB += id
+        if (dim < 0) dim = v.length
+        require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
+        dataB ++= v
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    topK(partials, k, metric)
+      val ids = idsB.result()
+      val data = dataB.result()
+      val n = ids.length
+      val qs = bc.value
+      if (n == 0) Array.empty[BoundedTopK]
+      else Array.tabulate(qs.length) { qi =>
+        val q = qs(qi)
+        val h = new BoundedTopK(k)
+        var r = 0
+        while (r < n) {
+          h.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
+          r += 1
+        }
+        h
+      }
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
   }
 
   /** Per-query top-k over a (query_id, neighbor_id, rank_key) frame.

@@ -366,9 +366,10 @@ object HnswIndex {
   /** Batch kNN over the sharded graph: broadcast the query batch, fan
     * out to every shard (rebuilt node-map + stored edges — O(n) load, no
     * re-insertion), run the reference's descent + layer-0 ef-search per
-    * query per shard, and merge shard-local top-ks through the shared
-    * [[BoundedTopK]] → [[FlatIndex.topK]] pipeline. At most k·shards
-    * rows reach the final merge per query. The defensive shard
+    * query per shard into one heap per query per partition, and combine
+    * the partitions' heaps on the driver with [[BoundedTopK.merge]]; the
+    * result is a local relation, so the walk job runs when this is
+    * called. The defensive shard
     * repartition keeps each graph whole even if the input frame was
     * re-read or filtered; k ≤ 0 clamps to the engine-wide "all rows
     * ranked" brute-force path (flat.go:82-84 semantics).
@@ -381,36 +382,32 @@ object HnswIndex {
     if (k <= 0)
       return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
     val spark = graph.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast((qids, qvecs))
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val bc = spark.sparkContext.broadcast(qvecs)
     val ef = math.max(efSearch, k)
     val nShards =
       if (numShards > 0) numShards
       else graph.agg(max(col("shard"))).head.getInt(0) + 1
-    val partials = shardGrouped(graph, nShards)
-      .mapPartitions { it =>
-        val (ids, qs) = bc.value
-        val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-        val byShard = new mutable.HashMap[
-          Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
-        it.foreach { case (s, id, v, l, e) =>
-          byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
-        }
-        byShard.valuesIterator.foreach { rows =>
-          val g = CompiledHnsw.fromTuples(rows, metric)
-          var qi = 0
-          while (qi < qs.length) {
-            g.knnInto(qs(qi), k, ef, heaps(qi))
-            qi += 1
-          }
-        }
-        BoundedTopK.drain(heaps, ids)
+    val scanned = shardGrouped(graph, nShards)
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
+      val qs = bc.value
+      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
+      val byShard = new mutable.HashMap[
+        Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
+      it.foreach { case (s, id, v, l, e) =>
+        byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, metric)
+      byShard.valuesIterator.foreach { rows =>
+        val g = CompiledHnsw.fromTuples(rows, metric)
+        var qi = 0
+        while (qi < qs.length) {
+          g.knnInto(qs(qi), k, ef, heaps(qi))
+          qi += 1
+        }
+      }
+      heaps
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
   }
 
   /** Graph rows range-partitioned by shard — whole shards per partition

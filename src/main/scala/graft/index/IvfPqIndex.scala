@@ -96,8 +96,9 @@ object IvfPqIndex {
     * Each codes partition streams once; a row is ADC-scored only against
     * the queries probing its cluster, with the same per-subspace fold
     * order as the PqAdc expression (bit-identical distances). Candidates
-    * are never materialized or shuffled — the final merge sees
-    * ≤ k·partitions rows per query.
+    * are never materialized or shuffled: each partition fills one heap
+    * per query and [[BoundedTopK.merge]] combines them on the driver into
+    * a local relation, so the scan job runs when this is called.
     *
     * ADC tables hoist *adaptively, per cluster range*: a driver-side
     * hoist of all nq·nprobe M×Ksub tables would broadcast ≈ 160 MB at
@@ -128,9 +129,7 @@ object IvfPqIndex {
     val cbs = model.pq.codebookArrays
     val m = model.pq.m
     val dsub = model.pq.dsub
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     // cluster -> (probing query indices, their residuals w.r.t. that centroid)
     val nlist = model.coarse.nlist
     // per-query probe ranking + residuals are pure per slot — DriverPar
@@ -165,129 +164,105 @@ object IvfPqIndex {
       qi += 1
     }
     val inv = Array.tabulate(nlist)(c => (qiBuf(c).toArray, resBuf(c).toArray))
-    val bc = spark.sparkContext.broadcast((qids, inv, cbs))
-    val partials = codes
+    val bc = spark.sparkContext.broadcast((inv, cbs))
+    val scanned = codes
       .select(col("id").cast("long"), col("cluster_id"), col("code"))
       .as[(Long, Int, Array[Int])]
-      .mapPartitions { it =>
-        // Pack the partition CLUSTER-GROUPED (stable primitive sort by
-        // packed `cid<<32|row` keys), then scan cluster-outer / query-
-        // inner: each probing query walks its cluster's codes as ONE
-        // contiguous range with ONE resident heap and (when hoisted) ONE
-        // cache-resident flat ADC table. The rows-outer form touched
-        // qlist.length scattered heaps per row and thrashed the LLC at
-        // 32 tasks (VERDICT r12 wrong #1: ivfpq/opq_ivfpq QPS rows
-        // anti-scaled with cores). The adaptive per-row hoist becomes a
-        // per-range decision (range length known up front — build the
-        // table iff the range outweighs the table's dim·Ksub flops);
-        // table and direct forms add the SAME doubles in the SAME
-        // ascending-mi order (pinned bit-identical), and heap contents
-        // are insertion-order independent → partials bit-identical.
-        val (qidArr, inverted, cbs) = bc.value
-        val ksub = cbs(0).length
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-        val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
-        while (it.hasNext) {
-          val (id, cid, code) = it.next()
-          require(cid >= 0, s"negative cluster_id $cid for id=$id")
-          require(code.length == m,
-            s"code row for id=$id has ${code.length} codes, model has $m")
-          idsB += id
-          tagsB += cid
-          codesB ++= code
-        }
-        val ids = idsB.result()
-        val rowTags = tagsB.result()
-        val codeArr = codesB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val gIds = new Array[Long](n)
-          val gCodes = new Array[Int](n * m)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            gIds(r) = ids(src)
-            System.arraycopy(codeArr, src * m, gCodes, r * m, m)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          val tags = tagList.result()
-          val starts = startList.result()
-          val heaps = Array.fill(qidArr.length)(new BoundedTopK(k))
-          val tabBuf = new Array[Double](m * ksub) // reused per (cluster, query)
-          var t = 0
-          while (t < tags.length) {
-            val (qlist, rlist) = inverted(tags(t))
-            val lo = starts(t)
-            val hi = starts(t + 1)
-            val useTable = (hi - lo) > hoistAt
-            var li = 0
-            while (li < qlist.length) {
-              val h = heaps(qlist(li))
-              val res = rlist(li)
-              if (useTable) {
-                // entry mi·ksub + j: same inner fold as the direct form
-                var mi = 0
-                while (mi < m) {
-                  val off = mi * dsub
-                  var j = 0
-                  while (j < ksub) {
-                    val row = cbs(mi)(j)
-                    var d = 0.0
-                    var i = 0
-                    while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                    tabBuf(mi * ksub + j) = d
-                    j += 1
-                  }
-                  mi += 1
-                }
-                var rr = lo
-                while (rr < hi) {
-                  val cOff = rr * m
-                  var acc = 0.0
-                  var mi2 = 0
-                  while (mi2 < m) { acc += tabBuf(mi2 * ksub + gCodes(cOff + mi2)); mi2 += 1 }
-                  h.insert(gIds(rr), acc)
-                  rr += 1
-                }
-              } else {
-                var rr = lo
-                while (rr < hi) {
-                  val cOff = rr * m
-                  var acc = 0.0
-                  var mi2 = 0
-                  while (mi2 < m) {
-                    val row = cbs(mi2)(gCodes(cOff + mi2))
-                    val off = mi2 * dsub
-                    var d = 0.0
-                    var i = 0
-                    while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                    acc += d
-                    mi2 += 1
-                  }
-                  h.insert(gIds(rr), acc)
-                  rr += 1
-                }
-              }
-              li += 1
-            }
-            t += 1
-          }
-          BoundedTopK.drain(heaps, qidArr)
-        }
+    val nq = qids.length
+    val heaps = BoundedTopK.merge(scanned.rdd, nq, k) { it =>
+      // Pack the partition CLUSTER-GROUPED ([[TagGroups]]), then scan
+      // cluster-outer / query-inner: each probing query walks its
+      // cluster's codes as ONE contiguous range with ONE resident heap and (when hoisted) ONE
+      // cache-resident flat ADC table. The rows-outer form touched
+      // qlist.length scattered heaps per row and thrashed the LLC at
+      // 32 tasks (VERDICT r12 wrong #1: ivfpq/opq_ivfpq QPS rows
+      // anti-scaled with cores). The adaptive per-row hoist becomes a
+      // per-range decision (range length known up front — build the
+      // table iff the range outweighs the table's dim·Ksub flops);
+      // table and direct forms add the SAME doubles in the SAME
+      // ascending-mi order (pinned bit-identical), and heap contents
+      // are insertion-order independent → heaps bit-identical.
+      val (inverted, cbs) = bc.value
+      val ksub = cbs(0).length
+      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
+      val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
+      while (it.hasNext) {
+        val (id, cid, code) = it.next()
+        require(cid >= 0, s"negative cluster_id $cid for id=$id")
+        require(code.length == m,
+          s"code row for id=$id has ${code.length} codes, model has $m")
+        idsB += id
+        tagsB += cid
+        codesB ++= code
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, Metric.L2)
+      val groups = new TagGroups(tagsB.result())
+      val gIds = groups.gather(idsB.result(), 1)
+      val gCodes = groups.gather(codesB.result(), m)
+      val tags = groups.tags
+      val starts = groups.starts
+      val heaps = Array.fill(nq)(new BoundedTopK(k))
+      val tabBuf = new Array[Double](m * ksub) // reused per (cluster, query)
+      var t = 0
+      while (t < tags.length) {
+        val (qlist, rlist) = inverted(tags(t))
+        val lo = starts(t)
+        val hi = starts(t + 1)
+        val useTable = (hi - lo) > hoistAt
+        var li = 0
+        while (li < qlist.length) {
+          val h = heaps(qlist(li))
+          val res = rlist(li)
+          if (useTable) {
+            // entry mi·ksub + j: same inner fold as the direct form
+            var mi = 0
+            while (mi < m) {
+              val off = mi * dsub
+              var j = 0
+              while (j < ksub) {
+                val row = cbs(mi)(j)
+                var d = 0.0
+                var i = 0
+                while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
+                tabBuf(mi * ksub + j) = d
+                j += 1
+              }
+              mi += 1
+            }
+            var rr = lo
+            while (rr < hi) {
+              val cOff = rr * m
+              var acc = 0.0
+              var mi2 = 0
+              while (mi2 < m) { acc += tabBuf(mi2 * ksub + gCodes(cOff + mi2)); mi2 += 1 }
+              h.insert(gIds(rr), acc)
+              rr += 1
+            }
+          } else {
+            var rr = lo
+            while (rr < hi) {
+              val cOff = rr * m
+              var acc = 0.0
+              var mi2 = 0
+              while (mi2 < m) {
+                val row = cbs(mi2)(gCodes(cOff + mi2))
+                val off = mi2 * dsub
+                var d = 0.0
+                var i = 0
+                while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
+                acc += d
+                mi2 += 1
+              }
+              h.insert(gIds(rr), acc)
+              rr += 1
+            }
+          }
+          li += 1
+        }
+        t += 1
+      }
+      heaps
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, math.sqrt)
   }
 }

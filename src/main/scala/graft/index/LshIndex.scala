@@ -91,8 +91,10 @@ object LshIndex {
   /** Blocked ANN kernel, result-identical to [[knn]]: query buckets are
     * computed driver-side, a bucket→queries hash map ships by broadcast,
     * and each index partition streams once, scoring a row only against
-    * the queries in its bucket via the shared [[BoundedTopK]] buffer —
-    * candidates never materialize into a join or shuffle. `query_id` is
+    * the queries in its bucket — candidates never materialize into a join
+    * or shuffle. Each partition fills one heap per query and
+    * [[BoundedTopK.merge]] combines them on the driver into a local
+    * relation, so the scan job runs when this is called. `query_id` is
     * cast to LONG, like every blocked kernel. */
   def knnBlocked(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
       metric: Metric, hamming: Int = 0): DataFrame = {
@@ -100,9 +102,7 @@ object LshIndex {
     if (k <= 0) return knn(indexed, queries, k, planes, metric)
     val spark = indexed.sparkSession
     import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     val byBucket = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]
     def register(b: Long, qi: Int): Unit =
       byBucket.getOrElseUpdate(b, new scala.collection.mutable.ArrayBuffer[Int]) += qi
@@ -112,88 +112,61 @@ object LshIndex {
       if (hamming >= 1) (0 until planes).foreach(p => register(qb ^ (1L << p), qi))
     }
     val inv: Map[Long, Array[Int]] = byBucket.map { case (b, qs) => b -> qs.toArray }.toMap
-    val bc = spark.sparkContext.broadcast((qids, qvecs, inv))
-    // sign-LSH buckets are plane-bit sums < 2^planes, so they pack into
-    // the high word of the grouping sort key below
+    val bc = spark.sparkContext.broadcast((qvecs, inv))
+    // sign-LSH buckets are plane-bit sums < 2^planes, so they fit the
+    // int tags of the grouping sort below
     require(planes <= 31, s"knnBlocked supports planes <= 31, got $planes")
-    val partials = indexed.select(col("id").cast("long"), col("vec"), col("bucket"))
+    val scanned = indexed.select(col("id").cast("long"), col("vec"), col("bucket"))
       .as[(Long, Array[Double], Long)] // primitive decode — no boxing
-      .mapPartitions { it =>
-        // Pack the partition BUCKET-GROUPED (stable primitive sort by
-        // packed `bucket<<32|row` keys), then scan bucket-outer /
-        // query-inner: each registered query walks its bucket's rows as
-        // ONE contiguous range with ONE resident heap. The rows-outer
-        // form touched qlist.length scattered heaps per row — LLC
-        // thrash at 32 tasks (VERDICT r12 wrong #1: lsh_qps anti-scaled
-        // with cores). Heap contents are insertion-order independent →
-        // partials bit-identical.
-        val (qidArr, qs, inverted) = bc.value
-        val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-        val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-        val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-        var dim = -1
-        while (it.hasNext) {
-          val (id, v, b) = it.next()
-          require(b >= 0 && b <= Int.MaxValue, s"bucket $b out of range for id=$id")
-          idsB += id
-          tagsB += b.toInt
-          if (dim < 0) dim = v.length
-          require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-          dataB ++= v
-        }
-        val ids = idsB.result()
-        val rowTags = tagsB.result()
-        val data = dataB.result()
-        val n = ids.length
-        if (n == 0) Iterator.empty
-        else {
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val gIds = new Array[Long](n)
-          val gData = new Array[Double](n * dim)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            gIds(r) = ids(src)
-            System.arraycopy(data, src * dim, gData, r * dim, dim)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          val tags = tagList.result()
-          val starts = startList.result()
-          val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-          var t = 0
-          while (t < tags.length) {
-            inverted.get(tags(t).toLong) match {
-              case Some(qlist) =>
-                var li = 0
-                while (li < qlist.length) {
-                  val qi = qlist(li)
-                  val q = qs(qi)
-                  val h = heaps(qi)
-                  var rr = starts(t)
-                  while (rr < starts(t + 1)) {
-                    h.insert(gIds(rr), metric.rankKeyScalar(q, gData, rr * dim, dim))
-                    rr += 1
-                  }
-                  li += 1
-                }
-              case None =>
-            }
-            t += 1
-          }
-          BoundedTopK.drain(heaps, qidArr)
-        }
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
+      // Pack the partition BUCKET-GROUPED ([[TagGroups]]), then scan
+      // bucket-outer / query-inner: each registered query walks its
+      // bucket's rows as ONE contiguous range with ONE resident heap.
+      // The rows-outer form touched qlist.length scattered heaps per row
+      // — LLC thrash at 32 tasks (VERDICT r12 wrong #1: lsh_qps
+      // anti-scaled with cores). Heap contents are insertion-order
+      // independent → heaps bit-identical.
+      val (qs, inverted) = bc.value
+      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
+      val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
+      val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
+      var dim = -1
+      while (it.hasNext) {
+        val (id, v, b) = it.next()
+        require(b >= 0 && b <= Int.MaxValue, s"bucket $b out of range for id=$id")
+        idsB += id
+        tagsB += b.toInt
+        if (dim < 0) dim = v.length
+        require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
+        dataB ++= v
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, metric)
+      val groups = new TagGroups(tagsB.result())
+      val gIds = groups.gather(idsB.result(), 1)
+      val gData = groups.gather(dataB.result(), dim)
+      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
+      var t = 0
+      while (t < groups.tags.length) {
+        inverted.get(groups.tags(t).toLong) match {
+          case Some(qlist) =>
+            var li = 0
+            while (li < qlist.length) {
+              val qi = qlist(li)
+              val q = qs(qi)
+              val h = heaps(qi)
+              var rr = groups.starts(t)
+              while (rr < groups.starts(t + 1)) {
+                h.insert(gIds(rr), metric.rankKeyScalar(q, gData, rr * dim, dim))
+                rr += 1
+              }
+              li += 1
+            }
+          case None =>
+        }
+        t += 1
+      }
+      heaps
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
   }
 
   // ---- DuckDB fragments ----

@@ -330,62 +330,54 @@ object RoutedHnswIndex {
     * inverted index; a partition loads a shard's graph once and walks it
     * for exactly the queries that probed it; shards no query probed are
     * pruned from the scan before the shuffle (`isin` on the shard column
-    * — a partition filter on a disk-backed graph). ≤ k·probed-shards
-    * rows per query reach the final merge. k ≤ 0 clamps to the
-    * engine-wide brute-force path (flat.go:82-84 semantics). */
+    * — a partition filter on a disk-backed graph). Each partition fills
+    * one heap per query and [[BoundedTopK.merge]] combines them on the
+    * driver, distinct-by-id: a replicated build can surface one id from
+    * shards in different partitions, with the same deterministic rank
+    * key. The result is a local relation, so the walk job runs when this
+    * is called. k ≤ 0 clamps to the engine-wide brute-force path
+    * (flat.go:82-84 semantics). */
   def knn(graph: DataFrame, model: RoutedHnswModel, queries: DataFrame, k: Int,
       probeRegions: Int, efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     val metric = model.metric
     if (k <= 0)
       return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
     val spark = graph.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     val probes = qvecs.map(probeShards(_, model, probeRegions))
     val inv = IvfIndex.invertedProbes(probes, model.numShards)
     val touched = probes.flatten.distinct.sorted
-    if (touched.isEmpty)
-      return FlatIndex.topK(
-        spark.emptyDataset[(Long, Long, Double)]
-          .toDF("query_id", "neighbor_id", "rank_key"), k, metric)
-    val bc = spark.sparkContext.broadcast((qids, qvecs, inv))
+    if (touched.isEmpty) // no shard probed: nothing to walk
+      return BoundedTopK.toFrame(graph, qids,
+        Array.fill(qids.length)(new BoundedTopK(k)), metric.finishRankScalar)
+    val bc = spark.sparkContext.broadcast((qvecs, inv))
     val ef = math.max(efSearch, k)
     val pruned = graph.where(col("shard").isin(touched.map(Int.box): _*))
-    val partials = HnswIndex.shardGrouped(pruned, touched.length)
-      .mapPartitions { it =>
-        val (ids, qs, inverted) = bc.value
-        val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-        val byShard = new mutable.HashMap[
-          Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
-        it.foreach { case (s, id, v, l, e) =>
-          byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
-        }
-        byShard.iterator.foreach { case (shard, rows) =>
-          val qlist = inverted(shard)
-          if (qlist.nonEmpty) {
-            val g = CompiledHnsw.fromTuples(rows, metric)
-            var t = 0
-            while (t < qlist.length) {
-              val qi = qlist(t)
-              // insertDistinct: a replicated build ([[buildReplicated]])
-              // can surface one id from two shards of the same partition
-              g.knnInto(qs(qi), k, ef, heaps(qi), distinct = true)
-              t += 1
-            }
+    val scanned = HnswIndex.shardGrouped(pruned, touched.length)
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k, distinct = true) { it =>
+      val (qs, inverted) = bc.value
+      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
+      val byShard = new mutable.HashMap[
+        Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
+      it.foreach { case (s, id, v, l, e) =>
+        byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
+      }
+      byShard.iterator.foreach { case (shard, rows) =>
+        val qlist = inverted(shard)
+        if (qlist.nonEmpty) {
+          val g = CompiledHnsw.fromTuples(rows, metric)
+          var t = 0
+          while (t < qlist.length) {
+            val qi = qlist(t)
+            // insertDistinct: a replicated build ([[buildReplicated]])
+            // can surface one id from two shards of the same partition
+            g.knnInto(qs(qi), k, ef, heaps(qi), distinct = true)
+            t += 1
           }
         }
-        BoundedTopK.drain(heaps, ids)
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    // Replicated builds can also surface one id from shards in DIFFERENT
-    // partitions; rank keys are deterministic per (query, id), so a
-    // min-agg dedup is exact. No-op on single-assignment graphs, and the
-    // partial frame is tiny (≤ k · probed shards per query).
-    val deduped = partials
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(min(col("rank_key")).as("rank_key"))
-    FlatIndex.topK(deduped, k, metric)
+      heaps
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
   }
 }

@@ -21,8 +21,8 @@ import graft.core.Metric
   *
   * At 100 TB: the model broadcasts as 2·dim doubles; encode is a pure
   * projection (no shuffle); the codes table is what scans at search time
-  * — 4× less IO than flat — and the blocked kernel keeps the top-k
-  * shuffle at ≤ k·partitions rows per query.
+  * — 4× less IO than flat — and the blocked kernel merges one bounded
+  * heap per query per partition on the driver, with no shuffle.
   */
 final case class Sq8Model(mins: Seq[Double], scales: Seq[Double], metric: Metric) {
   def dim: Int = mins.size
@@ -222,46 +222,44 @@ object Sq8Index {
   }
 
   /** Blocked serving kernel — result-identical to [[knn]] (same dequantize
-    * arithmetic, same rank-key fold, same (dist, id) tie-break), shuffling
-    * ≤ k·partitions rows per query. */
+    * arithmetic, same rank-key fold, same (dist, id) tie-break): each
+    * partition fills one heap per query and [[BoundedTopK.merge]]
+    * combines them on the driver into a local relation, so the scan job
+    * runs when this is called. */
   def knnBlocked(codes: DataFrame, model: Sq8Model, queries: DataFrame, k: Int): DataFrame = {
     if (k <= 0) return knn(codes, model, queries, k)
     val spark = codes.sparkSession
     import spark.implicits._
     val metric = model.metric
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast(
-      (qids, qvecs, model.minsArray, model.scalesArray))
-    val partials = codes.select(col("id").cast("long"), col("code"))
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val bc = spark.sparkContext.broadcast((qvecs, model.minsArray, model.scalesArray))
+    val scanned = codes.select(col("id").cast("long"), col("code"))
       .as[(Long, Seq[Byte])]
-      .mapPartitions { it =>
-        val (ids, qs, mins, scales) = bc.value
-        val nq = qs.length
-        val dim = mins.length
-        val heaps = Array.fill(nq)(new BoundedTopK(k))
-        val recon = new Array[Double](dim)
-        while (it.hasNext) {
-          val (id, code) = it.next()
-          // fail fast: a short row would leave the previous row's tail in
-          // the reused recon buffer — silently wrong distances
-          require(code.length == dim,
-            s"code row for id=$id has ${code.length} dims, model has $dim")
-          var d = 0
-          while (d < dim) {
-            recon(d) = mins(d) + (code(d).toInt + 128).toDouble * scales(d)
-            d += 1
-          }
-          var qi = 0
-          while (qi < nq) {
-            heaps(qi).insert(id, metric.rankKeyScalar(qs(qi), recon))
-            qi += 1
-          }
+    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
+      val (qs, mins, scales) = bc.value
+      val nq = qs.length
+      val dim = mins.length
+      val heaps = Array.fill(nq)(new BoundedTopK(k))
+      val recon = new Array[Double](dim)
+      while (it.hasNext) {
+        val (id, code) = it.next()
+        // fail fast: a short row would leave the previous row's tail in
+        // the reused recon buffer — silently wrong distances
+        require(code.length == dim,
+          s"code row for id=$id has ${code.length} dims, model has $dim")
+        var d = 0
+        while (d < dim) {
+          recon(d) = mins(d) + (code(d).toInt + 128).toDouble * scales(d)
+          d += 1
         }
-        BoundedTopK.drain(heaps, ids)
+        var qi = 0
+        while (qi < nq) {
+          heaps(qi).insert(id, metric.rankKeyScalar(qs(qi), recon))
+          qi += 1
+        }
       }
-      .toDF("query_id", "neighbor_id", "rank_key")
-    FlatIndex.topK(partials, k, metric)
+      heaps
+    }
+    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
   }
 }

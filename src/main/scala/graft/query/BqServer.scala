@@ -34,7 +34,7 @@ final class BqServer(codes: DataFrame, model: BqModel) extends ServingRdd {
     require(k > 0, s"serving requires k > 0, got $k")
     val qc = BqIndex.packLocal(q, model.thresholdArray)
     val nw = qc.length
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
@@ -54,11 +54,9 @@ final class BqServer(codes: DataFrame, model: BqModel) extends ServingRdd {
           r += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, d.toLong, r) }
+      Array(merge)
+    }.head
+    top.ranked(identity).map { case (id, d, r) => (id, d.toLong, r) }
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

@@ -59,31 +59,22 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
   def warm(): this.type = { rdd.count(); this }
 
   /** Batch kNN over the RESIDENT graphs — result-identical to
-    * [[HnswIndex.knnBlocked]] (same walks, same [[BoundedTopK]] merge)
+    * [[HnswIndex.knnBlocked]] (same walks, same [[BoundedTopK.merge]])
     * but without its per-job cost of re-parsing every node row back
     * into a graph: one job, graphs already in executor memory. This is
     * the warm-index batch path, the moral equivalent of the reference
-    * searching its in-memory graph (hnsw.go:189-200 BatchSearch).
-    *
-    * The final merge runs on the driver over the bounded partials
-    * (≤ k rows per query per serving partition — the same bounded
-    * collect discipline as [[search]]), and the result materializes as
-    * a local relation: the one executor job is the graph walks, with no
-    * shuffle-stage finisher in the per-batch path. Row content and the
-    * (rank_key, id) rank order are identical to the previous
-    * [[graft.index.FlatIndex.topK]] finisher. */
+    * searching its in-memory graph (hnsw.go:189-200 BatchSearch). The
+    * partitions' heaps merge on the driver and the result is a local
+    * relation, so the walk job runs when this is called. */
   def searchBatch(queries: DataFrame, k: Int,
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     require(k > 0, s"serving requires k > 0, got $k")
     val spark = graph.sparkSession
-    import spark.implicits._
-    val qRows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val qids = qRows.map(_.getLong(0))
-    val qvecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast((qids, qvecs))
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val bc = spark.sparkContext.broadcast(qvecs)
     val ef = math.max(efSearch, k)
-    val partials = rdd.mapPartitions { it =>
-      val (ids, qs) = bc.value
+    val heaps = BoundedTopK.merge(rdd, qids.length, k) { it =>
+      val qs = bc.value
       // queries fan out WITHIN the task: serving partitions are sized
       // for the single-query dispatch tail (ServeBlocks.ServePartitions
       // = 8), which would cap a batch job at 8 cores. Each query owns
@@ -102,18 +93,9 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
           g += 1
         }
       }
-      BoundedTopK.drain(heaps, ids)
-    }.collect()
-    val qPos = new scala.collection.mutable.LongMap[Int](qids.length * 2)
-    qids.zipWithIndex.foreach { case (q, i) => qPos(q) = i }
-    val merged = Array.fill(qids.length)(new BoundedTopK(k))
-    partials.foreach { case (q, id, d) => merged(qPos(q)).insert(id, d) }
-    val rows = qids.indices.iterator.flatMap { qi =>
-      merged(qi).ranked.iterator.map { case (id, d, r) =>
-        (qids(qi), id, m.finishRankScalar(d), r)
-      }
-    }.toSeq
-    spark.createDataset(rows).toDF("query_id", "neighbor_id", "distance", "rank")
+      heaps
+    }
+    BoundedTopK.toFrame(graph, qids, heaps, m.finishRankScalar)
   }
 
   /** One query → top-k (id, distance, rank), driver-merged. */
@@ -121,14 +103,12 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     val ef = math.max(efSearch, k)
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       it.foreach(g => g.knnInto(q, k, ef, merge))
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, m.finishRankScalar(d), r) }
+      Array(merge)
+    }.head
+    top.ranked(m.finishRankScalar)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

@@ -51,7 +51,7 @@ final class IvfPqServer(codes: DataFrame, model: IvfPqModel) extends ServingRdd 
       while (i < q.length) { r(i) = q(i) - cent(i); i += 1 }
       tables(c) = PqIndex.adcTable(r, model.pq)
     }
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
@@ -70,12 +70,10 @@ final class IvfPqServer(codes: DataFrame, model: IvfPqModel) extends ServingRdd 
           r += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
+      Array(merge)
+    }.head
     // ADC reports √ of the summed squared subspace distances (ivfpq.go:533-539)
-    top.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+    top.ranked(math.sqrt)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

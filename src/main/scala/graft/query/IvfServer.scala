@@ -20,8 +20,8 @@ import graft.index.{BoundedTopK, IvfIndex, IvfModel}
   *    boolean cluster mask ships in the task closure (no broadcast, no SQL
   *    plan analysis, no codegen — those cost 0.5–2 s per call through the
   *    DataFrame path and were the round-2 serving pathology);
-  *  - each partition emits its bounded top-k; the driver merges
-  *    ≤ k·partitions candidates.
+  *  - each partition fills one bounded heap; [[BoundedTopK.merge]]
+  *    combines them on the driver.
   *
   * Result order/tie-break matches [[IvfIndex.searchBlocked]] exactly:
   * ascending (rank_key, id).
@@ -45,7 +45,7 @@ final class IvfServer(assigned: DataFrame, model: IvfModel) extends ServingRdd {
     val mask = new Array[Boolean](model.nlist)
     IvfIndex.probeSet(q, cents, metric, np).foreach(mask(_) = true)
     val m = metric
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
@@ -58,11 +58,9 @@ final class IvfServer(assigned: DataFrame, model: IvfModel) extends ServingRdd {
           r += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+      Array(merge)
+    }.head
+    top.ranked(metric.finishRankScalar)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

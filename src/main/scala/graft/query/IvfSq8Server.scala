@@ -54,7 +54,7 @@ final class IvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel)
     // per-task squared-difference table + the family-wide 4-row-pipelined
     // serving fold (Sq8Index.tableScanRange) — see LocalIvfSq8Server,
     // result-identical
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val tab = graft.index.Sq8Index.sqTable(q, mins, scales)
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
@@ -68,11 +68,9 @@ final class IvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel)
           p += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      Array(merge)
+    }.head
+    top.ranked(math.sqrt)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

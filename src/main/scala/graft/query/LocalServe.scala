@@ -87,22 +87,22 @@ private[graft] object LocalServe {
     out
   }
 
-  /** Parallel per-block scan → merged (id, rank_key) candidates.
-    * `distinct` dedups the cross-block merge — required when one id can
-    * live in several blocks (the replicated routed graph,
+  /** Parallel per-block scan → one merged heap: each block fills its own
+    * heap, and the heaps fold with [[BoundedTopK.mergeFrom]] — the fold
+    * step of the distributed [[BoundedTopK.merge]]. `distinct` dedups
+    * the cross-block merge — required when one id can live in several
+    * blocks (the replicated routed graph,
     * [[graft.index.RoutedHnswIndex.buildReplicated]]); within a block an
     * id appears once, so the per-block heaps never need it. */
   def scan[B](blocks: Array[B], k: Int, distinct: Boolean = false)(
       perBlock: (B, BoundedTopK) => Unit): BoundedTopK = {
-    val partials = new Array[Array[(Long, Double)]](blocks.length)
+    val heaps = new Array[BoundedTopK](blocks.length)
     IntStream.range(0, blocks.length).parallel().forEach { bi =>
-      val merge = new BoundedTopK(k)
-      perBlock(blocks(bi), merge)
-      partials(bi) = merge.drainIterator.toArray
+      heaps(bi) = new BoundedTopK(k)
+      perBlock(blocks(bi), heaps(bi))
     }
     val top = new BoundedTopK(k)
-    if (distinct) partials.foreach(_.foreach { case (id, d) => top.insertDistinct(id, d) })
-    else partials.foreach(_.foreach { case (id, d) => top.insert(id, d) })
+    heaps.foreach(top.mergeFrom(_, distinct))
     top
   }
 }
@@ -125,14 +125,14 @@ final class LocalFlatServer(vectors: DataFrame, metric: Metric) {
   def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(scanBlock(q))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+      .ranked(metric.finishRankScalar)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => scanBlock(q))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
+      .map(_.ranked(metric.finishRankScalar))
   }
 }
 
@@ -164,7 +164,7 @@ final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
   def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(maskedScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+      .ranked(metric.finishRankScalar)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
@@ -172,7 +172,7 @@ final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
       nprobe: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => maskedScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
+      .map(_.ranked(metric.finishRankScalar))
   }
 }
 
@@ -203,7 +203,7 @@ final class LocalLshServer(indexed: DataFrame, planes: Int, metric: Metric) {
   def search(q: Array[Double], k: Int, hamming: Int = 1): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(probeScan(q, hamming))
-      .ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+      .ranked(metric.finishRankScalar)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
@@ -211,7 +211,7 @@ final class LocalLshServer(indexed: DataFrame, planes: Int, metric: Metric) {
       hamming: Int = 1): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => probeScan(q, hamming))
-      .map(_.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) })
+      .map(_.ranked(metric.finishRankScalar))
   }
 }
 
@@ -242,14 +242,14 @@ final class LocalPqServer(codes: DataFrame, model: PqModel) {
   def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(adcScan(q))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      .ranked(math.sqrt)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => adcScan(q))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
+      .map(_.ranked(math.sqrt))
   }
 }
 
@@ -275,7 +275,7 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
   def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(tableScan(q))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      .ranked(math.sqrt)
   }
 
   /** Batch throughput: QUERY-GROUP-BLOCKED row-outer kernel — groups of
@@ -347,7 +347,7 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
         }
         var j = 0
         while (j < G) {
-          out(q0 + j) = heaps(j).ranked.map { case (id, d, rk) => (id, math.sqrt(d), rk) }
+          out(q0 + j) = heaps(j).ranked(math.sqrt)
           j += 1
         }
       } else {
@@ -359,7 +359,7 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
           val scan = tableScan(qs(t))
           var bi = 0
           while (bi < blocks.length) { scan(blocks(bi), merge); bi += 1 }
-          out(t) = merge.ranked.map { case (id, d, rk) => (id, math.sqrt(d), rk) }
+          out(t) = merge.ranked(math.sqrt)
           t += 1
         }
       }
@@ -422,7 +422,7 @@ final class LocalIvfPqServer(codes: DataFrame, model: IvfPqModel) {
   def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(residualScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      .ranked(math.sqrt)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
@@ -430,7 +430,7 @@ final class LocalIvfPqServer(codes: DataFrame, model: IvfPqModel) {
       nprobe: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => residualScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
+      .map(_.ranked(math.sqrt))
   }
 }
 
@@ -469,7 +469,7 @@ final class LocalIvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel) {
   def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(maskedDequantScan(q, nprobe))
-      .ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      .ranked(math.sqrt)
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
@@ -477,7 +477,7 @@ final class LocalIvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel) {
       nprobe: Int): Array[Array[(Long, Double, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => maskedDequantScan(q, nprobe))
-      .map(_.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) })
+      .map(_.ranked(math.sqrt))
   }
 }
 
@@ -509,7 +509,7 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
     // lives in several probed regions' shards
     LocalServe.scan(probed, k, distinct = true) { (g, merge) =>
       g.knnInto(q, k, ef, merge)
-    }.ranked.map { case (id, d, r) => (id, model.metric.finishRankScalar(d), r) }
+    }.ranked(model.metric.finishRankScalar)
   }
 
   /** Batch throughput path — queries fan across the common pool, each
@@ -533,9 +533,7 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
         if (g != null) g.knnInto(qs(qi), k, ef, merge, distinct = true)
         s += 1
       }
-      out(qi) = merge.ranked.map { case (id, d, r) =>
-        (id, model.metric.finishRankScalar(d), r)
-      }
+      out(qi) = merge.ranked(model.metric.finishRankScalar)
     }
     out
   }
@@ -576,7 +574,7 @@ final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
     val ef = math.max(efSearch, k)
     LocalServe.scan(graphs, k) { (g, merge) =>
       g.knnInto(q, k, ef, merge)
-    }.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+    }.ranked(metric.finishRankScalar)
   }
 
   /** Batch throughput path: queries fan across the common pool; each
@@ -599,7 +597,7 @@ final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
         graphs(g).knnInto(qs(qi), k, ef, merge)
         g += 1
       }
-      out(qi) = merge.ranked.map { case (id, d, r) => (id, metric.finishRankScalar(d), r) }
+      out(qi) = merge.ranked(metric.finishRankScalar)
     }
     out
   }
@@ -643,13 +641,13 @@ final class LocalBqServer(codes: DataFrame, model: BqModel) {
   def search(q: Array[Double], k: Int): Array[(Long, Long, Int)] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.scan(blocks, k)(hammingScan(q))
-      .ranked.map { case (id, d, r) => (id, d.toLong, r) }
+      .ranked(identity).map { case (id, d, r) => (id, d.toLong, r) }
   }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Long, Int)]] = {
     require(k > 0, s"serving requires k > 0, got $k")
     LocalServe.batch(qs, blocks, k)(q => hammingScan(q))
-      .map(_.ranked.map { case (id, d, r) => (id, d.toLong, r) })
+      .map(_.ranked(identity).map { case (id, d, r) => (id, d.toLong, r) })
   }
 }

@@ -41,7 +41,7 @@ final class LshServer(indexed: DataFrame, planes: Int, metric: Metric)
       if (hamming == 0) Array(qb)
       else (qb +: Array.tabulate(planes)(p => qb ^ (1L << p))).sorted
     val mm = m
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
@@ -54,11 +54,9 @@ final class LshServer(indexed: DataFrame, planes: Int, metric: Metric)
           r += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, m.finishRankScalar(d), r) }
+      Array(merge)
+    }.head
+    top.ranked(m.finishRankScalar)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

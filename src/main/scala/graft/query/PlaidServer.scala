@@ -200,7 +200,7 @@ final class PlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel)
             }
           }
         val approxOf = new scala.collection.mutable.LongMap[Double]
-        heap.drainIterator.foreach { case (id, negA) => approxOf(id) = -negA }
+        heap.ranked(identity).foreach { case (id, negA, _) => approxOf(id) = -negA }
         winners.filter(x => approxOf.contains(blk.ids(x)))
           .map(x => (blk.ids(x), approxOf(blk.ids(x)), blk.toks(x)))
       }
@@ -214,7 +214,7 @@ final class PlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel)
       toksOf(id) = toks
     }
     val qvs = qhs.map(embed)
-    val rescored = top.drainIterator.map(_._1).toArray.map { id =>
+    val rescored = top.ids.take(top.size).map { id =>
       val dvs = toksOf(id).map(embed)
       var score = 0.0
       var i = 0

@@ -36,7 +36,7 @@ final class PqServer(codes: DataFrame, model: PqModel) extends ServingRdd {
     // object pointer chase in the scan (VERDICT r5 #2)
     val tab = PqIndex.adcTable(q, model)
     val ksub = model.ksub
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
@@ -52,12 +52,10 @@ final class PqServer(codes: DataFrame, model: PqModel) extends ServingRdd {
           r += 1
         }
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
+      Array(merge)
+    }.head
     // ADC reports √ of the summed squared subspace distances (pq.go:158-168)
-    top.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+    top.ranked(math.sqrt)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

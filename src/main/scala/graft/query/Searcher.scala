@@ -69,9 +69,12 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
     * Serves through the blocked kernels (the facade is the interactive
     * surface; query batches are bounded by construction, mirroring the
     * reference's in-memory Search([]float32) contract) — each is
-    * result-identical to its plan-based sibling but shuffles at most
-    * k·partitions rows per query. For query *tables* too large to
-    * collect, call the `search`/`knn` plan forms on the index objects
+    * result-identical to its plan-based sibling. Each partition fills
+    * one bounded heap per query and [[graft.index.BoundedTopK.merge]]
+    * combines them on the driver, so this call runs the scan job itself
+    * and returns a local relation; no top-k shuffle follows. A duplicate
+    * `query_id` in the batch is rejected. For query *tables* too large
+    * to collect, call the `search`/`knn` plan forms on the index objects
     * directly. */
   def search(queries: DataFrame): DataFrame = kind match {
     case FlatKind(vectors, metric) =>

@@ -185,7 +185,7 @@ private[query] object ServeBlocks {
 
   /** Pack (id, code: array<tinyint>, tagCol) rows into one cluster-sorted
     * [[GroupedByteBlock]] per partition — the [[packBytes]] contract plus
-    * a per-partition sort by tag (packed `tag<<32|row` long keys: one
+    * a per-partition grouping by tag ([[graft.index.TagGroups]]: one
     * primitive sort, no boxing) and a per-tag offset table. Row order
     * within a tag is the arrival order, but served results depend only on
     * (rank_key, id), so grouping preserves exact result parity with the
@@ -215,30 +215,9 @@ private[query] object ServeBlocks {
         }
         if (dim < 0) Iterator.empty
         else {
-          val ids = idsB.result(); val rowTags = tagsB.result(); val codes = codesB.result()
-          val n = ids.length
-          // stable primitive sort by tag: high word = tag, low word = row
-          val keys = new Array[Long](n)
-          var r = 0
-          while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-          java.util.Arrays.sort(keys)
-          val sIds = new Array[Long](n)
-          val sCodes = new Array[Byte](n * dim)
-          val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-          val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-          var prevTag = -1
-          r = 0
-          while (r < n) {
-            val tag = (keys(r) >>> 32).toInt
-            val src = (keys(r) & 0xFFFFFFFFL).toInt
-            sIds(r) = ids(src)
-            System.arraycopy(codes, src * dim, sCodes, r * dim, dim)
-            if (tag != prevTag) { tagList += tag; startList += r; prevTag = tag }
-            r += 1
-          }
-          startList += n
-          Iterator.single(
-            GroupedByteBlock(sIds, sCodes, dim, tagList.result(), startList.result()))
+          val groups = new graft.index.TagGroups(tagsB.result())
+          Iterator.single(GroupedByteBlock(groups.gather(idsB.result(), 1),
+            groups.gather(codesB.result(), dim), dim, groups.tags, groups.starts))
         }
       }
       .cache()

@@ -42,18 +42,16 @@ final class Sq8Server(codes: DataFrame, model: Sq8Model) extends ServingRdd {
     require(k > 0, s"serving requires k > 0, got $k")
     val mins = model.minsArray
     val scales = model.scalesArray
-    val partials = rdd.mapPartitions { it =>
+    val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val tab = graft.index.Sq8Index.sqTable(q, mins, scales)
       val merge = new BoundedTopK(k)
       while (it.hasNext) {
         val blk = it.next()
         graft.index.Sq8Index.tableScanAll(tab, blk.ids, blk.codes, blk.dim, merge)
       }
-      merge.drainIterator
-    }.collect()
-    val top = new BoundedTopK(k)
-    partials.foreach { case (id, d) => top.insert(id, d) }
-    top.ranked.map { case (id, d, r) => (id, math.sqrt(d), r) }
+      Array(merge)
+    }.head
+    top.ranked(math.sqrt)
   }
 
   protected def servingRdd: org.apache.spark.rdd.RDD[_] = rdd

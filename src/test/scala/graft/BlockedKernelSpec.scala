@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max, round}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Metric
@@ -8,15 +10,179 @@ import graft.queries.VectorQueries
 
 /** Every blocked (mapPartitions) kernel must be result-identical to its
   * plan-based sibling — same distances (bit-for-bit), same (distance, id)
-  * tie-break, same rank numbering. */
+  * tie-break, same rank numbering — including on the inputs where a
+  * driver-side heap merge and a shuffle + window could part ways. */
 class BlockedKernelSpec extends AnyFunSuite {
 
   lazy val spark = TestSession.spark
 
-  private def assertSame(a: org.apache.spark.sql.DataFrame,
-      b: org.apache.spark.sql.DataFrame, label: String): Unit =
+  private def assertSame(a: DataFrame, b: DataFrame, label: String): Unit =
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       s"blocked vs plan mismatch for $label")
+
+  /** A blocked kernel and its plan-form sibling over an (id, vec) corpus
+    * and a (query_id, qvec) batch, with the index built from the corpus
+    * inside each form. */
+  private final case class Kernel(name: String,
+      plan: (DataFrame, DataFrame, Int) => DataFrame,
+      blocked: (DataFrame, DataFrame, Int) => DataFrame)
+
+  /** Every kernel that ends in [[BoundedTopK.merge]]. Models train once on
+    * the full corpus; each case encodes its own corpus with them. The two
+    * graph kinds have no plan form, so they run exhaustive configurations
+    * (one shard or every region probed, ef ≥ n) against the flat plan,
+    * with distances rounded because graph walks accumulate in another
+    * order. */
+  private lazy val kernels: Seq[Kernel] = {
+    val corpus = VectorQueries.vecTables(spark, TestSession.Sf0001)._1
+    val l2 = Metric.L2
+    val ivf = IvfIndex.trainDeterministic(corpus, 8, l2)
+    val pq = PqIndex.trainDeterministic(corpus, m = 4, ksub = 16, l2)
+    val sq8 = Sq8Index.train(corpus, l2)
+    val ivfpq = IvfPqIndex.trainDeterministic(corpus, nlist = 8, m = 4, ksub = 16, l2)
+    val bq = BqIndex.train(corpus, l2)
+    val routed = RoutedHnswIndex.train(corpus, nlist = 4, l2, targetShardRows = 64)
+    val planes = 4
+    def rounded(df: DataFrame): DataFrame =
+      df.select(col("query_id"), col("neighbor_id"), round(col("distance"), 9).as("d"),
+        col("rank"))
+    def exact(c: DataFrame, q: DataFrame, k: Int): DataFrame =
+      rounded(FlatIndex.knn(c, q, k, l2))
+    Seq(
+      Kernel("flat", FlatIndex.knn(_, _, _, l2), FlatIndex.knnBlocked(_, _, _, l2)),
+      Kernel("ivf",
+        (c, q, k) => IvfIndex.search(IvfIndex.assign(c, ivf), ivf, q, k, nprobe = 3),
+        (c, q, k) => IvfIndex.searchBlocked(IvfIndex.assign(c, ivf), ivf, q, k, nprobe = 3)),
+      Kernel("pq",
+        (c, q, k) => PqIndex.knn(PqIndex.encode(c, pq), pq, q, k),
+        (c, q, k) => PqIndex.knnBlocked(PqIndex.encode(c, pq), pq, q, k)),
+      Kernel("sq8",
+        (c, q, k) => Sq8Index.knn(Sq8Index.encode(c, sq8), sq8, q, k),
+        (c, q, k) => Sq8Index.knnBlocked(Sq8Index.encode(c, sq8), sq8, q, k)),
+      Kernel("ivfpq",
+        (c, q, k) => IvfPqIndex.search(IvfPqIndex.encode(c, ivfpq), ivfpq, q, k, nprobe = 3),
+        (c, q, k) => IvfPqIndex.searchBlocked(IvfPqIndex.encode(c, ivfpq), ivfpq, q, k,
+          nprobe = 3)),
+      Kernel("lsh",
+        (c, q, k) => LshIndex.knn(LshIndex.index(c, planes), q, k, planes, l2),
+        (c, q, k) => LshIndex.knnBlocked(LshIndex.index(c, planes), q, k, planes, l2)),
+      Kernel("lsh-multiprobe",
+        (c, q, k) => LshIndex.knnMultiProbe(LshIndex.index(c, planes), q, k, planes, l2),
+        (c, q, k) => LshIndex.knnBlocked(LshIndex.index(c, planes), q, k, planes, l2,
+          hamming = 1)),
+      Kernel("bq",
+        (c, q, k) => BqIndex.knn(BqIndex.encode(c, bq), bq, q, k),
+        (c, q, k) => BqIndex.knnBlocked(BqIndex.encode(c, bq), bq, q, k)),
+      Kernel("hnsw", exact,
+        (c, q, k) => rounded(HnswIndex.knnBlocked(HnswIndex.build(c, 1, l2), q, k, l2,
+          efSearch = 200, numShards = 1))),
+      Kernel("routed-hnsw", exact,
+        (c, q, k) => rounded(RoutedHnswIndex.knn(RoutedHnswIndex.build(c, routed), routed,
+          q, k, probeRegions = routed.nlist, efSearch = 200))))
+  }
+
+  private def assertAllKernelsSame(corpus: DataFrame, queries: DataFrame, k: Int,
+      label: String): Unit =
+    kernels.foreach { kn =>
+      assertSame(kn.plan(corpus, queries, k), kn.blocked(corpus, queries, k),
+        s"${kn.name} on $label")
+    }
+
+  private def vecs = VectorQueries.vecTables(spark, TestSession.Sf0001)
+
+  test("BoundedTopK ranks like Spark's sort: NaN after every number, ties by id") {
+    val h = new BoundedTopK(3)
+    Seq(Double.NaN, 5.0, 1.0, 0.5, 3.0).zipWithIndex.foreach { case (d, i) => h.insert(i, d) }
+    assert(h.dists.toSeq == Seq(0.5, 1.0, 3.0))
+    val all = new BoundedTopK(4)
+    Seq(2.0, Double.NaN, 2.0, -0.0, 0.0).zipWithIndex.foreach { case (d, i) =>
+      all.insert(10L - i, d)
+    }
+    // -0.0 equals 0.0 (the lower id leads); NaN is never kept over a number
+    assert(all.ids.toSeq == Seq(6L, 7L, 8L, 10L))
+  }
+
+  test("blocked ≡ plan for every kernel: k > n") {
+    val (corpus, queries) = vecs
+    assertAllKernelsSame(corpus.where(col("id") < 3).coalesce(1), queries, 10, "k > n")
+  }
+
+  test("blocked ≡ plan for every kernel: 3 rows over 8 partitions, most empty") {
+    val (corpus, queries) = vecs
+    assertAllKernelsSame(corpus.where(col("id") < 3).repartition(8), queries, 2,
+      "3 rows in 8 partitions")
+  }
+
+  test("blocked ≡ plan for every kernel: zero-row corpus") {
+    val (corpus, queries) = vecs
+    assertAllKernelsSame(corpus.limit(0), queries, 5, "zero-row corpus")
+  }
+
+  test("blocked ≡ plan for every kernel: empty query batch") {
+    val (corpus, queries) = vecs
+    assertAllKernelsSame(corpus, queries.limit(0), 5, "empty query batch")
+  }
+
+  test("blocked ≡ plan for every kernel: tied distances break by id") {
+    val (corpus, queries) = vecs
+    // three copies of each of 6 vectors under different ids, spread over
+    // partitions: every key ties at least three ways
+    val base = corpus.where(col("id") < 6)
+    val tied = (0 until 3)
+      .map(c => base.select((col("id") + c * 100000L).as("id"), col("vec")))
+      .reduce(_ union _)
+      .repartition(4)
+    assertAllKernelsSame(tied, queries, 5, "tied distances")
+  }
+
+  test("a duplicate query_id is rejected with the id named") {
+    val (corpus, queries) = vecs
+    val dup = queries.union(queries.where(col("query_id") === 5))
+    kernels.foreach { kn =>
+      val e = intercept[IllegalArgumentException](kn.blocked(corpus, dup, 5))
+      assert(e.getMessage.contains("duplicate query_id 5"), s"${kn.name}: ${e.getMessage}")
+    }
+  }
+
+  test("flat blocked ≡ plan with a NaN-component corpus row") {
+    val (corpus, queries) = vecs
+    val small = corpus.where(col("id") < 10)
+    val dim = small.first().getSeq[Double](1).length
+    val nanRow = spark.createDataFrame(Seq(
+      (999999L, Double.NaN +: Seq.fill(dim - 1)(0.0)))).toDF("id", "vec")
+    // the NaN row reaches each heap first, where an IEEE-only order kept
+    // it ahead of every number
+    for (withNan <- Seq(nanRow.union(small).coalesce(1), nanRow.union(small).repartition(3));
+        k <- Seq(3, 11)) {
+      assertSame(FlatIndex.knn(withNan, queries, k, Metric.L2),
+        FlatIndex.knnBlocked(withNan, queries, k, Metric.L2), s"flat with NaN, k=$k")
+    }
+  }
+
+  test("blocked kernel ≡ window top-k on real data (l2 and cosine)") {
+    val (corpus, queries) = vecs
+    for (m <- Seq(Metric.L2, Metric.Cosine)) {
+      val win = FlatIndex.knn(corpus, queries, 10, m)
+      val blocked = FlatIndex.knnBlocked(corpus, queries, 10, m)
+      assertSame(win, blocked, s"flat/${m.name}")
+    }
+  }
+
+  test("blocked table-ADC ≡ expression ADC for PQ") {
+    val (corpus, queries) = vecs
+    val model = PqIndex.trainDeterministic(corpus, 8, 16, Metric.L2)
+    val codes = PqIndex.encode(corpus, model)
+    assertSame(PqIndex.knn(codes, model, queries, 10),
+      PqIndex.knnBlocked(codes, model, queries, 10), "pq table-ADC")
+  }
+
+  test("blocked kernel handles fewer candidates than k") {
+    val (corpus, queries) = vecs
+    val blocked = FlatIndex.knnBlocked(corpus.limit(3), queries.limit(2), 10, Metric.L2)
+    assert(blocked.count() == 6) // 2 queries × 3 candidates
+    assert(blocked.groupBy("query_id").agg(max(col("rank")).as("m"))
+      .where(col("m") =!= 3).count() == 0)
+  }
 
   test("IVF searchBlocked ≡ search across all metrics") {
     val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)

@@ -72,7 +72,7 @@ class CompiledHnswSpec extends AnyFunSuite {
       // knnInto streams the same winners into a bounded merge
       val merge = new BoundedTopK(k)
       c.knnInto(q, k, ef, merge)
-      val viaInto = merge.ranked.map { case (id, d, _) => (id, d) }.toSeq
+      val viaInto = merge.ranked(identity).map { case (id, d, _) => (id, d) }.toSeq
       assert(viaInto == b.toSeq)
     }
   }
