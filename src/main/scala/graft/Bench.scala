@@ -98,8 +98,8 @@ object Bench {
     mk().count() // warm: plan, codegen, broadcast ship
     System.gc()
     val (_, t1) = time(mk().count())
-    val r = mk().cache()
-    val (_, t2) = time(r.count())
+    // mk() inside the timer: blocked kernels run their scan when called
+    val (r, t2) = time { val d = mk().cache(); d.count(); d }
     (r, math.min(t1, t2))
   }
 

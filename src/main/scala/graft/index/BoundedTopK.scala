@@ -5,6 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftx.ResultFrames
 
 /** Bounded top-k buffer: insertion-sorted primitive arrays ordered
   * ascending by (dist, id) — the engine's deterministic tie-break
@@ -102,14 +103,14 @@ private[graft] object BoundedTopK {
 
   /** The one top-k merge. `scan` runs once per partition of `rows` and
     * returns that partition's heaps, one per query (or none for a
-    * partition with nothing to offer); `treeAggregate` at depth 1 folds
-    * them into `nq` heaps on the driver as the task results arrive. Its
-    * zero is `nq` empty heaps, so a corpus with zero partitions — or only
-    * empty ones — yields empty heaps rather than an error. One job, no
-    * shuffle: the driver receives at most k entries per query per
-    * partition. `distinct` skips ids already merged (the replicated
-    * routed graph, where one id can surface from several partitions with
-    * the same rank key). */
+    * partition with nothing to offer); `fold` merges them into `nq` heaps
+    * on the driver as the task results arrive. Its zero is `nq` empty
+    * heaps, so a corpus with zero partitions — or only empty ones —
+    * yields empty heaps rather than an error. One job, no shuffle: the
+    * driver receives at most k entries per query per partition.
+    * `distinct` skips ids already merged (the replicated routed graph,
+    * where one id can surface from several partitions with the same rank
+    * key). */
   def merge[T](rows: RDD[T], nq: Int, k: Int, distinct: Boolean = false)(
       scan: Iterator[T] => Array[BoundedTopK]): Array[BoundedTopK] = {
     if (nq == 0) return Array.empty
@@ -119,7 +120,7 @@ private[graft] object BoundedTopK {
       acc
     }
     rows.mapPartitions(it => Iterator.single(scan(it)))
-      .treeAggregate(Array.fill(nq)(new BoundedTopK(k)))(combine, combine, depth = 1)
+      .fold(Array.fill(nq)(new BoundedTopK(k)))(combine)
   }
 
   /** Merged heaps → the kNN result as one local relation:
@@ -128,9 +129,14 @@ private[graft] object BoundedTopK {
     * EXPLAIN shows the plan of `scanned`, the table the heaps came from. */
   def toFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK],
       finish: Double => Double): DataFrame =
-    org.apache.spark.sql.graftx.ResultFrames.knn(scanned, qids.indices.flatMap { qi =>
+    ResultFrames.knn(scanned, rows(qids, heaps, finish))
+
+  /** [[toFrame]]'s rows: (query_id, neighbor_id, finish(key), rank). */
+  def rows(qids: Array[Long], heaps: Array[BoundedTopK],
+      finish: Double => Double): Seq[(Long, Long, Double, Int)] =
+    qids.indices.flatMap { qi =>
       heaps(qi).ranked(finish).map { case (id, d, r) => (qids(qi), id, d, r) }
-    })
+    }
 }
 
 /** Rows grouped by a non-negative int tag (IVF cluster id, LSH bucket):
@@ -138,7 +144,7 @@ private[graft] object BoundedTopK {
   * within a tag — and a per-tag start offset table. Grouped row `r` is
   * source row `order(r)`; its tag run is `tags(t)` over rows
   * `[starts(t), starts(t + 1))`. Each caller permutes its own payload
-  * with [[gather]]. */
+  * with [[gatherIds]] and [[gather]]. */
 private[graft] final class TagGroups(rowTags: Array[Int]) {
   val order: Array[Int] = {
     val n = rowTags.length
@@ -146,7 +152,10 @@ private[graft] final class TagGroups(rowTags: Array[Int]) {
     var r = 0
     while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
     java.util.Arrays.sort(keys)
-    keys.map(key => (key & 0xFFFFFFFFL).toInt)
+    val out = new Array[Int](n)
+    r = 0
+    while (r < n) { out(r) = (keys(r) & 0xFFFFFFFFL).toInt; r += 1 }
+    out
   }
 
   val (tags: Array[Int], starts: Array[Int]) = {
@@ -160,6 +169,14 @@ private[graft] final class TagGroups(rowTags: Array[Int]) {
     }
     startList += order.length
     (tagList.result(), startList.result())
+  }
+
+  /** One id per row, in grouped row order. */
+  def gatherIds(src: Array[Long]): Array[Long] = {
+    val out = new Array[Long](order.length)
+    var r = 0
+    while (r < order.length) { out(r) = src(order(r)); r += 1 }
+    out
   }
 
   /** `src` (rows of `width` elements) in grouped row order. */

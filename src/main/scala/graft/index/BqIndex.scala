@@ -1,8 +1,9 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.ResultFrames
 
 import graft.core.Metric
 
@@ -106,8 +107,29 @@ object BqIndex {
     * words, same (hamming, id) tie-break): each partition fills one heap
     * per query and [[BoundedTopK.merge]] combines them on the driver into
     * a local relation, so the scan job runs when this is called. */
-  def knnBlocked(codes: DataFrame, model: BqModel, queries: DataFrame, k: Int): DataFrame = {
-    if (k <= 0) return knn(codes, model, queries, k)
+  def knnBlocked(codes: DataFrame, model: BqModel, queries: DataFrame, k: Int): DataFrame =
+    if (k <= 0) knn(codes, model, queries, k)
+    else {
+      val (scanned, qids, heaps) = blockedHeaps(codes, model, queries, k)
+      ResultFrames.hammingKnn(scanned, BoundedTopK.rows(qids, heaps, identity))
+    }
+
+  /** [[knnBlocked]] in the facade's (query_id, neighbor_id, distance,
+    * rank) shape: the Hamming count as a DOUBLE distance. Built from the
+    * heaps rather than projected from [[knnBlocked]], because a projection
+    * over a driver-merged result runs a job of its own. */
+  private[graft] def searchBlocked(codes: DataFrame, model: BqModel, queries: DataFrame,
+      k: Int): DataFrame =
+    if (k <= 0) knn(codes, model, queries, k)
+      .select(col("query_id"), col("neighbor_id"),
+        col("hamming").cast("double").as("distance"), col("rank"))
+    else {
+      val (scanned, qids, heaps) = blockedHeaps(codes, model, queries, k)
+      BoundedTopK.toFrame(scanned, qids, heaps, identity)
+    }
+
+  private def blockedHeaps(codes: DataFrame, model: BqModel, queries: DataFrame,
+      k: Int): (Dataset[_], Array[Long], Array[BoundedTopK]) = {
     val spark = codes.sparkSession
     import spark.implicits._
     val th = model.thresholdArray
@@ -157,9 +179,7 @@ object BqIndex {
         h
       }
     }
-    BoundedTopK.toFrame(scanned, qids, heaps, identity)
-      .select(col("query_id"), col("neighbor_id"),
-        col("distance").cast("long").as("hamming"), col("rank"))
+    (scanned, qids, heaps)
   }
 
   /** Driver-side packing of one query — same MSB-first fold as

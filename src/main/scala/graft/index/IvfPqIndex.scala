@@ -197,7 +197,7 @@ object IvfPqIndex {
         codesB ++= code
       }
       val groups = new TagGroups(tagsB.result())
-      val gIds = groups.gather(idsB.result(), 1)
+      val gIds = groups.gatherIds(idsB.result())
       val gCodes = groups.gather(codesB.result(), m)
       val tags = groups.tags
       val starts = groups.starts

@@ -141,7 +141,7 @@ object LshIndex {
         dataB ++= v
       }
       val groups = new TagGroups(tagsB.result())
-      val gIds = groups.gather(idsB.result(), 1)
+      val gIds = groups.gatherIds(idsB.result())
       val gData = groups.gather(dataB.result(), dim)
       val heaps = Array.fill(qs.length)(new BoundedTopK(k))
       var t = 0

@@ -65,7 +65,9 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
     * the warm-index batch path, the moral equivalent of the reference
     * searching its in-memory graph (hnsw.go:189-200 BatchSearch). The
     * partitions' heaps merge on the driver and the result is a local
-    * relation, so the walk job runs when this is called. */
+    * relation, so the walk job runs when this is called; an operator
+    * applied to the result (projection, filter, join) runs a job of its
+    * own. */
   def searchBatch(queries: DataFrame, k: Int,
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     require(k > 0, s"serving requires k > 0, got $k")

@@ -92,7 +92,9 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
     * resident graphs for exactly the queries that probed them. Result-
     * identical to the cold batch path (same probes, walks and distinct
     * [[BoundedTopK.merge]]): one single-stage job of graph walks, run
-    * when this is called, and a local relation as the result. */
+    * when this is called, and a local relation as the result; an
+    * operator applied to the result (projection, filter, join) runs a
+    * job of its own. */
   def searchBatch(queries: DataFrame, k: Int, probeRegions: Int,
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
     require(k > 0, s"serving requires k > 0, got $k")

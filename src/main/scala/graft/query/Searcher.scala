@@ -72,7 +72,9 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
     * result-identical to its plan-based sibling. Each partition fills
     * one bounded heap per query and [[graft.index.BoundedTopK.merge]]
     * combines them on the driver, so this call runs the scan job itself
-    * and returns a local relation; no top-k shuffle follows. A duplicate
+    * and returns a local relation; no top-k shuffle follows. Collecting
+    * that relation runs no job, but an operator applied to it
+    * (projection, filter, join) runs one of its own. A duplicate
     * `query_id` in the batch is rejected. For query *tables* too large
     * to collect, call the `search`/`knn` plan forms on the index objects
     * directly. */
@@ -90,10 +92,7 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
     case OpqKind(model, codes) =>
       OpqIndex.knnBlocked(codes, model, queries, opts.k)
     case BqKind(model, codes) =>
-      import org.apache.spark.sql.functions.col
-      BqIndex.knnBlocked(codes, model, queries, opts.k)
-        .withColumn("distance", col("hamming").cast("double"))
-        .select("query_id", "neighbor_id", "distance", "rank")
+      BqIndex.searchBlocked(codes, model, queries, opts.k)
     case LshKind(planes, indexed, metric) =>
       LshIndex.knnBlocked(indexed, queries, opts.k, planes, metric,
         hamming = if (opts.efSearch >= 1) 1 else 0)

@@ -216,7 +216,7 @@ private[query] object ServeBlocks {
         if (dim < 0) Iterator.empty
         else {
           val groups = new graft.index.TagGroups(tagsB.result())
-          Iterator.single(GroupedByteBlock(groups.gather(idsB.result(), 1),
+          Iterator.single(GroupedByteBlock(groups.gatherIds(idsB.result()),
             groups.gather(codesB.result(), dim), dim, groups.tags, groups.starts))
         }
       }

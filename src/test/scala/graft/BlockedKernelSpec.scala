@@ -23,7 +23,7 @@ class BlockedKernelSpec extends AnyFunSuite {
   /** A blocked kernel and its plan-form sibling over an (id, vec) corpus
     * and a (query_id, qvec) batch, with the index built from the corpus
     * inside each form. */
-  private final case class Kernel(name: String,
+  private case class Kernel(name: String,
       plan: (DataFrame, DataFrame, Int) => DataFrame,
       blocked: (DataFrame, DataFrame, Int) => DataFrame)
 
