@@ -171,7 +171,7 @@ private[graft] final class TagGroups(rowTags: Array[Int]) {
     (tagList.result(), startList.result())
   }
 
-  /** One id per row, in grouped row order. */
+  /** One LONG per row (an id, a tag), in grouped row order. */
   def gatherIds(src: Array[Long]): Array[Long] = {
     val out = new Array[Long](order.length)
     var r = 0

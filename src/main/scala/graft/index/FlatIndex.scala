@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
+import graft.query.{PackedKind, ServeBlocks}
 
 /** Exact brute-force kNN — the semantic oracle for every approximate index
   * (reference: pkg/index/flat/flat.go:74-114; batch loop flat.go:61-71).
@@ -50,47 +51,29 @@ object FlatIndex {
     * (they are the small side by construction). */
   def knnBlocked(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame = {
     if (k <= 0) return knn(corpus, queries, k, metric) // clamp-to-all path
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val bc = spark.sparkContext.broadcast(qvecs)
+    val bc = corpus.sparkSession.sparkContext.broadcast(qvecs)
+    val kind = PackedKind.flat(metric)
+    val pack = kind.pack
+    val scan = kind.scan(())
     val scanned = corpus.select(col("id").cast("long"), col("vec"))
-      .as[(Long, Array[Double])] // primitive decode — no per-element boxing
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
-      // Pack the partition ONCE into a flat primitive block (the
-      // ServeBlock layout), then scan QUERY-OUTER: one resident heap
-      // and one contiguous row walk per query. The r5 rows-outer loop
-      // touched all nq heaps per row — ~nq scattered cache lines per
-      // row, a working set that thrashed the shared LLC once 32 tasks
-      // ran it (VERDICT r12 wrong #1: the quantized-family QPS rows
-      // read FASTER at 8 cores than 32; measured: the same scan cost
-      // 5× the task-CPU at 32 threads). Heap CONTENTS are insertion-
-      // order independent (k smallest by total (dist, id) order), so
-      // the transposed loop gives bit-identical heaps.
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-      var dim = -1
-      while (it.hasNext) {
-        val (id, v) = it.next()
-        idsB += id
-        if (dim < 0) dim = v.length
-        require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-        dataB ++= v
-      }
-      val ids = idsB.result()
-      val data = dataB.result()
-      val n = ids.length
-      val qs = bc.value
-      if (n == 0) Array.empty[BoundedTopK]
-      else Array.tabulate(qs.length) { qi =>
-        val q = qs(qi)
-        val h = new BoundedTopK(k)
-        var r = 0
-        while (r < n) {
-          h.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-          r += 1
+    val heaps = BoundedTopK.merge(scanned.queryExecution.toRdd, qids.length, k) { it =>
+      // Pack the partition ONCE (the serving pack), then scan QUERY-OUTER
+      // with the flat serving scan: one resident heap and one contiguous
+      // row walk per query. The r5 rows-outer loop touched all nq heaps
+      // per row — ~nq scattered cache lines per row, a working set that
+      // thrashed the shared LLC once 32 tasks ran it (VERDICT r12 wrong
+      // #1: the quantized-family QPS rows read FASTER at 8 cores than 32;
+      // measured: the same scan cost 5× the task-CPU at 32 threads). Heap
+      // CONTENTS are insertion-order independent (k smallest by total
+      // (dist, id) order), so the transposed loop gives bit-identical heaps.
+      ServeBlocks.packPartition(it, pack) match {
+        case None => Array.empty[BoundedTopK]
+        case Some(blk) => bc.value.map { q =>
+          val h = new BoundedTopK(k)
+          scan(q)(blk, h)
+          h
         }
-        h
       }
     }
     BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)

@@ -212,7 +212,7 @@ object HnswIndex {
     val spark = vectors.sparkSession
     import spark.implicits._
     // packed parallel collect: each task decodes ITS partition's rows to
-    // flat primitive arrays (the ServeBlock discipline), so the driver
+    // flat primitive arrays (the ServeBlocks discipline), so the driver
     // receives a few big arrays instead of row-decoding n Seqs on one
     // thread — at 100k the single-threaded Dataset.collect() cost more
     // than the whole concurrent insert pass

@@ -231,11 +231,7 @@ object IvfPqIndex {
             }
             var rr = lo
             while (rr < hi) {
-              val cOff = rr * m
-              var acc = 0.0
-              var mi2 = 0
-              while (mi2 < m) { acc += tabBuf(mi2 * ksub + gCodes(cOff + mi2)); mi2 += 1 }
-              h.insert(gIds(rr), acc)
+              h.insert(gIds(rr), PqIndex.adcRow(tabBuf, 0, ksub, gCodes, rr * m, m))
               rr += 1
             }
           } else {

@@ -356,23 +356,27 @@ object PqIndex {
         val tBase = qi * m * ksub
         val h = new BoundedTopK(k)
         var r = 0
-        var off = 0
         while (r < n) {
-          var acc = 0.0
-          var mi = 0
-          while (mi < m) {
-            acc += t(tBase + mi * ksub + codeBlk(off + mi))
-            mi += 1
-          }
-          h.insert(ids(r), acc)
+          h.insert(ids(r), adcRow(t, tBase, ksub, codeBlk, r * m, m))
           r += 1
-          off += m
         }
         h
       }
     }
     // ADC reports √ of the summed squares (pq.go:158-168)
     BoundedTopK.toFrame(scanned, qids, heaps, math.sqrt)
+  }
+
+  /** ADC distance (squared) of the packed code row at `off`: its `m`
+    * entries of the flat table at `tabOff` ([[adcTable]]'s layout),
+    * summed in ascending subspace order. Every PQ and IVFPQ scan folds a
+    * row here, so their distances are bit-identical. */
+  @inline private[graft] def adcRow(tab: Array[Double], tabOff: Int, ksub: Int,
+      codes: Array[Int], off: Int, m: Int): Double = {
+    var d = 0.0
+    var mi = 0
+    while (mi < m) { d += tab(tabOff + mi * ksub + codes(off + mi)); mi += 1 }
+    d
   }
 
   /** FLAT M·Ksub subspace distance table for one (residual) query vector —

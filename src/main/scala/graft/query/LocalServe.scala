@@ -3,10 +3,10 @@ package graft.query
 import java.util.stream.IntStream
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqIndex, BqModel, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Model}
+import graft.index.{BoundedTopK, BqModel, IvfModel, IvfPqModel, OpqModel, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Model}
 
 /** Kind-erased in-process serving handle — what [[Searcher.localServer]]
   * returns: one query in, (id, distance, rank) out, with the facade's
@@ -28,9 +28,11 @@ private[graft] final case class LocalServerAdapter(
     batched(qs, k)
 }
 
-/** In-process single-query serving: the SAME packed blocks the
-  * distributed servers scan, collected to the driver ONCE, scanned with
-  * the SAME scalar kernels — zero Spark jobs per query.
+/** In-process single-query serving: each packed kind's `Local*Server`
+  * runs the SAME pack and the SAME per-kind scan ([[PackedKind]]) as its
+  * distributed server, over blocks collected to the driver ONCE
+  * ([[LocalScan]]) — zero Spark jobs per query. The HNSW servers walk
+  * the same compiled graphs as theirs.
   *
   * This is the reference's deployment shape: its facade serves queries
   * against heap-resident structures in-process (pkg/search/search.go —
@@ -55,15 +57,6 @@ private[graft] final case class LocalServerAdapter(
   * (spec-asserted in LocalServeSpec).
   */
 private[graft] object LocalServe {
-
-  /** Collect packed blocks through the existing packer, then release the
-    * temporary RDD — the driver copy is the only resident state. */
-  def collect[B](packed: org.apache.spark.rdd.RDD[B])(
-      implicit ct: scala.reflect.ClassTag[B]): Array[B] = {
-    val blocks = packed.collect()
-    packed.unpersist()
-    blocks
-  }
 
   /** Batch-throughput twin of [[scan]]: QUERIES fan across the common
     * pool and each query's blocks scan sequentially on its worker into
@@ -108,175 +101,66 @@ private[graft] object LocalServe {
 }
 
 /** In-process exhaustive scan — the reference's flat kind served the
-  * reference's way. Result-identical to FlatIndex.knnBlocked's order. */
+  * reference's way ([[PackedKind.flat]]). Result-identical to
+  * FlatIndex.knnBlocked's order. */
 final class LocalFlatServer(vectors: DataFrame, metric: Metric) {
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(vectors.withColumn("tag0", lit(0L)), "tag0"))
+  private val served = new LocalScan(vectors, PackedKind.flat(metric))
 
-  private def scanBlock(q: Array[Double])(blk: ServeBlock, merge: BoundedTopK): Unit = {
-    val dim = blk.dim
-    var r = 0
-    while (r < blk.ids.length) {
-      merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-      r += 1
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(scanBlock(q))
-      .ranked(metric.finishRankScalar)
-  }
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = served.search(q, k, ())
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => scanBlock(q))
-      .map(_.ranked(metric.finishRankScalar))
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
+    served.searchBatch(qs, k, ())
 }
 
-/** In-process IVF: driver probe ranking + mask-pruned local scan.
-  * Result-identical to [[IvfServer.search]]. */
+/** In-process IVF: driver probe ranking + mask-pruned local scan
+  * ([[PackedKind.ivf]]). Result-identical to [[IvfServer.search]]. */
 final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
-  private val metric = model.metric
-  private val cents = model.centroids.map(_.toArray).toArray
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(assigned, "cluster_id"))
+  private val served = new LocalScan(assigned, PackedKind.ivf(model))
 
-  /** Per-query probe mask + masked-scan closure (precomputation shared
-    * across the query's blocks). */
-  private def maskedScan(q: Array[Double], nprobe: Int): (ServeBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), model.nlist)
-    val mask = new Array[Boolean](model.nlist)
-    IvfIndex.probeSet(q, cents, metric, np).foreach(mask(_) = true)
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (mask(blk.tags(r).toInt))
-          merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(maskedScan(q, nprobe))
-      .ranked(metric.finishRankScalar)
-  }
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    served.search(q, k, nprobe)
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => maskedScan(q, nprobe))
-      .map(_.ranked(metric.finishRankScalar))
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] = served.searchBatch(qs, k, nprobe)
 }
 
 /** In-process sign-LSH: bucket + Hamming-1 probes, binary-searched per
-  * row. Result-identical to [[LshServer.search]]. */
+  * row ([[PackedKind.lsh]]). Result-identical to [[LshServer.search]]. */
 final class LocalLshServer(indexed: DataFrame, planes: Int, metric: Metric) {
-  private val blocks: Array[ServeBlock] =
-    LocalServe.collect(ServeBlocks.pack(indexed, "bucket"))
+  private val served = new LocalScan(indexed, PackedKind.lsh(planes, metric))
 
-  /** Per-query bucket-probe set + filtered-scan closure. */
-  private def probeScan(q: Array[Double], hamming: Int): (ServeBlock, BoundedTopK) => Unit = {
-    require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-    val qb = LshIndex.bucketScalar(q, planes)
-    val probes: Array[Long] =
-      if (hamming == 0) Array(qb)
-      else (qb +: Array.tabulate(planes)(p => qb ^ (1L << p))).sorted
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (java.util.Arrays.binarySearch(probes, blk.tags(r)) >= 0)
-          merge.insert(blk.ids(r), metric.rankKeyScalar(q, blk.data, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, hamming: Int = 1): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(probeScan(q, hamming))
-      .ranked(metric.finishRankScalar)
-  }
+  def search(q: Array[Double], k: Int, hamming: Int = 1): Array[(Long, Double, Int)] =
+    served.search(q, k, hamming)
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      hamming: Int = 1): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => probeScan(q, hamming))
-      .map(_.ranked(metric.finishRankScalar))
-  }
+      hamming: Int = 1): Array[Array[(Long, Double, Int)]] = served.searchBatch(qs, k, hamming)
 }
 
-/** In-process PQ ADC: driver distance table, M int lookups per row.
-  * Result-identical to [[PqServer.search]]. */
+/** In-process PQ ADC: driver distance table, M int lookups per row
+  * ([[PackedKind.pq]]). Result-identical to [[PqServer.search]]. */
 final class LocalPqServer(codes: DataFrame, model: PqModel) {
-  private val blocks: Array[CodeBlock] =
-    LocalServe.collect(ServeBlocks.packCodes(codes, None))
+  private val served = new LocalScan(codes, PackedKind.pq(model))
 
-  /** Per-query ADC table + scan closure. */
-  private def adcScan(q: Array[Double]): (CodeBlock, BoundedTopK) => Unit = {
-    val tab = PqIndex.adcTable(q, model)
-    val ksub = model.ksub
-    (blk, merge) => {
-      val m = blk.m
-      var r = 0
-      while (r < blk.ids.length) {
-        val off = r * m
-        var d = 0.0
-        var mi = 0
-        while (mi < m) { d += tab(mi * ksub + blk.codes(off + mi)); mi += 1 }
-        merge.insert(blk.ids(r), d)
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(adcScan(q))
-      .ranked(math.sqrt)
-  }
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = served.search(q, k, ())
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => adcScan(q))
-      .map(_.ranked(math.sqrt))
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
+    served.searchBatch(qs, k, ())
 }
 
-/** In-process SQ8: per-query squared-difference table
-  * ([[graft.index.Sq8Index.sqTable]] — the A8 ADC discipline applied to
-  * SQ8), one byte load + one table add per component, scanned with the
-  * four-row-pipelined canonical fold
-  * ([[graft.index.Sq8Index.tableScanAll]] — per-row values bit-identical
-  * to the inline dequantize scan). Result-identical to
-  * [[Sq8Server.search]]. */
+/** In-process SQ8: per-query squared-difference table, one byte load +
+  * one table add per component, four rows pipelined ([[PackedKind.sq8]]).
+  * Result-identical to [[Sq8Server.search]]. */
 final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
   require(model.metric == Metric.L2,
     s"LocalSq8Server serves the l2 kind; got ${model.metric.name}")
-  private val blocks: Array[ByteBlock] =
-    LocalServe.collect(ServeBlocks.packBytes(codes))
+  private val kind = PackedKind.sq8(model)
+  private val served = new LocalScan(codes, kind)
 
-  private def tableScan(q: Array[Double]): (ByteBlock, BoundedTopK) => Unit = {
-    val tab = graft.index.Sq8Index.sqTable(q, model.minsArray, model.scalesArray)
-    (blk, merge) =>
-      graft.index.Sq8Index.tableScanAll(tab, blk.ids, blk.codes, blk.dim, merge)
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(tableScan(q))
-      .ranked(math.sqrt)
-  }
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = served.search(q, k, ())
 
   /** Batch throughput: QUERY-GROUP-BLOCKED row-outer kernel — groups of
     * four queries fan across the common pool (250-way parallel at the
@@ -292,7 +176,8 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
     * this shape keeps the serial-chain bound broken across QUERIES
     * instead, with no table at all. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    served.requireQueries(qs, k)
+    val blocks = served.blocks
     val mins = model.minsArray
     val scales = model.scalesArray
     val nq = qs.length
@@ -306,8 +191,8 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
         var bi = 0
         while (bi < blocks.length) {
           val blk = blocks(bi)
-          val dim = blk.dim
-          val codes = blk.codes
+          val dim = blk.width
+          val codes = blk.payload
           val recon = new Array[Double](dim)
           val n = blk.ids.length
           var r = 0
@@ -351,12 +236,12 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
           j += 1
         }
       } else {
-        // tail group (< 4 queries): the single-query table scan, whose
+        // tail group (< G queries): the single-query table scan, whose
         // per-row values are identical to the interleaved form's
         var t = q0
         while (t < nq) {
           val merge = new BoundedTopK(k)
-          val scan = tableScan(qs(t))
+          val scan = kind.scan(())(qs(t))
           var bi = 0
           while (bi < blocks.length) { scan(blocks(bi), merge); bi += 1 }
           out(t) = merge.ranked(math.sqrt)
@@ -369,116 +254,46 @@ final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
 }
 
 /** In-process OPQ: driver-side query rotation (one dim² matVec,
-  * microseconds) in front of the PQ scan — same layering as
-  * [[OpqServer]], result-identical to it. */
+  * microseconds) in front of the PQ scan ([[PackedKind.opq]]) — same
+  * layering as [[OpqServer]], result-identical to it. */
 final class LocalOpqServer(codes: DataFrame, model: OpqModel) {
-  private val rot = model.rotation.map(_.toArray).toArray
-  private val inner = new LocalPqServer(codes, model.pq)
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
-    inner.search(OpqIndex.rotateLocal(rot, q), k)
+  private val served = new LocalScan(codes, PackedKind.opq(model))
+
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = served.search(q, k, ())
+
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Double, Int)]] =
-    inner.searchBatch(qs.map(OpqIndex.rotateLocal(rot, _)), k)
+    served.searchBatch(qs, k, ())
 }
 
 /** In-process IVFPQ: driver probe ranking + hoisted per-cluster residual
-  * ADC tables + tag-masked code scan. Result-identical to
-  * [[IvfPqServer.search]]. */
+  * ADC tables + tag-masked code scan ([[PackedKind.ivfPq]]).
+  * Result-identical to [[IvfPqServer.search]]. */
 final class LocalIvfPqServer(codes: DataFrame, model: IvfPqModel) {
-  private val cents = model.coarse.centroids.map(_.toArray).toArray
-  private val blocks: Array[CodeBlock] =
-    LocalServe.collect(ServeBlocks.packCodes(codes, Some("cluster_id")))
+  private val served = new LocalScan(codes, PackedKind.ivfPq(model))
 
-  /** Per-query probe set + hoisted residual ADC tables + masked-scan
-    * closure. */
-  private def residualScan(q: Array[Double], nprobe: Int): (CodeBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), model.coarse.nlist)
-    val tables = new Array[Array[Double]](model.coarse.nlist)
-    val ksub = model.pq.ksub
-    IvfIndex.probeSet(q, cents, model.coarse.metric, np).foreach { c =>
-      val cent = cents(c)
-      val r = new Array[Double](q.length)
-      var i = 0
-      while (i < q.length) { r(i) = q(i) - cent(i); i += 1 }
-      tables(c) = PqIndex.adcTable(r, model.pq)
-    }
-    (blk, merge) => {
-      val m = blk.m
-      var r = 0
-      while (r < blk.ids.length) {
-        val tab = tables(blk.tags(r).toInt)
-        if (tab != null) {
-          val off = r * m
-          var d = 0.0
-          var mi = 0
-          while (mi < m) { d += tab(mi * ksub + blk.codes(off + mi)); mi += 1 }
-          merge.insert(blk.ids(r), d)
-        }
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(residualScan(q, nprobe))
-      .ranked(math.sqrt)
-  }
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    served.search(q, k, nprobe)
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => residualScan(q, nprobe))
-      .map(_.ranked(math.sqrt))
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] = served.searchBatch(qs, k, nprobe)
 }
 
-/** In-process IVF×SQ8 composite: probe mask over byte-packed codes.
+/** In-process IVF×SQ8 composite: codes grouped by cluster, each probed
+  * cluster scanned as one contiguous range ([[PackedKind.ivfSq8]]).
   * Result-identical to [[IvfSq8Server.search]]. */
 final class LocalIvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel) {
   require(sq8.metric == Metric.L2 && ivf.metric == Metric.L2,
     s"LocalIvfSq8Server serves the l2 kind; got ${sq8.metric.name}/${ivf.metric.name}")
-  private val cents = ivf.centroids.map(_.toArray).toArray
-  private val blocks: Array[ByteBlock] =
-    LocalServe.collect(ServeBlocks.packBytes(codes, Some("cluster_id")))
+  private val served = new LocalScan(codes, PackedKind.ivfSq8(sq8, ivf))
 
-  /** Per-query probe mask + masked table-scan closure — the same
-    * [[graft.index.Sq8Index.sqTable]] kernel as [[LocalSq8Server]]
-    * (bit-identical terms and fold, so parity with the inline form
-    * holds); the 32k-entry table amortizes as long as the probed rows
-    * exceed ~256 (nprobe·n/nlist at any realistic config). */
-  private def maskedDequantScan(q: Array[Double],
-      nprobe: Int): (ByteBlock, BoundedTopK) => Unit = {
-    val np = math.min(math.max(nprobe, 1), ivf.nlist)
-    val mask = new Array[Boolean](ivf.nlist)
-    IvfIndex.probeSet(q, cents, Metric.L2, np).foreach(mask(_) = true)
-    val tab = graft.index.Sq8Index.sqTable(q, sq8.minsArray, sq8.scalesArray)
-    (blk, merge) => {
-      val dim = blk.dim
-      var r = 0
-      while (r < blk.ids.length) {
-        if (mask(blk.tags(r).toInt))
-          merge.insert(blk.ids(r),
-            graft.index.Sq8Index.tableKey(tab, blk.codes, r * dim, dim))
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(maskedDequantScan(q, nprobe))
-      .ranked(math.sqrt)
-  }
+  def search(q: Array[Double], k: Int, nprobe: Int): Array[(Long, Double, Int)] =
+    served.search(q, k, nprobe)
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      nprobe: Int): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => maskedDequantScan(q, nprobe))
-      .map(_.ranked(math.sqrt))
-  }
+      nprobe: Int): Array[Array[(Long, Double, Int)]] = served.searchBatch(qs, k, nprobe)
 }
 
 /** In-process routed sharded HNSW — the engine's 100 TB ANN shape served
@@ -614,40 +429,14 @@ object LocalHnswServer {
 
 /** In-process BQ: XOR + popcount over packed sign words — at dim/8 bytes
   * per row the whole index is megabytes; the scan is the cheapest of any
-  * kind. Result-identical to [[BqServer.search]]. */
+  * kind ([[PackedKind.bq]]). Result-identical to [[BqServer.search]]. */
 final class LocalBqServer(codes: DataFrame, model: BqModel) {
-  private val blocks: Array[WordBlock] =
-    LocalServe.collect(ServeBlocks.packWords(codes))
+  private val served = new LocalScan(codes, PackedKind.bq(model))
 
-  /** Per-query sign packing + XOR/popcount scan closure. */
-  private def hammingScan(q: Array[Double]): (WordBlock, BoundedTopK) => Unit = {
-    val qc = BqIndex.packLocal(q, model.thresholdArray)
-    val nw = qc.length
-    (blk, merge) => {
-      require(blk.nWords == nw,
-        s"serving block has ${blk.nWords} words, query packs to $nw")
-      var r = 0
-      while (r < blk.ids.length) {
-        val off = r * nw
-        var d = 0L
-        var w = 0
-        while (w < nw) { d += java.lang.Long.bitCount(blk.words(off + w) ^ qc(w)); w += 1 }
-        merge.insert(blk.ids(r), d.toDouble)
-        r += 1
-      }
-    }
-  }
-
-  def search(q: Array[Double], k: Int): Array[(Long, Long, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.scan(blocks, k)(hammingScan(q))
-      .ranked(identity).map { case (id, d, r) => (id, d.toLong, r) }
-  }
+  def search(q: Array[Double], k: Int): Array[(Long, Long, Int)] =
+    served.search(q, k, ()).map { case (id, d, r) => (id, d.toLong, r) }
 
   /** Query-parallel batch throughput; per query ≡ [[search]]. */
-  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Long, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
-    LocalServe.batch(qs, blocks, k)(q => hammingScan(q))
-      .map(_.ranked(identity).map { case (id, d, r) => (id, d.toLong, r) })
-  }
+  def searchBatch(qs: Array[Array[Double]], k: Int): Array[Array[(Long, Long, Int)]] =
+    served.searchBatch(qs, k, ()).map(_.map { case (id, d, r) => (id, d.toLong, r) })
 }

@@ -2,24 +2,22 @@ package graft.query
 
 import org.apache.spark.sql.DataFrame
 
-import graft.index.{OpqIndex, OpqModel}
+import graft.index.OpqModel
 
-/** OPQ single-query server — the PQ serving kernel behind a driver-side
-  * query rotation (one dim² matVec per query, microseconds): the rotated
-  * query's ADC table addresses the same packed code blocks PqServer
-  * scans, so serving cost and layout are identical to the PQ kind. */
-final class OpqServer(codes: DataFrame, model: OpqModel) {
+/** OPQ single-query server — the PQ scan behind a driver-side query
+  * rotation (one dim² matVec per query, microseconds): the rotated
+  * query's ADC table addresses the same packed code blocks [[PqServer]]
+  * scans, so serving cost and layout are identical to the PQ kind
+  * ([[PackedKind.opq]]). */
+final class OpqServer(codes: DataFrame, model: OpqModel) extends ServingRdd {
 
-  private val rot = model.rotation.map(_.toArray).toArray
-  private val inner = new PqServer(codes, model.pq)
+  private val served = new DistributedScan(codes, PackedKind.opq(model))
 
   /** Materialize the serving blocks (call once before timing queries). */
-  def warm(): this.type = { inner.warm(); this }
+  def warm(): this.type = { served.warm(); this }
 
   /** One query → top-k (id, distance, rank), driver-merged. */
-  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] =
-    inner.search(OpqIndex.rotateLocal(rot, q), k)
+  def search(q: Array[Double], k: Int): Array[(Long, Double, Int)] = served.search(q, k, ())
 
-  def floorProbe(): Unit = inner.floorProbe()
-  def unpersist(): Unit = inner.unpersist()
+  protected def servingRdd: org.apache.spark.rdd.RDD[_] = served.blocks
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Metric
@@ -8,10 +10,12 @@ import graft.query._
 import graft.queries.VectorQueries
 
 /** The in-process serving mode must be result-IDENTICAL to the
-  * distributed ServingRdd siblings for every kind it covers — the two
-  * paths share the packers and the scalar kernels; these specs pin that
-  * the collected-blocks scan and the common-pool parallel merge change
-  * nothing (same (rank_key, id) total order end to end).
+  * distributed ServingRdd siblings for every kind it covers. For the
+  * packed kinds both shapes run one pack and one per-kind scan
+  * ([[graft.query.PackedKind]]); these specs pin that collecting the
+  * blocks instead of caching them, and the common-pool parallel merge
+  * instead of the driver fold, change nothing (same (rank_key, id) total
+  * order end to end), and that both shapes reject the same bad queries.
   */
 class LocalServeSpec extends AnyFunSuite {
 
@@ -21,6 +25,134 @@ class LocalServeSpec extends AnyFunSuite {
 
   private def queriesArr = vecs._2.collect()
     .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+
+  private type Hits = Seq[(Long, Double, Int)]
+
+  /** A packed kind served both ways over one corpus: the local single
+    * and batch searches, the distributed search, and its release. */
+  private case class Served(local: (Array[Double], Int) => Hits,
+      localBatch: (Array[Array[Double]], Int) => Seq[Hits],
+      dist: (Array[Double], Int) => Hits, release: () => Unit)
+
+  private def bqHits(h: Array[(Long, Long, Int)]): Hits =
+    h.map { case (id, d, r) => (id, d.toDouble, r) }.toSeq
+
+  /** Every packed kind with a distributed server, keyed by name; each
+    * builds both shapes over an (id, vec) corpus with models trained once
+    * on the full corpus. */
+  private lazy val packedKinds: Seq[(String, DataFrame => Served)] = {
+    val corpus = vecs._1
+    val l2 = Metric.L2
+    val ivf = IvfIndex.trainDeterministic(corpus, 8, l2)
+    val pq = PqIndex.trainDeterministic(corpus, m = 4, ksub = 16, l2)
+    val sq8 = Sq8Index.train(corpus, l2)
+    val bq = BqIndex.train(corpus, l2)
+    val ivfpq = IvfPqIndex.trainDeterministic(corpus, nlist = 8, m = 4, ksub = 16, l2)
+    val opq = OpqIndex.train(corpus, 4, nbits = 4, l2)
+    val planes = 8
+    Seq(
+      "ivf" -> { c =>
+        val a = IvfIndex.assign(c, ivf)
+        val (l, d) = (new LocalIvfServer(a, ivf), new IvfServer(a, ivf).warm())
+        Served(l.search(_, _, 3).toSeq, l.searchBatch(_, _, 3).map(_.toSeq).toSeq,
+          d.search(_, _, 3).toSeq, () => d.unpersist())
+      },
+      "lsh" -> { c =>
+        val x = LshIndex.index(c, planes)
+        val (l, d) = (new LocalLshServer(x, planes, l2), new LshServer(x, planes, l2).warm())
+        Served(l.search(_, _, 1).toSeq, l.searchBatch(_, _, 1).map(_.toSeq).toSeq,
+          d.search(_, _, 1).toSeq, () => d.unpersist())
+      },
+      "pq" -> { c =>
+        val x = PqIndex.encode(c, pq)
+        val (l, d) = (new LocalPqServer(x, pq), new PqServer(x, pq).warm())
+        Served(l.search(_, _).toSeq, l.searchBatch(_, _).map(_.toSeq).toSeq,
+          d.search(_, _).toSeq, () => d.unpersist())
+      },
+      "sq8" -> { c =>
+        val x = Sq8Index.encode(c, sq8)
+        val (l, d) = (new LocalSq8Server(x, sq8), new Sq8Server(x, sq8).warm())
+        Served(l.search(_, _).toSeq, l.searchBatch(_, _).map(_.toSeq).toSeq,
+          d.search(_, _).toSeq, () => d.unpersist())
+      },
+      "bq" -> { c =>
+        val x = BqIndex.encode(c, bq)
+        val (l, d) = (new LocalBqServer(x, bq), new BqServer(x, bq).warm())
+        Served((q, k) => bqHits(l.search(q, k)), l.searchBatch(_, _).map(bqHits).toSeq,
+          (q, k) => bqHits(d.search(q, k)), () => d.unpersist())
+      },
+      "ivfpq" -> { c =>
+        val x = IvfPqIndex.encode(c, ivfpq)
+        val (l, d) = (new LocalIvfPqServer(x, ivfpq), new IvfPqServer(x, ivfpq).warm())
+        Served(l.search(_, _, 3).toSeq, l.searchBatch(_, _, 3).map(_.toSeq).toSeq,
+          d.search(_, _, 3).toSeq, () => d.unpersist())
+      },
+      "opq" -> { c =>
+        val x = OpqIndex.encode(c, opq)
+        val (l, d) = (new LocalOpqServer(x, opq), new OpqServer(x, opq).warm())
+        Served(l.search(_, _).toSeq, l.searchBatch(_, _).map(_.toSeq).toSeq,
+          d.search(_, _).toSeq, () => d.unpersist())
+      },
+      "ivfsq8" -> { c =>
+        val x = Sq8Index.encode(c, sq8)
+          .join(IvfIndex.assign(c, ivf).select(col("id"), col("cluster_id")), "id")
+        val (l, d) = (new LocalIvfSq8Server(x, sq8, ivf), new IvfSq8Server(x, sq8, ivf).warm())
+        Served(l.search(_, _, 3).toSeq, l.searchBatch(_, _, 3).map(_.toSeq).toSeq,
+          d.search(_, _, 3).toSeq, () => d.unpersist())
+      })
+  }
+
+  test("local ≡ distributed for every packed kind (IVFPQ, OPQ and IVF×SQ8 " +
+      "included), on the corpus in several blocks, on k > n and on a zero-row corpus") {
+    val corpus = vecs._1
+    val qs = queriesArr.map(_._2)
+    // several partitions, so both shapes merge several blocks' heaps
+    val split = corpus.repartition(4)
+    val tiny = corpus.orderBy("id").limit(3)
+    val empty = corpus.where(lit(false))
+    for ((name, build) <- packedKinds;
+        (label, c, k, maxRows) <- Seq(("corpus", split, K, K), ("k > n", tiny, K, 3),
+          ("zero-row", empty, K, 0))) {
+      val s = build(c)
+      val batch = s.localBatch(qs, k)
+      qs.indices.foreach { i =>
+        val local = s.local(qs(i), k)
+        assert(local == s.dist(qs(i), k), s"$name $label query $i")
+        assert(batch(i) == local, s"$name $label batch query $i")
+        assert(local.length <= maxRows, s"$name $label query $i: ${local.length} rows")
+      }
+      if (label == "corpus") assert(qs.indices.exists(i => s.local(qs(i), k).length == K))
+      s.release()
+    }
+  }
+
+  test("both shapes reject a query of the wrong length, with a non-finite " +
+      "component, or with k <= 0 (one kind per scan family)") {
+    val corpus = vecs._1
+    val q = queriesArr.head._2
+    val dim = q.length
+    val bad = Seq(
+      (q :+ 0.5, K, s"query has ${dim + 1} components, the index dim is $dim"),
+      (q.init, K, s"query has ${dim - 1} components, the index dim is $dim"),
+      (q.updated(3, Double.NaN), K, "query component 3 is NaN"),
+      (q.updated(5, Double.PositiveInfinity), K, "query component 5 is Infinity"),
+      (q.updated(0, Double.NegativeInfinity), K, "query component 0 is -Infinity"),
+      (q, 0, "serving requires k > 0, got 0"))
+    for ((name, build) <- packedKinds if Set("ivf", "lsh", "pq", "sq8", "bq")(name)) {
+      val s = build(corpus)
+      for ((bq, k, msg) <- bad) {
+        val shapes = Seq[(String, () => Any)](
+          "local" -> (() => s.local(bq, k)),
+          "local batch" -> (() => s.localBatch(Array(q, bq), k)),
+          "distributed" -> (() => s.dist(bq, k)))
+        for ((shape, run) <- shapes) {
+          val e = intercept[IllegalArgumentException](run())
+          assert(e.getMessage.contains(msg), s"$name $shape: ${e.getMessage}")
+        }
+      }
+      s.release()
+    }
+  }
 
   test("LocalFlatServer ≡ FlatIndex.knnBlocked across all four metrics") {
     val (corpus, queries) = vecs
