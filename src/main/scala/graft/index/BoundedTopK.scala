@@ -1,7 +1,5 @@
 package graft.index
 
-import scala.reflect.ClassTag
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
@@ -137,56 +135,4 @@ private[graft] object BoundedTopK {
     qids.indices.flatMap { qi =>
       heaps(qi).ranked(finish).map { case (id, d, r) => (qids(qi), id, d, r) }
     }
-}
-
-/** Rows grouped by a non-negative int tag (IVF cluster id, LSH bucket):
-  * one primitive sort of packed `tag<<32|row` keys — no boxing, stable
-  * within a tag — and a per-tag start offset table. Grouped row `r` is
-  * source row `order(r)`; its tag run is `tags(t)` over rows
-  * `[starts(t), starts(t + 1))`. Each caller permutes its own payload
-  * with [[gatherIds]] and [[gather]]. */
-private[graft] final class TagGroups(rowTags: Array[Int]) {
-  val order: Array[Int] = {
-    val n = rowTags.length
-    val keys = new Array[Long](n)
-    var r = 0
-    while (r < n) { keys(r) = (rowTags(r).toLong << 32) | r.toLong; r += 1 }
-    java.util.Arrays.sort(keys)
-    val out = new Array[Int](n)
-    r = 0
-    while (r < n) { out(r) = (keys(r) & 0xFFFFFFFFL).toInt; r += 1 }
-    out
-  }
-
-  val (tags: Array[Int], starts: Array[Int]) = {
-    val tagList = scala.collection.mutable.ArrayBuilder.make[Int]
-    val startList = scala.collection.mutable.ArrayBuilder.make[Int]
-    var r = 0
-    while (r < order.length) {
-      val tag = rowTags(order(r))
-      if (r == 0 || tag != rowTags(order(r - 1))) { tagList += tag; startList += r }
-      r += 1
-    }
-    startList += order.length
-    (tagList.result(), startList.result())
-  }
-
-  /** One LONG per row (an id, a tag), in grouped row order. */
-  def gatherIds(src: Array[Long]): Array[Long] = {
-    val out = new Array[Long](order.length)
-    var r = 0
-    while (r < order.length) { out(r) = src(order(r)); r += 1 }
-    out
-  }
-
-  /** `src` (rows of `width` elements) in grouped row order. */
-  def gather[A: ClassTag](src: Array[A], width: Int): Array[A] = {
-    val out = new Array[A](order.length * width)
-    var r = 0
-    while (r < order.length) {
-      System.arraycopy(src, order(r) * width, out, r * width, width)
-      r += 1
-    }
-    out
-  }
 }

@@ -1,11 +1,12 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.ResultFrames
 
 import graft.core.Metric
+import graft.query.{BlockedScan, PackedKind}
 
 /** BQ — 1-bit binary quantization with Hamming scan + exact re-rank,
   * the modern vector-DB cheap-first-pass shape (sign quantization as in
@@ -103,14 +104,18 @@ object BqIndex {
       .select(col("query_id"), col("neighbor_id"), col("hamming"), col("rank"))
   }
 
-  /** Blocked serving kernel — result-identical to [[knn]] (same packed
-    * words, same (hamming, id) tie-break): each partition fills one heap
-    * per query and [[BoundedTopK.merge]] combines them on the driver into
-    * a local relation, so the scan job runs when this is called. */
+  /** Blocked kernel — result-identical to [[knn]] (same packed words,
+    * same (hamming, id) tie-break): the [[graft.query.PackedKind.bq]] scan
+    * run by [[graft.query.BlockedScan]]. Each partition's words pack once
+    * and scan query-outer (query words in registers, rows contiguous, ONE
+    * resident heap); [[BoundedTopK.merge]] combines the heaps on the
+    * driver into a local relation, so the scan job runs when this is
+    * called. */
   def knnBlocked(codes: DataFrame, model: BqModel, queries: DataFrame, k: Int): DataFrame =
     if (k <= 0) knn(codes, model, queries, k)
     else {
-      val (scanned, qids, heaps) = blockedHeaps(codes, model, queries, k)
+      val (scanned, qids, heaps) =
+        new BlockedScan(codes, PackedKind.bq(model)).heaps(queries, k, ())
       ResultFrames.hammingKnn(scanned, BoundedTopK.rows(qids, heaps, identity))
     }
 
@@ -123,64 +128,7 @@ object BqIndex {
     if (k <= 0) knn(codes, model, queries, k)
       .select(col("query_id"), col("neighbor_id"),
         col("hamming").cast("double").as("distance"), col("rank"))
-    else {
-      val (scanned, qids, heaps) = blockedHeaps(codes, model, queries, k)
-      BoundedTopK.toFrame(scanned, qids, heaps, identity)
-    }
-
-  private def blockedHeaps(codes: DataFrame, model: BqModel, queries: DataFrame,
-      k: Int): (Dataset[_], Array[Long], Array[BoundedTopK]) = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val th = model.thresholdArray
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val qcodes = qvecs.map(packLocal(_, th))
-    val words = model.words
-    val bc = spark.sparkContext.broadcast(qcodes)
-    val scanned = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Long])] // primitive decode — no per-element boxing
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
-      // Flat-pack the partition's words once, then scan QUERY-OUTER
-      // (query words in registers, rows contiguous, ONE resident heap)
-      // — the rows-outer form touched all nq heaps + nq query arrays
-      // per row and lost 5× task-CPU to LLC thrash at 32 threads
-      // (VERDICT r12 wrong #1). Heap contents are insertion-order
-      // independent, so heaps are bit-identical.
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val wordsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      while (it.hasNext) {
-        val (id, code) = it.next()
-        require(code.length == words,
-          s"code row for id=$id has ${code.length} words, model has $words")
-        idsB += id
-        wordsB ++= code
-      }
-      val ids = idsB.result()
-      val data = wordsB.result()
-      val n = ids.length
-      val qs = bc.value
-      if (n == 0) Array.empty[BoundedTopK]
-      else Array.tabulate(qs.length) { qi =>
-        val qc = qs(qi)
-        val h = new BoundedTopK(k)
-        var r = 0
-        var off = 0
-        while (r < n) {
-          var d = 0L
-          var w = 0
-          while (w < words) {
-            d += java.lang.Long.bitCount(data(off + w) ^ qc(w))
-            w += 1
-          }
-          h.insert(ids(r), d.toDouble)
-          r += 1
-          off += words
-        }
-        h
-      }
-    }
-    (scanned, qids, heaps)
-  }
+    else new BlockedScan(codes, PackedKind.bq(model)).search(queries, k, ())
 
   /** Driver-side packing of one query — same MSB-first fold as
     * [[encodeCol]], bit-identical. */

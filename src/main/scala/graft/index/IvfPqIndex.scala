@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Metric
 import graft.functions.VectorFunctions._
+import graft.query.{BlockedScan, PackedKind}
 
 /** IVF + PQ: coarse-quantize to nlist clusters, PQ-encode the *residual*
   * (vector − assigned centroid), search = probe pruning + ADC over
@@ -89,29 +90,31 @@ object IvfPqIndex {
       k: Int, nprobe: Int): DataFrame =
     search(encode(vectors, model), model, queries, k, nprobe)
 
-  /** Blocked serving kernel, result-identical to [[search]]: probe
-    * ranking and the per-(query, probe) residuals are computed
-    * driver-side (nq·nprobe·dim doubles — ~10 MB at nq=1000, dim=128),
-    * shipped as a cluster→(query, residual) inverted index by broadcast.
-    * Each codes partition streams once; a row is ADC-scored only against
-    * the queries probing its cluster, with the same per-subspace fold
-    * order as the PqAdc expression (bit-identical distances). Candidates
-    * are never materialized or shuffled: each partition fills one heap
-    * per query and [[BoundedTopK.merge]] combines them on the driver into
-    * a local relation, so the scan job runs when this is called.
+  /** Blocked kernel, result-identical to [[search]]: the
+    * [[graft.query.PackedKind.ivfPq]] scan run by
+    * [[graft.query.BlockedScan]]. Probe ranking and the per-probe query
+    * residuals are computed once per query on the driver (nq·nprobe·dim
+    * doubles — ~10 MB at nq=1000, dim=128). Each codes partition packs
+    * once, grouped by cluster, and each query walks only its probed
+    * clusters' codes, each cluster one contiguous range, with the same
+    * per-subspace fold order as the PqAdc expression (bit-identical
+    * distances). Candidates are never materialized or shuffled: each
+    * partition fills one heap per query and [[BoundedTopK.merge]]
+    * combines them on the driver into a local relation, so the scan job
+    * runs when this is called.
     *
     * ADC tables hoist *adaptively, per cluster range*: a driver-side
     * hoist of all nq·nprobe M×Ksub tables would broadcast ≈ 160 MB at
-    * nq=1000, so instead each partition packs cluster-grouped and builds
-    * a (cluster, query) table only when that cluster's row range is
-    * longer than `adcHoistThreshold` (default ksub — the flop
-    * break-even: one table costs dim·Ksub, each row then saves ~dim).
-    * Sparse clusters (the nq=1000 bench shape, ~10 rows per
-    * cluster-partition) never pay the table cost; dense clusters (the
-    * 100 TB layout, ≫ ksub rows per partition) converge to M lookups
-    * per row. The table entry and the direct form share the same
-    * per-subspace fold, so distances are bit-identical either way.
-    * `query_id` is cast to LONG, like every blocked kernel. */
+    * nq=1000, so instead a range's residual table is built (into a
+    * per-thread scratch buffer) only when the range is longer than
+    * `adcHoistThreshold` (default ksub — the flop break-even: one table
+    * costs dim·Ksub, each row then saves ~dim). Sparse clusters (the
+    * nq=1000 bench shape, ~10 rows per cluster-partition) never pay the
+    * table cost; dense clusters (the 100 TB layout, ≫ ksub rows per
+    * partition) converge to M lookups per row. The table entry and the
+    * direct form share the same per-subspace fold, so distances are
+    * bit-identical either way. `query_id` is cast to LONG, like every
+    * blocked kernel. */
   def searchBlocked(codes: DataFrame, model: IvfPqModel, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame =
     searchBlocked(codes, model, queries, k, nprobe, adcHoistThreshold = -1)
@@ -119,146 +122,8 @@ object IvfPqIndex {
   /** `adcHoistThreshold` < 0 means ksub (the flop break-even); 0 hoists
     * on the first row (test hook for the table path). */
   private[graft] def searchBlocked(codes: DataFrame, model: IvfPqModel,
-      queries: DataFrame, k: Int, nprobe: Int, adcHoistThreshold: Int): DataFrame = {
-    if (k <= 0) return search(codes, model, queries, k, nprobe)
-    val hoistAt = if (adcHoistThreshold >= 0) adcHoistThreshold else model.pq.ksub
-    val np = math.min(math.max(nprobe, 1), model.coarse.nlist)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val cents = model.coarse.centroids.map(_.toArray).toArray
-    val cbs = model.pq.codebookArrays
-    val m = model.pq.m
-    val dsub = model.pq.dsub
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    // cluster -> (probing query indices, their residuals w.r.t. that centroid)
-    val nlist = model.coarse.nlist
-    // per-query probe ranking + residuals are pure per slot — DriverPar
-    // fan-out (was a serial driver phase per call); the inverted index
-    // is then assembled sequentially in ascending qi, so list order is
-    // deterministic and identical to the serial form
-    val probes = new Array[Array[Int]](qvecs.length)
-    val residuals = new Array[Array[Array[Double]]](qvecs.length)
-    DriverPar.foreach(qvecs.length, chunk = 64) { qi =>
-      val q = qvecs(qi)
-      val ps = IvfIndex.probeSet(q, cents, model.coarse.metric, np)
-      probes(qi) = ps
-      residuals(qi) = ps.map { c =>
-        val cent = cents(c)
-        val r = new Array[Double](q.length)
-        var i = 0
-        while (i < q.length) { r(i) = q(i) - cent(i); i += 1 }
-        r
-      }
-    }
-    val qiBuf = Array.fill(nlist)(new scala.collection.mutable.ArrayBuffer[Int])
-    val resBuf = Array.fill(nlist)(new scala.collection.mutable.ArrayBuffer[Array[Double]])
-    var qi = 0
-    while (qi < qvecs.length) {
-      val ps = probes(qi)
-      var pi = 0
-      while (pi < ps.length) {
-        qiBuf(ps(pi)) += qi
-        resBuf(ps(pi)) += residuals(qi)(pi)
-        pi += 1
-      }
-      qi += 1
-    }
-    val inv = Array.tabulate(nlist)(c => (qiBuf(c).toArray, resBuf(c).toArray))
-    val bc = spark.sparkContext.broadcast((inv, cbs))
-    val scanned = codes
-      .select(col("id").cast("long"), col("cluster_id"), col("code"))
-      .as[(Long, Int, Array[Int])]
-    val nq = qids.length
-    val heaps = BoundedTopK.merge(scanned.rdd, nq, k) { it =>
-      // Pack the partition CLUSTER-GROUPED ([[TagGroups]]), then scan
-      // cluster-outer / query-inner: each probing query walks its
-      // cluster's codes as ONE contiguous range with ONE resident heap and (when hoisted) ONE
-      // cache-resident flat ADC table. The rows-outer form touched
-      // qlist.length scattered heaps per row and thrashed the LLC at
-      // 32 tasks (VERDICT r12 wrong #1: ivfpq/opq_ivfpq QPS rows
-      // anti-scaled with cores). The adaptive per-row hoist becomes a
-      // per-range decision (range length known up front — build the
-      // table iff the range outweighs the table's dim·Ksub flops);
-      // table and direct forms add the SAME doubles in the SAME
-      // ascending-mi order (pinned bit-identical), and heap contents
-      // are insertion-order independent → heaps bit-identical.
-      val (inverted, cbs) = bc.value
-      val ksub = cbs(0).length
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-      val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
-      while (it.hasNext) {
-        val (id, cid, code) = it.next()
-        require(cid >= 0, s"negative cluster_id $cid for id=$id")
-        require(code.length == m,
-          s"code row for id=$id has ${code.length} codes, model has $m")
-        idsB += id
-        tagsB += cid
-        codesB ++= code
-      }
-      val groups = new TagGroups(tagsB.result())
-      val gIds = groups.gatherIds(idsB.result())
-      val gCodes = groups.gather(codesB.result(), m)
-      val tags = groups.tags
-      val starts = groups.starts
-      val heaps = Array.fill(nq)(new BoundedTopK(k))
-      val tabBuf = new Array[Double](m * ksub) // reused per (cluster, query)
-      var t = 0
-      while (t < tags.length) {
-        val (qlist, rlist) = inverted(tags(t))
-        val lo = starts(t)
-        val hi = starts(t + 1)
-        val useTable = (hi - lo) > hoistAt
-        var li = 0
-        while (li < qlist.length) {
-          val h = heaps(qlist(li))
-          val res = rlist(li)
-          if (useTable) {
-            // entry mi·ksub + j: same inner fold as the direct form
-            var mi = 0
-            while (mi < m) {
-              val off = mi * dsub
-              var j = 0
-              while (j < ksub) {
-                val row = cbs(mi)(j)
-                var d = 0.0
-                var i = 0
-                while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                tabBuf(mi * ksub + j) = d
-                j += 1
-              }
-              mi += 1
-            }
-            var rr = lo
-            while (rr < hi) {
-              h.insert(gIds(rr), PqIndex.adcRow(tabBuf, 0, ksub, gCodes, rr * m, m))
-              rr += 1
-            }
-          } else {
-            var rr = lo
-            while (rr < hi) {
-              val cOff = rr * m
-              var acc = 0.0
-              var mi2 = 0
-              while (mi2 < m) {
-                val row = cbs(mi2)(gCodes(cOff + mi2))
-                val off = mi2 * dsub
-                var d = 0.0
-                var i = 0
-                while (i < dsub) { val x = res(off + i) - row(i); d += x * x; i += 1 }
-                acc += d
-                mi2 += 1
-              }
-              h.insert(gIds(rr), acc)
-              rr += 1
-            }
-          }
-          li += 1
-        }
-        t += 1
-      }
-      heaps
-    }
-    BoundedTopK.toFrame(scanned, qids, heaps, math.sqrt)
-  }
+      queries: DataFrame, k: Int, nprobe: Int, adcHoistThreshold: Int): DataFrame =
+    if (k <= 0) search(codes, model, queries, k, nprobe)
+    else new BlockedScan(codes, PackedKind.ivfPq(model, adcHoistThreshold))
+      .search(queries, k, nprobe)
 }

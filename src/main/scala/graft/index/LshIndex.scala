@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Metric
 import graft.functions.VectorFunctions._
+import graft.query.{BlockedScan, PackedKind}
 
 /** Random-hyperplane (sign) LSH — the engine's high-throughput ANN kind
   * (SURVEY.md §7 M5 originally substituted it for HNSW; since round 4 a
@@ -88,85 +89,22 @@ object LshIndex {
     org.apache.spark.sql.graftx.LshBucketKernel.bucketArray(vec, planes)
   }
 
-  /** Blocked ANN kernel, result-identical to [[knn]]: query buckets are
-    * computed driver-side, a bucket→queries hash map ships by broadcast,
-    * and each index partition streams once, scoring a row only against
-    * the queries in its bucket — candidates never materialize into a join
-    * or shuffle. Each partition fills one heap per query and
-    * [[BoundedTopK.merge]] combines them on the driver into a local
-    * relation, so the scan job runs when this is called. `query_id` is
-    * cast to LONG, like every blocked kernel. */
+  /** Blocked ANN kernel, result-identical to [[knn]] (hamming = 0) and
+    * [[knnMultiProbe]] (hamming = 1): the [[graft.query.PackedKind.lsh]]
+    * scan run by [[graft.query.BlockedScan]]. Query buckets are computed
+    * once per query on the driver; each index partition packs once,
+    * grouped by bucket, and each query walks only its probed buckets'
+    * rows, each bucket one contiguous range — candidates never
+    * materialize into a join or shuffle. Each partition fills one heap
+    * per query and [[BoundedTopK.merge]] combines them on the driver into
+    * a local relation, so the scan job runs when this is called. The
+    * grouped pack needs int bucket tags, so `planes` must be ≤ 31.
+    * `query_id` is cast to LONG, like every blocked kernel. */
   def knnBlocked(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
       metric: Metric, hamming: Int = 0): DataFrame = {
     require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-    if (k <= 0) return knn(indexed, queries, k, planes, metric)
-    val spark = indexed.sparkSession
-    import spark.implicits._
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val byBucket = new scala.collection.mutable.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]
-    def register(b: Long, qi: Int): Unit =
-      byBucket.getOrElseUpdate(b, new scala.collection.mutable.ArrayBuffer[Int]) += qi
-    qvecs.zipWithIndex.foreach { case (q, qi) =>
-      val qb = bucketScalar(q, planes)
-      register(qb, qi)
-      if (hamming >= 1) (0 until planes).foreach(p => register(qb ^ (1L << p), qi))
-    }
-    val inv: Map[Long, Array[Int]] = byBucket.map { case (b, qs) => b -> qs.toArray }.toMap
-    val bc = spark.sparkContext.broadcast((qvecs, inv))
-    // sign-LSH buckets are plane-bit sums < 2^planes, so they fit the
-    // int tags of the grouping sort below
-    require(planes <= 31, s"knnBlocked supports planes <= 31, got $planes")
-    val scanned = indexed.select(col("id").cast("long"), col("vec"), col("bucket"))
-      .as[(Long, Array[Double], Long)] // primitive decode — no boxing
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
-      // Pack the partition BUCKET-GROUPED ([[TagGroups]]), then scan
-      // bucket-outer / query-inner: each registered query walks its
-      // bucket's rows as ONE contiguous range with ONE resident heap.
-      // The rows-outer form touched qlist.length scattered heaps per row
-      // — LLC thrash at 32 tasks (VERDICT r12 wrong #1: lsh_qps
-      // anti-scaled with cores). Heap contents are insertion-order
-      // independent → heaps bit-identical.
-      val (qs, inverted) = bc.value
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val tagsB = scala.collection.mutable.ArrayBuilder.make[Int]
-      val dataB = scala.collection.mutable.ArrayBuilder.make[Double]
-      var dim = -1
-      while (it.hasNext) {
-        val (id, v, b) = it.next()
-        require(b >= 0 && b <= Int.MaxValue, s"bucket $b out of range for id=$id")
-        idsB += id
-        tagsB += b.toInt
-        if (dim < 0) dim = v.length
-        require(v.length == dim, s"ragged vector for id=$id: ${v.length} != $dim")
-        dataB ++= v
-      }
-      val groups = new TagGroups(tagsB.result())
-      val gIds = groups.gatherIds(idsB.result())
-      val gData = groups.gather(dataB.result(), dim)
-      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-      var t = 0
-      while (t < groups.tags.length) {
-        inverted.get(groups.tags(t).toLong) match {
-          case Some(qlist) =>
-            var li = 0
-            while (li < qlist.length) {
-              val qi = qlist(li)
-              val q = qs(qi)
-              val h = heaps(qi)
-              var rr = groups.starts(t)
-              while (rr < groups.starts(t + 1)) {
-                h.insert(gIds(rr), metric.rankKeyScalar(q, gData, rr * dim, dim))
-                rr += 1
-              }
-              li += 1
-            }
-          case None =>
-        }
-        t += 1
-      }
-      heaps
-    }
-    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
+    if (k <= 0) knn(indexed, queries, k, planes, metric)
+    else new BlockedScan(indexed, PackedKind.lsh(planes, metric)).search(queries, k, hamming)
   }
 
   // ---- DuckDB fragments ----

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Metric
 import graft.functions.VectorFunctions._
+import graft.query.{BlockedScan, PackedKind}
 
 /** Product quantization: split dim into M subspaces of dsub, quantize each
   * subvector to one of Ksub codebook entries; a vector compresses to M
@@ -284,88 +285,18 @@ object PqIndex {
   def adcDist2(qvec: Column, code: Column, model: PqModel): Column =
     org.apache.spark.sql.graftx.IndexExpressions.pqAdc(qvec, code, model.codebooks)
 
-  /** Blocked ADC kNN: per-query distance tables (M × Ksub subspace
-    * distances — the reference's loop-invariant hoist, pq.go:144-155)
-    * are precomputed ONCE on the driver and broadcast (nq·M·Ksub
-    * doubles), so the code scan is M table lookups per (code, query)
-    * instead of dim flops — 16× less arithmetic at M=8, dsub=16. The
-    * n·q candidate rows are never materialized: each partition fills one
-    * heap per query, [[BoundedTopK.merge]] combines them on the driver,
-    * and the result is a local relation (the scan job runs when this is
-    * called). Results identical to [[knn]] (same per-subspace fold
-    * order).
-    *
-    * Hot-loop layout (r13; history: r5 shipped per-query table objects
-    * that degraded 4.9× under memory contention, r5 #2's fix transposed
-    * them into one `(mi·ksub + code)·nq + qi` array — which walked a
-    * 33 MB table per ROW and anti-scaled with cores, VERDICT r12 wrong
-    * #1): the partition's codes flat-pack once, then the scan runs
-    * QUERY-OUTER — the active query's 32 KB flat table stays cache-
-    * resident, the code block streams contiguously, and only ONE top-k
-    * buffer is hot at a time. Per-query accumulation stays ascending-mi
-    * over the same [[adcTable]] doubles, and top-k contents are
-    * insertion-order independent, so distances and heaps are
-    * bit-identical to both prior layouts and to [[knn]]. Codes decode
-    * via the primitive `Array[Int]` encoder (no per-element boxing). */
-  def knnBlocked(codes: DataFrame, model: PqModel, queries: DataFrame, k: Int): DataFrame = {
-    if (k <= 0) return knn(codes, model, queries, k)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val m = model.m
-    val ksub = model.ksub
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val nq = qids.length
-    // one flat M·Ksub table per query, concatenated: query qi's table at
-    // offset qi·m·ksub — 32 KB per query, L2-resident during its scan
-    val tabs = new Array[Double](nq * m * ksub)
-    // pure per-query table builds — DriverPar slot writes (the trainer
-    // recipe): deterministic, each query's table lands in its own range
-    graft.index.DriverPar.foreach(nq, chunk = 64) { ti =>
-      val tab = adcTable(qvecs(ti), model)
-      System.arraycopy(tab, 0, tabs, ti * m * ksub, tab.length)
-    }
-    val bc = spark.sparkContext.broadcast(tabs)
-    val scanned = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Array[Int])]
-    val heaps = BoundedTopK.merge(scanned.rdd, nq, k) { it =>
-      // Flat-pack the partition's codes once, then scan QUERY-OUTER:
-      // the active query's 32 KB ADC table stays cache-resident and
-      // the code block streams contiguously, with ONE resident heap.
-      // The r5 rows-outer form walked M runs of nq doubles across a
-      // 33 MB transposed table per row and touched all nq heaps — a
-      // working set that thrashed the shared LLC once 32 tasks ran it
-      // (VERDICT r12 wrong #1: pq/opq QPS anti-scaled with cores).
-      // Per-pair accumulation is still ascending-mi over the SAME
-      // adcTable doubles, and heap contents are insertion-order
-      // independent — heaps bit-identical.
-      val t = bc.value
-      val idsB = scala.collection.mutable.ArrayBuilder.make[Long]
-      val codesB = scala.collection.mutable.ArrayBuilder.make[Int]
-      while (it.hasNext) {
-        val (id, code) = it.next()
-        require(code.length == m,
-          s"code row for id=$id has ${code.length} codes, model has $m")
-        idsB += id
-        codesB ++= code
-      }
-      val ids = idsB.result()
-      val codeBlk = codesB.result()
-      val n = ids.length
-      if (n == 0) Array.empty[BoundedTopK]
-      else Array.tabulate(nq) { qi =>
-        val tBase = qi * m * ksub
-        val h = new BoundedTopK(k)
-        var r = 0
-        while (r < n) {
-          h.insert(ids(r), adcRow(t, tBase, ksub, codeBlk, r * m, m))
-          r += 1
-        }
-        h
-      }
-    }
-    // ADC reports √ of the summed squares (pq.go:158-168)
-    BoundedTopK.toFrame(scanned, qids, heaps, math.sqrt)
-  }
+  /** Blocked ADC kNN, result-identical to [[knn]] (same per-subspace
+    * fold order): the [[graft.query.PackedKind.pq]] scan run by
+    * [[graft.query.BlockedScan]]. Each query's flat M·Ksub distance
+    * table (the reference's loop-invariant hoist, pq.go:144-155) is built
+    * once on the driver, so a code row costs M table lookups instead of
+    * dim flops; each partition's codes pack once and scan query-outer
+    * (the active query's table stays cache-resident, ONE heap is hot),
+    * and [[BoundedTopK.merge]] combines the heaps on the driver into a
+    * local relation, so the scan job runs when this is called. */
+  def knnBlocked(codes: DataFrame, model: PqModel, queries: DataFrame, k: Int): DataFrame =
+    if (k <= 0) knn(codes, model, queries, k)
+    else new BlockedScan(codes, PackedKind.pq(model)).search(queries, k, ())
 
   /** ADC distance (squared) of the packed code row at `off`: its `m`
     * entries of the flat table at `tabOff` ([[adcTable]]'s layout),
@@ -387,13 +318,17 @@ object PqIndex {
     * one load per subspace. Inner fold matches
     * [[org.apache.spark.sql.graftx.IndexExpressions.pqAdc]] per-subspace
     * accumulation bit-for-bit, so table-sum == expression ADC exactly. */
-  private[graft] def adcTable(q: Array[Double], model: PqModel): Array[Double] = {
-    val dsub = model.dsub
-    val ksub = model.ksub
-    val cbs = model.codebookArrays
-    val out = new Array[Double](model.m * ksub)
+  private[graft] def adcTable(q: Array[Double], model: PqModel): Array[Double] =
+    adcTableInto(q, model.codebookArrays, model.dsub,
+      new Array[Double](model.m * model.ksub))
+
+  /** [[adcTable]] written into `out` (at least M·Ksub long) from the
+    * primitive codebooks; returns `out`. */
+  private[graft] def adcTableInto(q: Array[Double], cbs: Array[Array[Array[Double]]],
+      dsub: Int, out: Array[Double]): Array[Double] = {
+    val ksub = cbs(0).length
     var mi = 0
-    while (mi < model.m) {
+    while (mi < cbs.length) {
       val book = cbs(mi)
       val off = mi * dsub
       var j = 0
@@ -408,6 +343,27 @@ object PqIndex {
       mi += 1
     }
     out
+  }
+
+  /** ADC distance (squared) of the packed code row at `off` straight from
+    * the codebooks, no table: each subspace's term is the fold of its
+    * [[adcTable]] entry and the terms add in ascending subspace order, so
+    * the value is bit-identical to [[adcRow]] over the table. Cheaper
+    * than building a table for a range of fewer rows than Ksub. */
+  @inline private[graft] def adcDirect(q: Array[Double], cbs: Array[Array[Array[Double]]],
+      dsub: Int, codes: Array[Int], off: Int, m: Int): Double = {
+    var acc = 0.0
+    var mi = 0
+    while (mi < m) {
+      val row = cbs(mi)(codes(off + mi))
+      val qOff = mi * dsub
+      var d = 0.0
+      var i = 0
+      while (i < dsub) { val t = q(qOff + i) - row(i); d += t * t; i += 1 }
+      acc += d
+      mi += 1
+    }
+    acc
   }
 
   /** Batch ADC kNN over the codes table. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
+import graft.query.{BlockedScan, PackedKind}
 
 /** SQ8 scalar quantization: per-dimension affine 8-bit codes
   * (`code_d = round((x_d - min_d) / scale_d)`, `scale_d = (max_d -
@@ -138,9 +139,13 @@ object Sq8Index {
     * dim·256 doubles (256 KB at dim 128) — L2-cache-resident, amortized
     * over the ≥ thousands of rows a scan touches per query. */
   private[graft] def sqTable(q: Array[Double], mins: Array[Double],
-      scales: Array[Double]): Array[Double] = {
+      scales: Array[Double]): Array[Double] =
+    sqTableInto(q, mins, scales, new Array[Double](mins.length << 8))
+
+  /** [[sqTable]] written into `tab` (at least dim·256 long); returns it. */
+  private[graft] def sqTableInto(q: Array[Double], mins: Array[Double],
+      scales: Array[Double], tab: Array[Double]): Array[Double] = {
     val dim = mins.length
-    val tab = new Array[Double](dim << 8)
     var i = 0
     while (i < dim) {
       val qi = q(i)
@@ -170,8 +175,8 @@ object Sq8Index {
     d
   }
 
-  /** Unmasked table scan with FOUR-ROW software pipelining — the SQ8
-    * serving hot loop. The canonical per-row fold is one serial
+  /** Table scan of the contiguous row range [from, until) with FOUR-ROW
+    * software pipelining — the SQ8 scan hot loop. The canonical per-row fold is one serial
     * dependency chain (~1 element per 4-cycle add latency — why the r11
     * single-row ADC scan still benched under the raw-double flat scan
     * despite 8× less data), and that chain is VALUE-PINNED: serving must
@@ -179,19 +184,9 @@ object Sq8Index {
     * reassociating within a row is off the table. Interleaving four
     * ROWS' folds instead gives the core four independent add chains
     * while each row's own fold stays exactly canonical — bit-identical
-    * results, ~4× the add throughput. Heap inserts stay in row order. */
-  private[graft] def tableScanAll(tab: Array[Double], ids: Array[Long],
-      codes: Array[Byte], dim: Int, merge: BoundedTopK): Unit =
-    tableScanRange(tab, ids, codes, dim, 0, ids.length, merge)
-
-  /** [[tableScanAll]] over the contiguous row range [from, until) — the
-    * probed-cluster scan for the IVF×SQ8 serving kind (VERDICT r11 wrong
-    * #2: the masked per-row branch scan cost ∝ n, not probed mass; with
-    * rows cluster-sorted at pack time each probed cluster is one
-    * contiguous range through this same pipelined kernel). Row folds are
-    * the canonical [[tableKey]] chain, so per-row values are
-    * bit-identical regardless of where the 4-row groups start; the
-    * result set depends only on (rank_key, id), not insert order. */
+    * results, ~4× the add throughput. Heap inserts stay in row order, and
+    * per-row values do not depend on where the 4-row groups start, so a
+    * probed cluster's range (IVF×SQ8) scans through the same kernel. */
   private[graft] def tableScanRange(tab: Array[Double], ids: Array[Long],
       codes: Array[Byte], dim: Int, from: Int, until: Int,
       merge: BoundedTopK): Unit = {
@@ -221,45 +216,14 @@ object Sq8Index {
     }
   }
 
-  /** Blocked serving kernel — result-identical to [[knn]] (same dequantize
-    * arithmetic, same rank-key fold, same (dist, id) tie-break): each
-    * partition fills one heap per query and [[BoundedTopK.merge]]
-    * combines them on the driver into a local relation, so the scan job
-    * runs when this is called. */
-  def knnBlocked(codes: DataFrame, model: Sq8Model, queries: DataFrame, k: Int): DataFrame = {
-    if (k <= 0) return knn(codes, model, queries, k)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val metric = model.metric
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val bc = spark.sparkContext.broadcast((qvecs, model.minsArray, model.scalesArray))
-    val scanned = codes.select(col("id").cast("long"), col("code"))
-      .as[(Long, Seq[Byte])]
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
-      val (qs, mins, scales) = bc.value
-      val nq = qs.length
-      val dim = mins.length
-      val heaps = Array.fill(nq)(new BoundedTopK(k))
-      val recon = new Array[Double](dim)
-      while (it.hasNext) {
-        val (id, code) = it.next()
-        // fail fast: a short row would leave the previous row's tail in
-        // the reused recon buffer — silently wrong distances
-        require(code.length == dim,
-          s"code row for id=$id has ${code.length} dims, model has $dim")
-        var d = 0
-        while (d < dim) {
-          recon(d) = mins(d) + (code(d).toInt + 128).toDouble * scales(d)
-          d += 1
-        }
-        var qi = 0
-        while (qi < nq) {
-          heaps(qi).insert(id, metric.rankKeyScalar(qs(qi), recon))
-          qi += 1
-        }
-      }
-      heaps
-    }
-    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
-  }
+  /** Blocked kNN, result-identical to [[knn]] (same dequantize
+    * arithmetic, same rank-key fold, same (dist, id) tie-break): the
+    * [[graft.query.PackedKind.sq8]] scan run by
+    * [[graft.query.BlockedScan]] — each partition's codes pack once and
+    * scan query-outer, and [[BoundedTopK.merge]] combines the heaps on
+    * the driver into a local relation, so the scan job runs when this is
+    * called. */
+  def knnBlocked(codes: DataFrame, model: Sq8Model, queries: DataFrame, k: Int): DataFrame =
+    if (k <= 0) knn(codes, model, queries, k)
+    else new BlockedScan(codes, PackedKind.sq8(model)).search(queries, k, ())
 }

@@ -55,8 +55,14 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
       .localCheckpoint()
   }
 
+  /** The graphs' vector dim (-1 when every shard is empty) — the query
+    * length [[PackedKind.requireQueries]] enforces. Its job materializes
+    * the cached graphs. */
+  private lazy val dim: Int =
+    rdd.map(g => if (g.n > 0) g.dim else -1).fold(-1)(math.max)
+
   /** Materialize the shard graphs (call once before timing queries). */
-  def warm(): this.type = { rdd.count(); this }
+  def warm(): this.type = { dim; this }
 
   /** Batch kNN over the RESIDENT graphs — result-identical to
     * [[HnswIndex.knnBlocked]] (same walks, same [[BoundedTopK.merge]])
@@ -70,9 +76,9 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
     * own. */
   def searchBatch(queries: DataFrame, k: Int,
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
-    require(k > 0, s"serving requires k > 0, got $k")
     val spark = graph.sparkSession
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    PackedKind.requireQueries(qvecs, k, dim)
     val bc = spark.sparkContext.broadcast(qvecs)
     val ef = math.max(efSearch, k)
     val heaps = BoundedTopK.merge(rdd, qids.length, k) { it =>
@@ -103,7 +109,7 @@ final class HnswServer(graph: DataFrame, metric: Metric, numShards: Int = -1)
   /** One query → top-k (id, distance, rank), driver-merged. */
   def search(q: Array[Double], k: Int,
       efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(Array(q), k, dim)
     val ef = math.max(efSearch, k)
     val top = BoundedTopK.merge(rdd, 1, k) { it =>
       val merge = new BoundedTopK(k)

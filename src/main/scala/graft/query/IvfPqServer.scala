@@ -10,12 +10,12 @@ import graft.index.IvfPqModel
   * (pkg/search/search.go:92-112; ivfpq.go:222-284 search semantics).
   *
   * Same engineering as [[IvfServer]]: codes packed ONCE into cached
-  * primitive blocks tagged by cluster id. A single query probes only
-  * `nprobe` clusters, so all of their residual ADC tables are hoisted on
-  * the driver and ship in the task closure ([[PackedKind.ivfPq]];
-  * [[graft.index.IvfPqIndex.searchBlocked]] hoists adaptively per
-  * partition because it carries 1000 queries). ONE single-stage RDD job
-  * per query.
+  * primitive blocks grouped by cluster id. Per query the probe ranking
+  * and the per-probe residuals ship in the task closure, and each probed
+  * cluster's range builds its residual ADC table only when it is longer
+  * than Ksub rows ([[PackedKind.ivfPq]], the same scan
+  * [[graft.index.IvfPqIndex.searchBlocked]] runs). ONE single-stage RDD
+  * job per query.
   *
   * Result order/tie-break matches [[graft.index.IvfPqIndex.searchBlocked]]
   * exactly: ascending (rank_key, id); distances bit-identical.

@@ -11,9 +11,10 @@ import graft.index.IvfModel
   * Spark's floor for one query is a scheduled job, so the hot path is
   * exactly ONE single-stage RDD job ([[DistributedScan]]): the assigned
   * table is packed ONCE into [[ServeBlocks.ServePartitions]] cached
-  * primitive blocks — construction cost, not query cost — and per query
-  * the probe ranking runs on the driver and a boolean cluster mask ships
-  * in the task closure ([[PackedKind.ivf]]).
+  * primitive blocks, rows grouped by cluster — construction cost, not
+  * query cost. Per query the probe ranking runs on the driver, the probe
+  * list ships in the task closure, and each task scans only the probed
+  * clusters' row ranges ([[PackedKind.ivf]]).
   *
   * Result order/tie-break matches [[graft.index.IvfIndex.searchBlocked]]
   * exactly: ascending (rank_key, id).

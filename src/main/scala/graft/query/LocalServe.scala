@@ -87,6 +87,11 @@ private[graft] object LocalServe {
     * blocks (the replicated routed graph,
     * [[graft.index.RoutedHnswIndex.buildReplicated]]); within a block an
     * id appears once, so the per-block heaps never need it. */
+  /** The vector dim of in-process HNSW graphs (-1 when all are empty):
+    * the query length their servers enforce. */
+  def graphDim(graphs: Array[graft.index.CompiledHnsw]): Int =
+    graphs.foldLeft(-1)((d, g) => if (g.n > 0) math.max(d, g.dim) else d)
+
   def scan[B](blocks: Array[B], k: Int, distinct: Boolean = false)(
       perBlock: (B, BoundedTopK) => Unit): BoundedTopK = {
     val heaps = new Array[BoundedTopK](blocks.length)
@@ -113,7 +118,8 @@ final class LocalFlatServer(vectors: DataFrame, metric: Metric) {
     served.searchBatch(qs, k, ())
 }
 
-/** In-process IVF: driver probe ranking + mask-pruned local scan
+/** In-process IVF: driver probe ranking, then each probed cluster's rows
+  * as one contiguous range of the cluster-grouped blocks
   * ([[PackedKind.ivf]]). Result-identical to [[IvfServer.search]]. */
 final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
   private val served = new LocalScan(assigned, PackedKind.ivf(model))
@@ -126,8 +132,9 @@ final class LocalIvfServer(assigned: DataFrame, model: IvfModel) {
       nprobe: Int): Array[Array[(Long, Double, Int)]] = served.searchBatch(qs, k, nprobe)
 }
 
-/** In-process sign-LSH: bucket + Hamming-1 probes, binary-searched per
-  * row ([[PackedKind.lsh]]). Result-identical to [[LshServer.search]]. */
+/** In-process sign-LSH: the query's bucket and its Hamming-1 flips, each
+  * probed bucket one contiguous range of the bucket-grouped blocks
+  * ([[PackedKind.lsh]]). Result-identical to [[LshServer.search]]. */
 final class LocalLshServer(indexed: DataFrame, planes: Int, metric: Metric) {
   private val served = new LocalScan(indexed, PackedKind.lsh(planes, metric))
 
@@ -151,8 +158,9 @@ final class LocalPqServer(codes: DataFrame, model: PqModel) {
     served.searchBatch(qs, k, ())
 }
 
-/** In-process SQ8: per-query squared-difference table, one byte load +
-  * one table add per component, four rows pipelined ([[PackedKind.sq8]]).
+/** In-process SQ8: a squared-difference table per (query, block), one
+  * byte load + one table add per component, four rows pipelined
+  * ([[PackedKind.sq8]]).
   * Result-identical to [[Sq8Server.search]]. */
 final class LocalSq8Server(codes: DataFrame, model: Sq8Model) {
   require(model.metric == Metric.L2,
@@ -266,8 +274,10 @@ final class LocalOpqServer(codes: DataFrame, model: OpqModel) {
     served.searchBatch(qs, k, ())
 }
 
-/** In-process IVFPQ: driver probe ranking + hoisted per-cluster residual
-  * ADC tables + tag-masked code scan ([[PackedKind.ivfPq]]).
+/** In-process IVFPQ: driver probe ranking and per-probe query residuals,
+  * then each probed cluster's codes as one contiguous range of the
+  * cluster-grouped blocks, ADC-scored with a residual table only where
+  * the range outweighs building one ([[PackedKind.ivfPq]]).
   * Result-identical to [[IvfPqServer.search]]. */
 final class LocalIvfPqServer(codes: DataFrame, model: IvfPqModel) {
   private val served = new LocalScan(codes, PackedKind.ivfPq(model))
@@ -314,9 +324,11 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
     arr
   }
 
+  private val dim: Int = LocalServe.graphDim(graphs.filter(_ != null))
+
   def search(q: Array[Double], k: Int, probeRegions: Int,
       efSearch: Int = graft.index.HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(Array(q), k, dim)
     val ef = math.max(efSearch, k)
     val probed = RoutedHnswIndex.probeShards(q, model, probeRegions)
       .map(graphs(_)).filter(_ != null)
@@ -336,7 +348,7 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
     * [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int, probeRegions: Int,
       efSearch: Int = graft.index.HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(qs, k, dim)
     val ef = math.max(efSearch, k)
     val out = new Array[Array[(Long, Double, Int)]](qs.length)
     java.util.stream.IntStream.range(0, qs.length).parallel().forEach { qi =>
@@ -383,9 +395,11 @@ final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
         .toArray
     }
 
+  private val dim: Int = LocalServe.graphDim(graphs)
+
   def search(q: Array[Double], k: Int,
       efSearch: Int = graft.index.HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(Array(q), k, dim)
     val ef = math.max(efSearch, k)
     LocalServe.scan(graphs, k) { (g, merge) =>
       g.knnInto(q, k, ef, merge)
@@ -402,7 +416,7 @@ final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
     * two-level merge row-for-row. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
       efSearch: Int = graft.index.HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(qs, k, dim)
     val ef = math.max(efSearch, k)
     val out = new Array[Array[(Long, Double, Int)]](qs.length)
     java.util.stream.IntStream.range(0, qs.length).parallel().forEach { qi =>

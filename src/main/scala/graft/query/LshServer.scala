@@ -9,10 +9,11 @@ import graft.core.Metric
   * is HNSW, pkg/search/search.go:220-228; SURVEY.md §7 M5 maps that
   * capability to hash-bucketed search).
   *
-  * Same engineering as [[IvfServer]]: packed primitive blocks, ONE
-  * single-stage RDD job per query, the sorted probe-bucket array in the
+  * Same engineering as [[IvfServer]]: packed primitive blocks grouped by
+  * bucket, ONE single-stage RDD job per query, the probe buckets in the
   * task closure ([[PackedKind.lsh]]) — the query's bucket plus its
-  * Hamming-1 flips, ≤ planes+1 longs.
+  * Hamming-1 flips, ≤ planes+1 longs, each one contiguous row range.
+  * `planes` must be in [1, 31] (int bucket tags).
   *
   * Result order/tie-break matches [[graft.index.LshIndex.knnBlocked]]
   * exactly: ascending (rank_key, id).

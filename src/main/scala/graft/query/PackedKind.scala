@@ -4,25 +4,35 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqIndex, BqModel, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, Sq8Index, Sq8Model}
+import graft.index.{BoundedTopK, BqIndex, BqModel, DriverPar, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, Sq8Index, Sq8Model}
 
-/** One packed kind's serving definition, written once and run by both
-  * serving shapes ([[DistributedScan]], [[LocalScan]]):
-  *  - `pack`: what [[ServeBlocks]] packs;
+/** One packed kind's scan definition, written once and run by all three
+  * shapes ([[BlockedScan]], [[DistributedScan]], [[LocalScan]]):
+  *  - `pack`: what [[ServeBlocks]] packs, with the payload width the
+  *    model fixes;
   *  - `dim`: the query length the model fixes (None: the width of the
   *    packed vectors);
   *  - `scan`: for a per-call parameter `P` (nprobe, the LSH Hamming
   *    radius, or Unit) and a query, the per-query precomputation (probe
-  *    masks, ADC tables, packed query words), returning the scan of one
-  *    block into a heap. The distributed shape ships that block scan to
-  *    the executors, so it captures only locals;
+  *    set, residuals, ADC table, packed query words), returning the scan
+  *    of one block into a heap. The blocked and distributed shapes ship
+  *    that block scan to the executors, so it captures only locals, and
+  *    nothing per block: a table built from the block's rows lives in the
+  *    block scan;
   *  - `finish`: the metric's last step on each merged rank key.
   */
 private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[Int],
     val finish: Double => Double)(
     val scan: P => Array[Double] => (Block[A], BoundedTopK) => Unit) {
 
-  /** The one serve-entry check: k > 0, and queries of the index dim
+  /** The served dim: the model's, else the packed vectors' width. */
+  def dimOf(widths: => Iterable[Int]): Int = dim.getOrElse(widths.foldLeft(-1)(math.max))
+}
+
+private[graft] object PackedKind {
+
+  /** The one serve-entry check, shared by the packed kinds' serving
+    * shapes and the HNSW servers: k > 0, and queries of the index dim
     * (`served` < 0 when unknown: an empty corpus of a data-dim kind) with
     * only finite components. Without it a longer query is answered from
     * its first `dim` components, a shorter one throws an index error
@@ -41,91 +51,78 @@ private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[I
     }
   }
 
-  /** The served dim: the model's, else the packed vectors' width. */
-  def dimOf(widths: => Iterable[Int]): Int = dim.getOrElse(widths.foldLeft(-1)(math.max))
-}
+  /** Rows [from, until) of a vector block into the heap, keyed by the
+    * metric's rank key. */
+  private def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
+      heap: BoundedTopK, from: Int, until: Int): Unit = {
+    val ids = blk.ids
+    val data = blk.payload
+    val dim = blk.width
+    var r = from
+    while (r < until) {
+      heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
+      r += 1
+    }
+  }
 
-private[graft] object PackedKind {
+  /** IVF probe ranking's clamp (ivf.go:127-129): nprobe in [1, nlist]. */
+  private def probeCount(nprobe: Int, nlist: Int): Int = math.min(math.max(nprobe, 1), nlist)
 
-  /** Exhaustive scan over packed vectors — the flat kind, and the
-    * per-query scan of [[graft.index.FlatIndex.knnBlocked]]. */
+  /** Exhaustive scan over packed vectors — the flat kind. */
   def flat(metric: Metric): PackedKind[Double, Unit] =
     new PackedKind(Pack[Double]("vec", None), None, metric.finishRankScalar _)(_ =>
-      q => (blk, heap) => {
-        val ids = blk.ids
-        val data = blk.payload
-        val dim = blk.width
-        var r = 0
-        while (r < ids.length) {
-          heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-          r += 1
-        }
-      })
+      q => (blk, heap) => scanVectors(metric, q, blk, heap, 0, blk.ids.length))
 
-  /** IVF: driver probe ranking, then the vector scan of the rows whose
-    * cluster is probed. */
+  /** IVF: driver probe ranking, then each probed cluster's rows — one
+    * contiguous range of the cluster-grouped block — through the vector
+    * scan: cost ∝ probed rows, not n. */
   def ivf(model: IvfModel): PackedKind[Double, Int] = {
     val metric = model.metric
     val cents = model.centroids.map(_.toArray).toArray
     val nlist = model.nlist
-    new PackedKind(Pack[Double]("vec", Some("cluster_id")), cents.headOption.map(_.length),
-      metric.finishRankScalar _)(nprobe => q => {
-      val mask = new Array[Boolean](nlist)
-      IvfIndex.probeSet(q, cents, metric, math.min(math.max(nprobe, 1), nlist))
-        .foreach(mask(_) = true)
-      (blk, heap) => {
-        val ids = blk.ids
-        val tags = blk.tags
-        val data = blk.payload
-        val dim = blk.width
-        var r = 0
-        while (r < ids.length) {
-          if (mask(tags(r).toInt))
-            heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-          r += 1
-        }
+    new PackedKind(Pack[Double]("vec", Some("cluster_id"), grouped = true),
+      cents.headOption.map(_.length), metric.finishRankScalar _)(nprobe => {
+      val np = probeCount(nprobe, nlist)
+      q => {
+        val probes = IvfIndex.probeSet(q, cents, metric, np)
+        (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
+          scanVectors(metric, q, blk, heap, from, until))
       }
     })
   }
 
   /** Sign-LSH: the query's bucket (`hamming` = 0), or it and its
     * single-bit flips (`hamming` = 1, the multi-probe of
-    * [[LshIndex.knnMultiProbe]]), binary-searched per row. */
-  def lsh(planes: Int, metric: Metric): PackedKind[Double, Int] =
-    new PackedKind(Pack[Double]("vec", Some("bucket")), None, metric.finishRankScalar _)(
-      hamming => {
-        require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-        q => {
-          val qb = LshIndex.bucketScalar(q, planes)
-          val probes: Array[Long] =
-            if (hamming == 0) Array(qb)
-            else (qb +: Array.tabulate(planes)(p => qb ^ (1L << p))).sorted
-          (blk, heap) => {
-            val ids = blk.ids
-            val tags = blk.tags
-            val data = blk.payload
-            val dim = blk.width
-            var r = 0
-            while (r < ids.length) {
-              if (java.util.Arrays.binarySearch(probes, tags(r)) >= 0)
-                heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-              r += 1
-            }
-          }
-        }
-      })
+    * [[LshIndex.knnMultiProbe]]), each bucket one contiguous range of the
+    * bucket-grouped block. Grouping needs int tags, and buckets are
+    * < 2^planes, so `planes` must be in [1, 31]. */
+  def lsh(planes: Int, metric: Metric): PackedKind[Double, Int] = {
+    require(planes >= 1 && planes <= 31,
+      s"planes must be in [1, 31] to group LSH buckets by int tag, got $planes")
+    new PackedKind(Pack[Double]("vec", Some("bucket"), grouped = true), None,
+      metric.finishRankScalar _)(hamming => {
+      require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
+      q => {
+        val qb = LshIndex.bucketScalar(q, planes).toInt
+        val probes = if (hamming == 0) Array(qb) else qb +: Array.tabulate(planes)(p => qb ^ (1 << p))
+        (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
+          scanVectors(metric, q, blk, heap, from, until))
+      }
+    })
+  }
 
   /** PQ ADC: the query's flat M·Ksub table ([[PqIndex.adcTable]],
     * pq.go:144-155's hoist) on the driver, M lookups per row; distances
     * are √ of the summed squares (pq.go:158-168). */
-  def pq(model: PqModel): PackedKind[Int, Unit] =
-    new PackedKind(Pack[Int]("code", None), Some(model.dim), math.sqrt _)(_ => q => {
+  def pq(model: PqModel): PackedKind[Int, Unit] = {
+    val m = model.m
+    val ksub = model.ksub
+    new PackedKind(Pack[Int]("code", None, width = Some(m)), Some(model.dim),
+      math.sqrt _)(_ => q => {
       val tab = PqIndex.adcTable(q, model)
-      val ksub = model.ksub
       (blk, heap) => {
         val ids = blk.ids
         val codes = blk.payload
-        val m = blk.width
         var r = 0
         while (r < ids.length) {
           heap.insert(ids(r), PqIndex.adcRow(tab, 0, ksub, codes, r * m, m))
@@ -133,6 +130,7 @@ private[graft] object PackedKind {
         }
       }
     })
+  }
 
   /** OPQ: the query rotated on the driver (one dim² matVec), then the PQ
     * scan over the same code layout. */
@@ -143,53 +141,94 @@ private[graft] object PackedKind {
       q => pqKind.scan(())(OpqIndex.rotateLocal(rot, q)))
   }
 
-  /** IVFPQ (ivfpq.go:222-284): driver probe ranking, and — one query
-    * probes only nprobe clusters — every probed cluster's residual ADC
-    * table hoisted on the driver; rows of unprobed clusters cost a tag
-    * test. */
-  def ivfPq(model: IvfPqModel): PackedKind[Int, Int] = {
+  /** IVFPQ (ivfpq.go:222-284): driver probe ranking and the query's
+    * residual to each probed centroid, then each probed cluster's codes —
+    * one contiguous range of the cluster-grouped block — ADC-scored
+    * against that residual. A range longer than `hoistAt` rows (< 0:
+    * Ksub, the flop break-even; 0: every range) builds its residual
+    * M·Ksub table into per-thread scratch and folds M lookups per row;
+    * a shorter one folds straight from the codebooks. Both forms add the
+    * same doubles in the same order ([[PqIndex.adcDirect]]), so the
+    * distances are bit-identical, and no per-query table outlives the
+    * block scan (a driver hoist of nq·nprobe tables is ≈ 160 MB at
+    * nq = 1000). */
+  def ivfPq(model: IvfPqModel, hoistAt: Int = -1): PackedKind[Int, Int] = {
+    val metric = model.coarse.metric
     val cents = model.coarse.centroids.map(_.toArray).toArray
     val nlist = model.coarse.nlist
-    new PackedKind(Pack[Int]("code", Some("cluster_id")), Some(model.pq.dim),
-      math.sqrt _)(nprobe => q => {
-      // per-cluster residual table, null = cluster not probed
-      val tables = new Array[Array[Double]](nlist)
-      val ksub = model.pq.ksub
-      IvfIndex.probeSet(q, cents, model.coarse.metric, math.min(math.max(nprobe, 1), nlist))
-        .foreach { c =>
+    val cbs = model.pq.codebookArrays
+    val m = model.pq.m
+    val ksub = model.pq.ksub
+    val dsub = model.pq.dsub
+    val tableAt = if (hoistAt >= 0) hoistAt else ksub
+    new PackedKind(Pack[Int]("code", Some("cluster_id"), grouped = true, width = Some(m)),
+      Some(model.pq.dim), math.sqrt _)(nprobe => {
+      val np = probeCount(nprobe, nlist)
+      q => {
+        val probes = IvfIndex.probeSet(q, cents, metric, np)
+        val residuals = probes.map { c =>
           val cent = cents(c)
           val res = new Array[Double](q.length)
           var i = 0
           while (i < q.length) { res(i) = q(i) - cent(i); i += 1 }
-          tables(c) = PqIndex.adcTable(res, model.pq)
+          res
         }
-      (blk, heap) => {
-        val ids = blk.ids
-        val tags = blk.tags
-        val codes = blk.payload
-        val m = blk.width
-        var r = 0
-        while (r < ids.length) {
-          val tab = tables(tags(r).toInt)
-          if (tab != null) heap.insert(ids(r), PqIndex.adcRow(tab, 0, ksub, codes, r * m, m))
-          r += 1
+        (blk, heap) => {
+          val ids = blk.ids
+          val codes = blk.payload
+          blk.foreachRange(probes) { (p, from, until) =>
+            val res = residuals(p)
+            val tab =
+              if (until - from > tableAt)
+                PqIndex.adcTableInto(res, cbs, dsub, ScanScratch.doubles(m * ksub))
+              else null
+            var r = from
+            while (r < until) {
+              heap.insert(ids(r),
+                if (tab != null) PqIndex.adcRow(tab, 0, ksub, codes, r * m, m)
+                else PqIndex.adcDirect(res, cbs, dsub, codes, r * m, m))
+              r += 1
+            }
+          }
         }
       }
     })
   }
 
-  /** SQ8: the per-query squared-difference table ([[Sq8Index.sqTable]]),
-    * folded by the four-row-pipelined [[Sq8Index.tableScanAll]] — per-row
-    * values bit-identical to the inline dequantize scan. */
+  /** SQ8. L2 (the serving kind): the query's squared-difference table
+    * ([[Sq8Index.sqTable]]), built per block into per-thread scratch and
+    * folded by the four-row-pipelined [[Sq8Index.tableScanRange]] — per-row
+    * values bit-identical to the inline dequantize scan. Built in the
+    * block scan, not per query: a query's table is dim·256 doubles, and
+    * the blocked shape holds every query's scan for the whole job. Other
+    * metrics dequantize each row and fold it with the metric's rank key. */
   def sq8(model: Sq8Model): PackedKind[Byte, Unit] = {
     val mins = model.minsArray
     val scales = model.scalesArray
-    new PackedKind(Pack[Byte]("code", None), Some(model.dim), math.sqrt _)(_ => q => {
-      // built on first use: once per query in process, once per task on
-      // the executors, where only q and the model arrays ship
-      lazy val tab = Sq8Index.sqTable(q, mins, scales)
-      (blk, heap) => Sq8Index.tableScanAll(tab, blk.ids, blk.payload, blk.width, heap)
-    })
+    val metric = model.metric
+    val dim = model.dim
+    new PackedKind(Pack[Byte]("code", None, width = Some(dim)), Some(dim),
+      metric.finishRankScalar _)(_ =>
+      if (metric == Metric.L2) q => (blk, heap) => {
+        val tab = Sq8Index.sqTableInto(q, mins, scales, ScanScratch.doubles(dim << 8))
+        Sq8Index.tableScanRange(tab, blk.ids, blk.payload, dim, 0, blk.ids.length, heap)
+      }
+      else q => (blk, heap) => {
+        val ids = blk.ids
+        val codes = blk.payload
+        val recon = new Array[Double](dim)
+        var r = 0
+        while (r < ids.length) {
+          val off = r * dim
+          var i = 0
+          while (i < dim) {
+            recon(i) = mins(i) + (codes(off + i).toInt + 128).toDouble * scales(i)
+            i += 1
+          }
+          heap.insert(ids(r), metric.rankKeyScalar(q, recon))
+          r += 1
+        }
+      })
   }
 
   /** IVF×SQ8 (`knn_ivfsq8_det`'s layout: clusters assigned on the
@@ -202,20 +241,14 @@ private[graft] object PackedKind {
     val mins = sq8.minsArray
     val scales = sq8.scalesArray
     val cents = ivf.centroids.map(_.toArray).toArray
-    new PackedKind(Pack[Byte]("code", Some("cluster_id"), grouped = true), Some(sq8.dim),
-      math.sqrt _)(nprobe => q => {
-      val probes = IvfIndex.probeSet(q, cents, Metric.L2, math.min(math.max(nprobe, 1), ivf.nlist))
-      lazy val tab = Sq8Index.sqTable(q, mins, scales) // as in sq8
-      (blk, heap) => {
-        var p = 0
-        while (p < probes.length) {
-          val from = blk.firstRow(probes(p))
-          val until = blk.firstRow(probes(p) + 1L)
-          if (from < until)
-            Sq8Index.tableScanRange(tab, blk.ids, blk.payload, blk.width, from, until, heap)
-          p += 1
-        }
-      }
+    new PackedKind(Pack[Byte]("code", Some("cluster_id"), grouped = true, width = Some(sq8.dim)),
+      Some(sq8.dim), math.sqrt _)(nprobe => q => {
+      val probes = IvfIndex.probeSet(q, cents, Metric.L2, probeCount(nprobe, ivf.nlist))
+      // built on first use: once per query in process, once per task on
+      // the executors, where only q and the model arrays ship
+      lazy val tab = Sq8Index.sqTable(q, mins, scales)
+      (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
+        Sq8Index.tableScanRange(tab, blk.ids, blk.payload, blk.width, from, until, heap))
     })
   }
 
@@ -224,11 +257,11 @@ private[graft] object PackedKind {
     * XOR + popcount per word; the integer Hamming count is the key. */
   def bq(model: BqModel): PackedKind[Long, Unit] = {
     val th = model.thresholdArray
-    new PackedKind(Pack[Long]("code", None), Some(model.dim), identity[Double] _)(_ => q => {
+    new PackedKind(Pack[Long]("code", None, width = Some(model.words)), Some(model.dim),
+      identity[Double] _)(_ => q => {
       val qc = BqIndex.packLocal(q, th)
       val nw = qc.length
       (blk, heap) => {
-        require(blk.width == nw, s"serving block has ${blk.width} words, query packs to $nw")
         val ids = blk.ids
         val words = blk.payload
         var r = 0
@@ -242,6 +275,69 @@ private[graft] object PackedKind {
         }
       }
     })
+  }
+}
+
+/** Per-thread scratch for the tables a block scan builds and drops (the
+  * SQ8 squared-difference table, the IVFPQ residual ADC table). A block
+  * scan runs start to finish on one thread and never re-enters another,
+  * so one buffer per thread is race-free in every shape. */
+private object ScanScratch {
+  private val buf = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](0))
+
+  /** A buffer of at least `n` doubles, contents undefined. */
+  def doubles(n: Int): Array[Double] = {
+    var b = buf.get()
+    if (b.length < n) { b = new Array[Double](n); buf.set(b) }
+    b
+  }
+}
+
+/** The blocked (batch) shape of a packed kind: the query batch collected
+  * once ([[BoundedTopK.collectQueries]]); each query's scan prepared once
+  * on the driver, fanned out with [[DriverPar]] (IVF probe ranking is
+  * nq·nlist·dim per call — never once per task), and shipped by
+  * broadcast; each partition of the table packed by
+  * [[ServeBlocks.packPartition]] and scanned QUERY-OUTER into one heap
+  * per query — one resident heap and one block walk at a time (a
+  * rows-outer loop touches all nq heaps per row, a working set that
+  * thrashed the shared LLC at 32 tasks); then
+  * [[BoundedTopK.merge]] on the driver. Heap contents are insertion-order
+  * independent (the k smallest by total (dist, id) order), so the loop
+  * order never changes a result. The job runs when called; the queries
+  * must fit on the driver. */
+private[graft] final class BlockedScan[A, P](df: DataFrame, kind: PackedKind[A, P]) {
+
+  /** The scanned table, the query ids and their merged heaps. */
+  def heaps(queries: DataFrame, k: Int, p: P): (DataFrame, Array[Long], Array[BoundedTopK]) = {
+    val perQuery = kind.scan(p)
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    val scans = new Array[(Block[A], BoundedTopK) => Unit](qvecs.length)
+    DriverPar.foreach(qvecs.length, chunk = 64) { qi => scans(qi) = perQuery(qvecs(qi)) }
+    val bc = df.sparkSession.sparkContext.broadcast(scans)
+    val pack = kind.pack
+    val scanned = ServeBlocks.select(df, pack)
+    val merged =
+      try {
+        BoundedTopK.merge(scanned.queryExecution.toRdd, qids.length, k) { rows =>
+          ServeBlocks.packPartition(rows, pack) match {
+            case None => Array.empty[BoundedTopK]
+            case Some(blk) => bc.value.map { scan =>
+              val heap = new BoundedTopK(k)
+              scan(blk, heap)
+              heap
+            }
+          }
+        }
+      } finally bc.destroy()
+    (scanned, qids, merged)
+  }
+
+  /** The kNN result as a local relation: (query_id, neighbor_id,
+    * distance, rank), the kind's finish applied to each rank key. */
+  def search(queries: DataFrame, k: Int, p: P): DataFrame = {
+    val (scanned, qids, merged) = heaps(queries, k, p)
+    BoundedTopK.toFrame(scanned, qids, merged, kind.finish)
   }
 }
 
@@ -261,7 +357,7 @@ private[query] final class DistributedScan[A, P](df: DataFrame, kind: PackedKind
   def warm(): Unit = { blocks.count(); dim }
 
   def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
-    kind.requireQueries(Array(q), k, dim)
+    PackedKind.requireQueries(Array(q), k, dim)
     val scan = kind.scan(p)(q)
     BoundedTopK.merge(blocks, 1, k) { it =>
       val heap = new BoundedTopK(k)
@@ -282,7 +378,7 @@ private[query] final class LocalScan[A, P](df: DataFrame, kind: PackedKind[A, P]
   private val dim: Int = kind.dimOf(blocks.map(_.width))
 
   def requireQueries(qs: Array[Array[Double]], k: Int): Unit =
-    kind.requireQueries(qs, k, dim)
+    PackedKind.requireQueries(qs, k, dim)
 
   def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
     requireQueries(Array(q), k)

@@ -63,8 +63,14 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
       .localCheckpoint()
   }
 
+  /** The graphs' vector dim (-1 when every shard is empty) — the query
+    * length [[PackedKind.requireQueries]] enforces. Its job materializes
+    * the cached graphs. */
+  private lazy val dim: Int =
+    rdd.map { case (_, g) => if (g.n > 0) g.dim else -1 }.fold(-1)(math.max)
+
   /** Materialize the shard graphs (call once before timing queries). */
-  def warm(): this.type = { rdd.count(); this }
+  def warm(): this.type = { dim; this }
 
   /** One query → top-k (id, distance, rank): region probe on the driver,
     * one single-stage job walking only the probed shards' resident
@@ -72,7 +78,7 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
     * heaps on the driver. */
   def search(q: Array[Double], k: Int, probeRegions: Int,
       efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    require(k > 0, s"serving requires k > 0, got $k")
+    PackedKind.requireQueries(Array(q), k, dim)
     val mask = new Array[Boolean](model.numShards)
     RoutedHnswIndex.probeShards(q, model, probeRegions).foreach(mask(_) = true)
     val ef = math.max(efSearch, k)
@@ -97,9 +103,9 @@ final class RoutedHnswServer(graph: DataFrame, model: RoutedHnswModel)
     * job of its own. */
   def searchBatch(queries: DataFrame, k: Int, probeRegions: Int,
       efSearch: Int = HnswIndex.EfSearch): DataFrame = {
-    require(k > 0, s"serving requires k > 0, got $k")
     val spark = graph.sparkSession
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    PackedKind.requireQueries(qvecs, k, dim)
     val probes = qvecs.map(RoutedHnswIndex.probeShards(_, model, probeRegions))
     val inv = graft.index.IvfIndex.invertedProbes(probes, model.numShards)
     val bc = spark.sparkContext.broadcast((qvecs, inv))

@@ -36,12 +36,27 @@ private[graft] final case class Block[A](
     }
     lo
   }
+
+  /** In a grouped block: `range(i, from, until)` for each probed tag
+    * `probes(i)` that has rows here, over its rows `[from, until)` — a
+    * probe's cost is two binary searches plus its own rows. */
+  def foreachRange(probes: Array[Int])(range: (Int, Int, Int) => Unit): Unit = {
+    var i = 0
+    while (i < probes.length) {
+      val from = firstRow(probes(i))
+      val until = firstRow(probes(i) + 1L)
+      if (from < until) range(i, from, until)
+      i += 1
+    }
+  }
 }
 
-/** What a kind packs: the payload column, the optional tag column, and
-  * whether rows are grouped by tag. `A` is the payload's element type. */
+/** What a kind packs: the payload column, the optional tag column,
+  * whether rows are grouped by tag, and the payload width its model fixes
+  * (PQ's M codes, SQ8's dim bytes, BQ's words; None: any width, the same
+  * on every row). `A` is the payload's element type. */
 private[graft] final case class Pack[A](payload: String, tag: Option[String],
-    grouped: Boolean = false)(implicit val elem: ClassTag[A])
+    grouped: Boolean = false, width: Option[Int] = None)(implicit val elem: ClassTag[A])
 
 private[graft] object ServeBlocks {
 
@@ -69,16 +84,19 @@ private[graft] object ServeBlocks {
   def collect[A](df: DataFrame, pack: Pack[A]): Array[Block[A]] =
     packed(df, pack).collect()
 
-  private def packed[A](df: DataFrame, pack: Pack[A]): RDD[Block[A]] = {
-    val cols = Seq(col("id").cast("long"), col(pack.payload)) ++
-      pack.tag.map(col(_).cast("long"))
-    df.select(cols: _*).queryExecution.toRdd
+  private def packed[A](df: DataFrame, pack: Pack[A]): RDD[Block[A]] =
+    select(df, pack).queryExecution.toRdd
       .coalesce(ServePartitions, shuffle = false)
       .mapPartitions(rows => packPartition(rows, pack).iterator)
-  }
 
-  /** Pack one partition of (id LONG, payload array[, tag LONG]) rows into
-    * a [[Block]] — None for an empty partition. Payloads decode with
+  /** The (id LONG, payload[, tag LONG]) columns [[packPartition]] reads. */
+  def select[A](df: DataFrame, pack: Pack[A]): DataFrame =
+    df.select(Seq(col("id").cast("long"), col(pack.payload)) ++
+      pack.tag.map(col(_).cast("long")): _*)
+
+  /** Pack one partition of [[select]]'s rows into a [[Block]] — None for
+    * an empty partition. The first row's payload width is checked against
+    * the one the model fixes, naming the id. Payloads decode with
     * `ArrayData`'s primitive bulk copies (what Spark's `Array[Double]` /
     * `Array[Int]` / `Array[Long]` encoders call; `array<tinyint>` has no
     * such encoder, since `Array[Byte]` maps to binary), so no element is
@@ -97,7 +115,13 @@ private[graft] object ServeBlocks {
       require(!row.isNullAt(1) && (pack.tag.isEmpty || !row.isNullAt(2)),
         s"pack: null ${pack.payload} or tag for id=$id")
       val p = read[A](row.getArray(1))
-      if (width < 0) width = p.length
+      if (width < 0) {
+        width = p.length
+        // a table encoded by another model would be scanned silently
+        // wrong (narrower) or fail deep in the kernel (wider)
+        pack.width.foreach(w => require(width == w,
+          s"pack: ${pack.payload} for id=$id has $width elements, the model fixes $w"))
+      }
       // fail fast: a longer row would be silently truncated, a shorter one
       // would throw deep inside the packed-offset arithmetic
       require(p.length == width,
@@ -110,18 +134,49 @@ private[graft] object ServeBlocks {
     else if (!pack.grouped) Some(Block(ids.result(), tags.result(), data.result(), width))
     else {
       val rowTags = tags.result()
-      val intTags = new Array[Int](rowTags.length)
-      var r = 0
-      while (r < rowTags.length) {
-        val t = rowTags(r)
-        require(t >= 0 && t <= Int.MaxValue, s"pack: tag $t cannot group")
-        intTags(r) = t.toInt
-        r += 1
-      }
-      val groups = new graft.index.TagGroups(intTags)
-      Some(Block(groups.gatherIds(ids.result()), groups.gatherIds(rowTags),
-        groups.gather(data.result(), width), width))
+      val order = groupOrder(rowTags)
+      Some(Block(gatherLongs(ids.result(), order), gatherLongs(rowTags, order),
+        gather(data.result(), order, width), width))
     }
+  }
+
+  /** Source rows in tag order, stable within a tag: one primitive sort of
+    * packed `tag<<32|row` keys (so a tag must fit an int), no boxing. */
+  private def groupOrder(rowTags: Array[Long]): Array[Int] = {
+    val n = rowTags.length
+    val keys = new Array[Long](n)
+    var r = 0
+    while (r < n) {
+      val t = rowTags(r)
+      require(t >= 0 && t <= Int.MaxValue, s"pack: tag $t cannot group")
+      keys(r) = (t << 32) | r.toLong
+      r += 1
+    }
+    java.util.Arrays.sort(keys)
+    val out = new Array[Int](n)
+    r = 0
+    while (r < n) { out(r) = (keys(r) & 0xFFFFFFFFL).toInt; r += 1 }
+    out
+  }
+
+  /** One LONG per row (an id, a tag) permuted to `order` — a plain loop,
+    * no per-row copy call. */
+  private def gatherLongs(src: Array[Long], order: Array[Int]): Array[Long] = {
+    val out = new Array[Long](order.length)
+    var r = 0
+    while (r < order.length) { out(r) = src(order(r)); r += 1 }
+    out
+  }
+
+  /** `src` (rows of `width` elements) permuted to `order`. */
+  private def gather[A: ClassTag](src: Array[A], order: Array[Int], width: Int): Array[A] = {
+    val out = new Array[A](order.length * width)
+    var r = 0
+    while (r < order.length) {
+      System.arraycopy(src, order(r) * width, out, r * width, width)
+      r += 1
+    }
+    out
   }
 
   private def read[A](a: ArrayData)(implicit elem: ClassTag[A]): Array[A] = (elem match {

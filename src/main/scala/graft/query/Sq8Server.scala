@@ -9,8 +9,8 @@ import graft.index.Sq8Model
   * engineering as [[PqServer]]: codes packed once into cached primitive
   * blocks (1 B/element — 8× less resident state than the double-packed
   * blocks a flat server would hold), ONE single-stage RDD job per query.
-  * The scan folds a per-query squared-difference table with four-row
-  * software pipelining ([[PackedKind.sq8]]).
+  * The scan folds a squared-difference table, built per (query, block),
+  * with four-row software pipelining ([[PackedKind.sq8]]).
   *
   * Result order/tie-break matches [[graft.index.Sq8Index.knnBlocked]]
   * exactly: ascending (rank_key, id), identical per-row arithmetic (each

@@ -233,7 +233,8 @@ class BlockedKernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)
     val model = IvfIndex.trainDeterministic(corpus, 8, Metric.L2)
-    val assigned = IvfIndex.assign(corpus, model)
+    // several partitions, so the server merges several blocks' heaps
+    val assigned = IvfIndex.assign(corpus.repartition(4), model)
     val server = new graft.query.IvfServer(assigned, model).warm()
     val qRows = queries.limit(3).collect()
     qRows.foreach { r =>
@@ -252,7 +253,8 @@ class BlockedKernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)
     val planes = 8
-    val indexed = LshIndex.index(corpus, planes)
+    // several partitions, so the server merges several blocks' heaps
+    val indexed = LshIndex.index(corpus.repartition(4), planes)
     val server = new graft.query.LshServer(indexed, planes, Metric.L2).warm()
     val qRows = queries.limit(3).collect()
     for (hamming <- Seq(0, 1); r <- qRows) {
@@ -273,7 +275,8 @@ class BlockedKernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)
     val model = PqIndex.trainDeterministic(corpus, m = 4, ksub = 16, Metric.L2)
-    val codes = PqIndex.encode(corpus, model)
+    // several partitions, so the server merges several blocks' heaps
+    val codes = PqIndex.encode(corpus.repartition(4), model)
     val server = new graft.query.PqServer(codes, model).warm()
     val qRows = queries.limit(3).collect()
     qRows.foreach { r =>
@@ -292,7 +295,8 @@ class BlockedKernelSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)
     val model = IvfPqIndex.trainDeterministic(corpus, nlist = 8, m = 4, ksub = 16, Metric.L2)
-    val codes = IvfPqIndex.encode(corpus, model)
+    // several partitions, so the server merges several blocks' heaps
+    val codes = IvfPqIndex.encode(corpus.repartition(4), model)
     val server = new graft.query.IvfPqServer(codes, model).warm()
     val qRows = queries.limit(3).collect()
     qRows.foreach { r =>

@@ -102,6 +102,26 @@ class LocalServeSpec extends AnyFunSuite {
       })
   }
 
+  /** The HNSW and routed-HNSW servers in the same three shapes, for the
+    * query checks they share with the packed kinds. */
+  private lazy val graphKinds: Seq[(String, DataFrame => Served)] = {
+    val l2 = Metric.L2
+    Seq(
+      "hnsw" -> { c =>
+        val g = HnswIndex.build(c, 4, l2)
+        val (l, d) = (new LocalHnswServer(g, l2, 4), new HnswServer(g, l2, 4).warm())
+        Served(l.search(_, _).toSeq, l.searchBatch(_, _).map(_.toSeq).toSeq,
+          d.search(_, _).toSeq, () => d.unpersist())
+      },
+      "routed-hnsw" -> { c =>
+        val model = RoutedHnswIndex.train(c, 4, l2, targetShardRows = 256)
+        val g = RoutedHnswIndex.build(c, model)
+        val (l, d) = (new LocalRoutedHnswServer(g, model), new RoutedHnswServer(g, model).warm())
+        Served(l.search(_, _, 2).toSeq, l.searchBatch(_, _, 2).map(_.toSeq).toSeq,
+          d.search(_, _, 2).toSeq, () => d.unpersist())
+      })
+  }
+
   test("local ≡ distributed for every packed kind (IVFPQ, OPQ and IVF×SQ8 " +
       "included), on the corpus in several blocks, on k > n and on a zero-row corpus") {
     val corpus = vecs._1
@@ -138,7 +158,8 @@ class LocalServeSpec extends AnyFunSuite {
       (q.updated(5, Double.PositiveInfinity), K, "query component 5 is Infinity"),
       (q.updated(0, Double.NegativeInfinity), K, "query component 0 is -Infinity"),
       (q, 0, "serving requires k > 0, got 0"))
-    for ((name, build) <- packedKinds if Set("ivf", "lsh", "pq", "sq8", "bq")(name)) {
+    val kinds = packedKinds.filter(kv => Set("ivf", "lsh", "pq", "sq8", "bq")(kv._1)) ++ graphKinds
+    for ((name, build) <- kinds) {
       val s = build(corpus)
       for ((bq, k, msg) <- bad) {
         val shapes = Seq[(String, () => Any)](
@@ -151,6 +172,72 @@ class LocalServeSpec extends AnyFunSuite {
         }
       }
       s.release()
+    }
+  }
+
+  test("every shape rejects a code table of another model's width, naming the id") {
+    val (corpus, queries) = vecs
+    val q = queriesArr.head._2
+    val l2 = Metric.L2
+    val dim = q.length
+    val half = corpus.select(col("id"),
+      org.apache.spark.sql.functions.slice(col("vec"), 1, dim / 2).as("vec"))
+    // codes of another model: PQ/IVFPQ with M = 2 against M = 4, SQ8 and
+    // BQ of the corpus cut to half its dims
+    val pq = PqIndex.trainDeterministic(corpus, m = 4, ksub = 16, l2)
+    val pqCodes = PqIndex.encode(corpus, PqIndex.trainDeterministic(corpus, m = 2, ksub = 16, l2))
+    val ivfpq = IvfPqIndex.trainDeterministic(corpus, nlist = 8, m = 4, ksub = 16, l2)
+    val ivfpqCodes = IvfPqIndex.encode(corpus,
+      IvfPqIndex.trainDeterministic(corpus, nlist = 8, m = 2, ksub = 16, l2))
+    val sq8 = Sq8Index.train(corpus, l2)
+    val sq8Codes = Sq8Index.encode(half, Sq8Index.train(half, l2))
+    val bq = BqIndex.train(corpus, l2)
+    val bqCodes = BqIndex.encode(half, BqIndex.train(half, l2))
+    val cases = Seq[(String, String, Seq[(String, () => Any)])](
+      ("pq", "has 2 elements, the model fixes 4", Seq(
+        "blocked" -> (() => PqIndex.knnBlocked(pqCodes, pq, queries, K)),
+        "local" -> (() => new LocalPqServer(pqCodes, pq).search(q, K)),
+        "distributed" -> { () =>
+          val d = new PqServer(pqCodes, pq); try d.warm() finally d.unpersist()
+        })),
+      ("ivfpq", "has 2 elements, the model fixes 4", Seq(
+        "blocked" -> (() => IvfPqIndex.searchBlocked(ivfpqCodes, ivfpq, queries, K, 3)),
+        "local" -> (() => new LocalIvfPqServer(ivfpqCodes, ivfpq).search(q, K, 3)),
+        "distributed" -> { () =>
+          val d = new IvfPqServer(ivfpqCodes, ivfpq); try d.warm() finally d.unpersist()
+        })),
+      ("sq8", s"has ${dim / 2} elements, the model fixes $dim", Seq(
+        "blocked" -> (() => Sq8Index.knnBlocked(sq8Codes, sq8, queries, K)),
+        "local" -> (() => new LocalSq8Server(sq8Codes, sq8).search(q, K)),
+        "distributed" -> { () =>
+          val d = new Sq8Server(sq8Codes, sq8); try d.warm() finally d.unpersist()
+        })),
+      ("bq", s"has ${(dim / 2 + 31) / 32} elements, the model fixes ${bq.words}", Seq(
+        "blocked" -> (() => BqIndex.knnBlocked(bqCodes, bq, queries, K)),
+        "local" -> (() => new LocalBqServer(bqCodes, bq).search(q, K)),
+        "distributed" -> { () =>
+          val d = new BqServer(bqCodes, bq); try d.warm() finally d.unpersist()
+        })))
+    for ((name, msg, shapes) <- cases; (shape, run) <- shapes) {
+      val e = intercept[Exception](run())
+      assert(e.getMessage.contains(msg) && e.getMessage.contains("code for id="),
+        s"$name $shape: ${e.getMessage}")
+    }
+  }
+
+  test("every LSH shape rejects planes outside [1, 31] when its kind is built") {
+    val (corpus, queries) = vecs
+    val indexed = LshIndex.index(corpus, 40)
+    for (planes <- Seq(0, 32, 40)) {
+      val shapes = Seq[(String, () => Any)](
+        "blocked" -> (() => LshIndex.knnBlocked(indexed, queries, K, planes, Metric.L2)),
+        "local" -> (() => new LocalLshServer(indexed, planes, Metric.L2)),
+        "distributed" -> (() => new LshServer(indexed, planes, Metric.L2)))
+      for ((shape, run) <- shapes) {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(s"planes must be in [1, 31]") &&
+          e.getMessage.contains(s"got $planes"), s"$shape planes=$planes: ${e.getMessage}")
+      }
     }
   }
 
