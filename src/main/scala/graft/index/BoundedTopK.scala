@@ -19,7 +19,7 @@ import org.apache.spark.sql.graftx.ResultFrames
   * the one cross-partition merge, so the order can't drift between
   * paths.
   */
-private[graft] final class BoundedTopK(k: Int) extends Serializable {
+private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   // k == 0 would make insert() read dists(-1); callers clamp k <= 0 to the
   // "all rows" path before constructing (flat.go:82-84), so fail loudly here
   require(k > 0, s"BoundedTopK requires k > 0, got $k")

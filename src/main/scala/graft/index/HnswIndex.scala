@@ -1,11 +1,14 @@
 package graft.index
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
+import graft.query.{BlockedScan, GraphKind}
 
 /** Sharded HNSW — the reference's default ANN index
   * (pkg/index/hnsw/hnsw.go, pkg/search/search.go:220-228) re-expressed
@@ -363,64 +366,60 @@ object HnswIndex {
       .withColumn("edges",
         transform(col("edges"), lvl => filter(lvl, e => !e.isin(removed: _*))))
 
-  /** Batch kNN over the sharded graph: broadcast the query batch, fan
-    * out to every shard (rebuilt node-map + stored edges — O(n) load, no
-    * re-insertion), run the reference's descent + layer-0 ef-search per
-    * query per shard into one heap per query per partition, and combine
-    * the partitions' heaps on the driver with [[BoundedTopK.merge]]; the
-    * result is a local relation, so the walk job runs when this is
-    * called. The defensive shard
-    * repartition keeps each graph whole even if the input frame was
-    * re-read or filtered; k ≤ 0 clamps to the engine-wide "all rows
-    * ranked" brute-force path (flat.go:82-84 semantics).
+  /** Batch kNN over the sharded graph — the HNSW graph kind
+    * ([[graft.query.GraphKind.hnsw]]) run by
+    * [[graft.query.BlockedScan]]: the query batch broadcast, every shard
+    * compiled from its stored rows (O(n) load, no re-insertion) and
+    * walked by every query (the reference's descent + layer-0 ef-search)
+    * into one heap per query per partition, and the partitions' heaps
+    * combined on the driver by [[BoundedTopK.merge]]; the result is a
+    * local relation, so the walk job runs when this is called. The
+    * defensive shard repartition keeps each graph whole even if the
+    * input frame was re-read or filtered; k ≤ 0 clamps to the
+    * engine-wide "all rows ranked" brute-force path (flat.go:82-84
+    * semantics).
     *
     * `numShards` > 0 skips the `max(shard)` discovery job — pass it when
     * the caller already knows the build config (the builder, the facade's
     * persisted `num_shards` metadata, a server holding the model). */
   def knnBlocked(graph: DataFrame, queries: DataFrame, k: Int, metric: Metric,
-      efSearch: Int = EfSearch, numShards: Int = -1): DataFrame = {
-    if (k <= 0)
-      return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
-    val spark = graph.sparkSession
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val bc = spark.sparkContext.broadcast(qvecs)
-    val ef = math.max(efSearch, k)
-    val nShards =
-      if (numShards > 0) numShards
-      else graph.agg(max(col("shard"))).head.getInt(0) + 1
-    val scanned = shardGrouped(graph, nShards)
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k) { it =>
-      val qs = bc.value
-      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-      val byShard = new mutable.HashMap[
-        Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
-      it.foreach { case (s, id, v, l, e) =>
-        byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
-      }
-      byShard.valuesIterator.foreach { rows =>
-        val g = CompiledHnsw.fromTuples(rows, metric)
-        var qi = 0
-        while (qi < qs.length) {
-          g.knnInto(qs(qi), k, ef, heaps(qi))
-          qi += 1
-        }
-      }
-      heaps
-    }
-    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
-  }
+      efSearch: Int = EfSearch, numShards: Int = -1): DataFrame =
+    if (k <= 0) FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
+    else new BlockedScan(graph, GraphKind.hnsw(metric, numShards)).search(queries, k, efSearch)
 
-  /** Graph rows range-partitioned by shard — whole shards per partition
-    * through the Tungsten shuffle path (see [[build]]'s note). */
-  private[graft] def shardGrouped(graph: DataFrame, numShards: Int)
-      : org.apache.spark.sql.Dataset[(Int, Long, Seq[Double], Int, Seq[Seq[Long]])] = {
-    val spark = graph.sparkSession
-    import spark.implicits._
+  /** The shard count of a graph table, max(shard) + 1: one aggregation
+    * job, so pass a known count instead where there is one. */
+  private[graft] def shardCount(graph: DataFrame): Int =
+    graph.agg(max(col("shard"))).head.getInt(0) + 1
+
+  /** Graph rows (shard, id, vec, level, edges) range-partitioned by shard
+    * — whole shards per partition through the Tungsten shuffle path (see
+    * [[build]]'s note) — cast to the types [[compileShards]] reads. */
+  private[graft] def shardGrouped(graph: DataFrame, numShards: Int): DataFrame =
     graph
-      .select(col("shard"), col("id").cast("long"), col("vec"), col("level"),
-        col("edges"))
+      .select(col("shard").cast("int"), col("id").cast("long"),
+        col("vec").cast("array<double>"), col("level").cast("int"),
+        col("edges").cast("array<array<bigint>>"))
       .repartitionByRange(numShards, col("shard"))
-      .as[(Int, Long, Seq[Double], Int, Seq[Seq[Long]])]
+
+  /** One partition of [[shardGrouped]]'s rows → one compiled graph per
+    * shard, keyed by shard id ([[CompiledHnsw.fromTuples]]). Graphs
+    * compile as the iterator is consumed, and each shard's rows are
+    * dropped once its graph is built. */
+  private[graft] def compileShards(rows: Iterator[InternalRow],
+      metric: Metric): Iterator[(Int, CompiledHnsw)] = {
+    val byShard = new mutable.HashMap[
+      Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
+    rows.foreach { r =>
+      val edges = r.getArray(4)
+      byShard.getOrElseUpdate(r.getInt(0), new mutable.ArrayBuffer) += ((r.getLong(1),
+        ArraySeq.unsafeWrapArray(r.getArray(2).toDoubleArray()), r.getInt(3),
+        Seq.tabulate(edges.numElements())(l =>
+          ArraySeq.unsafeWrapArray(edges.getArray(l).toLongArray()))))
+    }
+    byShard.keys.toArray.iterator.map { s =>
+      (s, CompiledHnsw.fromTuples(byShard.remove(s).get, metric))
+    }
   }
 }
 

@@ -112,17 +112,6 @@ object IvfIndex {
     Array.tabulate(cents.length)(c => (metric.rankKeyScalar(q, cents(c)), c))
       .sortBy(identity).take(np).map(_._2)
 
-  /** cluster → indices of the queries probing it. */
-  private[graft] def invertedProbes(probes: Array[Array[Int]], nlist: Int): Array[Array[Int]] = {
-    val buf = Array.fill(nlist)(new scala.collection.mutable.ArrayBuffer[Int])
-    var qi = 0
-    while (qi < probes.length) {
-      probes(qi).foreach(c => buf(c) += qi)
-      qi += 1
-    }
-    buf.map(_.toArray)
-  }
-
   /** One-shot convenience: assign + search. */
   def knn(vectors: DataFrame, model: IvfModel, queries: DataFrame,
       k: Int, nprobe: Int): DataFrame =

@@ -99,11 +99,13 @@ object LshIndex {
     * per query and [[BoundedTopK.merge]] combines them on the driver into
     * a local relation, so the scan job runs when this is called. The
     * grouped pack needs int bucket tags, so `planes` must be ≤ 31.
-    * `query_id` is cast to LONG, like every blocked kernel. */
+    * `query_id` is cast to LONG, like every blocked kernel. k ≤ 0 clamps
+    * to the plan form of the same radius (every candidate ranked). */
   def knnBlocked(indexed: DataFrame, queries: DataFrame, k: Int, planes: Int,
       metric: Metric, hamming: Int = 0): DataFrame = {
     require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
-    if (k <= 0) knn(indexed, queries, k, planes, metric)
+    if (k <= 0 && hamming == 0) knn(indexed, queries, k, planes, metric)
+    else if (k <= 0) knnMultiProbe(indexed, queries, k, planes, metric)
     else new BlockedScan(indexed, PackedKind.lsh(planes, metric)).search(queries, k, hamming)
   }
 

@@ -1,11 +1,10 @@
 package graft.index
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
+import graft.query.{BlockedScan, GraphKind}
 
 /** Routed sharded HNSW — the IVF probe discipline composed with
   * per-shard graphs (the faiss IVF×HNSW / SPANN shape).
@@ -325,59 +324,23 @@ object RoutedHnswIndex {
     IvfIndex.probeSet(q, cents, model.metric, r).flatMap(model.shardsOfRegion)
   }
 
-  /** Routed batch kNN: each query is searched ONLY in the graphs of its
-    * top-R regions. The query batch broadcasts with a shard→queries
-    * inverted index; a partition loads a shard's graph once and walks it
-    * for exactly the queries that probed it; shards no query probed are
-    * pruned from the scan before the shuffle (`isin` on the shard column
-    * — a partition filter on a disk-backed graph). Each partition fills
-    * one heap per query and [[BoundedTopK.merge]] combines them on the
+  /** Routed batch kNN — the routed graph kind
+    * ([[graft.query.GraphKind.routed]]) run by
+    * [[graft.query.BlockedScan]]: each query is searched ONLY in the
+    * graphs of its top-R regions. Shards no query probed are pruned from
+    * the scan before the shuffle (`isin` on the shard column — a
+    * partition filter on a disk-backed graph), and a batch that probes
+    * none runs no job. A partition compiles each remaining shard's graph
+    * once and walks it for exactly the queries that probed it, filling
+    * one heap per query; [[BoundedTopK.merge]] combines them on the
     * driver, distinct-by-id: a replicated build can surface one id from
-    * shards in different partitions, with the same deterministic rank
-    * key. The result is a local relation, so the walk job runs when this
-    * is called. k ≤ 0 clamps to the engine-wide brute-force path
-    * (flat.go:82-84 semantics). */
+    * several shards, with the same deterministic rank key. The result is
+    * a local relation, so the walk job runs when this is called. k ≤ 0
+    * clamps to the engine-wide brute-force path (flat.go:82-84
+    * semantics). */
   def knn(graph: DataFrame, model: RoutedHnswModel, queries: DataFrame, k: Int,
-      probeRegions: Int, efSearch: Int = HnswIndex.EfSearch): DataFrame = {
-    val metric = model.metric
-    if (k <= 0)
-      return FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, metric)
-    val spark = graph.sparkSession
-    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val probes = qvecs.map(probeShards(_, model, probeRegions))
-    val inv = IvfIndex.invertedProbes(probes, model.numShards)
-    val touched = probes.flatten.distinct.sorted
-    if (touched.isEmpty) // no shard probed: nothing to walk
-      return BoundedTopK.toFrame(graph, qids,
-        Array.fill(qids.length)(new BoundedTopK(k)), metric.finishRankScalar)
-    val bc = spark.sparkContext.broadcast((qvecs, inv))
-    val ef = math.max(efSearch, k)
-    val pruned = graph.where(col("shard").isin(touched.map(Int.box): _*))
-    val scanned = HnswIndex.shardGrouped(pruned, touched.length)
-    val heaps = BoundedTopK.merge(scanned.rdd, qids.length, k, distinct = true) { it =>
-      val (qs, inverted) = bc.value
-      val heaps = Array.fill(qs.length)(new BoundedTopK(k))
-      val byShard = new mutable.HashMap[
-        Int, mutable.ArrayBuffer[(Long, Seq[Double], Int, Seq[Seq[Long]])]]
-      it.foreach { case (s, id, v, l, e) =>
-        byShard.getOrElseUpdate(s, new mutable.ArrayBuffer) += ((id, v, l, e))
-      }
-      byShard.iterator.foreach { case (shard, rows) =>
-        val qlist = inverted(shard)
-        if (qlist.nonEmpty) {
-          val g = CompiledHnsw.fromTuples(rows, metric)
-          var t = 0
-          while (t < qlist.length) {
-            val qi = qlist(t)
-            // insertDistinct: a replicated build ([[buildReplicated]])
-            // can surface one id from two shards of the same partition
-            g.knnInto(qs(qi), k, ef, heaps(qi), distinct = true)
-            t += 1
-          }
-        }
-      }
-      heaps
-    }
-    BoundedTopK.toFrame(scanned, qids, heaps, metric.finishRankScalar)
-  }
+      probeRegions: Int, efSearch: Int = HnswIndex.EfSearch): DataFrame =
+    if (k <= 0) FlatIndex.knn(graph.select(col("id"), col("vec")), queries, k, model.metric)
+    else new BlockedScan(graph, GraphKind.routed(model))
+      .search(queries, k, (probeRegions, efSearch))
 }

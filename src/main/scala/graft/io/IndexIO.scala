@@ -29,12 +29,25 @@ object IndexIO {
   private def versionString = CurrentVersion match { case (a, b, c) => s"$a.$b.$c" }
 
   /** version.go:27-37 compat rule. */
-  def checkCompatible(version: String): Unit = {
-    val parts = version.split("\\.").map(_.toInt)
-    require(parts.length == 3, s"malformed version '$version'")
-    require(parts(0) == CurrentVersion._1 && parts(1) <= CurrentVersion._2,
-      s"incompatible index version $version (current $versionString): " +
+  def checkCompatible(version: String, path: String = "(unnamed)"): Unit = {
+    val parts = version.split("\\.", -1)
+    require(parts.length == 3 && parts.forall(_.toIntOption.exists(_ >= 0)),
+      s"index at $path: malformed version '$version' in meta.json, expected major.minor.patch")
+    require(parts(0).toInt == CurrentVersion._1 && parts(1).toInt <= CurrentVersion._2,
+      s"index at $path: incompatible index version $version (current $versionString): " +
         "need same major and minor <= current")
+  }
+
+  /** The meta.json of the index at `path`, checked before anything reads
+    * it: a `version` compatible with this build and an `index_type`. A
+    * missing or bad field fails with the path and the field named. */
+  def readChecked(path: String): Map[String, String] = {
+    val meta = readMeta(path)
+    def field(key: String): String = meta.getOrElse(key,
+      throw new IllegalArgumentException(s"index at $path: meta.json has no '$key' field"))
+    checkCompatible(field("version"), path)
+    field("index_type")
+    meta
   }
 
   // -- tiny flat-string-map JSON codec (no external deps) --
@@ -228,7 +241,7 @@ object IndexIO {
       metric: Metric, m: Int = HnswIndex.M,
       efConstruction: Int = HnswIndex.EfConstruction): Unit = {
     val dim = graph.select(size(col("vec"))).first().getInt(0)
-    val numShards = graph.agg(max(col("shard"))).first().getInt(0) + 1
+    val numShards = HnswIndex.shardCount(graph)
     // one file per shard keeps each graph whole on disk (see saveIvf);
     // knnBlocked still re-groups defensively after any re-read
     graph.repartition(col("shard"))
@@ -399,8 +412,7 @@ object IndexIO {
   }
 
   private def loadChecked(path: String, expectedType: String): Map[String, String] = {
-    val meta = readMeta(path)
-    checkCompatible(meta("version"))
+    val meta = readChecked(path)
     require(meta("index_type") == expectedType,
       s"index at $path is '${meta("index_type")}', expected '$expectedType'")
     meta
@@ -427,9 +439,8 @@ object IndexIO {
     * to indexing the union from scratch (MaintenanceSpec's incremental
     * ≡ full property, applied at merge scope). Ids must be disjoint. */
   def merge(spark: SparkSession, pathA: String, pathB: String, out: String): Unit = {
-    val ma = readMeta(pathA)
-    val mb = readMeta(pathB)
-    checkCompatible(ma("version")); checkCompatible(mb("version"))
+    val ma = readChecked(pathA)
+    val mb = readChecked(pathB)
     require(ma("index_type") == mb("index_type"),
       s"kind mismatch: ${ma("index_type")} vs ${mb("index_type")}")
     Seq("metric", "dim", "nlist", "m", "ksub", "planes", "num_shards",

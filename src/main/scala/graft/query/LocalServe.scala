@@ -3,10 +3,9 @@ package graft.query
 import java.util.stream.IntStream
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqModel, IvfModel, IvfPqModel, OpqModel, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Model}
+import graft.index.{BoundedTopK, BqModel, CompiledHnsw, HnswIndex, IvfModel, IvfPqModel, OpqModel, PqModel, RoutedHnswModel, Sq8Model}
 
 /** Kind-erased in-process serving handle — what [[Searcher.localServer]]
   * returns: one query in, (id, distance, rank) out, with the facade's
@@ -28,11 +27,11 @@ private[graft] final case class LocalServerAdapter(
     batched(qs, k)
 }
 
-/** In-process single-query serving: each packed kind's `Local*Server`
-  * runs the SAME pack and the SAME per-kind scan ([[PackedKind]]) as its
-  * distributed server, over blocks collected to the driver ONCE
-  * ([[LocalScan]]) — zero Spark jobs per query. The HNSW servers walk
-  * the same compiled graphs as theirs.
+/** In-process single-query serving: each `Local*Server` runs the SAME
+  * packs and the SAME per-kind scan ([[ScanKind]]: a [[PackedKind]], or
+  * a [[GraphKind]] whose packs are compiled shard graphs) as its
+  * distributed server, over packs collected to the driver ONCE
+  * ([[LocalScan]]) — zero Spark jobs per query.
   *
   * This is the reference's deployment shape: its facade serves queries
   * against heap-resident structures in-process (pkg/search/search.go —
@@ -50,8 +49,8 @@ private[graft] final case class LocalServerAdapter(
   *    protocol (100k × 128d) that is 102 MB worst case and the scan
   *    costs micro/milliseconds.
   *
-  * Blocks scan on the JVM common pool (one task per block — same
-  * granularity as ServePartitions); the per-block bounded heaps merge
+  * Packs scan on the JVM common pool (one task per pack — a block per
+  * serving partition, or a shard graph); the per-pack bounded heaps merge
   * under the same (rank_key, id) total order as the distributed merge,
   * so every Local server is result-IDENTICAL to its ServingRdd sibling
   * (spec-asserted in LocalServeSpec).
@@ -59,39 +58,32 @@ private[graft] final case class LocalServerAdapter(
 private[graft] object LocalServe {
 
   /** Batch-throughput twin of [[scan]]: QUERIES fan across the common
-    * pool and each query's blocks scan sequentially on its worker into
-    * one bounded heap — no per-query fork fan-out, no per-block partial
-    * arrays (at in-process kernel speeds the fork overhead of a
-    * per-query 32-task fan-out rivals the scans themselves). Merging
-    * every block into one heap is order-invariant, so per query the
-    * result is identical to [[scan]]'s two-level merge. `mk` runs once
-    * per query for per-query precomputation (probe masks, ADC tables,
-    * packed query codes) shared across that query's blocks. */
-  def batch[B](qs: Array[Array[Double]], blocks: Array[B], k: Int)(
-      mk: Array[Double] => (B, BoundedTopK) => Unit): Array[BoundedTopK] = {
+    * pool and each query's walk fills one bounded heap on its worker —
+    * no per-query fork fan-out, no per-pack partial arrays (at
+    * in-process kernel speeds the fork overhead of a per-query 32-task
+    * fan-out rivals the scans themselves). Merging every pack into one
+    * heap is order-invariant, so per query the result is identical to
+    * [[scan]]'s two-level merge. `walk` runs once per query for its
+    * per-query precomputation (probe masks, ADC tables, packed query
+    * codes) and returns the walk of that query's packs into a heap. */
+  def batch(qs: Array[Array[Double]], k: Int)(
+      walk: Array[Double] => BoundedTopK => Unit): Array[BoundedTopK] = {
     val out = new Array[BoundedTopK](qs.length)
     IntStream.range(0, qs.length).parallel().forEach { qi =>
       val merge = new BoundedTopK(k)
-      val perBlock = mk(qs(qi))
-      var b = 0
-      while (b < blocks.length) { perBlock(blocks(b), merge); b += 1 }
+      walk(qs(qi))(merge)
       out(qi) = merge
     }
     out
   }
 
-  /** Parallel per-block scan → one merged heap: each block fills its own
+  /** Parallel per-pack scan → one merged heap: each pack fills its own
     * heap, and the heaps fold with [[BoundedTopK.mergeFrom]] — the fold
     * step of the distributed [[BoundedTopK.merge]]. `distinct` dedups
-    * the cross-block merge — required when one id can live in several
-    * blocks (the replicated routed graph,
-    * [[graft.index.RoutedHnswIndex.buildReplicated]]); within a block an
-    * id appears once, so the per-block heaps never need it. */
-  /** The vector dim of in-process HNSW graphs (-1 when all are empty):
-    * the query length their servers enforce. */
-  def graphDim(graphs: Array[graft.index.CompiledHnsw]): Int =
-    graphs.foldLeft(-1)((d, g) => if (g.n > 0) math.max(d, g.dim) else d)
-
+    * the cross-pack merge — required when one id can live in several
+    * packs (the replicated routed graph,
+    * [[graft.index.RoutedHnswIndex.buildReplicated]]); within a pack an
+    * id appears once, so the per-pack heaps never need it. */
   def scan[B](blocks: Array[B], k: Int, distinct: Boolean = false)(
       perBlock: (B, BoundedTopK) => Unit): BoundedTopK = {
     val heaps = new Array[BoundedTopK](blocks.length)
@@ -308,137 +300,55 @@ final class LocalIvfSq8Server(codes: DataFrame, sq8: Sq8Model, ivf: IvfModel) {
 
 /** In-process routed sharded HNSW — the engine's 100 TB ANN shape served
   * the reference's way: region probe on the driver, then ONLY the probed
-  * regions' graphs walk. Result-identical to [[graft.index
-  * .RoutedHnswIndex.knn]] (same probe order, same walks, same merge). */
+  * regions' graphs walk ([[GraphKind.routed]] over [[LocalScan]]).
+  * Result-identical to [[graft.index.RoutedHnswIndex.knn]] and
+  * [[RoutedHnswServer]] (same probes, same walks, same distinct merge). */
 final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
-  import graft.index.{CompiledHnsw, HnswIndex}
-
-  // indexed by physical shard id; empty shards stay null
-  private val graphs: Array[CompiledHnsw] = {
-    val arr = new Array[CompiledHnsw](model.numShards)
-    HnswIndex.shardGrouped(graph, model.numShards).collect()
-      .groupBy(_._1).foreach { case (s, rs) =>
-        arr(s) = CompiledHnsw.fromTuples(
-          rs.map(t => (t._2, t._3, t._4, t._5)), model.metric)
-      }
-    arr
-  }
-
-  private val dim: Int = LocalServe.graphDim(graphs.filter(_ != null))
+  private val served = new LocalScan(graph, GraphKind.routed(model))
 
   def search(q: Array[Double], k: Int, probeRegions: Int,
-      efSearch: Int = graft.index.HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    PackedKind.requireQueries(Array(q), k, dim)
-    val ef = math.max(efSearch, k)
-    val probed = RoutedHnswIndex.probeShards(q, model, probeRegions)
-      .map(graphs(_)).filter(_ != null)
-    // distinct merge: the graph may be a replicated build, where one id
-    // lives in several probed regions' shards
-    LocalServe.scan(probed, k, distinct = true) { (g, merge) =>
-      g.knnInto(q, k, ef, merge)
-    }.ranked(model.metric.finishRankScalar)
-  }
+      efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] =
+    served.search(q, k, (probeRegions, efSearch))
 
-  /** Batch throughput path — queries fan across the common pool, each
-    * query routes (driver-side probe ranking) and walks ONLY its probed
-    * regions' graphs sequentially into one distinct-merging bounded
-    * top-k. This is the engine's honest high-QPS serving shape: per
-    * query O(R · log shard_size) work, constant in corpus size — see
-    * [[graft.index.RoutedHnswIndex]]. Result-identical per query to
-    * [[search]]. */
+  /** Batch throughput: queries fan across the common pool, each query
+    * routes and walks ONLY its probed regions' graphs into one
+    * distinct-merging heap — per query O(R · log shard_size) work,
+    * constant in corpus size. Per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int, probeRegions: Int,
-      efSearch: Int = graft.index.HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] = {
-    PackedKind.requireQueries(qs, k, dim)
-    val ef = math.max(efSearch, k)
-    val out = new Array[Array[(Long, Double, Int)]](qs.length)
-    java.util.stream.IntStream.range(0, qs.length).parallel().forEach { qi =>
-      val merge = new graft.index.BoundedTopK(k)
-      val probed = RoutedHnswIndex.probeShards(qs(qi), model, probeRegions)
-      var s = 0
-      while (s < probed.length) {
-        val g = graphs(probed(s))
-        if (g != null) g.knnInto(qs(qi), k, ef, merge, distinct = true)
-        s += 1
-      }
-      out(qi) = merge.ranked(model.metric.finishRankScalar)
-    }
-    out
-  }
+      efSearch: Int = HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] =
+    served.searchBatch(qs, k, (probeRegions, efSearch))
 }
 
 /** In-process sharded HNSW — the reference's flagship serving shape:
   * its search IS an in-memory graph walk (pkg/index/hnsw/hnsw.go), which
-  * is where its sub-ms serving rows come from. All shard graphs build
-  * driver-side ONCE (same [[graft.index.CompiledHnsw]] structures the
-  * executors hold); per query every shard's logarithmic walk runs on
-  * the common pool and merges under the same (rank_key, id) order as
-  * [[HnswServer]] — result-identical. 32 graph walks of a 3k-node shard
-  * are microseconds each; the distributed sibling pays the job-dispatch
-  * floor on exactly the same walks. */
-final class LocalHnswServer private (preGraphs: Array[graft.index.CompiledHnsw],
-    graph: DataFrame, metric: Metric, numShards: Int) {
-  import graft.index.{BoundedTopK, CompiledHnsw, HnswIndex}
+  * is where its sub-ms serving rows come from. The shard graphs compile
+  * ONCE and collect to the driver ([[GraphKind.hnsw]] over
+  * [[LocalScan]]); per query every shard's logarithmic walk runs on the
+  * common pool and merges under the same (rank_key, id) order as
+  * [[HnswServer]] — result-identical. */
+final class LocalHnswServer private (served: LocalScan[(Int, CompiledHnsw), Int]) {
 
   def this(graph: DataFrame, metric: Metric, numShards: Int = -1) =
-    this(null, graph, metric, numShards)
-
-  private val graphs: Array[CompiledHnsw] =
-    if (preGraphs != null) preGraphs
-    else {
-      val nShards =
-        if (numShards > 0) numShards
-        else graph.agg(org.apache.spark.sql.functions.max(col("shard"))).head.getInt(0) + 1
-      HnswIndex.shardGrouped(graph, nShards).collect()
-        .groupBy(_._1).values
-        .map(rs =>
-          CompiledHnsw.fromTuples(rs.map(t => (t._2, t._3, t._4, t._5)), metric))
-        .toArray
-    }
-
-  private val dim: Int = LocalServe.graphDim(graphs)
+    this(new LocalScan(graph, GraphKind.hnsw(metric, numShards)))
 
   def search(q: Array[Double], k: Int,
-      efSearch: Int = graft.index.HnswIndex.EfSearch): Array[(Long, Double, Int)] = {
-    PackedKind.requireQueries(Array(q), k, dim)
-    val ef = math.max(efSearch, k)
-    LocalServe.scan(graphs, k) { (g, merge) =>
-      g.knnInto(q, k, ef, merge)
-    }.ranked(metric.finishRankScalar)
-  }
+      efSearch: Int = HnswIndex.EfSearch): Array[(Long, Double, Int)] =
+    served.search(q, k, efSearch)
 
-  /** Batch throughput path: queries fan across the common pool; each
-    * query walks every shard SEQUENTIALLY on its worker into one bounded
-    * merge — no per-query fork fan-out, no per-shard partial arrays.
-    * With compiled walks in the microseconds, per-query fork overhead
-    * (32 subtask submissions) would otherwise rival the walks
-    * themselves. Merging all shards into one [[BoundedTopK]] is
-    * order-invariant, so results are identical to [[search]]'s
-    * two-level merge row-for-row. */
+  /** Batch throughput: queries fan across the common pool, each walking
+    * every shard on its worker into one heap. Per query ≡ [[search]]. */
   def searchBatch(qs: Array[Array[Double]], k: Int,
-      efSearch: Int = graft.index.HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] = {
-    PackedKind.requireQueries(qs, k, dim)
-    val ef = math.max(efSearch, k)
-    val out = new Array[Array[(Long, Double, Int)]](qs.length)
-    java.util.stream.IntStream.range(0, qs.length).parallel().forEach { qi =>
-      val merge = new BoundedTopK(k)
-      var g = 0
-      while (g < graphs.length) {
-        graphs(g).knnInto(qs(qi), k, ef, merge)
-        g += 1
-      }
-      out(qi) = merge.ranked(metric.finishRankScalar)
-    }
-    out
-  }
+      efSearch: Int = HnswIndex.EfSearch): Array[Array[(Long, Double, Int)]] =
+    served.searchBatch(qs, k, efSearch)
 }
 
 object LocalHnswServer {
   /** Serve graphs already compiled in this process — the direct handoff
     * from [[graft.index.HnswIndex.buildParallelCompiled]] (build arrays
     * ARE the serving arrays; no DataFrame interchange, no re-collect). */
-  private[graft] def fromCompiled(gs: Array[graft.index.CompiledHnsw],
-      metric: Metric): LocalHnswServer =
-    new LocalHnswServer(gs, null, metric, gs.length)
+  private[graft] def fromCompiled(gs: Array[CompiledHnsw], metric: Metric): LocalHnswServer =
+    new LocalHnswServer(new LocalScan(GraphKind.hnsw(metric, gs.length),
+      gs.zipWithIndex.map(_.swap)))
 }
 
 /** In-process BQ: XOR + popcount over packed sign words — at dim/8 bytes

@@ -1,40 +1,99 @@
 package graft.query
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqIndex, BqModel, DriverPar, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, Sq8Index, Sq8Model}
+import graft.index.{BoundedTopK, BqIndex, BqModel, CompiledHnsw, DriverPar, HnswIndex, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Index, Sq8Model}
 
-/** One packed kind's scan definition, written once and run by all three
-  * shapes ([[BlockedScan]], [[DistributedScan]], [[LocalScan]]):
-  *  - `pack`: what [[ServeBlocks]] packs, with the payload width the
-  *    model fixes;
-  *  - `dim`: the query length the model fixes (None: the width of the
-  *    packed vectors);
-  *  - `scan`: for a per-call parameter `P` (nprobe, the LSH Hamming
-  *    radius, or Unit) and a query, the per-query precomputation (probe
-  *    set, residuals, ADC table, packed query words), returning the scan
-  *    of one block into a heap. The blocked and distributed shapes ship
-  *    that block scan to the executors, so it captures only locals, and
-  *    nothing per block: a table built from the block's rows lives in the
-  *    block scan;
-  *  - `finish`: the metric's last step on each merged rank key.
+/** One kind's scan definition, written once and run by all three shapes
+  * ([[BlockedScan]], [[DistributedScan]], [[LocalScan]]) over packs of
+  * type `B`:
+  *  - `frame`: the columns the shapes read from the served table;
+  *  - `packer`: one partition of `frame`'s rows into the packs it scans
+  *    (none for an empty partition);
+  *  - `width`: the query length a pack serves (-1: none, an empty pack);
+  *  - `dim`: the query length the model fixes (None: the packs' widest);
+  *  - `scan`: for a per-call parameter `P` and a query, the per-query
+  *    precomputation, returning the scan of one pack into a heap. The
+  *    blocked and distributed shapes ship that pack scan to the
+  *    executors, so it captures only locals, and nothing per pack: a
+  *    table built from the pack's rows lives in the pack scan;
+  *  - `finish`: the metric's last step on each merged rank key;
+  *  - `distinct`: whether one id can surface from several packs, so every
+  *    merge skips ids it already holds;
+  *  - `route`: for a routed kind, which packs a query walks.
+  * `packer` and `width` run on the executors: they are function values
+  * that capture only what they read, never the kind.
   */
+private[graft] abstract class ScanKind[B, P](implicit val tag: ClassTag[B]) {
+  def frame(df: DataFrame): DataFrame
+  def packer: Iterator[InternalRow] => Iterator[B]
+  def width: B => Int
+  def dim: Option[Int]
+  def finish: Double => Double
+  def scan: P => Array[Double] => (B, BoundedTopK) => Unit
+  def distinct: Boolean = false
+  def route: Option[Route[B, P]] = None
+
+  /** The served dim: the model's, else the packs' widest. */
+  final def dimOf(widths: => Iterable[Int]): Int = dim.getOrElse(widths.foldLeft(-1)(math.max))
+
+  /** Per-query scans for a shape that offers a query every pack: a routed
+    * kind's scan skips the packs the query did not probe. */
+  final def visiting(p: P): Array[Double] => (B, BoundedTopK) => Unit = {
+    val perQuery = scan(p)
+    route match {
+      case None => perQuery
+      case Some(r) =>
+        val probe = r.probe(p)
+        q => r.only(probe(q), perQuery(q))
+    }
+  }
+}
+
+/** A routed kind's pack selection: each query probes a set of pack keys
+  * (`probe`, its per-query prep), walks only the packs with those keys
+  * (`key`), and the blocked shape reads only the probed keys' rows
+  * (`prune`: the scanned frame for a sorted set of keys). */
+private[graft] final case class Route[B, P](key: B => Int,
+    probe: P => Array[Double] => Array[Int], prune: (DataFrame, Array[Int]) => DataFrame) {
+
+  /** `scan` over only the packs whose key is in `probes`. */
+  def only(probes: Array[Int], scan: (B, BoundedTopK) => Unit): (B, BoundedTopK) => Unit = {
+    val keys = probes.sorted
+    val keyOf = key
+    (b, heap) => if (java.util.Arrays.binarySearch(keys, keyOf(b)) >= 0) scan(b, heap)
+  }
+}
+
+/** A packed kind: the pack is one partition's [[Block]] of [[Pack]]'s
+  * columns, with the payload width the model fixes ([[ServeBlocks]]). */
 private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[Int],
     val finish: Double => Double)(
-    val scan: P => Array[Double] => (Block[A], BoundedTopK) => Unit) {
+    val scan: P => Array[Double] => (Block[A], BoundedTopK) => Unit)
+    extends ScanKind[Block[A], P] {
 
-  /** The served dim: the model's, else the packed vectors' width. */
-  def dimOf(widths: => Iterable[Int]): Int = dim.getOrElse(widths.foldLeft(-1)(math.max))
+  def frame(df: DataFrame): DataFrame = ServeBlocks.select(df, pack)
+
+  val packer: Iterator[InternalRow] => Iterator[Block[A]] = {
+    val p = pack
+    rows => ServeBlocks.packPartition(rows, p).iterator
+  }
+
+  val width: Block[A] => Int = _.width
 }
 
 private[graft] object PackedKind {
 
-  /** The one serve-entry check, shared by the packed kinds' serving
-    * shapes and the HNSW servers: k > 0, and queries of the index dim
-    * (`served` < 0 when unknown: an empty corpus of a data-dim kind) with
-    * only finite components. Without it a longer query is answered from
+  /** The one serve-entry check of the serving shapes
+    * ([[DistributedScan]], [[LocalScan]]): k > 0, and queries of the
+    * index dim (`served` < 0 when unknown: an empty corpus of a data-dim
+    * kind) with only finite components. Without it a longer query is answered from
     * its first `dim` components, a shorter one throws an index error
     * inside the code-table scans, and a NaN returns arbitrary ids. */
   def requireQueries(qs: Array[Array[Double]], k: Int, served: Int): Unit = {
@@ -278,6 +337,60 @@ private[graft] object PackedKind {
   }
 }
 
+/** The graph kinds: the pack is one shard's [[CompiledHnsw]] keyed by its
+  * shard id, compiled from [[HnswIndex.shardGrouped]]'s rows by
+  * [[HnswIndex.compileShards]]; the scan is the shard's walk
+  * ([[CompiledHnsw.knnInto]]) at ef = max(efSearch, k); the query length
+  * is the graphs' vector dim. */
+private[graft] final class GraphKind[P](metric: Metric, numShards: Int, efSearch: P => Int,
+    override val distinct: Boolean, override val route: Option[Route[(Int, CompiledHnsw), P]])
+    extends ScanKind[(Int, CompiledHnsw), P] {
+
+  /** `numShards` > 0 skips the `max(shard)` discovery job. */
+  def frame(df: DataFrame): DataFrame =
+    HnswIndex.shardGrouped(df, if (numShards > 0) numShards else HnswIndex.shardCount(df))
+
+  val packer: Iterator[InternalRow] => Iterator[(Int, CompiledHnsw)] = {
+    val m = metric
+    rows => HnswIndex.compileShards(rows, m)
+  }
+
+  val width: ((Int, CompiledHnsw)) => Int = sg => if (sg._2.n > 0) sg._2.dim else -1
+
+  val dim: Option[Int] = None
+
+  val finish: Double => Double = metric.finishRankScalar
+
+  val scan: P => Array[Double] => ((Int, CompiledHnsw), BoundedTopK) => Unit =
+    p => GraphKind.walk(efSearch(p), distinct)
+}
+
+private[graft] object GraphKind {
+
+  /** A query's walk of one shard into a heap of k: ef = max(efSearch, k). */
+  private def walk(efSearch: Int, distinct: Boolean)
+      : Array[Double] => ((Int, CompiledHnsw), BoundedTopK) => Unit =
+    q => (sg, heap) => sg._2.knnInto(q, heap.k, math.max(efSearch, heap.k), heap, distinct)
+
+  /** Id-hash sharded HNSW ([[HnswIndex]]): every query walks every shard;
+    * `P` is efSearch. */
+  def hnsw(metric: Metric, numShards: Int): GraphKind[Int] =
+    new GraphKind[Int](metric, numShards, identity, distinct = false, route = None)
+
+  /** Routed HNSW ([[RoutedHnswIndex]]): a query walks only the shards of
+    * its `probeRegions` nearest regions ([[RoutedHnswIndex.probeShards]]),
+    * and the blocked shape reads only the shards some query probed (a
+    * filter on the shard column). A replicated build holds one id in
+    * several shards, so the merges are distinct. `P` is (probeRegions,
+    * efSearch). */
+  def routed(model: RoutedHnswModel): GraphKind[(Int, Int)] =
+    new GraphKind[(Int, Int)](model.metric, model.numShards, _._2, distinct = true,
+      route = Some(Route[(Int, CompiledHnsw), (Int, Int)](_._1,
+        p => q => RoutedHnswIndex.probeShards(q, model, p._1),
+        (df, shards) => HnswIndex.shardGrouped(
+          df.where(col("shard").isin(shards.map(Int.box): _*)), shards.length))))
+}
+
 /** Per-thread scratch for the tables a block scan builds and drops (the
   * SQ8 squared-difference table, the IVFPQ residual ADC table). A block
   * scan runs start to finish on one thread and never re-enters another,
@@ -293,40 +406,58 @@ private object ScanScratch {
   }
 }
 
-/** The blocked (batch) shape of a packed kind: the query batch collected
-  * once ([[BoundedTopK.collectQueries]]); each query's scan prepared once
-  * on the driver, fanned out with [[DriverPar]] (IVF probe ranking is
+/** The blocked (batch) shape of a kind: the query batch collected once
+  * ([[BoundedTopK.collectQueries]]); each query's scan prepared once on
+  * the driver, fanned out with [[DriverPar]] (IVF probe ranking is
   * nq·nlist·dim per call — never once per task), and shipped by
-  * broadcast; each partition of the table packed by
-  * [[ServeBlocks.packPartition]] and scanned QUERY-OUTER into one heap
-  * per query — one resident heap and one block walk at a time (a
-  * rows-outer loop touches all nq heaps per row, a working set that
-  * thrashed the shared LLC at 32 tasks); then
-  * [[BoundedTopK.merge]] on the driver. Heap contents are insertion-order
+  * broadcast; each partition of the kind's frame packed by its packer
+  * and each pack scanned QUERY-OUTER into one heap per query — one
+  * resident heap and one pack walk at a time (a rows-outer loop touches
+  * all nq heaps per row, a working set that thrashed the shared LLC at
+  * 32 tasks); then [[BoundedTopK.merge]] on the driver. A routed kind
+  * reads only the packs some query probed, and a batch that probes none
+  * returns empty heaps without a job. Heap contents are insertion-order
   * independent (the k smallest by total (dist, id) order), so the loop
   * order never changes a result. The job runs when called; the queries
   * must fit on the driver. */
-private[graft] final class BlockedScan[A, P](df: DataFrame, kind: PackedKind[A, P]) {
+private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P]) {
 
   /** The scanned table, the query ids and their merged heaps. */
   def heaps(queries: DataFrame, k: Int, p: P): (DataFrame, Array[Long], Array[BoundedTopK]) = {
     val perQuery = kind.scan(p)
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    val scans = new Array[(Block[A], BoundedTopK) => Unit](qvecs.length)
-    DriverPar.foreach(qvecs.length, chunk = 64) { qi => scans(qi) = perQuery(qvecs(qi)) }
+    val nq = qvecs.length
+    val scans = new Array[(B, BoundedTopK) => Unit](nq)
+    val scanned = kind.route match {
+      case None =>
+        DriverPar.foreach(nq, chunk = 64) { qi => scans(qi) = perQuery(qvecs(qi)) }
+        kind.frame(df)
+      case Some(r) =>
+        val probe = r.probe(p)
+        val probes = new Array[Array[Int]](nq)
+        DriverPar.foreach(nq, chunk = 64) { qi =>
+          probes(qi) = probe(qvecs(qi))
+          scans(qi) = r.only(probes(qi), perQuery(qvecs(qi)))
+        }
+        val touched = probes.flatten.distinct.sorted
+        if (touched.isEmpty) return (df, qids, Array.fill(nq)(new BoundedTopK(k)))
+        r.prune(df, touched)
+    }
     val bc = df.sparkSession.sparkContext.broadcast(scans)
-    val pack = kind.pack
-    val scanned = ServeBlocks.select(df, pack)
+    val packer = kind.packer
     val merged =
       try {
-        BoundedTopK.merge(scanned.queryExecution.toRdd, qids.length, k) { rows =>
-          ServeBlocks.packPartition(rows, pack) match {
-            case None => Array.empty[BoundedTopK]
-            case Some(blk) => bc.value.map { scan =>
-              val heap = new BoundedTopK(k)
-              scan(blk, heap)
-              heap
+        BoundedTopK.merge(scanned.queryExecution.toRdd, nq, k, kind.distinct) { rows =>
+          val packs = packer(rows)
+          if (!packs.hasNext) Array.empty[BoundedTopK]
+          else {
+            val scans = bc.value
+            val heaps = Array.fill(scans.length)(new BoundedTopK(k))
+            packs.foreach { b =>
+              var qi = 0
+              while (qi < scans.length) { scans(qi)(b, heaps(qi)); qi += 1 }
             }
+            heaps
           }
         }
       } finally bc.destroy()
@@ -341,52 +472,113 @@ private[graft] final class BlockedScan[A, P](df: DataFrame, kind: PackedKind[A, 
   }
 }
 
-/** The distributed serving shape of a packed kind: the packs cached and
-  * lineage-truncated on the executors; per query ONE single-stage job
-  * whose tasks scan their blocks into one heap each, merged on the driver
-  * by [[BoundedTopK.merge]]. Per query only the kind's block scan ships —
+/** The distributed serving shape of a kind: the packs cached and
+  * lineage-truncated on the executors. Per query ONE single-stage job
+  * whose tasks scan their packs into one heap each, merged on the driver
+  * by [[BoundedTopK.merge]]; per query only the kind's pack scan ships —
   * no broadcast, no SQL plan analysis, no codegen (0.5–2 s per call
   * through the DataFrame path, the round-2 serving pathology). */
-private[query] final class DistributedScan[A, P](df: DataFrame, kind: PackedKind[A, P]) {
+private[query] final class DistributedScan[B, P](df: DataFrame, kind: ScanKind[B, P]) {
 
-  val blocks: RDD[Block[A]] = ServeBlocks.cached(df, kind.pack)
+  val blocks: RDD[B] = ServeBlocks.cached(df, kind)
 
-  private lazy val dim: Int = kind.dimOf(blocks.map(_.width).collect())
+  /** The served dim; its job materializes the packs. */
+  private lazy val dim: Int = {
+    val width = kind.width
+    val widths = blocks.map(width).collect()
+    kind.dimOf(widths)
+  }
 
   /** Materialize the packs (call once before timing queries). */
-  def warm(): Unit = { blocks.count(); dim }
+  def warm(): Unit = { dim; () }
 
   def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
     PackedKind.requireQueries(Array(q), k, dim)
-    val scan = kind.scan(p)(q)
-    BoundedTopK.merge(blocks, 1, k) { it =>
+    val scan = kind.visiting(p)(q)
+    BoundedTopK.merge(blocks, 1, k, kind.distinct) { it =>
       val heap = new BoundedTopK(k)
       it.foreach(scan(_, heap))
       Array(heap)
     }.head.ranked(kind.finish)
   }
+
+  /** Batch kNN over the RESIDENT packs — result-identical to
+    * [[BlockedScan]] (same scans, same merge) without its per-call
+    * re-pack (for the graph kinds, re-parsing every node row back into a
+    * graph): the queries' scans broadcast, then one job whose tasks walk
+    * their packs query by query. Serving partitions are sized for the
+    * single-query tail ([[ServeBlocks.ServePartitions]]), which would cap
+    * a batch at that many cores, so each task fans its queries out with
+    * [[TaskFanout]]; each query owns its heap and packs are read-only, so
+    * the fan-out is race-free. The result is a local relation, so the
+    * job runs when this is called; an operator applied to the result
+    * (projection, filter, join) runs a job of its own. */
+  def searchBatch(queries: DataFrame, k: Int, p: P): DataFrame = {
+    val (qids, qvecs) = BoundedTopK.collectQueries(queries)
+    PackedKind.requireQueries(qvecs, k, dim)
+    val bc = df.sparkSession.sparkContext.broadcast(qvecs.map(kind.visiting(p)))
+    val tag = kind.tag
+    val heaps =
+      try {
+        BoundedTopK.merge(blocks, qids.length, k, kind.distinct) { it =>
+          val packs = it.toArray(tag)
+          val scans = bc.value
+          val heaps = Array.fill(scans.length)(new BoundedTopK(k))
+          TaskFanout.foreach(scans.length) { qi =>
+            var b = 0
+            while (b < packs.length) { scans(qi)(packs(b), heaps(qi)); b += 1 }
+          }
+          heaps
+        }
+      } finally bc.destroy()
+    BoundedTopK.toFrame(df, qids, heaps, kind.finish)
+  }
 }
 
-/** The local serving shape of a packed kind: the same packs collected to
-  * the driver once, scanned by [[LocalServe.scan]] (one query, blocks in
+/** The local serving shape of a kind: the same packs collected to the
+  * driver once, scanned by [[LocalServe.scan]] (one query, packs in
   * parallel) or [[LocalServe.batch]] (queries in parallel) — zero Spark
-  * jobs per query, result-identical to [[DistributedScan]]. */
-private[query] final class LocalScan[A, P](df: DataFrame, kind: PackedKind[A, P]) {
+  * jobs per query, result-identical to [[DistributedScan]]. A routed
+  * kind's query gets only its probed packs: no heap and no pool task
+  * for a pack it does not walk. */
+private[query] final class LocalScan[B, P](kind: ScanKind[B, P], val blocks: Array[B]) {
+  import kind.tag
 
-  val blocks: Array[Block[A]] = ServeBlocks.collect(df, kind.pack)
+  def this(df: DataFrame, kind: ScanKind[B, P]) = this(kind, ServeBlocks.collect(df, kind))
 
-  private val dim: Int = kind.dimOf(blocks.map(_.width))
+  private val dim: Int = kind.dimOf(blocks.map(kind.width))
+
+  private val byKey: Map[Int, Array[B]] =
+    kind.route.fold(Map.empty[Int, Array[B]])(r => blocks.groupBy(r.key))
+
+  /** Under `p`, a query's packs: every pack, or a routed kind's probed
+    * ones. */
+  private def packsOf(p: P): Array[Double] => Array[B] = kind.route match {
+    case None => _ => blocks
+    case Some(r) =>
+      val probe = r.probe(p)
+      q => probe(q).flatMap(byKey.getOrElse(_, Array.empty[B]))
+  }
 
   def requireQueries(qs: Array[Array[Double]], k: Int): Unit =
     PackedKind.requireQueries(qs, k, dim)
 
   def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
     requireQueries(Array(q), k)
-    LocalServe.scan(blocks, k)(kind.scan(p)(q)).ranked(kind.finish)
+    LocalServe.scan(packsOf(p)(q), k, kind.distinct)(kind.scan(p)(q)).ranked(kind.finish)
   }
 
   def searchBatch(qs: Array[Array[Double]], k: Int, p: P): Array[Array[(Long, Double, Int)]] = {
     requireQueries(qs, k)
-    LocalServe.batch(qs, blocks, k)(kind.scan(p)).map(_.ranked(kind.finish))
+    val packs = packsOf(p)
+    val perQuery = kind.scan(p)
+    LocalServe.batch(qs, k) { q =>
+      val ps = packs(q)
+      val scan = perQuery(q)
+      heap => {
+        var b = 0
+        while (b < ps.length) { scan(ps(b), heap); b += 1 }
+      }
+    }.map(_.ranked(kind.finish))
   }
 }

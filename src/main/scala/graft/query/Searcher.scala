@@ -308,8 +308,7 @@ object Searcher {
     * (`searcher_open_search_sec`). The cache materializes lazily on the
     * first search; call [[Searcher.close]] to release it. */
   def open(spark: SparkSession, path: String): Searcher = {
-    val meta = IndexIO.readMeta(path)
-    IndexIO.checkCompatible(meta("version"))
+    val meta = IndexIO.readChecked(path)
     val kind = meta("index_type") match {
       case "flat" => val (v, m) = IndexIO.loadFlat(spark, path); FlatKind(v.cache(), m)
       case "ivf" => val (m, a) = IndexIO.loadIvf(spark, path); IvfKind(m, a.cache())

@@ -65,29 +65,32 @@ private[graft] object ServeBlocks {
     * (a probe touches a few % of rows — 32 tasks for that is overhead). */
   val ServePartitions = 8
 
-  /** The distributed shape's packs: one [[Block]] per partition,
-    * coalesced (no shuffle) to [[ServePartitions]], cached. The caller
-    * materializes them and unpersists when done. */
-  def cached[A](df: DataFrame, pack: Pack[A]): RDD[Block[A]] =
-    packed(df, pack)
+  /** The distributed shape's packs: the kind's frame coalesced (no
+    * shuffle) to [[ServePartitions]], each partition packed by the kind's
+    * packer, cached. The caller materializes them and unpersists when
+    * done. */
+  def cached[B](df: DataFrame, kind: ScanKind[B, _]): RDD[B] =
+    packed(df, kind)
       .cache()
       // lineage truncation (the PlaidServer lesson, VERDICT r11 wrong #1
       // root cause): the parent DataFrame's physical plan can embed large
       // literals (OPQ ships a 128x128 typedLit rotation + codebooks —
       // ~1.4 MB of task binary), and EVERY per-query job re-serializes
-      // and re-broadcasts the full lineage. Checkpointing at the packed
-      // blocks makes the serving task binary the closure alone.
+      // and re-broadcasts the full lineage. Checkpointing at the packs
+      // makes the serving task binary the closure alone.
       .localCheckpoint()
 
-  /** The local shape's packs: the same blocks, collected to the driver
+  /** The local shape's packs: the same packs, collected to the driver
     * without caching them on the executors. */
-  def collect[A](df: DataFrame, pack: Pack[A]): Array[Block[A]] =
-    packed(df, pack).collect()
+  def collect[B](df: DataFrame, kind: ScanKind[B, _]): Array[B] =
+    packed(df, kind).collect()
 
-  private def packed[A](df: DataFrame, pack: Pack[A]): RDD[Block[A]] =
-    select(df, pack).queryExecution.toRdd
+  private def packed[B](df: DataFrame, kind: ScanKind[B, _]): RDD[B] = {
+    import kind.tag
+    kind.frame(df).queryExecution.toRdd
       .coalesce(ServePartitions, shuffle = false)
-      .mapPartitions(rows => packPartition(rows, pack).iterator)
+      .mapPartitions(kind.packer)
+  }
 
   /** The (id LONG, payload[, tag LONG]) columns [[packPartition]] reads. */
   def select[A](df: DataFrame, pack: Pack[A]): DataFrame =
@@ -188,10 +191,10 @@ private[graft] object ServeBlocks {
   }).asInstanceOf[Array[A]]
 }
 
-/** Shared serving-RDD plumbing for the distributed servers (the packed
-  * kinds' [[DistributedScan]], HNSW, routed HNSW, PLAID) — the
-  * dispatch-floor diagnostic and release, defined ONCE over the cached
-  * block RDD each server already holds. */
+/** Shared serving-RDD plumbing for the distributed servers (every
+  * [[DistributedScan]], and PLAID) — the dispatch-floor diagnostic and
+  * release, defined ONCE over the cached pack RDD each server already
+  * holds. */
 private[query] trait ServingRdd {
   protected def servingRdd: org.apache.spark.rdd.RDD[_]
 

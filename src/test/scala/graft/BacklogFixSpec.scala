@@ -16,7 +16,11 @@ import graft.queries.VectorQueries
   *    when a payload column is NULL);
   *  - PqIndex.trainDeterministic fails fast on sparse id residues;
   *  - Centroids.trainingSample picks the cap smallest ids with no global
-  *    sort, comparing ids as LONG.
+  *    sort, comparing ids as LONG;
+  *  - the LSH facade's k ≤ 0 path probes the Hamming-1 buckets when
+  *    efSearch asks for them, like its k > 0 path;
+  *  - `Searcher.open` rejects a meta.json without `version` or
+  *    `index_type`, or with a malformed version, naming path and field.
   */
 class BacklogFixSpec extends AnyFunSuite {
 
@@ -61,6 +65,35 @@ class BacklogFixSpec extends AnyFunSuite {
     assert(knn.where(col("query_id") === col("neighbor_id")).count() == 5)
     intercept[IllegalArgumentException](LshIndex.bucket(col("vec"), 63))
     intercept[IllegalArgumentException](LshIndex.bucket(col("vec"), 0))
+  }
+
+  test("LSH facade with k <= 0 probes the buckets efSearch asks for") {
+    val (corpus, queries) = VectorQueries.vecTables(spark, TestSession.Sf0001)
+    val planes = 4
+    val idx = LshIndex.index(corpus, planes).cache()
+    val q = queries.limit(3)
+    val facade = graft.query.Searcher(graft.query.LshKind(planes, idx, Metric.L2)).withK(0)
+    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0
+    val single = LshIndex.knn(idx, q, 0, planes, Metric.L2)
+    val multi = LshIndex.knnMultiProbe(idx, q, 0, planes, Metric.L2)
+    assert(multi.count() > single.count(), "the Hamming-1 buckets must add candidates")
+    assert(same(facade.withEfSearch(0).search(q), single), "efSearch 0: the query's bucket")
+    assert(same(facade.withEfSearch(1).search(q), multi), "efSearch 1: and its Hamming-1 flips")
+    idx.unpersist()
+  }
+
+  test("Searcher.open names the path and the field of a bad meta.json") {
+    val cases = Seq(
+      ("""{"index_type": "flat"}""", "meta.json has no 'version' field"),
+      ("""{"version": "1.0.0"}""", "meta.json has no 'index_type' field"),
+      ("""{"index_type": "flat", "version": "1.x.0"}""", "malformed version '1.x.0'"))
+    for ((json, msg) <- cases) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-meta")
+      java.nio.file.Files.writeString(dir.resolve("meta.json"), json)
+      val e = intercept[IllegalArgumentException](graft.query.Searcher.open(spark, dir.toString))
+      assert(e.getMessage.contains(dir.toString) && e.getMessage.contains(msg), e.getMessage)
+    }
   }
 
   test("AsOfJoin carries NULL payload fields from the matched row (no stitching)") {

@@ -120,7 +120,7 @@ class BqIndexSpec extends AnyFunSuite {
     val (corpus, queries) = vecs
     val model = BqIndex.train(corpus, Metric.L2)
     val codes = BqIndex.encode(corpus, model)
-    val server = new graft.query.BqServer(codes, model).warm()
+    val server = new graft.query.BqServer(codes.repartition(4), model).warm()
     val batch = BqIndex.knnBlocked(codes, model, queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .groupBy(_._1)

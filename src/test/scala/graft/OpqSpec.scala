@@ -120,7 +120,7 @@ class OpqSpec extends AnyFunSuite {
     val (corpus, queries) = aniso
     val model = OpqIndex.train(corpus, M, nbits = 4, Metric.L2)
     val codes = OpqIndex.encode(corpus, model)
-    val server = new graft.query.OpqServer(codes, model).warm()
+    val server = new graft.query.OpqServer(codes.repartition(4), model).warm()
     val expect = OpqIndex.knnBlocked(codes, model, queries, K)
       .collect()
       .groupBy(_.getLong(0))

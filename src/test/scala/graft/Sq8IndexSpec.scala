@@ -118,7 +118,7 @@ class Sq8IndexSpec extends AnyFunSuite {
     val (corpus, queries) = vecs
     val model = Sq8Index.train(corpus, Metric.L2)
     val codes = Sq8Index.encode(corpus, model)
-    val server = new graft.query.Sq8Server(codes, model).warm()
+    val server = new graft.query.Sq8Server(codes.repartition(4), model).warm()
     val batch = Sq8Index.knnBlocked(codes, model, queries, 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .groupBy(_._1)
@@ -182,7 +182,7 @@ class Sq8IndexSpec extends AnyFunSuite {
     val batch = IvfIndex.search(recon, ivf, queries, 10, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .groupBy(_._1)
-    val server = new graft.query.IvfSq8Server(codes, sq, ivf).warm()
+    val server = new graft.query.IvfSq8Server(codes.repartition(4), sq, ivf).warm()
     queries.collect().foreach { r =>
       val qid = r.getLong(0)
       val q = r.getSeq[Double](1).toArray
