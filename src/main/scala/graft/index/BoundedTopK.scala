@@ -18,6 +18,12 @@ import org.apache.spark.sql.graftx.ResultFrames
   * server and in-process scan fills these, and [[BoundedTopK.merge]] is
   * the one cross-partition merge, so the order can't drift between
   * paths.
+  *
+  * An entry may carry a LONG-array payload (PLAID's token hashes, which
+  * its exact rerank reads): inserted with one, it moves with its entry
+  * through every shift, [[mergeFrom]] and task serialization. A heap's
+  * entries all carry one or none; the payload array exists only once the
+  * first one is inserted.
   */
 private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   // k == 0 would make insert() read dists(-1); callers clamp k <= 0 to the
@@ -26,12 +32,30 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   val dists = new Array[Double](k)
   val ids = new Array[Long](k)
   var size = 0
+  private var payloads: Array[Array[Long]] = null
 
-  def insert(id: Long, d: Double): Unit = {
+  def insert(id: Long, d: Double): Unit = slot(id, d)
+
+  /** [[insert]] of an entry with a payload. */
+  def insert(id: Long, d: Double, payload: Array[Long]): Unit = {
+    val sz = size
+    val pos = slot(id, d)
+    if (pos >= 0) {
+      if (payloads == null) payloads = new Array[Array[Long]](k)
+      System.arraycopy(payloads, pos, payloads, pos + 1, math.min(sz, k - 1) - pos)
+      payloads(pos) = payload
+    }
+  }
+
+  /** Entry r's payload. */
+  def payload(r: Int): Array[Long] = payloads(r)
+
+  /** Places (id, d) if it is accepted; returns its slot, or -1. */
+  private def slot(id: Long, d: Double): Int = {
     val sz = size
     // the hot reject: one comparison while the k-th key is a number; a
     // NaN on either side falls through to the full order below
-    if (sz == k && d > dists(sz - 1)) return
+    if (sz == k && d > dists(sz - 1)) return -1
     if (sz < k || BoundedTopK.before(d, id, dists(sz - 1), ids(sz - 1))) {
       var pos = if (sz < k) sz else k - 1
       while (pos > 0 && BoundedTopK.before(d, id, dists(pos - 1), ids(pos - 1))) {
@@ -39,7 +63,8 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
       }
       dists(pos) = d; ids(pos) = id
       if (sz < k) size = sz + 1
-    }
+      pos
+    } else -1
   }
 
   /** [[insert]] that skips an id already buffered — the replicated-graph
@@ -48,21 +73,25 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
     * deterministic rank key, and the duplicate must not occupy a second
     * slot (displacing a real candidate). O(size) primitive scan — same
     * cost class as the O(k) shift insert. */
-  def insertDistinct(id: Long, d: Double): Unit = {
+  def insertDistinct(id: Long, d: Double): Unit = if (!holds(id)) insert(id, d)
+
+  private def holds(id: Long): Boolean = {
     var i = 0
-    val sz = size
-    while (i < sz) { if (ids(i) == id) return; i += 1 }
-    insert(id, d)
+    while (i < size) { if (ids(i) == id) return true; i += 1 }
+    false
   }
 
-  /** Insert every entry of `other` (distinct-by-id when `distinct`). The
-    * result is insertion-order independent: the k smallest under the
-    * total (dist, id) order. */
+  /** Insert every entry of `other`, with its payload (distinct-by-id when
+    * `distinct`). The result is insertion-order independent: the k
+    * smallest under the total (dist, id) order. */
   def mergeFrom(other: BoundedTopK, distinct: Boolean): Unit = {
     var r = 0
     while (r < other.size) {
-      if (distinct) insertDistinct(other.ids(r), other.dists(r))
-      else insert(other.ids(r), other.dists(r))
+      val id = other.ids(r)
+      if (!distinct || !holds(id)) {
+        if (other.payloads == null) insert(id, other.dists(r))
+        else insert(id, other.dists(r), other.payloads(r))
+      }
       r += 1
     }
   }

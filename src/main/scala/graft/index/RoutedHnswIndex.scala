@@ -52,6 +52,12 @@ final case class RoutedHnswModel(
 
   /** All physical shard ids of one region. */
   def shardsOfRegion(c: Int): Range = offsets(c) until (offsets(c) + subShards(c))
+
+  /** Primitive copy of [[centroids]] for the per-query probe ranking
+    * ([[RoutedHnswIndex.probeShards]]), converted once. @transient:
+    * recomputed once per deserialized instance. */
+  @transient private[graft] lazy val centroidArrays: Array[Array[Double]] =
+    centroids.map(_.toArray).toArray
 }
 
 object RoutedHnswIndex {
@@ -319,9 +325,8 @@ object RoutedHnswIndex {
     * sub-shards. */
   private[graft] def probeShards(q: Array[Double], model: RoutedHnswModel,
       probeRegions: Int): Array[Int] = {
-    val cents = model.centroids.map(_.toArray).toArray
     val r = math.min(math.max(probeRegions, 1), model.nlist)
-    IvfIndex.probeSet(q, cents, model.metric, r).flatMap(model.shardsOfRegion)
+    IvfIndex.probeSet(q, model.centroidArrays, model.metric, r).flatMap(model.shardsOfRegion)
   }
 
   /** Routed batch kNN — the routed graph kind

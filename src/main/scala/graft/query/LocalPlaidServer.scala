@@ -1,229 +1,41 @@
 package graft.query
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-import java.util.stream.IntStream
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, collect_list}
-import org.apache.spark.sql.graftx.{CentroidSimsKernel, TextHashKernel}
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.PlaidIndex
 import graft.index.PlaidIndex.PlaidModel
 
 /** In-process late-interaction serving over a PLAID index — the
-  * [[LocalServe]] single-heap path for the multi-vector kind: postings,
-  * per-doc centroid sets, and per-doc token hashes collect to the
-  * driver ONCE; each query then runs the full pipeline (token routing →
-  * posting-probe candidates → centroid-interaction rank → exact MaxSim
-  * rerank) with zero Spark jobs, sharing the SAME kernels the
-  * distributed plan executes ([[CentroidSimsKernel]], the
-  * [[org.apache.spark.sql.graftx.CentroidInteractionExpr]] loop, the
-  * ascending dot/norm folds) — so every stage is float-for-float
-  * identical to `PlaidIndex.candidates` + the exact stage
-  * (LocalServeSpec asserts the parity). Candidate scoring fans out on
-  * the common pool (scores are independent; the rank sort restores the
-  * deterministic order), and all long-keyed state lives in specialized
-  * LongMaps — no per-candidate boxing in the hot loop.
+  * [[LocalServe]] single-heap path for the multi-vector kind: the same
+  * per-doc packs as [[PlaidServer]] collect to the driver ONCE, and each
+  * query runs the same [[PlaidKind]] scan over them ([[LocalScan]]: packs
+  * in parallel, heaps merged in the (key, id) order) and the same exact
+  * rerank, with zero Spark jobs. Every stage is float-for-float
+  * `PlaidIndex.candidates` + the exact stage (LocalServeSpec asserts the
+  * parity).
   *
-  * Resident footprint ∝ corpus tokens (postings + per-doc hash sets) —
-  * the single-heap regime; the DataFrame pipeline stays the 100 TB
-  * path, exactly as with the vector kinds' Local*Servers.
+  * Resident footprint ∝ corpus tokens (per-doc centroid and hash sets
+  * plus the postings) — the single-heap regime; the DataFrame pipeline
+  * stays the 100 TB path, exactly as with the vector kinds'
+  * Local*Servers.
   */
 final class LocalPlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel) {
-  private val primes: Array[Int] = PlaidIndex.Primes.toArray
-  private val cents: Array[Long] = model.cents.toArray
-  private val centVecs: Array[Array[Double]] =
-    cents.map(c => primes.map(p => ((c % p) + 1).toDouble))
-  private val centNorms: Array[Double] = centVecs.map(normOf)
-  private val centIdxOf: scala.collection.mutable.LongMap[Int] = {
-    val m = new scala.collection.mutable.LongMap[Int](cents.length * 2)
-    var i = 0
-    while (i < cents.length) { m(cents(i)) = i; i += 1 }
-    m
-  }
-
-  // postings by centroid index + per-doc centroid index sets — the same
-  // resident split the distributed probe join and interaction kernel read
-  private val (postings: Array[Array[Long]],
-      docCents: scala.collection.mutable.LongMap[Array[Int]]) = {
-    val rows = post.select(col("cent"), col("doc_id")).collect()
-    val byCent = Array.fill(cents.length)(Vector.newBuilder[Long])
-    val byDoc = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Int]]
-    rows.foreach { r =>
-      val ci = centIdxOf(r.getLong(0))
-      val id = r.getLong(1)
-      byCent(ci) += id
-      byDoc.getOrElseUpdate(id, new scala.collection.mutable.ArrayBuffer[Int]) += ci
-    }
-    val dc = new scala.collection.mutable.LongMap[Array[Int]](byDoc.size * 2)
-    byDoc.foreach { case (id, b) => dc(id) = b.toArray }
-    (byCent.map(_.result().toArray), dc)
-  }
-
-  // per-doc distinct token hashes for the exact stage, plus one shared
-  // embedding cache over the distinct hashes (vec + norm per hash)
-  private val docToks: scala.collection.mutable.LongMap[Array[Long]] = {
-    val rows = PlaidIndex.docTokens(docs)
-      .groupBy("doc_id").agg(collect_list(col("th")).as("ths"))
-      .collect()
-    val m = new scala.collection.mutable.LongMap[Array[Long]](rows.length * 2)
-    rows.foreach(r => m(r.getLong(0)) = r.getSeq[Long](1).toArray)
-    m
-  }
-  private val vecCache: scala.collection.mutable.LongMap[(Array[Double], Double)] = {
-    val m = new scala.collection.mutable.LongMap[(Array[Double], Double)]
-    docToks.foreach { case (_, ths) =>
-      ths.foreach(h => if (!m.contains(h)) m(h) = embed(h))
-    }
-    m
-  }
-
-  private def embed(h: Long): (Array[Double], Double) = {
-    val v = new Array[Double](primes.length)
-    var i = 0
-    while (i < primes.length) { v(i) = ((h % primes(i)) + 1).toDouble; i += 1 }
-    (v, normOf(v))
-  }
-
-  private def normOf(v: Array[Double]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < v.length) { s = s + v(i) * v(i); i += 1 }
-    math.sqrt(s)
-  }
-
-  /** least(1, greatest(-1, dot/(na·nb))), zero-norm → 0 — the exact
-    * Column sequence of PlaidIndex.cosSim / the maxsim stage. */
-  private def cos(a: Array[Double], na: Double, b: Array[Double], nb: Double): Double = {
-    var dt = 0.0
-    var i = 0
-    while (i < a.length) { dt = dt + a(i) * b(i); i += 1 }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else math.min(1.0, math.max(-1.0, dt / (na * nb)))
-  }
-
-  /** The query's distinct tokens sorted ascending by UTF8 binary order —
-    * the array_sort(struct(qt, …)) fold order both stages use. */
-  private def queryTokens(text: String): Array[String] = {
-    val seen = new java.util.LinkedHashSet[String]
-    text.split(" ", -1).foreach(seen.add)
-    val arr = seen.toArray(new Array[String](seen.size))
-    arr.map(t => (UTF8String.fromString(t), t))
-      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-  }
-
-  /** First-stage ranked (id, approx) pairs — shared by [[candidates]]
-    * and [[search]]. */
-  private def firstStage(queryId: Long, qts: Array[String], topN: Int): Array[(Long, Double)] = {
-    val qmat = qts.map(t =>
-      CentroidSimsKernel.raw(TextHashKernel.tokenHash(UTF8String.fromString(t)),
-        primes, centVecs, centNorms))
-    // probe selection: per token, nprobe best (csim desc, index asc)
-    val probed = new Array[Boolean](cents.length)
-    qmat.foreach { csims =>
-      val order = csims.indices.sortWith { (i, j) =>
-        if (csims(i) != csims(j)) csims(i) > csims(j) else i < j
-      }
-      order.take(model.nprobe).foreach(i => probed(i) = true)
-    }
-    // candidate pool = docs sharing ≥1 probed centroid. Two equivalent
-    // plans by posting density: on sparse corpora, union the probed
-    // posting lists (the distributed equi-join's shape); on dense ones
-    // (this synthetic corpus: every doc in ~23/24 centroids, so the
-    // union touches |docs|·|cents| entries), scan docs once with an
-    // early-exit membership probe instead.
-    var probedPostings = 0L
-    var ci = 0
-    while (ci < postings.length) {
-      if (probed(ci)) probedPostings += postings(ci).length
-      ci += 1
-    }
-    val idsBuf = Vector.newBuilder[Long]
-    if (probedPostings > docCents.size) {
-      docCents.foreach { case (id, dc) =>
-        if (id != queryId) {
-          var j = 0
-          var hit = false
-          while (!hit && j < dc.length) { hit = probed(dc(j)); j += 1 }
-          if (hit) idsBuf += id
-        }
-      }
-    } else {
-      val seen = new scala.collection.mutable.LongMap[Boolean](docCents.size * 2)
-      ci = 0
-      while (ci < postings.length) {
-        if (probed(ci)) postings(ci).foreach(id => if (id != queryId) seen(id) = true)
-        ci += 1
-      }
-      seen.foreachKey(idsBuf += _)
-    }
-    val ids = idsBuf.result().toArray
-    // centroid-interaction score — the CentroidInteractionExpr loop,
-    // fanned across candidates (independent scores; sort restores order)
-    val scores = new Array[Double](ids.length)
-    IntStream.range(0, ids.length).parallel().forEach { x =>
-      val dc = docCents(ids(x))
-      var s = 0.0
-      var i = 0
-      while (i < qmat.length) {
-        val row = qmat(i)
-        var best = Double.NegativeInfinity
-        var j = 0
-        while (j < dc.length) { val v = row(dc(j)); if (v > best) best = v; j += 1 }
-        s += best
-        i += 1
-      }
-      scores(x) = s
-    }
-    ids.indices.toArray.map(x => (ids(x), scores(x)))
-      .sortWith { case ((ida, sa), (idb, sb)) =>
-        if (sa != sb) sa > sb else ida < idb
-      }.take(topN)
-  }
+  private val served =
+    new LocalScan(PlaidKind.served(docs, post), PlaidKind(docs.sparkSession, model))
 
   /** First-stage candidates, ranked: probe the top-nprobe centroids per
     * query token, pool candidate docs through the postings, score each
-    * by the centroid-interaction sum. Mirrors PlaidIndex.candidates. */
-  def candidates(queryId: Long, text: String, topN: Int): Array[Long] =
-    firstStage(queryId, queryTokens(text), topN).map(_._1)
+    * by the centroid-interaction sum. Mirrors PlaidIndex.candidates. The
+    * pool is the answer here, so the check's k is topN. */
+  def candidates(queryId: Long, text: String, topN: Int): Array[Long] = {
+    val first = served.heap(PlaidKind.query(queryId, text, topN, topN), topN, ())
+    first.ids.take(first.size)
+  }
 
   /** Full pipeline: first-stage topN candidates, exact MaxSim rerank to
     * rank ≤ k → (id, maxsim rounded 4, n_qtok, rank). Mirrors
     * maxsim_first_stage's exact tail row-for-row. */
   def search(queryId: Long, text: String, topN: Int, k: Int): Array[(Long, Double, Int, Int)] = {
-    val qts = queryTokens(text)
-    val qvs = qts.map(t => vecOf(TextHashKernel.tokenHash(UTF8String.fromString(t))))
-    val rescored = firstStage(queryId, qts, topN).map { case (id, _) =>
-      val dvs = docToks(id).map(vecOf)
-      var score = 0.0
-      var i = 0
-      while (i < qvs.length) {
-        val (qv, qn) = qvs(i)
-        var best = Double.NegativeInfinity
-        var j = 0
-        while (j < dvs.length) {
-          val (dv, dn) = dvs(j)
-          val sim = cos(qv, qn, dv, dn)
-          if (sim > best) best = sim
-          j += 1
-        }
-        score += best
-        i += 1
-      }
-      (id, score)
-    }
-    rescored.sortWith { case ((ida, sa), (idb, sb)) =>
-      if (sa != sb) sa > sb else ida < idb
-    }.take(k).zipWithIndex.map { case ((id, s), r) =>
-      // Spark's Round(double) goes through the DECIMAL-STRING value
-      // (scala BigDecimal.decimal), not the exact binary expansion —
-      // JBigDecimal.valueOf matches it; new JBigDecimal(d) would not.
-      (id, JBigDecimal.valueOf(s).setScale(4, RoundingMode.HALF_UP).doubleValue(),
-        qts.length, r + 1)
-    }
+    val q = PlaidKind.query(queryId, text, topN, k)
+    PlaidKind.rerank(q, served.heap(q, topN, ()), k)
   }
-
-  private def vecOf(h: Long): (Array[Double], Double) =
-    vecCache.getOrElse(h, embed(h))
 }

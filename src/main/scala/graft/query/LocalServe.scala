@@ -28,9 +28,10 @@ private[graft] final case class LocalServerAdapter(
 }
 
 /** In-process single-query serving: each `Local*Server` runs the SAME
-  * packs and the SAME per-kind scan ([[ScanKind]]: a [[PackedKind]], or
-  * a [[GraphKind]] whose packs are compiled shard graphs) as its
-  * distributed server, over packs collected to the driver ONCE
+  * packs and the SAME per-kind scan ([[ScanKind]]: a [[PackedKind]], a
+  * [[GraphKind]] whose packs are compiled shard graphs, or the
+  * [[PlaidKind]] whose packs are per-doc centroid sets and postings) as
+  * its distributed server, over packs collected to the driver ONCE
   * ([[LocalScan]]) — zero Spark jobs per query.
   *
   * This is the reference's deployment shape: its facade serves queries
@@ -66,8 +67,7 @@ private[graft] object LocalServe {
     * [[scan]]'s two-level merge. `walk` runs once per query for its
     * per-query precomputation (probe masks, ADC tables, packed query
     * codes) and returns the walk of that query's packs into a heap. */
-  def batch(qs: Array[Array[Double]], k: Int)(
-      walk: Array[Double] => BoundedTopK => Unit): Array[BoundedTopK] = {
+  def batch[Q](qs: Array[Q], k: Int)(walk: Q => BoundedTopK => Unit): Array[BoundedTopK] = {
     val out = new Array[BoundedTopK](qs.length)
     IntStream.range(0, qs.length).parallel().forEach { qi =>
       val merge = new BoundedTopK(k)
@@ -326,7 +326,8 @@ final class LocalRoutedHnswServer(graph: DataFrame, model: RoutedHnswModel) {
   * [[LocalScan]]); per query every shard's logarithmic walk runs on the
   * common pool and merges under the same (rank_key, id) order as
   * [[HnswServer]] — result-identical. */
-final class LocalHnswServer private (served: LocalScan[(Int, CompiledHnsw), Int]) {
+final class LocalHnswServer private (
+    served: LocalScan[(Int, CompiledHnsw), Int, Array[Double]]) {
 
   def this(graph: DataFrame, metric: Metric, numShards: Int = -1) =
     this(new LocalScan(graph, GraphKind.hnsw(metric, numShards)))

@@ -1,23 +1,33 @@
 package graft.query
 
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, collect_list}
+import org.apache.spark.sql.graftx.{CentroidSimsKernel, TextHashKernel, TopNKernel}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Metric
-import graft.index.{BoundedTopK, BqIndex, BqModel, CompiledHnsw, DriverPar, HnswIndex, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PqIndex, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Index, Sq8Model}
+import graft.index.{BoundedTopK, BqIndex, BqModel, CompiledHnsw, DriverPar, HnswIndex, IvfIndex, IvfModel, IvfPqModel, LshIndex, OpqIndex, OpqModel, PlaidIndex, PqIndex, PqModel, RoutedHnswIndex, RoutedHnswModel, Sq8Index, Sq8Model}
+import graft.index.PlaidIndex.PlaidModel
 
-/** One kind's scan definition, written once and run by all three shapes
+/** One kind's scan definition, written once and run by the shapes
   * ([[BlockedScan]], [[DistributedScan]], [[LocalScan]]) over packs of
-  * type `B`:
+  * type `B` for queries of type `Q` (a vector for the vector and graph
+  * kinds, a [[PlaidQuery]] for PLAID):
   *  - `frame`: the columns the shapes read from the served table;
   *  - `packer`: one partition of `frame`'s rows into the packs it scans
   *    (none for an empty partition);
   *  - `width`: the query length a pack serves (-1: none, an empty pack);
   *  - `dim`: the query length the model fixes (None: the packs' widest);
+  *  - `requireQueries`: the serve-entry check of the serving shapes, for
+  *    a heap of k and the served dim;
   *  - `scan`: for a per-call parameter `P` and a query, the per-query
   *    precomputation, returning the scan of one pack into a heap. The
   *    blocked and distributed shapes ship that pack scan to the
@@ -30,22 +40,24 @@ import graft.index.{BoundedTopK, BqIndex, BqModel, CompiledHnsw, DriverPar, Hnsw
   * `packer` and `width` run on the executors: they are function values
   * that capture only what they read, never the kind.
   */
-private[graft] abstract class ScanKind[B, P](implicit val tag: ClassTag[B]) {
+private[graft] abstract class ScanKind[B, P, Q](implicit val tag: ClassTag[B],
+    val queryTag: ClassTag[Q]) {
   def frame(df: DataFrame): DataFrame
   def packer: Iterator[InternalRow] => Iterator[B]
   def width: B => Int
   def dim: Option[Int]
+  def requireQueries(qs: Array[Q], k: Int, served: Int): Unit
   def finish: Double => Double
-  def scan: P => Array[Double] => (B, BoundedTopK) => Unit
+  def scan: P => Q => (B, BoundedTopK) => Unit
   def distinct: Boolean = false
-  def route: Option[Route[B, P]] = None
+  def route: Option[Route[B, P, Q]] = None
 
   /** The served dim: the model's, else the packs' widest. */
   final def dimOf(widths: => Iterable[Int]): Int = dim.getOrElse(widths.foldLeft(-1)(math.max))
 
   /** Per-query scans for a shape that offers a query every pack: a routed
     * kind's scan skips the packs the query did not probe. */
-  final def visiting(p: P): Array[Double] => (B, BoundedTopK) => Unit = {
+  final def visiting(p: P): Q => (B, BoundedTopK) => Unit = {
     val perQuery = scan(p)
     route match {
       case None => perQuery
@@ -60,8 +72,8 @@ private[graft] abstract class ScanKind[B, P](implicit val tag: ClassTag[B]) {
   * (`probe`, its per-query prep), walks only the packs with those keys
   * (`key`), and the blocked shape reads only the probed keys' rows
   * (`prune`: the scanned frame for a sorted set of keys). */
-private[graft] final case class Route[B, P](key: B => Int,
-    probe: P => Array[Double] => Array[Int], prune: (DataFrame, Array[Int]) => DataFrame) {
+private[graft] final case class Route[B, P, Q](key: B => Int,
+    probe: P => Q => Array[Int], prune: (DataFrame, Array[Int]) => DataFrame) {
 
   /** `scan` over only the packs whose key is in `probes`. */
   def only(probes: Array[Int], scan: (B, BoundedTopK) => Unit): (B, BoundedTopK) => Unit = {
@@ -76,9 +88,12 @@ private[graft] final case class Route[B, P](key: B => Int,
 private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[Int],
     val finish: Double => Double)(
     val scan: P => Array[Double] => (Block[A], BoundedTopK) => Unit)
-    extends ScanKind[Block[A], P] {
+    extends ScanKind[Block[A], P, Array[Double]] {
 
   def frame(df: DataFrame): DataFrame = ServeBlocks.select(df, pack)
+
+  def requireQueries(qs: Array[Array[Double]], k: Int, served: Int): Unit =
+    PackedKind.requireQueries(qs, k, served)
 
   val packer: Iterator[InternalRow] => Iterator[Block[A]] = {
     val p = pack
@@ -90,8 +105,8 @@ private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[I
 
 private[graft] object PackedKind {
 
-  /** The one serve-entry check of the serving shapes
-    * ([[DistributedScan]], [[LocalScan]]): k > 0, and queries of the
+  /** The serve-entry check of the vector and graph kinds
+    * ([[ScanKind.requireQueries]]): k > 0, and queries of the
     * index dim (`served` < 0 when unknown: an empty corpus of a data-dim
     * kind) with only finite components. Without it a longer query is answered from
     * its first `dim` components, a shorter one throws an index error
@@ -343,8 +358,9 @@ private[graft] object PackedKind {
   * ([[CompiledHnsw.knnInto]]) at ef = max(efSearch, k); the query length
   * is the graphs' vector dim. */
 private[graft] final class GraphKind[P](metric: Metric, numShards: Int, efSearch: P => Int,
-    override val distinct: Boolean, override val route: Option[Route[(Int, CompiledHnsw), P]])
-    extends ScanKind[(Int, CompiledHnsw), P] {
+    override val distinct: Boolean,
+    override val route: Option[Route[(Int, CompiledHnsw), P, Array[Double]]])
+    extends ScanKind[(Int, CompiledHnsw), P, Array[Double]] {
 
   /** `numShards` > 0 skips the `max(shard)` discovery job. */
   def frame(df: DataFrame): DataFrame =
@@ -358,6 +374,9 @@ private[graft] final class GraphKind[P](metric: Metric, numShards: Int, efSearch
   val width: ((Int, CompiledHnsw)) => Int = sg => if (sg._2.n > 0) sg._2.dim else -1
 
   val dim: Option[Int] = None
+
+  def requireQueries(qs: Array[Array[Double]], k: Int, served: Int): Unit =
+    PackedKind.requireQueries(qs, k, served)
 
   val finish: Double => Double = metric.finishRankScalar
 
@@ -385,10 +404,246 @@ private[graft] object GraphKind {
     * efSearch). */
   def routed(model: RoutedHnswModel): GraphKind[(Int, Int)] =
     new GraphKind[(Int, Int)](model.metric, model.numShards, _._2, distinct = true,
-      route = Some(Route[(Int, CompiledHnsw), (Int, Int)](_._1,
+      route = Some(Route[(Int, CompiledHnsw), (Int, Int), Array[Double]](_._1,
         p => q => RoutedHnswIndex.probeShards(q, model, p._1),
         (df, shards) => HnswIndex.shardGrouped(
           df.where(col("shard").isin(shards.map(Int.box): _*)), shards.length))))
+}
+
+/** A PLAID query: the id of the doc it was taken from (the docs-as-queries
+  * convention: that doc never answers it) and the hashes of its distinct
+  * tokens, in the fold order of both stages ([[PlaidKind.query]]). */
+private[graft] final case class PlaidQuery(id: Long, tokens: Array[Long])
+
+/** PLAID's first stage as a scan kind, run by [[DistributedScan]]
+  * ([[PlaidServer]]) and [[LocalScan]] ([[LocalPlaidServer]]):
+  *  - pack: one partition's [[PlaidKind.Block]] of docs, packed from the
+  *    (doc_id, cents, ths) rows of [[PlaidKind.served]];
+  *  - per-query prep: the query's token×centroid similarity rows
+  *    ([[CentroidSimsKernel.raw]]) and the probe mask, each token's
+  *    `nprobe` best centroids by (similarity desc, index asc)
+  *    ([[TopNKernel.topIdx]], the plan form's kernel);
+  *  - pack scan: the docs sharing a probed centroid, each scored by the
+  *    centroid-interaction sum (the
+  *    [[org.apache.spark.sql.graftx.CentroidInteractionExpr]] loop) and
+  *    inserted at key −score with its token hashes as payload, so the
+  *    heap's (key asc, id asc) order is the pipeline's (approx desc,
+  *    doc_id asc); the query's own doc is skipped.
+  * The merged heap of topN feeds one exact-MaxSim rerank on the driver
+  * ([[PlaidKind.rerank]]), the same stage split as the DataFrame
+  * pipeline (`PlaidIndex.candidates` + maxsim_first_stage's exact tail).
+  *
+  * The centroid table broadcasts once per kind: a query's pack scan
+  * carries only the token hashes and the probe mask, and the similarity
+  * rows are rebuilt from the broadcast once per task (VERDICT r10 #4:
+  * shipping the ~98 KB matrix in every query's closure was the gap to the
+  * dispatch floor). A token list has no fixed length, so no pack has a
+  * width and [[PlaidKind.query]] is the one query check.
+  */
+private[graft] final class PlaidKind(model: PlaidModel, table: Broadcast[PlaidKind.Embedded])
+    extends ScanKind[PlaidKind.Block, Unit, PlaidQuery] {
+  import PlaidKind.Block
+
+  def frame(df: DataFrame): DataFrame =
+    df.select(col("doc_id").cast("long"), col("cents"), col("ths"))
+
+  val packer: Iterator[InternalRow] => Iterator[Block] = {
+    val centIdx = model.cents.zipWithIndex.toMap
+    val nCents = model.cents.length
+    rows => PlaidKind.pack(rows, centIdx, nCents).iterator
+  }
+
+  val width: Block => Int = _ => -1
+
+  val dim: Option[Int] = None
+
+  /** [[PlaidKind.query]] checked each query where it was made. */
+  def requireQueries(qs: Array[PlaidQuery], k: Int, served: Int): Unit = ()
+
+  /** The approx score back from its key. */
+  val finish: Double => Double = -_
+
+  val scan: Unit => PlaidQuery => (Block, BoundedTopK) => Unit = _ => q => {
+    val sims = new PlaidKind.TokenSims(q.tokens, table)
+    val probed = new Array[Boolean](model.cents.length)
+    sims.rows.foreach(row => TopNKernel.topIdx(row, model.nprobe).foreach(probed(_) = true))
+    val self = q.id
+    (blk, heap) => PlaidKind.scanPack(blk, sims.rows, probed, self, heap)
+  }
+}
+
+private[graft] object PlaidKind {
+
+  private val primes: Array[Int] = PlaidIndex.Primes.toArray
+
+  /** The kind for `model`, its centroid table broadcast once. */
+  def apply(spark: SparkSession, model: PlaidModel): PlaidKind =
+    new PlaidKind(model, spark.sparkContext.broadcast(Embedded(model.cents.toArray)))
+
+  /** One serving partition's docs: ids, each doc's centroid index set and
+    * distinct token hashes, and the partition-local postings (centroid
+    * index → the rows of its docs), so a query touches only its probed
+    * centroids' docs (VERDICT r9 #3). */
+  final case class Block(ids: Array[Long], cents: Array[Array[Int]],
+      tokens: Array[Array[Long]], postings: Array[Array[Int]])
+
+  /** Token hashes' pseudo-embeddings ((h % p) + 1 per prime, the
+    * primes of [[PlaidIndex.Primes]]) and their norms — the centroid
+    * table, or a doc's tokens in the rerank — and the clamped cosines of
+    * one more token against each ([[CentroidSimsKernel.raw]]). */
+  final case class Embedded(vecs: Array[Array[Double]], norms: Array[Double]) {
+    def sims(h: Long): Array[Double] = CentroidSimsKernel.raw(h, primes, vecs, norms)
+  }
+
+  object Embedded {
+    def apply(hashes: Array[Long]): Embedded = {
+      val vecs = hashes.map(h => primes.map(p => ((h % p) + 1).toDouble))
+      Embedded(vecs, vecs.map { v =>
+        var s = 0.0
+        var i = 0
+        while (i < v.length) { s = s + v(i) * v(i); i += 1 }
+        math.sqrt(s)
+      })
+    }
+  }
+
+  /** A query's similarity rows, computed where first read: on the driver
+    * for the probe mask (then reused by the in-process pack scans), and
+    * once per deserialized copy on the executors, where only the token
+    * hashes ship. */
+  final class TokenSims(tokens: Array[Long], table: Broadcast[Embedded]) extends Serializable {
+    @transient lazy val rows: Array[Array[Double]] = {
+      val t = table.value
+      tokens.map(t.sims)
+    }
+  }
+
+  /** The served table: one row per doc with postings, (doc_id, its
+    * centroids `cents`, its distinct token hashes `ths`), from the SAME
+    * posting and token frames the DataFrame pipeline reads. */
+  def served(docs: DataFrame, post: DataFrame): DataFrame = {
+    val dc = post.select(col("cent"), col("doc_id"))
+      .groupBy("doc_id").agg(collect_list(col("cent")).as("cents"))
+    val dt = PlaidIndex.docTokens(docs)
+      .groupBy("doc_id").agg(collect_list(col("th")).as("ths"))
+    dc.join(dt, "doc_id")
+  }
+
+  /** The one serve-entry check of both PLAID shapes, then the query:
+    * its distinct tokens (split on single spaces) sorted by UTF8 binary
+    * order — the array_sort(struct(qt, …)) fold order both stages use —
+    * and hashed. */
+  def query(queryId: Long, text: String, topN: Int, k: Int): PlaidQuery = {
+    require(topN > 0 && k > 0, s"serving requires topN, k > 0, got $topN, $k")
+    require(text != null, s"serving requires a query text, got null for query $queryId")
+    val seen = new java.util.LinkedHashSet[String]
+    text.split(" ", -1).foreach(seen.add)
+    PlaidQuery(queryId, seen.toArray(new Array[String](seen.size))
+      .map(UTF8String.fromString).sortWith(_.compareTo(_) < 0)
+      .map(TextHashKernel.tokenHash))
+  }
+
+  /** A partition's rows into its [[Block]]; None for an empty partition. */
+  private def pack(rows: Iterator[InternalRow], centIdx: Map[Long, Int],
+      nCents: Int): Option[Block] = {
+    val ids = mutable.ArrayBuilder.make[Long]
+    val cents = mutable.ArrayBuilder.make[Array[Int]]
+    val tokens = mutable.ArrayBuilder.make[Array[Long]]
+    rows.foreach { r =>
+      ids += r.getLong(0)
+      cents += r.getArray(1).toLongArray().map(centIdx)
+      tokens += r.getArray(2).toLongArray()
+    }
+    val docCents = cents.result()
+    if (docCents.isEmpty) None
+    else {
+      val postings = Array.fill(nCents)(mutable.ArrayBuilder.make[Int])
+      var x = 0
+      while (x < docCents.length) { docCents(x).foreach(postings(_) += x); x += 1 }
+      Some(Block(ids.result(), docCents, tokens.result(), postings.map(_.result())))
+    }
+  }
+
+  /** The pack scan. The candidates are the docs sharing ≥1 probed
+    * centroid, found by the cheaper of two plans: where the probed
+    * postings outnumber the docs (corpora whose docs sit in ~every
+    * centroid), one pass over the docs with an early-exit membership
+    * test; else the union of the probed posting lists. */
+  private def scanPack(blk: Block, sims: Array[Array[Double]], probed: Array[Boolean],
+      self: Long, heap: BoundedTopK): Unit = {
+    val n = blk.ids.length
+    def score(x: Int): Unit = {
+      val id = blk.ids(x)
+      if (id != self) heap.insert(id, -interaction(sims, blk.cents(x)), blk.tokens(x))
+    }
+    var probedMass = 0L
+    var ci = 0
+    while (ci < probed.length) {
+      if (probed(ci)) probedMass += blk.postings(ci).length
+      ci += 1
+    }
+    if (probedMass >= n) {
+      var x = 0
+      while (x < n) {
+        val dc = blk.cents(x)
+        var hit = false
+        var j = 0
+        while (!hit && j < dc.length) { hit = probed(dc(j)); j += 1 }
+        if (hit) score(x)
+        x += 1
+      }
+    } else {
+      val cand = new java.util.BitSet(n)
+      ci = 0
+      while (ci < probed.length) {
+        if (probed(ci)) blk.postings(ci).foreach(cand.set)
+        ci += 1
+      }
+      var x = cand.nextSetBit(0)
+      while (x >= 0) { score(x); x = cand.nextSetBit(x + 1) }
+    }
+  }
+
+  /** Per query token, the best similarity over the doc's centroids,
+    * summed in token order. */
+  private def interaction(sims: Array[Array[Double]], dc: Array[Int]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < sims.length) {
+      val row = sims(i)
+      var best = Double.NegativeInfinity
+      var j = 0
+      while (j < dc.length) { val v = row(dc(j)); if (v > best) best = v; j += 1 }
+      s += best
+      i += 1
+    }
+    s
+  }
+
+  /** The exact tail on the driver: each first-stage entry's exact MaxSim
+    * against its token hashes (per query token, the best cosine over the
+    * doc's tokens, summed in token order), ranked (maxsim desc, id asc)
+    * to k → (id, maxsim rounded 4, n_qtok, rank), the maxsim_first_stage
+    * row. */
+  def rerank(q: PlaidQuery, first: BoundedTopK, k: Int): Array[(Long, Double, Int, Int)] =
+    Array.tabulate(first.size) { r =>
+      val doc = Embedded(first.payload(r))
+      var score = 0.0
+      q.tokens.foreach { h =>
+        var best = Double.NegativeInfinity
+        doc.sims(h).foreach(sim => if (sim > best) best = sim)
+        score += best
+      }
+      (first.ids(r), score)
+    }.sortWith { case ((ida, sa), (idb, sb)) =>
+      if (sa != sb) sa > sb else ida < idb
+    }.take(k).zipWithIndex.map { case ((id, s), r) =>
+      // Spark's Round(double) goes through the DECIMAL-STRING value
+      // (scala BigDecimal.decimal), not the exact binary expansion —
+      // JBigDecimal.valueOf matches it; new JBigDecimal(d) would not.
+      (id, JBigDecimal.valueOf(s).setScale(4, RoundingMode.HALF_UP).doubleValue(),
+        q.tokens.length, r + 1)
+    }
 }
 
 /** Per-thread scratch for the tables a block scan builds and drops (the
@@ -420,7 +675,7 @@ private object ScanScratch {
   * independent (the k smallest by total (dist, id) order), so the loop
   * order never changes a result. The job runs when called; the queries
   * must fit on the driver. */
-private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P]) {
+private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P, Array[Double]]) {
 
   /** The scanned table, the query ids and their merged heaps. */
   def heaps(queries: DataFrame, k: Int, p: P): (DataFrame, Array[Long], Array[BoundedTopK]) = {
@@ -478,7 +733,8 @@ private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P]
   * by [[BoundedTopK.merge]]; per query only the kind's pack scan ships —
   * no broadcast, no SQL plan analysis, no codegen (0.5–2 s per call
   * through the DataFrame path, the round-2 serving pathology). */
-private[query] final class DistributedScan[B, P](df: DataFrame, kind: ScanKind[B, P]) {
+private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKind[B, P, Q]) {
+  import kind.queryTag
 
   val blocks: RDD[B] = ServeBlocks.cached(df, kind)
 
@@ -492,15 +748,18 @@ private[query] final class DistributedScan[B, P](df: DataFrame, kind: ScanKind[B
   /** Materialize the packs (call once before timing queries). */
   def warm(): Unit = { dim; () }
 
-  def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
-    PackedKind.requireQueries(Array(q), k, dim)
+  /** One query's merged heap, payloads included. */
+  def heap(q: Q, k: Int, p: P): BoundedTopK = {
+    kind.requireQueries(Array(q), k, dim)
     val scan = kind.visiting(p)(q)
     BoundedTopK.merge(blocks, 1, k, kind.distinct) { it =>
       val heap = new BoundedTopK(k)
       it.foreach(scan(_, heap))
       Array(heap)
-    }.head.ranked(kind.finish)
+    }.head
   }
+
+  def search(q: Q, k: Int, p: P): Array[(Long, Double, Int)] = heap(q, k, p).ranked(kind.finish)
 
   /** Batch kNN over the RESIDENT packs — result-identical to
     * [[BlockedScan]] (same scans, same merge) without its per-call
@@ -512,11 +771,14 @@ private[query] final class DistributedScan[B, P](df: DataFrame, kind: ScanKind[B
     * [[TaskFanout]]; each query owns its heap and packs are read-only, so
     * the fan-out is race-free. The result is a local relation, so the
     * job runs when this is called; an operator applied to the result
-    * (projection, filter, join) runs a job of its own. */
-  def searchBatch(queries: DataFrame, k: Int, p: P): DataFrame = {
+    * (projection, filter, join) runs a job of its own. A vector kind's
+    * entry: the queries are the `qvec`s of the frame. */
+  def searchBatch(queries: DataFrame, k: Int, p: P)(
+      implicit vectors: Array[Array[Double]] <:< Array[Q]): DataFrame = {
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
-    PackedKind.requireQueries(qvecs, k, dim)
-    val bc = df.sparkSession.sparkContext.broadcast(qvecs.map(kind.visiting(p)))
+    val qs = vectors(qvecs)
+    kind.requireQueries(qs, k, dim)
+    val bc = df.sparkSession.sparkContext.broadcast(qs.map(kind.visiting(p)))
     val tag = kind.tag
     val heaps =
       try {
@@ -541,10 +803,10 @@ private[query] final class DistributedScan[B, P](df: DataFrame, kind: ScanKind[B
   * jobs per query, result-identical to [[DistributedScan]]. A routed
   * kind's query gets only its probed packs: no heap and no pool task
   * for a pack it does not walk. */
-private[query] final class LocalScan[B, P](kind: ScanKind[B, P], val blocks: Array[B]) {
-  import kind.tag
+private[query] final class LocalScan[B, P, Q](kind: ScanKind[B, P, Q], val blocks: Array[B]) {
+  import kind.{queryTag, tag}
 
-  def this(df: DataFrame, kind: ScanKind[B, P]) = this(kind, ServeBlocks.collect(df, kind))
+  def this(df: DataFrame, kind: ScanKind[B, P, Q]) = this(kind, ServeBlocks.collect(df, kind))
 
   private val dim: Int = kind.dimOf(blocks.map(kind.width))
 
@@ -553,22 +815,24 @@ private[query] final class LocalScan[B, P](kind: ScanKind[B, P], val blocks: Arr
 
   /** Under `p`, a query's packs: every pack, or a routed kind's probed
     * ones. */
-  private def packsOf(p: P): Array[Double] => Array[B] = kind.route match {
+  private def packsOf(p: P): Q => Array[B] = kind.route match {
     case None => _ => blocks
     case Some(r) =>
       val probe = r.probe(p)
       q => probe(q).flatMap(byKey.getOrElse(_, Array.empty[B]))
   }
 
-  def requireQueries(qs: Array[Array[Double]], k: Int): Unit =
-    PackedKind.requireQueries(qs, k, dim)
+  def requireQueries(qs: Array[Q], k: Int): Unit = kind.requireQueries(qs, k, dim)
 
-  def search(q: Array[Double], k: Int, p: P): Array[(Long, Double, Int)] = {
+  /** One query's merged heap, payloads included. */
+  def heap(q: Q, k: Int, p: P): BoundedTopK = {
     requireQueries(Array(q), k)
-    LocalServe.scan(packsOf(p)(q), k, kind.distinct)(kind.scan(p)(q)).ranked(kind.finish)
+    LocalServe.scan(packsOf(p)(q), k, kind.distinct)(kind.scan(p)(q))
   }
 
-  def searchBatch(qs: Array[Array[Double]], k: Int, p: P): Array[Array[(Long, Double, Int)]] = {
+  def search(q: Q, k: Int, p: P): Array[(Long, Double, Int)] = heap(q, k, p).ranked(kind.finish)
+
+  def searchBatch(qs: Array[Q], k: Int, p: P): Array[Array[(Long, Double, Int)]] = {
     requireQueries(qs, k)
     val packs = packsOf(p)
     val perQuery = kind.scan(p)

@@ -1,266 +1,35 @@
 package graft.query
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, collect_list}
-import org.apache.spark.sql.graftx.{CentroidSimsKernel, TextHashKernel}
-import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.index.{BoundedTopK, PlaidIndex}
 import graft.index.PlaidIndex.PlaidModel
 
-/** Distributed resident serving for the PLAID kind — the `ServingRdd`
-  * path the vector kinds' *Server classes follow, for state that
-  * outgrows one heap: per-doc rows (centroid index set + distinct token
-  * hashes) stay partitioned across executors; one query is ONE job that
-  * ships the query's token×centroid similarity matrix plus the probed
-  * mask in the closure, scores each partition's probed-overlap docs with
-  * the [[org.apache.spark.sql.graftx.CentroidInteractionExpr]] loop into
-  * a per-partition bounded heap (carrying the winners' token hashes),
-  * and exact-MaxSim-reranks the globally merged topN on the driver —
-  * bounded work ∝ topN, the same split as the DataFrame pipeline.
+/** Distributed resident serving for the PLAID kind: the per-doc packs
+  * ([[PlaidKind]]) stay partitioned across the executors, one query is
+  * ONE job of [[DistributedScan]] whose tasks scan their packs' probed
+  * docs into a heap of topN, merged on the driver by
+  * [[graft.index.BoundedTopK.merge]], and the merged topN is
+  * exact-MaxSim-reranked on the driver ([[PlaidKind.rerank]]) — bounded
+  * work ∝ topN, the same split as the DataFrame pipeline.
   * Result-identical to [[LocalPlaidServer.search]] and therefore to the
   * maxsim_first_stage row (LocalServeSpec pins the chain).
   */
 final class PlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel)
     extends ServingRdd {
-  private val primes: Array[Int] = PlaidIndex.Primes.toArray
-  private val cents: Array[Long] = model.cents.toArray
-  private val centVecs: Array[Array[Double]] =
-    cents.map(c => primes.map(p => ((c % p) + 1).toDouble))
-  private val centNorms: Array[Double] = centVecs.map { v =>
-    var s = 0.0; var i = 0
-    while (i < v.length) { s = s + v(i) * v(i); i += 1 }
-    math.sqrt(s)
-  }
-  // the frozen centroid table broadcasts ONCE at construction; per-query
-  // closures then carry only the token hashes + probed mask (~1 KB)
-  // instead of the token×centroid similarity matrix (~98 KB at the bench
-  // protocol — VERDICT r10 missing #4: query-specific closure shipping
-  // was the gap between serve_plaid_sel's p50 and serve_routed's
-  // dispatch floor). Executors recompute the matrix from the broadcast
-  // with the same [[CentroidSimsKernel.raw]] call the driver uses for
-  // probe selection — bit-identical similarities, result parity kept.
-  private val bcCent = docs.sparkSession.sparkContext
-    .broadcast((primes, centVecs, centNorms))
-
-  // resident per-partition block: doc rows (id, centroid index set,
-  // distinct token hashes) PLUS the partition-local inverted postings
-  // (centroid index → doc row positions), built from the SAME posting +
-  // token frames the DataFrame pipeline reads. The inverted form is what
-  // lets a query touch only its probed centroids' docs (VERDICT r9 #3:
-  // the previous layout shipped the probe mask but still visited every
-  // resident doc row to test it — a pruning-free scan behind the p50).
-  import PlaidServer.Block
-
-  private val rdd: RDD[Block] = {
-    val centIdx = model.cents.zipWithIndex.toMap
-    val nCents = model.cents.length
-    val dc = post.select(col("cent"), col("doc_id"))
-      .groupBy("doc_id").agg(collect_list(col("cent")).as("cs"))
-    val dt = PlaidIndex.docTokens(docs)
-      .groupBy("doc_id").agg(collect_list(col("th")).as("ths"))
-    // coalesce to the serving-partition count BEFORE compiling blocks —
-    // the join leaves shuffle.partitions (32) behind, and per-query jobs
-    // pay task dispatch per partition: the r11 probe measured the no-op
-    // floor at 51 ms over 32 tasks vs ~11 ms over the 8 every other
-    // server uses (this, not closure size, was the serve_plaid_sel gap)
-    dc.join(dt, "doc_id").rdd
-      .coalesce(ServeBlocks.ServePartitions, shuffle = false)
-      .mapPartitions { it =>
-      val rows = it.map { r =>
-        (r.getLong(0),
-          r.getSeq[Long](1).map(centIdx(_)).toArray,
-          r.getSeq[Long](2).toArray)
-      }.toArray
-      val byCent = Array.fill(nCents)(scala.collection.mutable.ArrayBuffer.empty[Int])
-      var x = 0
-      while (x < rows.length) {
-        rows(x)._2.foreach(ci => byCent(ci) += x)
-        x += 1
-      }
-      Iterator.single(Block(rows.map(_._1), rows.map(_._2), rows.map(_._3),
-        byCent.map(_.toArray)))
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-      // truncate the lineage once materialized: every job on a
-      // DataFrame-derived rdd re-broadcasts a task binary holding the
-      // whole construction plan — for PLAID that plan can embed the
-      // corpus generator's vocabulary literals (~0.5 MB on the bench
-      // world), which the r11 probe measured as a 43 ms no-op floor vs
-      // the 13 ms control. After localCheckpoint the task binary is just
-      // the cached-block read.
-      .localCheckpoint()
-  }
+  private val served =
+    new DistributedScan(PlaidKind.served(docs, post), PlaidKind(docs.sparkSession, model))
 
   /** Materialize the serving partitions (call once before timing). */
-  def warm(): this.type = { rdd.count(); this }
+  def warm(): this.type = { served.warm(); this }
 
-  protected def servingRdd: RDD[_] = rdd
+  protected def servingRdd: RDD[_] = served.blocks
 
   /** One query text → the late-interaction result rows
     * (id, maxsim rounded 4, n_qtok, rank) — the maxsim_first_stage
     * shape, rank ≤ k over a first-stage pool of topN. */
   def search(queryId: Long, text: String, topN: Int, k: Int): Array[(Long, Double, Int, Int)] = {
-    require(topN > 0 && k > 0, s"serving requires topN, k > 0, got $topN, $k")
-    // driver-side query prep — model constants, no Spark work
-    val seen = new java.util.LinkedHashSet[String]
-    text.split(" ", -1).foreach(seen.add)
-    val qts = seen.toArray(new Array[String](seen.size))
-      .map(t => (UTF8String.fromString(t), t))
-      .sortWith((a, b) => a._1.compareTo(b._1) < 0).map(_._2)
-    val qhs = qts.map(t => TextHashKernel.tokenHash(UTF8String.fromString(t)))
-    val qmat = qhs.map(CentroidSimsKernel.raw(_, primes, centVecs, centNorms))
-    val probed = new Array[Boolean](cents.length)
-    qmat.foreach { csims =>
-      val order = csims.indices.sortWith { (i, j) =>
-        if (csims(i) != csims(j)) csims(i) > csims(j) else i < j
-      }
-      order.take(model.nprobe).foreach(i => probed(i) = true)
-    }
-    // one job: per-partition candidate collection + interaction scoring
-    // into a bounded heap (key = −approx ⇒ BoundedTopK's (key asc, id
-    // asc) IS the pipeline's (approx desc, doc_id asc) order), winners
-    // carry their token hashes. Candidates come from the partition-local
-    // inverted postings — only probed centroids' doc lists are touched —
-    // with the SAME density-adaptive fallback as LocalPlaidServer: when
-    // the probed posting mass exceeds the partition's doc count (the
-    // degenerate every-doc-in-every-centroid corpora), one row scan with
-    // an early-exit membership test is cheaper than unioning the lists.
-    // The candidate set is identical either way (docs sharing ≥1 probed
-    // centroid), so result parity is unchanged.
-    val (qhsL, probedL, qid, n) = (qhs, probed, queryId, topN)
-    val bc = bcCent
-    val partials = rdd.mapPartitions { it =>
-      // rebuild the query's token×centroid matrix executor-side from the
-      // resident broadcast — 98k double ops per partition vs shipping
-      // 98 KB per job; same kernel as the driver's probe ranking, so the
-      // similarities (and everything downstream) are bit-identical
-      val (pr, cv, cn) = bc.value
-      val qmatL = qhsL.map(CentroidSimsKernel.raw(_, pr, cv, cn))
-      it.flatMap { blk =>
-        val nDocs = blk.ids.length
-        val heap = new BoundedTopK(n)
-        def score(x: Int): Unit = {
-          val id = blk.ids(x)
-          if (id != qid) {
-            val dc = blk.dcs(x)
-            var s = 0.0
-            var i = 0
-            while (i < qmatL.length) {
-              val row = qmatL(i)
-              var best = Double.NegativeInfinity
-              var jj = 0
-              while (jj < dc.length) {
-                val v = row(dc(jj)); if (v > best) best = v; jj += 1
-              }
-              s += best
-              i += 1
-            }
-            heap.insert(id, -s)
-          }
-        }
-        var probedMass = 0L
-        var ci = 0
-        while (ci < blk.postIdx.length) {
-          if (probedL(ci)) probedMass += blk.postIdx(ci).length
-          ci += 1
-        }
-        val winners: Iterator[Int] =
-          if (probedMass >= nDocs) {
-            var x = 0
-            while (x < nDocs) {
-              val dc = blk.dcs(x)
-              var hit = false
-              var j = 0
-              while (!hit && j < dc.length) { hit = probedL(dc(j)); j += 1 }
-              if (hit) score(x)
-              x += 1
-            }
-            Iterator.range(0, nDocs)
-          } else {
-            val cand = new java.util.BitSet(nDocs)
-            ci = 0
-            while (ci < blk.postIdx.length) {
-              if (probedL(ci)) {
-                val lst = blk.postIdx(ci)
-                var t = 0
-                while (t < lst.length) { cand.set(lst(t)); t += 1 }
-              }
-              ci += 1
-            }
-            var x = cand.nextSetBit(0)
-            while (x >= 0) { score(x); x = cand.nextSetBit(x + 1) }
-            new Iterator[Int] {
-              private var cur = cand.nextSetBit(0)
-              def hasNext: Boolean = cur >= 0
-              def next(): Int = { val r = cur; cur = cand.nextSetBit(cur + 1); r }
-            }
-          }
-        val approxOf = new scala.collection.mutable.LongMap[Double]
-        heap.ranked(identity).foreach { case (id, negA, _) => approxOf(id) = -negA }
-        winners.filter(x => approxOf.contains(blk.ids(x)))
-          .map(x => (blk.ids(x), approxOf(blk.ids(x)), blk.toks(x)))
-      }
-    }.collect()
-    // global first-stage merge, then the exact rerank on the driver —
-    // bounded ∝ topN, the same stage split as the DataFrame pipeline
-    val top = new BoundedTopK(topN)
-    val toksOf = new scala.collection.mutable.LongMap[Array[Long]]
-    partials.foreach { case (id, approx, toks) =>
-      top.insert(id, -approx)
-      toksOf(id) = toks
-    }
-    val qvs = qhs.map(embed)
-    val rescored = top.ids.take(top.size).map { id =>
-      val dvs = toksOf(id).map(embed)
-      var score = 0.0
-      var i = 0
-      while (i < qvs.length) {
-        val (qv, qn) = qvs(i)
-        var best = Double.NegativeInfinity
-        var j = 0
-        while (j < dvs.length) {
-          val (dv, dn) = dvs(j)
-          var dt = 0.0
-          var c = 0
-          while (c < qv.length) { dt = dt + qv(c) * dv(c); c += 1 }
-          val sim =
-            if (qn == 0.0 || dn == 0.0) 0.0
-            else math.min(1.0, math.max(-1.0, dt / (qn * dn)))
-          if (sim > best) best = sim
-          j += 1
-        }
-        score += best
-        i += 1
-      }
-      (id, score)
-    }
-    rescored.sortWith { case ((ida, sa), (idb, sb)) =>
-      if (sa != sb) sa > sb else ida < idb
-    }.take(k).zipWithIndex.map { case ((id, s), r) =>
-      (id, JBigDecimal.valueOf(s).setScale(4, RoundingMode.HALF_UP).doubleValue(),
-        qts.length, r + 1)
-    }
+    val q = PlaidKind.query(queryId, text, topN, k)
+    PlaidKind.rerank(q, served.heap(q, topN, ()), k)
   }
-
-  private def embed(h: Long): (Array[Double], Double) = {
-    val v = new Array[Double](primes.length)
-    var i = 0
-    while (i < primes.length) { v(i) = ((h % primes(i)) + 1).toDouble; i += 1 }
-    var s = 0.0
-    i = 0
-    while (i < v.length) { s = s + v(i) * v(i); i += 1 }
-    (v, math.sqrt(s))
-  }
-}
-
-object PlaidServer {
-  /** Resident partition block: doc rows + the partition-local inverted
-    * postings (centroid index → doc row positions). Top-level so task
-    * closures don't capture the server (whose DataFrames can't ship). */
-  private[query] final case class Block(ids: Array[Long], dcs: Array[Array[Int]],
-      toks: Array[Array[Long]], postIdx: Array[Array[Int]])
 }

@@ -69,7 +69,7 @@ private[graft] object ServeBlocks {
     * shuffle) to [[ServePartitions]], each partition packed by the kind's
     * packer, cached. The caller materializes them and unpersists when
     * done. */
-  def cached[B](df: DataFrame, kind: ScanKind[B, _]): RDD[B] =
+  def cached[B](df: DataFrame, kind: ScanKind[B, _, _]): RDD[B] =
     packed(df, kind)
       .cache()
       // lineage truncation (the PlaidServer lesson, VERDICT r11 wrong #1
@@ -82,10 +82,10 @@ private[graft] object ServeBlocks {
 
   /** The local shape's packs: the same packs, collected to the driver
     * without caching them on the executors. */
-  def collect[B](df: DataFrame, kind: ScanKind[B, _]): Array[B] =
+  def collect[B](df: DataFrame, kind: ScanKind[B, _, _]): Array[B] =
     packed(df, kind).collect()
 
-  private def packed[B](df: DataFrame, kind: ScanKind[B, _]): RDD[B] = {
+  private def packed[B](df: DataFrame, kind: ScanKind[B, _, _]): RDD[B] = {
     import kind.tag
     kind.frame(df).queryExecution.toRdd
       .coalesce(ServePartitions, shuffle = false)
@@ -191,10 +191,10 @@ private[graft] object ServeBlocks {
   }).asInstanceOf[Array[A]]
 }
 
-/** Shared serving-RDD plumbing for the distributed servers (every
-  * [[DistributedScan]], and PLAID) — the dispatch-floor diagnostic and
-  * release, defined ONCE over the cached pack RDD each server already
-  * holds. */
+/** Shared serving-RDD plumbing for the distributed servers, each a
+  * [[DistributedScan]] of its kind (PLAID's included) — the dispatch-floor
+  * diagnostic and release, defined ONCE over the cached pack RDD each
+  * server already holds. */
 private[query] trait ServingRdd {
   protected def servingRdd: org.apache.spark.rdd.RDD[_]
 

@@ -413,9 +413,9 @@ object CentroidSimsKernel {
       centNorms: Array[Double]): UnsafeArrayData =
     UnsafeArrayData.fromPrimitiveArray(raw(h, primes, centVecs, centNorms))
 
-  /** The same similarities as a plain array — the in-process serving
-    * path ([[graft.query.LocalPlaidServer]]) shares this kernel so
-    * local ≡ distributed is float-for-float. */
+  /** The same similarities as a plain array — PLAID serving
+    * ([[graft.query.PlaidKind]], run by both serving shapes) shares this
+    * kernel, so served results are float-for-float the plan's. */
   def raw(h: Long, primes: Array[Int], centVecs: Array[Array[Double]],
       centNorms: Array[Double]): Array[Double] = {
     val d = primes.length
@@ -488,15 +488,20 @@ case class PlaidCsimsExpr(child: Expression, centSeq: Seq[Long], primeSeq: Seq[I
   * java.lang.Double.compare — the window's SortOrder semantics — and
   * equal values keep the lower index, matching the `ci ASC` tie-break. */
 object TopNKernel {
-  def topIdx(values: ArrayData, n: Int): GenericArrayData = {
-    val len = values.numElements()
-    val k = math.min(n, len)
-    val idx = new Array[Int](math.max(k, 0))
-    val vals = new Array[Double](math.max(k, 0))
+  def topIdx(values: ArrayData, n: Int): GenericArrayData =
+    new GenericArrayData(topIdx(values.toDoubleArray(), n))
+
+  /** The same selection over a plain array — PLAID serving's per-token
+    * probe ([[graft.query.PlaidKind]]); n ≤ 0 selects nothing. */
+  def topIdx(values: Array[Double], n: Int): Array[Int] = {
+    val k = math.max(math.min(n, values.length), 0)
+    if (k == 0) return Array.emptyIntArray
+    val idx = new Array[Int](k)
+    val vals = new Array[Double](k)
     var size = 0
     var i = 0
-    while (i < len) {
-      val v = values.getDouble(i)
+    while (i < values.length) {
+      val v = values(i)
       if (size < k || java.lang.Double.compare(v, vals(size - 1)) > 0) {
         var pos = if (size < k) size else k - 1
         while (pos > 0 && java.lang.Double.compare(vals(pos - 1), v) < 0) {
@@ -508,7 +513,7 @@ object TopNKernel {
       }
       i += 1
     }
-    new GenericArrayData(java.util.Arrays.copyOf(idx, size))
+    idx
   }
 }
 

@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 // temporary profiling scratchpad — not part of the library surface.
-// Isolates PlaidServer.search latency at the bench's plaid_sel protocol:
+// Isolates PLAID serving latency at the bench's plaid_sel protocol, for
+// both shapes: PlaidServer.search (one job per query) and
+// LocalPlaidServer.search (in process, no job):
 //   runMain graft.tools.PlaidServeProbe [nDocs] [c] [vocab]
-// Prints p50/p95/p99 plus a driver-prep-only timing split so a serving
-// regression can be attributed to driver prep vs the job.
+// Prints the dispatch floors, then p50/p95/p99 of each shape over the
+// same 100 queries at topN 50, k 10, so a serving regression can be
+// attributed to job dispatch vs the scan.
 object PlaidServeProbe {
   def main(args: Array[String]): Unit = {
     val nDocs = args.lift(0).map(_.toLong).getOrElse(10000L)
@@ -45,14 +48,24 @@ object PlaidServeProbe {
       val t0 = System.nanoTime(); server.floorProbe(); (System.nanoTime() - t0) / 1e6
     }.sorted
     println(f"[probe] floor p50 ${floor(15)}%.1f ms")
-    qTexts.take(5).foreach { case (qid, text) => server.search(qid, text, 50, 10) }
-    val times = qTexts.map { case (qid, text) =>
-      val t0 = System.nanoTime()
-      server.search(qid, text, 50, 10)
-      (System.nanoTime() - t0) / 1e6
-    }.sorted
-    def pct(p: Double) = times(math.min(times.length - 1, (times.length * p).toInt))
-    println(f"[probe] search p50 ${pct(0.50)}%.1f p95 ${pct(0.95)}%.1f p99 ${pct(0.99)}%.1f ms")
+    val local = new graft.query.LocalPlaidServer(world.docs, post, world.model)
+    // docs per serving pack: both shapes scan these packs in parallel
+    val packDocs = graft.query.PlaidKind.served(world.docs, post).rdd
+      .coalesce(graft.query.ServeBlocks.ServePartitions)
+      .mapPartitions(rows => Iterator(rows.size)).collect()
+    println(s"[probe] docs per serving pack ${packDocs.mkString(",")}")
+    def timed(label: String)(search: (Long, String) => Unit): Unit = {
+      qTexts.take(5).foreach { case (qid, text) => search(qid, text) }
+      val times = qTexts.map { case (qid, text) =>
+        val t0 = System.nanoTime()
+        search(qid, text)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      def pct(p: Double) = times(math.min(times.length - 1, (times.length * p).toInt))
+      println(f"[probe] $label p50 ${pct(0.50)}%.2f p95 ${pct(0.95)}%.2f p99 ${pct(0.99)}%.2f ms")
+    }
+    timed("search")((qid, text) => server.search(qid, text, 50, 10))
+    timed("local search")((qid, text) => local.search(qid, text, 50, 10))
     spark.stop()
   }
 }
