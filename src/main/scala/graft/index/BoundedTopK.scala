@@ -2,6 +2,9 @@ package graft.index
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftx.ResultFrames
 
@@ -114,18 +117,41 @@ private[graft] object BoundedTopK {
       c < 0 || (c == 0 && id < id2)
     }
 
+  /** [[collectQueries]]' projection of each query frame still in use,
+    * keyed by the frame's identity (a plan holds no reference back to
+    * the frame it came from). A caller that searches with one frame
+    * again re-runs the planned projection, as a repeated `collect()` of
+    * one Dataset does. */
+  private val projected = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, QueryExecution]())
+
   /** The query batch on the driver: LONG `query_id`s and primitive
-    * `qvec`s, in collect order. A duplicate id is rejected — its two
-    * queries' results would be indistinguishable in the output. */
+    * `qvec`s, in collect order. The frame is projected and cast to
+    * (query_id LONG, qvec ARRAY<DOUBLE>) and that plan collected as
+    * `collect()` runs it (under its own SQL execution), but read as
+    * internal rows: one primitive copy per `qvec`, no boxed `Row`. The
+    * projection is planned once per query frame ([[projected]]), since
+    * planning it costs more than collecting a batch of a thousand
+    * queries. A null id or vector is rejected, and so is a duplicate id —
+    * its two queries' results would be indistinguishable in the output. */
   def collectQueries(queries: DataFrame): (Array[Long], Array[Array[Double]]) = {
-    val rows = queries.select(col("query_id").cast("long"), col("qvec")).collect()
-    val ids = rows.map(_.getLong(0))
+    val qe = projected.computeIfAbsent(queries, q =>
+      q.select(col("query_id").cast("long"), col("qvec").cast("array<double>")).queryExecution)
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collectQueries"))(
+      qe.executedPlan.executeCollect())
+    val ids = rows.map { r =>
+      require(!r.isNullAt(0), "null query_id in the query batch")
+      r.getLong(0)
+    }
     val seen = new scala.collection.mutable.LongMap[Unit](ids.length * 2)
     ids.foreach { q =>
       require(!seen.contains(q), s"duplicate query_id $q in the query batch")
       seen(q) = ()
     }
-    (ids, rows.map(_.getSeq[Double](1).toArray))
+    (ids, rows.map { r =>
+      require(!r.isNullAt(1), s"null qvec for query_id ${r.getLong(0)}")
+      r.getArray(1).toDoubleArray()
+    })
   }
 
   /** The one top-k merge. `scan` runs once per partition of `rows` and
@@ -156,12 +182,26 @@ private[graft] object BoundedTopK {
     * EXPLAIN shows the plan of `scanned`, the table the heaps came from. */
   def toFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK],
       finish: Double => Double): DataFrame =
-    ResultFrames.knn(scanned, rows(qids, heaps, finish))
+    ResultFrames.knn(scanned, rows(qids, heaps)(finish))
 
-  /** [[toFrame]]'s rows: (query_id, neighbor_id, finish(key), rank). */
-  def rows(qids: Array[Long], heaps: Array[BoundedTopK],
-      finish: Double => Double): Seq[(Long, Long, Double, Int)] =
-    qids.indices.flatMap { qi =>
-      heaps(qi).ranked(finish).map { case (id, d, r) => (qids(qi), id, d, r) }
+  /** The result rows (query_id, neighbor_id, distance(key), rank), built
+    * straight from the heaps in query order. */
+  def rows(qids: Array[Long], heaps: Array[BoundedTopK])(distance: Double => Any): Seq[InternalRow] = {
+    var n = 0
+    heaps.foreach(n += _.size)
+    val out = new Array[InternalRow](n)
+    var i = 0
+    var qi = 0
+    while (qi < qids.length) {
+      val h = heaps(qi)
+      var r = 0
+      while (r < h.size) {
+        out(i) = new GenericInternalRow(Array[Any](qids(qi), h.ids(r), distance(h.dists(r)), r + 1))
+        i += 1
+        r += 1
+      }
+      qi += 1
     }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+  }
 }

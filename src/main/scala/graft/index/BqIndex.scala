@@ -116,7 +116,7 @@ object BqIndex {
     else {
       val (scanned, qids, heaps) =
         new BlockedScan(codes, PackedKind.bq(model)).heaps(queries, k, ())
-      ResultFrames.hammingKnn(scanned, BoundedTopK.rows(qids, heaps, identity))
+      ResultFrames.hammingKnn(scanned, BoundedTopK.rows(qids, heaps)(_.toLong))
     }
 
   /** [[knnBlocked]] in the facade's (query_id, neighbor_id, distance,

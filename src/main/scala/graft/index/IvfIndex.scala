@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.TopNKernel
 
 import graft.core.Metric
 import graft.query.{BlockedScan, PackedKind}
@@ -105,12 +106,13 @@ object IvfIndex {
     if (k <= 0) search(assigned, model, queries, k, nprobe)
     else new BlockedScan(assigned, PackedKind.ivf(model)).search(queries, k, nprobe)
 
-  /** Driver-side top-nprobe cluster ids for one query — the same
-    * ascending (rank_key, cluster_id) order as [[probes]]. */
+  /** Driver-side top-nprobe cluster ids for one query: ascending
+    * (rank_key, cluster_id), keys compared by `java.lang.Double.compare`
+    * (−0.0 before 0.0, NaN last). It runs once per query in every shape
+    * of IVF, IVFPQ and IVF×SQ8, so it selects over primitive arrays. */
   private[graft] def probeSet(q: Array[Double], cents: Array[Array[Double]],
       metric: Metric, np: Int): Array[Int] =
-    Array.tabulate(cents.length)(c => (metric.rankKeyScalar(q, cents(c)), c))
-      .sortBy(identity).take(np).map(_._2)
+    TopNKernel.bottomIdx(Array.tabulate(cents.length)(c => metric.rankKeyScalar(q, cents(c))), np)
 
   /** One-shot convenience: assign + search. */
   def knn(vectors: DataFrame, model: IvfModel, queries: DataFrame,

@@ -173,13 +173,6 @@ object PlaidIndex {
         when(col("chunks_required") > 1, "chunk").otherwise("keep"))
   }
 
-  /** First-stage candidate generation over (possibly persisted) posting
-    * lists: queries (query_id, text) route to their top-nprobe
-    * centroids, candidates surface through the posting equi-join, and
-    * the centroid-interaction score (per query token, max cosine over
-    * the doc's FULL centroid set, token-ordered fold) ranks the pool to
-    * topN per query. Query ids share the doc-id space (the repo's
-    * docs-as-queries convention) and self matches are excluded. */
   /** Per-query-token similarity row against every centroid (the
     * per-batch "centroid score" table PLAID precomputes). The model is
     * a plan constant, so the C-way expansion is C inline scalar
@@ -258,6 +251,13 @@ object PlaidIndex {
         round(coalesce(col("n_candidates"), lit(0L)) / col("n_docs"), 6).as("cand_frac"))
   }
 
+  /** First-stage candidate generation over (possibly persisted) posting
+    * lists: queries (query_id, text) route to their top-nprobe
+    * centroids, candidates surface through the posting equi-join, and
+    * the centroid-interaction score (per query token, max cosine over
+    * the doc's FULL centroid set, token-ordered fold) ranks the pool to
+    * topN per query. Query ids share the doc-id space (the repo's
+    * docs-as-queries convention) and self matches are excluded. */
   def candidates(post: DataFrame, queries: DataFrame, model: PlaidModel,
       topN: Int): DataFrame = {
     import org.apache.spark.sql.graftx.IndexExpressions

@@ -19,8 +19,8 @@ import graft.index.PlaidIndex.PlaidModel
   * Local*Servers.
   */
 final class LocalPlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel) {
-  private val served =
-    new LocalScan(PlaidKind.served(docs, post), PlaidKind(docs.sparkSession, model))
+  private[graft] val kind = PlaidKind(docs.sparkSession, model)
+  private val served = new LocalScan(PlaidKind.served(docs, post), kind)
 
   /** First-stage candidates, ranked: probe the top-nprobe centroids per
     * query token, pool candidate docs through the postings, score each
@@ -38,4 +38,8 @@ final class LocalPlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel
     val q = PlaidKind.query(queryId, text, topN, k)
     PlaidKind.rerank(q, served.heap(q, topN, ()), k)
   }
+
+  /** Release the centroid-table broadcast; the server answers no query
+    * after it. */
+  def unpersist(): Unit = kind.destroy()
 }

@@ -438,11 +438,16 @@ private[graft] final case class PlaidQuery(id: Long, tokens: Array[Long])
   * rows are rebuilt from the broadcast once per task (VERDICT r10 #4:
   * shipping the ~98 KB matrix in every query's closure was the gap to the
   * dispatch floor). A token list has no fixed length, so no pack has a
-  * width and [[PlaidKind.query]] is the one query check.
+  * width and [[PlaidKind.query]] is the one query check. The servers
+  * that own a kind release the broadcast with [[destroy]].
   */
-private[graft] final class PlaidKind(model: PlaidModel, table: Broadcast[PlaidKind.Embedded])
+private[graft] final class PlaidKind(model: PlaidModel,
+    private[graft] val table: Broadcast[PlaidKind.Embedded])
     extends ScanKind[PlaidKind.Block, Unit, PlaidQuery] {
   import PlaidKind.Block
+
+  /** Release the centroid-table broadcast; no query runs after it. */
+  def destroy(): Unit = table.destroy()
 
   def frame(df: DataFrame): DataFrame =
     df.select(col("doc_id").cast("long"), col("cents"), col("ths"))
@@ -763,14 +768,18 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
 
   /** Batch kNN over the RESIDENT packs — result-identical to
     * [[BlockedScan]] (same scans, same merge) without its per-call
-    * re-pack (for the graph kinds, re-parsing every node row back into a
-    * graph): the queries' scans broadcast, then one job whose tasks walk
-    * their packs query by query. Serving partitions are sized for the
-    * single-query tail ([[ServeBlocks.ServePartitions]]), which would cap
-    * a batch at that many cores, so each task fans its queries out with
-    * [[TaskFanout]]; each query owns its heap and packs are read-only, so
-    * the fan-out is race-free. The result is a local relation, so the
-    * job runs when this is called; an operator applied to the result
+    * re-pack (for the graph kinds, re-shuffling every node row and
+    * re-compiling it into a graph). Per call: the queries collected
+    * ([[BoundedTopK.collectQueries]]), each query's scan prepared on the
+    * driver with [[DriverPar]] (probe ranking, ADC prep, rotation), the
+    * scans broadcast, and ONE job with no shuffle whose tasks walk their
+    * packs query by query into heaps that [[BoundedTopK.merge]] folds on
+    * the driver. Serving partitions are sized for the single-query tail
+    * ([[ServeBlocks.ServePartitions]]), which would cap a batch at that
+    * many cores, so each task fans its queries out with [[TaskFanout]];
+    * each query owns its heap and packs are read-only, so the fan-out is
+    * race-free. The result is a local relation built from the heaps, so
+    * the job runs when this is called; an operator applied to the result
     * (projection, filter, join) runs a job of its own. A vector kind's
     * entry: the queries are the `qvec`s of the frame. */
   def searchBatch(queries: DataFrame, k: Int, p: P)(
@@ -778,7 +787,10 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     val qs = vectors(qvecs)
     kind.requireQueries(qs, k, dim)
-    val bc = df.sparkSession.sparkContext.broadcast(qs.map(kind.visiting(p)))
+    val visit = kind.visiting(p)
+    val prepared = new Array[(B, BoundedTopK) => Unit](qs.length)
+    DriverPar.foreach(qs.length, chunk = 64) { qi => prepared(qi) = visit(qs(qi)) }
+    val bc = df.sparkSession.sparkContext.broadcast(prepared)
     val tag = kind.tag
     val heaps =
       try {
@@ -795,6 +807,9 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
       } finally bc.destroy()
     BoundedTopK.toFrame(df, qids, heaps, kind.finish)
   }
+
+  /** Drop the cached packs. */
+  def unpersist(): Unit = blocks.unpersist()
 }
 
 /** The local serving shape of a kind: the same packs collected to the

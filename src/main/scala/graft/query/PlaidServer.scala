@@ -17,13 +17,16 @@ import graft.index.PlaidIndex.PlaidModel
   */
 final class PlaidServer(docs: DataFrame, post: DataFrame, model: PlaidModel)
     extends ServingRdd {
-  private val served =
-    new DistributedScan(PlaidKind.served(docs, post), PlaidKind(docs.sparkSession, model))
+  private[graft] val kind = PlaidKind(docs.sparkSession, model)
+  private val served = new DistributedScan(PlaidKind.served(docs, post), kind)
 
   /** Materialize the serving partitions (call once before timing). */
   def warm(): this.type = { served.warm(); this }
 
   protected def servingRdd: RDD[_] = served.blocks
+
+  /** Drop the packs and the centroid-table broadcast. */
+  override def unpersist(): Unit = { super.unpersist(); kind.destroy() }
 
   /** One query text → the late-interaction result rows
     * (id, maxsim rounded 4, n_qtok, rank) — the maxsim_first_stage

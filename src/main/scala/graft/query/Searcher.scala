@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Metric
@@ -8,10 +9,10 @@ import graft.io.IndexIO
 
 /** The unified search facade (reference: pkg/search/search.go — Searcher
   * type-dispatch + fluent Builder). A sealed `IndexKind` ADT replaces the
-  * reflective type-switch (search.go:193-208); the builder compiles each
-  * search to the right DataFrame plan per kind — including IVFPQ, which
-  * the reference facade silently returns empty results for (search.go:80
-  * ⚠ bug, intentionally not reproduced).
+  * reflective type-switch (search.go:193-208), and one mapping
+  * ([[ServedKind]]) gives each kind its scan over resident packs —
+  * including IVFPQ, which the reference facade silently returns empty
+  * results for (search.go:80 ⚠ bug, intentionally not reproduced).
   */
 sealed trait IndexKind
 final case class FlatKind(vectors: DataFrame, metric: Metric) extends IndexKind
@@ -38,7 +39,7 @@ final case class LshKind(planes: Int, indexed: DataFrame, metric: Metric) extend
   * re-expressed as per-shard graphs with a fan-out merge
   * ([[graft.index.HnswIndex]]). `graph` is the build() table; `numShards`
   * > 0 (known from the build config or the persisted `num_shards`
-  * metadata) spares every search the `max(shard)` discovery job. */
+  * metadata) spares the packing search the `max(shard)` discovery job. */
 final case class HnswKind(graph: DataFrame, metric: Metric,
     numShards: Int = -1) extends IndexKind
 /** Routed sharded HNSW — shards placed by k-means region, queries probe
@@ -56,53 +57,45 @@ final case class RoutedHnswKind(model: RoutedHnswModel,
   * the exact kinds ignore it. */
 final case class SearchOptions(k: Int = 10, nprobe: Int = 10, efSearch: Int = 50)
 
-final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
+final class Searcher private[query] (kind: IndexKind, opts: SearchOptions,
+    served: ServedKind[_, _]) {
 
-  def withK(k: Int): Searcher = new Searcher(kind, opts.copy(k = k))
-  def withNprobe(n: Int): Searcher = new Searcher(kind, opts.copy(nprobe = n))
-  def withEfSearch(n: Int): Searcher = new Searcher(kind, opts.copy(efSearch = n))
+  private[query] def this(kind: IndexKind, opts: SearchOptions) =
+    this(kind, opts, ServedKind(kind))
+
+  /** Option copies share this Searcher's resident packs: the options only
+    * change each call's parameter. */
+  def withK(k: Int): Searcher = new Searcher(kind, opts.copy(k = k), served)
+  def withNprobe(n: Int): Searcher = new Searcher(kind, opts.copy(nprobe = n), served)
+  def withEfSearch(n: Int): Searcher = new Searcher(kind, opts.copy(efSearch = n), served)
   def options: SearchOptions = opts
 
   /** Batch kNN: queries (query_id, qvec) → (query_id, neighbor_id,
     * distance, rank).
     *
-    * Serves through the blocked kernels (the facade is the interactive
-    * surface; query batches are bounded by construction, mirroring the
-    * reference's in-memory Search([]float32) contract) — each is
-    * result-identical to its plan-based sibling. Each partition fills
-    * one bounded heap per query and [[graft.index.BoundedTopK.merge]]
-    * combines them on the driver, so this call runs the scan job itself
-    * and returns a local relation; no top-k shuffle follows. Collecting
-    * that relation runs no job, but an operator applied to it
+    * Serves from the index held in memory, as the reference's Search does
+    * (pkg/search/search.go): the first call packs the kind's table once
+    * into resident packs on the executors (decoded blocks, or compiled
+    * shard graphs for HNSW), which this Searcher and its
+    * `withK`/`withNprobe`/`withEfSearch` copies share until [[close]].
+    * Each call then prepares its queries on the driver and runs ONE job
+    * with no shuffle over those packs ([[DistributedScan.searchBatch]]);
+    * each partition fills one bounded heap per query and
+    * [[graft.index.BoundedTopK.merge]] combines them on the driver. The
+    * result is row-identical to the index object's blocked kernel (the
+    * same scan and merge over a fresh pack). Packs live in executor
+    * memory only: when an executor holding some is lost, the call that
+    * finds them missing drops them all, packs again and runs once more,
+    * so that one call pays a re-pack. The result is returned as a local
+    * relation: collecting it runs no job, but an operator applied to it
     * (projection, filter, join) runs one of its own. A duplicate
-    * `query_id` in the batch is rejected. For query *tables* too large
-    * to collect, call the `search`/`knn` plan forms on the index objects
+    * `query_id`, a query of the wrong length and a non-finite component
+    * are rejected. k ≤ 0 ("all rows", flat.go:82-84) takes the kind's
+    * plan form, which packs nothing. For query *tables* too large to
+    * collect, call the `search`/`knn` plan forms on the index objects
     * directly. */
-  def search(queries: DataFrame): DataFrame = kind match {
-    case FlatKind(vectors, metric) =>
-      FlatIndex.knnBlocked(vectors, queries, opts.k, metric)
-    case IvfKind(model, assigned) =>
-      IvfIndex.searchBlocked(assigned, model, queries, opts.k, opts.nprobe)
-    case PqKind(model, codes) =>
-      PqIndex.knnBlocked(codes, model, queries, opts.k)
-    case Sq8Kind(model, codes) =>
-      Sq8Index.knnBlocked(codes, model, queries, opts.k)
-    case IvfPqKind(model, codes) =>
-      IvfPqIndex.searchBlocked(codes, model, queries, opts.k, opts.nprobe)
-    case OpqKind(model, codes) =>
-      OpqIndex.knnBlocked(codes, model, queries, opts.k)
-    case BqKind(model, codes) =>
-      BqIndex.searchBlocked(codes, model, queries, opts.k)
-    case LshKind(planes, indexed, metric) =>
-      LshIndex.knnBlocked(indexed, queries, opts.k, planes, metric,
-        hamming = if (opts.efSearch >= 1) 1 else 0)
-    case HnswKind(graph, metric, numShards) =>
-      HnswIndex.knnBlocked(graph, queries, opts.k, metric, opts.efSearch,
-        numShards)
-    case RoutedHnswKind(model, graph) =>
-      RoutedHnswIndex.knn(graph, model, queries, opts.k,
-        probeRegions = opts.nprobe, efSearch = opts.efSearch)
-  }
+  def search(queries: DataFrame): DataFrame =
+    if (opts.k <= 0) served.kernel(queries, opts) else served.searchBatch(queries, opts)
 
   /** GetVectors counterpart (pkg/index flat GetVectors returns stored
     * vectors verbatim): an (id, vec) frame for every indexed row — exact
@@ -137,83 +130,36 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions) {
   /** In-process serving handle over this index — the reference's
     * deployment shape (heap-resident structures, zero scheduler in the
     * hot path; pkg/search/search.go serves exactly this way). Collects
-    * the packed state to the driver ONCE at construction; use when the
-    * packed index fits one heap (see [[LocalServe]]'s scaladoc for
-    * per-kind footprints) — the DataFrame [[search]] stays the cluster
-    * path. Honors this Searcher's nprobe/efSearch; k is per call. Every
-    * kind's local handle is result-identical to its distributed sibling
-    * (LocalServeSpec), with BQ's integer Hamming count reported through
-    * the `distance` slot exactly like the batch facade does. */
-  def localServer(): LocalServer = kind match {
-    case FlatKind(vectors, metric) =>
-      val s = new LocalFlatServer(vectors, metric)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case IvfKind(model, assigned) =>
-      val s = new LocalIvfServer(assigned, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe))
-    case PqKind(model, codes) =>
-      val s = new LocalPqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case Sq8Kind(model, codes) =>
-      val s = new LocalSq8Server(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case IvfPqKind(model, codes) =>
-      val s = new LocalIvfPqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe))
-    case OpqKind(model, codes) =>
-      val s = new LocalOpqServer(codes, model)
-      LocalServerAdapter((q, k) => s.search(q, k), (qs, k) => s.searchBatch(qs, k))
-    case BqKind(model, codes) =>
-      val s = new LocalBqServer(codes, model)
-      LocalServerAdapter(
-        (q, k) => s.search(q, k).map { case (id, h, r) => (id, h.toDouble, r) },
-        (qs, k) => s.searchBatch(qs, k)
-          .map(_.map { case (id, h, r) => (id, h.toDouble, r) }))
-    case LshKind(planes, indexed, metric) =>
-      val s = new LocalLshServer(indexed, planes, metric)
-      val h = if (opts.efSearch >= 1) 1 else 0
-      LocalServerAdapter((q, k) => s.search(q, k, h),
-        (qs, k) => s.searchBatch(qs, k, h))
-    case HnswKind(graph, metric, numShards) =>
-      val s = new LocalHnswServer(graph, metric, numShards)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.efSearch),
-        (qs, k) => s.searchBatch(qs, k, opts.efSearch))
-    case RoutedHnswKind(model, graph) =>
-      val s = new LocalRoutedHnswServer(graph, model)
-      LocalServerAdapter((q, k) => s.search(q, k, opts.nprobe, opts.efSearch),
-        (qs, k) => s.searchBatch(qs, k, opts.nprobe, opts.efSearch))
-  }
+    * the kind's packs to the driver ONCE at construction ([[LocalScan]]
+    * over the same packs and scan as [[search]]); use when the packed
+    * index fits one heap (see [[LocalServe]]'s scaladoc for per-kind
+    * footprints) — the DataFrame [[search]] stays the cluster path.
+    * Honors this Searcher's nprobe/efSearch; k is per call. Every kind's
+    * local handle is result-identical to [[search]] (LocalServeSpec),
+    * with BQ's integer Hamming count reported through the `distance`
+    * slot. */
+  def localServer(): LocalServer = served.local(opts)
 
-  /** Release the cached table a [[Searcher.open]] call pinned. Idempotent;
-    * a Searcher built over caller-owned frames (the [[IndexBuilder]] path)
-    * leaves caching to the caller and this is a no-op on uncached input. */
-  def close(): Unit = {
-    val df = kind match {
-      case FlatKind(vectors, _) => vectors
-      case IvfKind(_, assigned) => assigned
-      case PqKind(_, codes) => codes
-      case Sq8Kind(_, codes) => codes
-      case IvfPqKind(_, codes) => codes
-      case OpqKind(_, codes) => codes
-      case BqKind(_, codes) => codes
-      case LshKind(_, indexed, _) => indexed
-      case HnswKind(graph, _, _) => graph
-      case RoutedHnswKind(_, graph) => graph
-    }
-    df.unpersist()
-  }
+  /** Release the resident packs the first [[search]] built, for this
+    * Searcher and every option copy of it; a later search packs again.
+    * Safe from any copy and any thread: a search already running keeps
+    * its packs until it ends, and they are released then. Idempotent.
+    * The tables the Searcher was built over stay as their owner left
+    * them. */
+  def close(): Unit = served.close()
 
-  /** Range search (search.go:165-189) — exact on flat; on quantized kinds
-    * the filter applies to their approximate distances. */
+  /** Range search (search.go:165-189) — exact on flat; on the other
+    * kinds the radius filters the kind's own distances over its
+    * candidates, capped at `maxResults` per query. An unbounded
+    * `maxResults` takes the kind's all-rows plan (k ≤ 0): a bounded heap
+    * of that size cannot be allocated. */
   def rangeSearch(queries: DataFrame, threshold: Double,
       maxResults: Int = Int.MaxValue): DataFrame = kind match {
     case FlatKind(vectors, metric) =>
       FlatIndex.rangeSearch(vectors, queries, threshold, metric, maxResults)
     case _ =>
       import org.apache.spark.sql.functions.col
-      new Searcher(kind, opts.copy(k = maxResults))
+      withK(if (maxResults == Int.MaxValue) 0 else maxResults)
         .search(queries).where(col("distance") <= threshold)
   }
 
@@ -302,30 +248,146 @@ object Searcher {
   /** Open a persisted index, detecting its type from metadata
     * (detectIndexType, search.go:193-208).
     *
-    * The loaded table is `.cache()`d: an opened index is a serving
-    * object, and without the pin every `search` call re-ran the parquet
-    * scan — 3.3× the cached kernel cost per call in BENCH_r04
-    * (`searcher_open_search_sec`). The cache materializes lazily on the
-    * first search; call [[Searcher.close]] to release it. */
+    * The loaded table is not pinned: the first [[Searcher.search]] reads
+    * it once into the resident packs, which are the serving cache, and
+    * [[Searcher.close]] releases them. (A table cache on top would hold
+    * the index twice.) */
   def open(spark: SparkSession, path: String): Searcher = {
     val meta = IndexIO.readChecked(path)
     val kind = meta("index_type") match {
-      case "flat" => val (v, m) = IndexIO.loadFlat(spark, path); FlatKind(v.cache(), m)
-      case "ivf" => val (m, a) = IndexIO.loadIvf(spark, path); IvfKind(m, a.cache())
-      case "pq" => val (m, c) = IndexIO.loadPq(spark, path); PqKind(m, c.cache())
-      case "sq8" => val (m, c) = IndexIO.loadSq8(spark, path); Sq8Kind(m, c.cache())
-      case "ivfpq" => val (m, c) = IndexIO.loadIvfPq(spark, path); IvfPqKind(m, c.cache())
-      case "opq" => val (m, c) = IndexIO.loadOpq(spark, path); OpqKind(m, c.cache())
-      case "bq" => val (m, c) = IndexIO.loadBq(spark, path); BqKind(m, c.cache())
-      case "lsh" => val (p, m, i) = IndexIO.loadLsh(spark, path); LshKind(p, i.cache(), m)
+      case "flat" => val (v, m) = IndexIO.loadFlat(spark, path); FlatKind(v, m)
+      case "ivf" => val (m, a) = IndexIO.loadIvf(spark, path); IvfKind(m, a)
+      case "pq" => val (m, c) = IndexIO.loadPq(spark, path); PqKind(m, c)
+      case "sq8" => val (m, c) = IndexIO.loadSq8(spark, path); Sq8Kind(m, c)
+      case "ivfpq" => val (m, c) = IndexIO.loadIvfPq(spark, path); IvfPqKind(m, c)
+      case "opq" => val (m, c) = IndexIO.loadOpq(spark, path); OpqKind(m, c)
+      case "bq" => val (m, c) = IndexIO.loadBq(spark, path); BqKind(m, c)
+      case "lsh" => val (p, m, i) = IndexIO.loadLsh(spark, path); LshKind(p, i, m)
       case "hnsw" =>
         val (m, g) = IndexIO.loadHnsw(spark, path)
-        HnswKind(g.cache(), m, meta.get("num_shards").map(_.toInt).getOrElse(-1))
+        HnswKind(g, m, meta.get("num_shards").map(_.toInt).getOrElse(-1))
       case "hnsw_routed" =>
         val (m, g) = IndexIO.loadRoutedHnsw(spark, path)
-        RoutedHnswKind(m, g.cache())
+        RoutedHnswKind(m, g)
       case t => throw new IllegalArgumentException(s"unknown index type '$t'")
     }
     apply(kind)
+  }
+}
+
+/** The facade's one mapping from an index kind to how it serves: the
+  * table its packs are built from, its scan ([[ScanKind]], built on first
+  * use, so a Searcher that never packs never checks the kind's packing
+  * limits), the per-call parameter the search options select, and the
+  * index object's own kernel (for k ≤ 0, its all-rows plan form). It
+  * also holds the [[DistributedScan]] the first k > 0 search builds,
+  * shared by every Searcher copy over it until [[close]]. */
+private[query] final class ServedKind[B, P](frame: DataFrame,
+    scanKind: => ScanKind[B, P, Array[Double]], param: SearchOptions => P,
+    val kernel: (DataFrame, SearchOptions) => DataFrame) {
+
+  private lazy val kind = scanKind
+
+  /** Resident packs and the searches reading them. Closed packs are
+    * dropped when their last reader finishes, so a close() never pulls
+    * packs from under a running search. */
+  private final class Lease(val scan: DistributedScan[B, P, Array[Double]]) {
+    var readers = 0
+    var closed = false
+  }
+
+  private var current: Lease = null
+
+  /** k > 0 kNN over the resident packs, built on first use. Packs found
+    * lost (their executor died, or they were unpersisted behind this
+    * object) are dropped and the search runs once more over fresh ones. */
+  def searchBatch(queries: DataFrame, opts: SearchOptions): DataFrame = {
+    val p = param(opts)
+    try reading(_.searchBatch(queries, opts.k, p))
+    catch { case e: SparkException if ServedKind.packsLost(e) =>
+      reading(_.searchBatch(queries, opts.k, p))
+    }
+  }
+
+  private def reading[T](f: DistributedScan[B, P, Array[Double]] => T): T = {
+    val lease = synchronized {
+      if (current == null) current = new Lease(new DistributedScan(frame, kind))
+      current.readers += 1
+      current
+    }
+    try f(lease.scan)
+    catch { case e: SparkException if ServedKind.packsLost(e) => retire(lease); throw e }
+    finally synchronized {
+      lease.readers -= 1
+      if (lease.closed && lease.readers == 0) lease.scan.unpersist()
+    }
+  }
+
+  /** Stop serving from `lease`; its packs go when its last reader ends. */
+  private def retire(lease: Lease): Unit = synchronized {
+    if (current eq lease) current = null
+    lease.closed = true
+  }
+
+  /** Drop the resident packs, if built (once no search reads them). */
+  def close(): Unit = synchronized {
+    if (current != null) {
+      val lease = current
+      retire(lease)
+      if (lease.readers == 0) lease.scan.unpersist()
+    }
+  }
+
+  /** The same packs and scan collected in process. */
+  def local(opts: SearchOptions): LocalServer = {
+    val scan = new LocalScan(frame, kind)
+    val p = param(opts)
+    LocalServerAdapter((q, k) => scan.search(q, k, p), (qs, k) => scan.searchBatch(qs, k, p))
+  }
+}
+
+private[query] object ServedKind {
+
+  /** A job failed because a resident pack's block is gone: Spark's
+    * local-checkpoint miss, named in the failure's message chain. */
+  private def packsLost(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
+
+  /** LSH's probe breadth from efSearch: ≥ 1 also probes the Hamming-1
+    * buckets. */
+  private def hamming(o: SearchOptions): Int = if (o.efSearch >= 1) 1 else 0
+
+  def apply(kind: IndexKind): ServedKind[_, _] = kind match {
+    case FlatKind(vectors, metric) =>
+      new ServedKind(vectors, PackedKind.flat(metric), _ => (),
+        (q, o) => FlatIndex.knnBlocked(vectors, q, o.k, metric))
+    case IvfKind(model, assigned) =>
+      new ServedKind(assigned, PackedKind.ivf(model), _.nprobe,
+        (q, o) => IvfIndex.searchBlocked(assigned, model, q, o.k, o.nprobe))
+    case PqKind(model, codes) =>
+      new ServedKind(codes, PackedKind.pq(model), _ => (),
+        (q, o) => PqIndex.knnBlocked(codes, model, q, o.k))
+    case Sq8Kind(model, codes) =>
+      new ServedKind(codes, PackedKind.sq8(model), _ => (),
+        (q, o) => Sq8Index.knnBlocked(codes, model, q, o.k))
+    case IvfPqKind(model, codes) =>
+      new ServedKind(codes, PackedKind.ivfPq(model), _.nprobe,
+        (q, o) => IvfPqIndex.searchBlocked(codes, model, q, o.k, o.nprobe))
+    case OpqKind(model, codes) =>
+      new ServedKind(codes, PackedKind.opq(model), _ => (),
+        (q, o) => OpqIndex.knnBlocked(codes, model, q, o.k))
+    case BqKind(model, codes) =>
+      new ServedKind(codes, PackedKind.bq(model), _ => (),
+        (q, o) => BqIndex.searchBlocked(codes, model, q, o.k))
+    case LshKind(planes, indexed, metric) =>
+      new ServedKind(indexed, PackedKind.lsh(planes, metric), hamming,
+        (q, o) => LshIndex.knnBlocked(indexed, q, o.k, planes, metric, hamming(o)))
+    case HnswKind(graph, metric, numShards) =>
+      new ServedKind(graph, GraphKind.hnsw(metric, numShards), _.efSearch,
+        (q, o) => HnswIndex.knnBlocked(graph, q, o.k, metric, o.efSearch, numShards))
+    case RoutedHnswKind(model, graph) =>
+      new ServedKind(graph, GraphKind.routed(model), o => (o.nprobe, o.efSearch),
+        (q, o) => RoutedHnswIndex.knn(graph, model, q, o.k, o.nprobe, o.efSearch))
   }
 }

@@ -209,5 +209,5 @@ private[query] trait ServingRdd {
     ()
   }
 
-  final def unpersist(): Unit = servingRdd.unpersist()
+  def unpersist(): Unit = servingRdd.unpersist()
 }

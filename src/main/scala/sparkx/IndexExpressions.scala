@@ -493,7 +493,17 @@ object TopNKernel {
 
   /** The same selection over a plain array — PLAID serving's per-token
     * probe ([[graft.query.PlaidKind]]); n ≤ 0 selects nothing. */
-  def topIdx(values: Array[Double], n: Int): Array[Int] = {
+  def topIdx(values: Array[Double], n: Int): Array[Int] = select(values, n, 1)
+
+  /** The bottom-n by (value ASC, index ASC) in rank order — the IVF
+    * probe ranking ([[graft.index.IvfIndex.probeSet]]). Under
+    * java.lang.Double.compare −0.0 ranks before 0.0 and NaN after +∞. */
+  def bottomIdx(values: Array[Double], n: Int): Array[Int] = select(values, n, -1)
+
+  /** Insertion select of the n values that rank first when ordered by
+    * `sign`·java.lang.Double.compare descending, equal values keeping
+    * the lower index (a value equal to the n-th is rejected). */
+  private def select(values: Array[Double], n: Int, sign: Int): Array[Int] = {
     val k = math.max(math.min(n, values.length), 0)
     if (k == 0) return Array.emptyIntArray
     val idx = new Array[Int](k)
@@ -502,9 +512,9 @@ object TopNKernel {
     var i = 0
     while (i < values.length) {
       val v = values(i)
-      if (size < k || java.lang.Double.compare(v, vals(size - 1)) > 0) {
+      if (size < k || sign * java.lang.Double.compare(v, vals(size - 1)) > 0) {
         var pos = if (size < k) size else k - 1
-        while (pos > 0 && java.lang.Double.compare(vals(pos - 1), v) < 0) {
+        while (pos > 0 && sign * java.lang.Double.compare(vals(pos - 1), v) < 0) {
           vals(pos) = vals(pos - 1); idx(pos) = idx(pos - 1); pos -= 1
         }
         vals(pos) = v

@@ -12,22 +12,21 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 object ResultFrames {
 
   /** kNN rows merged on the driver from a scan of `source`, as one local
-    * relation: (query_id, neighbor_id, distance, rank). The node is
+    * relation: (query_id, neighbor_id, distance, rank), the row values a
+    * Long, a Long, a Double and an Int. The node is
     * Spark's `CommandResult` — the relation Spark itself uses for rows an
     * eagerly run plan produced — so collecting it runs no job, and its
     * EXPLAIN carries `source`'s physical plan (the scan, with its filters
     * and pruning) instead of a bare `LocalTableScan`. An operator on top
     * (a projection, filter or join) is planned over a scan of these rows
     * and runs a job of its own. */
-  def knn(source: Dataset[_], rows: Seq[(Long, Long, Double, Int)]): DataFrame =
-    result(source, "distance", DoubleType,
-      rows.map { case (q, n, d, r) => InternalRow(q, n, d, r) })
+  def knn(source: Dataset[_], rows: Seq[InternalRow]): DataFrame =
+    result(source, "distance", DoubleType, rows)
 
   /** [[knn]] with BQ's integer Hamming count as a LONG `hamming` column
-    * in place of `distance`. */
-  def hammingKnn(source: Dataset[_], rows: Seq[(Long, Long, Double, Int)]): DataFrame =
-    result(source, "hamming", LongType,
-      rows.map { case (q, n, d, r) => InternalRow(q, n, d.toLong, r) })
+    * in place of `distance`: the rows carry a Long there. */
+  def hammingKnn(source: Dataset[_], rows: Seq[InternalRow]): DataFrame =
+    result(source, "hamming", LongType, rows)
 
   private def result(source: Dataset[_], distance: String, distanceType: DataType,
       rows: Seq[InternalRow]): DataFrame = {
