@@ -2,8 +2,6 @@ package graft.index
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftx.ResultFrames
@@ -17,25 +15,33 @@ import org.apache.spark.sql.graftx.ResultFrames
   *
   * A candidate is accepted iff the buffer has room or it beats the
   * current k-th entry; inserts are O(k) shifts on primitive arrays (no
-  * boxing, no allocation after construction). Every blocked kernel,
-  * server and in-process scan fills these, and [[BoundedTopK.merge]] is
-  * the one cross-partition merge, so the order can't drift between
-  * paths.
+  * boxing). The arrays start small and double as entries arrive, up to
+  * k, so a heap costs what it holds: a k far above the rows a scan can
+  * offer (`withK(10^8)`, a bounded range search's `maxResults`) never
+  * allocates k slots. Every blocked kernel, server and in-process scan
+  * fills these, and [[BoundedTopK.merge]] is the one cross-partition
+  * merge, so the order can't drift between paths.
   *
   * An entry may carry a LONG-array payload (PLAID's token hashes, which
   * its exact rerank reads): inserted with one, it moves with its entry
-  * through every shift, [[mergeFrom]] and task serialization. A heap's
-  * entries all carry one or none; the payload array exists only once the
-  * first one is inserted.
+  * through every shift, [[mergeFrom]] and [[BoundedTopK.merge]]. A
+  * heap's entries all carry one or none; the payload array exists only
+  * once the first one is inserted.
   */
 private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   // k == 0 would make insert() read dists(-1); callers clamp k <= 0 to the
   // "all rows" path before constructing (flat.go:82-84), so fail loudly here
   require(k > 0, s"BoundedTopK requires k > 0, got $k")
-  val dists = new Array[Double](k)
-  val ids = new Array[Long](k)
+  private var keys = new Array[Double](math.min(k, BoundedTopK.InitialSlots))
+  private var entryIds = new Array[Long](keys.length)
   var size = 0
   private var payloads: Array[Array[Long]] = null
+
+  /** The keys of entries 0 until [[size]], ascending. */
+  def dists: Array[Double] = keys
+
+  /** The ids of entries 0 until [[size]]. */
+  def ids: Array[Long] = entryIds
 
   def insert(id: Long, d: Double): Unit = slot(id, d)
 
@@ -44,7 +50,7 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
     val sz = size
     val pos = slot(id, d)
     if (pos >= 0) {
-      if (payloads == null) payloads = new Array[Array[Long]](k)
+      if (payloads == null) payloads = new Array[Array[Long]](keys.length)
       System.arraycopy(payloads, pos, payloads, pos + 1, math.min(sz, k - 1) - pos)
       payloads(pos) = payload
     }
@@ -58,8 +64,11 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
     val sz = size
     // the hot reject: one comparison while the k-th key is a number; a
     // NaN on either side falls through to the full order below
-    if (sz == k && d > dists(sz - 1)) return -1
-    if (sz < k || BoundedTopK.before(d, id, dists(sz - 1), ids(sz - 1))) {
+    if (sz == k && d > keys(sz - 1)) return -1
+    if (sz < k || BoundedTopK.before(d, id, keys(sz - 1), entryIds(sz - 1))) {
+      if (sz < k && sz == keys.length) grow()
+      val dists = keys
+      val ids = entryIds
       var pos = if (sz < k) sz else k - 1
       while (pos > 0 && BoundedTopK.before(d, id, dists(pos - 1), ids(pos - 1))) {
         dists(pos) = dists(pos - 1); ids(pos) = ids(pos - 1); pos -= 1
@@ -68,6 +77,14 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
       if (sz < k) size = sz + 1
       pos
     } else -1
+  }
+
+  /** Double the slots, up to k. */
+  private def grow(): Unit = {
+    val n = math.min(k.toLong, 2L * keys.length).toInt
+    keys = java.util.Arrays.copyOf(keys, n)
+    entryIds = java.util.Arrays.copyOf(entryIds, n)
+    if (payloads != null) payloads = java.util.Arrays.copyOf(payloads, n)
   }
 
   /** [[insert]] that skips an id already buffered — the replicated-graph
@@ -90,14 +107,18 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   def mergeFrom(other: BoundedTopK, distinct: Boolean): Unit = {
     var r = 0
     while (r < other.size) {
-      val id = other.ids(r)
-      if (!distinct || !holds(id)) {
-        if (other.payloads == null) insert(id, other.dists(r))
-        else insert(id, other.dists(r), other.payloads(r))
-      }
+      offer(other.entryIds(r), other.keys(r),
+        if (other.payloads == null) null else other.payloads(r), distinct)
       r += 1
     }
   }
+
+  /** One merged entry: inserted with its payload (none when null),
+    * skipped when `distinct` and its id is already held. */
+  private def offer(id: Long, d: Double, payload: Array[Long], distinct: Boolean): Unit =
+    if (!distinct || !holds(id)) {
+      if (payload == null) insert(id, d) else insert(id, d, payload)
+    }
 
   /** (id, finish(dist), rank) with rank 1..size; `finish` is the
     * metric's last step on a rank key (√ for L2). */
@@ -154,54 +175,101 @@ private[graft] object BoundedTopK {
     })
   }
 
+  /** Slots a heap starts with; it doubles from there up to k. */
+  private val InitialSlots = 16
+
   /** The one top-k merge. `scan` runs once per partition of `rows` and
     * returns that partition's heaps, one per query (or none for a
-    * partition with nothing to offer); `fold` merges them into `nq` heaps
-    * on the driver as the task results arrive. Its zero is `nq` empty
-    * heaps, so a corpus with zero partitions — or only empty ones —
-    * yields empty heaps rather than an error. One job, no shuffle: the
-    * driver receives at most k entries per query per partition.
-    * `distinct` skips ids already merged (the replicated routed graph,
-    * where one id can surface from several partitions with the same rank
-    * key). */
+    * partition with nothing to offer). Each task sends its heaps back as
+    * primitive arrays ([[Wire]]), and the driver merges each task's
+    * result into `nq` heaps as it arrives (`runJob`'s result handler).
+    * Nothing of size nq ships into a task, and a corpus with zero
+    * partitions — or only empty ones — yields empty heaps rather than an
+    * error. One job, no shuffle: the driver receives at most k entries
+    * per query per partition. `distinct` skips ids already merged (the
+    * replicated routed graph, where one id can surface from several
+    * partitions with the same rank key). */
   def merge[T](rows: RDD[T], nq: Int, k: Int, distinct: Boolean = false)(
       scan: Iterator[T] => Array[BoundedTopK]): Array[BoundedTopK] = {
-    if (nq == 0) return Array.empty
-    val combine = (acc: Array[BoundedTopK], part: Array[BoundedTopK]) => {
-      var qi = 0
-      while (qi < part.length) { acc(qi).mergeFrom(part(qi), distinct); qi += 1 }
-      acc
-    }
-    rows.mapPartitions(it => Iterator.single(scan(it)))
-      .fold(Array.fill(nq)(new BoundedTopK(k)))(combine)
+    val merged = Array.fill(nq)(new BoundedTopK(k))
+    if (nq > 0)
+      rows.sparkContext.runJob(rows, (it: Iterator[T]) => Wire(scan(it)),
+        (_: Int, part: Wire) => part.mergeInto(merged, distinct))
+    merged
   }
 
-  /** Merged heaps → the kNN result as one local relation:
-    * (query_id, neighbor_id, distance, rank), rank 1..k per query,
-    * `finish` applied to each rank key (the metric's sqrt for L2). Its
-    * EXPLAIN shows the plan of `scanned`, the table the heaps came from. */
+  /** One partition's heaps on the wire: entry counts per query, then every
+    * entry's id, key and (PLAID's) payload, query after query. An empty
+    * `sizes` is a partition with nothing to offer. */
+  private final class Wire(sizes: Array[Int], ids: Array[Long], keys: Array[Double],
+      payloads: Array[Array[Long]]) extends Serializable {
+
+    def mergeInto(heaps: Array[BoundedTopK], distinct: Boolean): Unit = {
+      var e = 0
+      var qi = 0
+      while (qi < sizes.length) {
+        val h = heaps(qi)
+        val end = e + sizes(qi)
+        while (e < end) {
+          h.offer(ids(e), keys(e), if (payloads == null) null else payloads(e), distinct)
+          e += 1
+        }
+        qi += 1
+      }
+    }
+  }
+
+  private object Wire {
+    def apply(heaps: Array[BoundedTopK]): Wire = {
+      val n = entries(heaps)
+      val sizes = new Array[Int](heaps.length)
+      val ids = new Array[Long](n)
+      val keys = new Array[Double](n)
+      val payloads = if (heaps.exists(_.payloads != null)) new Array[Array[Long]](n) else null
+      var e = 0
+      var qi = 0
+      while (qi < heaps.length) {
+        val h = heaps(qi)
+        sizes(qi) = h.size
+        System.arraycopy(h.entryIds, 0, ids, e, h.size)
+        System.arraycopy(h.keys, 0, keys, e, h.size)
+        if (h.payloads != null) System.arraycopy(h.payloads, 0, payloads, e, h.size)
+        e += h.size
+        qi += 1
+      }
+      new Wire(sizes, ids, keys, payloads)
+    }
+  }
+
+  /** Merged heaps → the kNN result as one leaf relation
+    * ([[ResultFrames.knn]]): (query_id, neighbor_id, distance, rank),
+    * rank 1..k per query, `finish` applied to each rank key (the metric's
+    * sqrt for L2). Its EXPLAIN shows the plan of `scanned`, the table the
+    * heaps came from. */
   def toFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK],
       finish: Double => Double): DataFrame =
-    ResultFrames.knn(scanned, rows(qids, heaps)(finish))
+    ResultFrames.knn(scanned, entries(heaps))(write(qids, heaps, finish))
 
-  /** The result rows (query_id, neighbor_id, distance(key), rank), built
-    * straight from the heaps in query order. */
-  def rows(qids: Array[Long], heaps: Array[BoundedTopK])(distance: Double => Any): Seq[InternalRow] = {
+  /** [[toFrame]] with BQ's integer Hamming count as a LONG `hamming`
+    * column in place of `distance`. */
+  def toHammingFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK]): DataFrame =
+    ResultFrames.hammingKnn(scanned, entries(heaps))(write(qids, heaps, identity))
+
+  private def entries(heaps: Array[BoundedTopK]): Int = {
     var n = 0
     heaps.foreach(n += _.size)
-    val out = new Array[InternalRow](n)
-    var i = 0
+    n
+  }
+
+  /** Every entry as a result row, in query order. */
+  private def write(qids: Array[Long], heaps: Array[BoundedTopK],
+      finish: Double => Double)(out: ResultFrames.Writer): Unit = {
     var qi = 0
     while (qi < qids.length) {
       val h = heaps(qi)
       var r = 0
-      while (r < h.size) {
-        out(i) = new GenericInternalRow(Array[Any](qids(qi), h.ids(r), distance(h.dists(r)), r + 1))
-        i += 1
-        r += 1
-      }
+      while (r < h.size) { out.add(qids(qi), h.ids(r), finish(h.dists(r)), r + 1); r += 1 }
       qi += 1
     }
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
   }
 }

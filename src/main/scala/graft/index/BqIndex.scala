@@ -3,7 +3,6 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftx.ResultFrames
 
 import graft.core.Metric
 import graft.query.{BlockedScan, PackedKind}
@@ -109,14 +108,14 @@ object BqIndex {
     * run by [[graft.query.BlockedScan]]. Each partition's words pack once
     * and scan query-outer (query words in registers, rows contiguous, ONE
     * resident heap); [[BoundedTopK.merge]] combines the heaps on the
-    * driver into a local relation, so the scan job runs when this is
+    * driver into a leaf relation, so the scan job runs when this is
     * called. */
   def knnBlocked(codes: DataFrame, model: BqModel, queries: DataFrame, k: Int): DataFrame =
     if (k <= 0) knn(codes, model, queries, k)
     else {
       val (scanned, qids, heaps) =
         new BlockedScan(codes, PackedKind.bq(model)).heaps(queries, k, ())
-      ResultFrames.hammingKnn(scanned, BoundedTopK.rows(qids, heaps)(_.toLong))
+      BoundedTopK.toHammingFrame(scanned, qids, heaps)
     }
 
   /** [[knnBlocked]] in the facade's (query_id, neighbor_id, distance,

@@ -47,7 +47,7 @@ object FlatIndex {
     * bounded (dist, id) heap per query — the n·q candidate rows are never
     * materialized — and [[BoundedTopK.merge]] combines the partitions'
     * heaps on the driver. Result-identical to [[knn]] (same rank-key
-    * arithmetic, same tie-break) and returned as a local relation: the
+    * arithmetic, same tie-break) and returned as a leaf relation: the
     * scan job runs when this is called. Queries must fit on the driver
     * (they are the small side by construction). */
   def knnBlocked(corpus: DataFrame, queries: DataFrame, k: Int, metric: Metric): DataFrame =

@@ -96,7 +96,7 @@ object IvfIndex {
     * only its probed clusters' rows, each cluster one contiguous range.
     * The candidate rows are never materialized, joined, or shuffled: each
     * partition fills one heap per query and [[BoundedTopK.merge]]
-    * combines them on the driver into a local relation, so the scan job
+    * combines them on the driver into a leaf relation, so the scan job
     * runs when this is called. Queries must fit on the driver (they are
     * the bounded side by construction; use [[search]] for query
     * *tables*). `query_id` is cast to LONG, like every blocked kernel;

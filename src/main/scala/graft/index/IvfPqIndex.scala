@@ -100,7 +100,7 @@ object IvfPqIndex {
     * per-subspace fold order as the PqAdc expression (bit-identical
     * distances). Candidates are never materialized or shuffled: each
     * partition fills one heap per query and [[BoundedTopK.merge]]
-    * combines them on the driver into a local relation, so the scan job
+    * combines them on the driver into a leaf relation, so the scan job
     * runs when this is called.
     *
     * ADC tables hoist *adaptively, per cluster range*: a driver-side

@@ -97,7 +97,7 @@ object LshIndex {
     * rows, each bucket one contiguous range — candidates never
     * materialize into a join or shuffle. Each partition fills one heap
     * per query and [[BoundedTopK.merge]] combines them on the driver into
-    * a local relation, so the scan job runs when this is called. The
+    * a leaf relation, so the scan job runs when this is called. The
     * grouped pack needs int bucket tags, so `planes` must be ≤ 31.
     * `query_id` is cast to LONG, like every blocked kernel. k ≤ 0 clamps
     * to the plan form of the same radius (every candidate ranked). */

@@ -23,7 +23,7 @@ final case class PqModel(codebooks: Seq[Seq[Seq[Double]]], metric: Metric) {
   def dsub: Int = codebooks.head.head.size
   def dim: Int = m * dsub
   /** Primitive copy for blocked kernels — MEMOIZED (r13: this was a
-    * `def`, so per-query callers like [[PqIndex.adcTable]] re-converted
+    * `def`, so per-query callers like [[PqIndex.adcTableInto]] re-converted
     * the m×ksub×dsub boxed Seq structure every call — measured ~0.7 s of
     * the 1000-query pq_qps construct phase, and a per-query tax on the
     * PQ serving paths). @transient: recomputed once per deserialized
@@ -299,7 +299,7 @@ object PqIndex {
     else new BlockedScan(codes, PackedKind.pq(model)).search(queries, k, ())
 
   /** ADC distance (squared) of the packed code row at `off`: its `m`
-    * entries of the flat table at `tabOff` ([[adcTable]]'s layout),
+    * entries of the flat table at `tabOff` ([[adcTableInto]]'s layout),
     * summed in ascending subspace order. Every PQ and IVFPQ scan folds a
     * row here, so their distances are bit-identical. */
   @inline private[graft] def adcRow(tab: Array[Double], tabOff: Int, ksub: Int,
@@ -317,13 +317,9 @@ object PqIndex {
     * superlinearly (VERDICT r5 #2) — a flat array is one bounds check and
     * one load per subspace. Inner fold matches
     * [[org.apache.spark.sql.graftx.IndexExpressions.pqAdc]] per-subspace
-    * accumulation bit-for-bit, so table-sum == expression ADC exactly. */
-  private[graft] def adcTable(q: Array[Double], model: PqModel): Array[Double] =
-    adcTableInto(q, model.codebookArrays, model.dsub,
-      new Array[Double](model.m * model.ksub))
-
-  /** [[adcTable]] written into `out` (at least M·Ksub long) from the
-    * primitive codebooks; returns `out`. */
+    * accumulation bit-for-bit, so table-sum == expression ADC exactly.
+    * Written into `out` (at least M·Ksub long) from the primitive
+    * codebooks; returns `out`. */
   private[graft] def adcTableInto(q: Array[Double], cbs: Array[Array[Array[Double]]],
       dsub: Int, out: Array[Double]): Array[Double] = {
     val ksub = cbs(0).length
@@ -347,7 +343,7 @@ object PqIndex {
 
   /** ADC distance (squared) of the packed code row at `off` straight from
     * the codebooks, no table: each subspace's term is the fold of its
-    * [[adcTable]] entry and the terms add in ascending subspace order, so
+    * [[adcTableInto]] entry and the terms add in ascending subspace order, so
     * the value is bit-identical to [[adcRow]] over the table. Cheaper
     * than building a table for a range of fewer rows than Ksub. */
   @inline private[graft] def adcDirect(q: Array[Double], cbs: Array[Array[Array[Double]]],

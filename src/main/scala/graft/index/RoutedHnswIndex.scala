@@ -340,7 +340,7 @@ object RoutedHnswIndex {
     * one heap per query; [[BoundedTopK.merge]] combines them on the
     * driver, distinct-by-id: a replicated build can surface one id from
     * several shards, with the same deterministic rank key. The result is
-    * a local relation, so the walk job runs when this is called. k ≤ 0
+    * a leaf relation, so the walk job runs when this is called. k ≤ 0
     * clamps to the engine-wide brute-force path (flat.go:82-84
     * semantics). */
   def knn(graph: DataFrame, model: RoutedHnswModel, queries: DataFrame, k: Int,

@@ -221,7 +221,7 @@ object Sq8Index {
     * [[graft.query.PackedKind.sq8]] scan run by
     * [[graft.query.BlockedScan]] — each partition's codes pack once and
     * scan query-outer, and [[BoundedTopK.merge]] combines the heaps on
-    * the driver into a local relation, so the scan job runs when this is
+    * the driver into a leaf relation, so the scan job runs when this is
     * called. */
   def knnBlocked(codes: DataFrame, model: Sq8Model, queries: DataFrame, k: Int): DataFrame =
     if (k <= 0) knn(codes, model, queries, k)

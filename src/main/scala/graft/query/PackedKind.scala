@@ -29,10 +29,12 @@ import graft.index.PlaidIndex.PlaidModel
   *  - `requireQueries`: the serve-entry check of the serving shapes, for
   *    a heap of k and the served dim;
   *  - `scan`: for a per-call parameter `P` and a query, the per-query
-  *    precomputation, returning the scan of one pack into a heap. The
-  *    blocked and distributed shapes ship that pack scan to the
-  *    executors, so it captures only locals, and nothing per pack: a
-  *    table built from the pack's rows lives in the pack scan;
+  *    precomputation, returning the scan of one pack into a heap.
+  *    `scan(p)` ships to the executors: the batch shapes broadcast the
+  *    queries and each JVM prepares their scans there, so `scan(p)` and
+  *    the pack scans it returns capture only serializable locals (model
+  *    arrays, never the kind), and nothing per pack: a table built from
+  *    the pack's rows lives in the pack scan;
   *  - `finish`: the metric's last step on each merged rank key;
   *  - `distinct`: whether one id can surface from several packs, so every
   *    merge skips ids it already holds;
@@ -126,13 +128,24 @@ private[graft] object PackedKind {
   }
 
   /** Rows [from, until) of a vector block into the heap, keyed by the
-    * metric's rank key. */
-  private def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
+    * metric's rank key: four rows at a time through
+    * [[Metric.rankKeys4]], whose keys are bit-identical to
+    * [[Metric.rankKeyScalar]]'s, inserted in row order. */
+  private[graft] def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
       heap: BoundedTopK, from: Int, until: Int): Unit = {
     val ids = blk.ids
     val data = blk.payload
     val dim = blk.width
+    val keys = new Array[Double](4)
     var r = from
+    while (r + 4 <= until) {
+      metric.rankKeys4(q, data, r * dim, dim, keys)
+      heap.insert(ids(r), keys(0))
+      heap.insert(ids(r + 1), keys(1))
+      heap.insert(ids(r + 2), keys(2))
+      heap.insert(ids(r + 3), keys(3))
+      r += 4
+    }
     while (r < until) {
       heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
       r += 1
@@ -147,7 +160,7 @@ private[graft] object PackedKind {
     new PackedKind(Pack[Double]("vec", None), None, metric.finishRankScalar _)(_ =>
       q => (blk, heap) => scanVectors(metric, q, blk, heap, 0, blk.ids.length))
 
-  /** IVF: driver probe ranking, then each probed cluster's rows — one
+  /** IVF: per-query probe ranking, then each probed cluster's rows — one
     * contiguous range of the cluster-grouped block — through the vector
     * scan: cost ∝ probed rows, not n. */
   def ivf(model: IvfModel): PackedKind[Double, Int] = {
@@ -185,15 +198,17 @@ private[graft] object PackedKind {
     })
   }
 
-  /** PQ ADC: the query's flat M·Ksub table ([[PqIndex.adcTable]],
-    * pq.go:144-155's hoist) on the driver, M lookups per row; distances
+  /** PQ ADC: the query's flat M·Ksub table ([[PqIndex.adcTableInto]],
+    * pq.go:144-155's hoist) once per query, M lookups per row; distances
     * are √ of the summed squares (pq.go:158-168). */
   def pq(model: PqModel): PackedKind[Int, Unit] = {
     val m = model.m
     val ksub = model.ksub
+    val dsub = model.dsub
+    val cbs = model.codebookArrays
     new PackedKind(Pack[Int]("code", None, width = Some(m)), Some(model.dim),
       math.sqrt _)(_ => q => {
-      val tab = PqIndex.adcTable(q, model)
+      val tab = PqIndex.adcTableInto(q, cbs, dsub, new Array[Double](m * ksub))
       (blk, heap) => {
         val ids = blk.ids
         val codes = blk.payload
@@ -206,16 +221,17 @@ private[graft] object PackedKind {
     })
   }
 
-  /** OPQ: the query rotated on the driver (one dim² matVec), then the PQ
+  /** OPQ: the query rotated once (one dim² matVec), then the PQ
     * scan over the same code layout. */
   def opq(model: OpqModel): PackedKind[Int, Unit] = {
     val rot = model.rotation.map(_.toArray).toArray
     val pqKind = pq(model.pq)
+    val pqScan = pqKind.scan(())
     new PackedKind(pqKind.pack, Some(model.dim), pqKind.finish)(_ =>
-      q => pqKind.scan(())(OpqIndex.rotateLocal(rot, q)))
+      q => pqScan(OpqIndex.rotateLocal(rot, q)))
   }
 
-  /** IVFPQ (ivfpq.go:222-284): driver probe ranking and the query's
+  /** IVFPQ (ivfpq.go:222-284): per-query probe ranking and the query's
     * residual to each probed centroid, then each probed cluster's codes —
     * one contiguous range of the cluster-grouped block — ADC-scored
     * against that residual. A range longer than `hoistAt` rows (< 0:
@@ -315,11 +331,11 @@ private[graft] object PackedKind {
     val mins = sq8.minsArray
     val scales = sq8.scalesArray
     val cents = ivf.centroids.map(_.toArray).toArray
+    val nlist = ivf.nlist
     new PackedKind(Pack[Byte]("code", Some("cluster_id"), grouped = true, width = Some(sq8.dim)),
       Some(sq8.dim), math.sqrt _)(nprobe => q => {
-      val probes = IvfIndex.probeSet(q, cents, Metric.L2, probeCount(nprobe, ivf.nlist))
-      // built on first use: once per query in process, once per task on
-      // the executors, where only q and the model arrays ship
+      val probes = IvfIndex.probeSet(q, cents, Metric.L2, probeCount(nprobe, nlist))
+      // built on first use, by the first pack scan that probes a range
       lazy val tab = Sq8Index.sqTable(q, mins, scales)
       (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
         Sq8Index.tableScanRange(tab, blk.ids, blk.payload, blk.width, from, until, heap))
@@ -380,8 +396,11 @@ private[graft] final class GraphKind[P](metric: Metric, numShards: Int, efSearch
 
   val finish: Double => Double = metric.finishRankScalar
 
-  val scan: P => Array[Double] => ((Int, CompiledHnsw), BoundedTopK) => Unit =
-    p => GraphKind.walk(efSearch(p), distinct)
+  val scan: P => Array[Double] => ((Int, CompiledHnsw), BoundedTopK) => Unit = {
+    val ef = efSearch
+    val dedup = distinct
+    p => GraphKind.walk(ef(p), dedup)
+  }
 }
 
 private[graft] object GraphKind {
@@ -468,12 +487,17 @@ private[graft] final class PlaidKind(model: PlaidModel,
   /** The approx score back from its key. */
   val finish: Double => Double = -_
 
-  val scan: Unit => PlaidQuery => (Block, BoundedTopK) => Unit = _ => q => {
-    val sims = new PlaidKind.TokenSims(q.tokens, table)
-    val probed = new Array[Boolean](model.cents.length)
-    sims.rows.foreach(row => TopNKernel.topIdx(row, model.nprobe).foreach(probed(_) = true))
-    val self = q.id
-    (blk, heap) => PlaidKind.scanPack(blk, sims.rows, probed, self, heap)
+  val scan: Unit => PlaidQuery => (Block, BoundedTopK) => Unit = {
+    val t = table
+    val nCents = model.cents.length
+    val nprobe = model.nprobe
+    _ => q => {
+      val sims = new PlaidKind.TokenSims(q.tokens, t)
+      val probed = new Array[Boolean](nCents)
+      sims.rows.foreach(row => TopNKernel.topIdx(row, nprobe).foreach(probed(_) = true))
+      val self = q.id
+      (blk, heap) => PlaidKind.scanPack(blk, sims.rows, probed, self, heap)
+    }
   }
 }
 
@@ -666,44 +690,67 @@ private object ScanScratch {
   }
 }
 
+/** A query batch as the batch shapes ship it: the queries themselves
+  * (primitive arrays, or PLAID's ids and hashes) and the kind's
+  * `visiting(p)`, broadcast once per call. Each JVM prepares a query's
+  * scan (probe ranking, ADC prep, rotation) the first time one of its
+  * tasks reaches that query, and its other tasks of the call reuse it;
+  * two tasks that reach a query together both prepare it, to the same
+  * scan. Tasks start at staggered queries ([[first]]), so a JVM's tasks
+  * prepare different queries at once. */
+private[query] final class QueryBatch[B, Q](qs: Array[Q],
+    visit: Q => (B, BoundedTopK) => Unit) extends Serializable {
+
+  @transient private lazy val scans =
+    new java.util.concurrent.atomic.AtomicReferenceArray[(B, BoundedTopK) => Unit](qs.length)
+
+  def length: Int = qs.length
+
+  /** Query `qi`'s scan of one pack into its heap. */
+  def scan(qi: Int): (B, BoundedTopK) => Unit = {
+    var s = scans.get(qi)
+    if (s == null) { s = visit(qs(qi)); scans.set(qi, s) }
+    s
+  }
+
+  /** The running task's first query: partition p of n starts at query
+    * p·nq/n, and its i-th query is (first + i) mod nq. */
+  def first: Int = {
+    val tc = org.apache.spark.TaskContext.get()
+    if (tc == null) 0 else (tc.partitionId().toLong * qs.length / tc.numPartitions()).toInt
+  }
+}
+
 /** The blocked (batch) shape of a kind: the query batch collected once
-  * ([[BoundedTopK.collectQueries]]); each query's scan prepared once on
-  * the driver, fanned out with [[DriverPar]] (IVF probe ranking is
-  * nq·nlist·dim per call — never once per task), and shipped by
-  * broadcast; each partition of the kind's frame packed by its packer
-  * and each pack scanned QUERY-OUTER into one heap per query — one
-  * resident heap and one pack walk at a time (a rows-outer loop touches
-  * all nq heaps per row, a working set that thrashed the shared LLC at
-  * 32 tasks); then [[BoundedTopK.merge]] on the driver. A routed kind
-  * reads only the packs some query probed, and a batch that probes none
-  * returns empty heaps without a job. Heap contents are insertion-order
-  * independent (the k smallest by total (dist, id) order), so the loop
-  * order never changes a result. The job runs when called; the queries
-  * must fit on the driver. */
+  * ([[BoundedTopK.collectQueries]]) and broadcast as a [[QueryBatch]];
+  * each partition of the kind's frame packed by its packer and each pack
+  * scanned QUERY-OUTER into one heap per query — one resident heap and
+  * one pack walk at a time (a rows-outer loop touches all nq heaps per
+  * row, a working set that thrashed the shared LLC at 32 tasks); then
+  * [[BoundedTopK.merge]] on the driver. A routed kind reads only the
+  * packs some query probed — the driver probes every query for that
+  * pruning alone — and a batch that probes none returns empty heaps
+  * without a job. Heap contents are insertion-order independent (the k
+  * smallest by total (dist, id) order), so the loop order never changes
+  * a result. The job runs when called; the queries must fit on the
+  * driver. */
 private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P, Array[Double]]) {
 
   /** The scanned table, the query ids and their merged heaps. */
   def heaps(queries: DataFrame, k: Int, p: P): (DataFrame, Array[Long], Array[BoundedTopK]) = {
-    val perQuery = kind.scan(p)
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     val nq = qvecs.length
-    val scans = new Array[(B, BoundedTopK) => Unit](nq)
     val scanned = kind.route match {
-      case None =>
-        DriverPar.foreach(nq, chunk = 64) { qi => scans(qi) = perQuery(qvecs(qi)) }
-        kind.frame(df)
+      case None => kind.frame(df)
       case Some(r) =>
         val probe = r.probe(p)
         val probes = new Array[Array[Int]](nq)
-        DriverPar.foreach(nq, chunk = 64) { qi =>
-          probes(qi) = probe(qvecs(qi))
-          scans(qi) = r.only(probes(qi), perQuery(qvecs(qi)))
-        }
+        DriverPar.foreach(nq, chunk = 64) { qi => probes(qi) = probe(qvecs(qi)) }
         val touched = probes.flatten.distinct.sorted
         if (touched.isEmpty) return (df, qids, Array.fill(nq)(new BoundedTopK(k)))
         r.prune(df, touched)
     }
-    val bc = df.sparkSession.sparkContext.broadcast(scans)
+    val bc = df.sparkSession.sparkContext.broadcast(new QueryBatch(qvecs, kind.visiting(p)))
     val packer = kind.packer
     val merged =
       try {
@@ -711,11 +758,12 @@ private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P,
           val packs = packer(rows)
           if (!packs.hasNext) Array.empty[BoundedTopK]
           else {
-            val scans = bc.value
-            val heaps = Array.fill(scans.length)(new BoundedTopK(k))
+            val batch = bc.value
+            val first = batch.first
+            val heaps = Array.fill(nq)(new BoundedTopK(k))
             packs.foreach { b =>
-              var qi = 0
-              while (qi < scans.length) { scans(qi)(b, heaps(qi)); qi += 1 }
+              var i = 0
+              while (i < nq) { val qi = (first + i) % nq; batch.scan(qi)(b, heaps(qi)); i += 1 }
             }
             heaps
           }
@@ -724,7 +772,7 @@ private[graft] final class BlockedScan[B, P](df: DataFrame, kind: ScanKind[B, P,
     (scanned, qids, merged)
   }
 
-  /** The kNN result as a local relation: (query_id, neighbor_id,
+  /** The kNN result as a leaf relation: (query_id, neighbor_id,
     * distance, rank), the kind's finish applied to each rank key. */
   def search(queries: DataFrame, k: Int, p: P): DataFrame = {
     val (scanned, qids, merged) = heaps(queries, k, p)
@@ -770,16 +818,17 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
     * [[BlockedScan]] (same scans, same merge) without its per-call
     * re-pack (for the graph kinds, re-shuffling every node row and
     * re-compiling it into a graph). Per call: the queries collected
-    * ([[BoundedTopK.collectQueries]]), each query's scan prepared on the
-    * driver with [[DriverPar]] (probe ranking, ADC prep, rotation), the
-    * scans broadcast, and ONE job with no shuffle whose tasks walk their
-    * packs query by query into heaps that [[BoundedTopK.merge]] folds on
+    * ([[BoundedTopK.collectQueries]]) and checked, broadcast as a
+    * [[QueryBatch]] of primitive vectors, and ONE job with no shuffle
+    * whose tasks prepare each query's scan where they run and walk their
+    * packs query by query into heaps that [[BoundedTopK.merge]] merges on
     * the driver. Serving partitions are sized for the single-query tail
     * ([[ServeBlocks.ServePartitions]]), which would cap a batch at that
     * many cores, so each task fans its queries out with [[TaskFanout]];
     * each query owns its heap and packs are read-only, so the fan-out is
-    * race-free. The result is a local relation built from the heaps, so
-    * the job runs when this is called; an operator applied to the result
+    * race-free. The result is a leaf relation built from the heaps
+    * ([[BoundedTopK.toFrame]]): the job runs when this is called,
+    * collecting the result runs none, and an operator applied to it
     * (projection, filter, join) runs a job of its own. A vector kind's
     * entry: the queries are the `qvec`s of the frame. */
   def searchBatch(queries: DataFrame, k: Int, p: P)(
@@ -787,22 +836,26 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
     val (qids, qvecs) = BoundedTopK.collectQueries(queries)
     val qs = vectors(qvecs)
     kind.requireQueries(qs, k, dim)
-    val visit = kind.visiting(p)
-    val prepared = new Array[(B, BoundedTopK) => Unit](qs.length)
-    DriverPar.foreach(qs.length, chunk = 64) { qi => prepared(qi) = visit(qs(qi)) }
-    val bc = df.sparkSession.sparkContext.broadcast(prepared)
+    val nq = qs.length
+    val bc = df.sparkSession.sparkContext.broadcast(new QueryBatch(qs, kind.visiting(p)))
     val tag = kind.tag
     val heaps =
       try {
-        BoundedTopK.merge(blocks, qids.length, k, kind.distinct) { it =>
+        BoundedTopK.merge(blocks, nq, k, kind.distinct) { it =>
           val packs = it.toArray(tag)
-          val scans = bc.value
-          val heaps = Array.fill(scans.length)(new BoundedTopK(k))
-          TaskFanout.foreach(scans.length) { qi =>
-            var b = 0
-            while (b < packs.length) { scans(qi)(packs(b), heaps(qi)); b += 1 }
+          if (packs.isEmpty) Array.empty[BoundedTopK]
+          else {
+            val batch = bc.value
+            val first = batch.first
+            val heaps = Array.fill(nq)(new BoundedTopK(k))
+            TaskFanout.foreach(nq) { i =>
+              val qi = (first + i) % nq
+              val scan = batch.scan(qi)
+              var b = 0
+              while (b < packs.length) { scan(packs(b), heaps(qi)); b += 1 }
+            }
+            heaps
           }
-          heaps
         }
       } finally bc.destroy()
     BoundedTopK.toFrame(df, qids, heaps, kind.finish)

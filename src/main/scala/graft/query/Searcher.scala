@@ -78,15 +78,16 @@ final class Searcher private[query] (kind: IndexKind, opts: SearchOptions,
     * into resident packs on the executors (decoded blocks, or compiled
     * shard graphs for HNSW), which this Searcher and its
     * `withK`/`withNprobe`/`withEfSearch` copies share until [[close]].
-    * Each call then prepares its queries on the driver and runs ONE job
-    * with no shuffle over those packs ([[DistributedScan.searchBatch]]);
-    * each partition fills one bounded heap per query and
-    * [[graft.index.BoundedTopK.merge]] combines them on the driver. The
+    * Each call then broadcasts its query vectors and runs ONE job with
+    * no shuffle over those packs ([[DistributedScan.searchBatch]]); each
+    * partition prepares the queries' scans, fills one bounded heap per
+    * query and [[graft.index.BoundedTopK.merge]] combines them on the
+    * driver. The
     * result is row-identical to the index object's blocked kernel (the
     * same scan and merge over a fresh pack). Packs live in executor
     * memory only: when an executor holding some is lost, the call that
     * finds them missing drops them all, packs again and runs once more,
-    * so that one call pays a re-pack. The result is returned as a local
+    * so that one call pays a re-pack. The result is returned as a leaf
     * relation: collecting it runs no job, but an operator applied to it
     * (projection, filter, join) runs one of its own. A duplicate
     * `query_id`, a query of the wrong length and a non-finite component

@@ -1,45 +1,144 @@
 package org.apache.spark.sql.graftx
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.unsafe.Platform
 
 /** Results the driver already holds, as DataFrames that explain where
   * they came from. */
 object ResultFrames {
 
-  /** kNN rows merged on the driver from a scan of `source`, as one local
-    * relation: (query_id, neighbor_id, distance, rank), the row values a
-    * Long, a Long, a Double and an Int. The node is
-    * Spark's `CommandResult` — the relation Spark itself uses for rows an
-    * eagerly run plan produced — so collecting it runs no job, and its
-    * EXPLAIN carries `source`'s physical plan (the scan, with its filters
-    * and pruning) instead of a bare `LocalTableScan`. An operator on top
-    * (a projection, filter or join) is planned over a scan of these rows
-    * and runs a job of its own. */
-  def knn(source: Dataset[_], rows: Seq[InternalRow]): DataFrame =
-    result(source, "distance", DoubleType, rows)
+  /** kNN rows merged on the driver from a scan of `source`, as one leaf
+    * relation ([[KnnResult]]): (query_id, neighbor_id, distance, rank),
+    * a Long, a Long, a Double and an Int. `fill` writes the `rows` rows
+    * through a [[Writer]] straight into UnsafeRows. Collecting the
+    * result (or a `limit`/`tail` of it) runs no job, and its EXPLAIN
+    * carries `source`'s physical plan (the scan, with its filters and
+    * pruning). An operator on top (a projection, filter, join or
+    * aggregate) runs a job of its own over these rows. */
+  def knn(source: Dataset[_], rows: Int)(fill: Writer => Unit): DataFrame =
+    result(source, "distance", DoubleType, rows, fill)
 
   /** [[knn]] with BQ's integer Hamming count as a LONG `hamming` column
-    * in place of `distance`: the rows carry a Long there. */
-  def hammingKnn(source: Dataset[_], rows: Seq[InternalRow]): DataFrame =
-    result(source, "hamming", LongType, rows)
+    * in place of `distance`: [[Writer.add]] stores the count as a Long. */
+  def hammingKnn(source: Dataset[_], rows: Int)(fill: Writer => Unit): DataFrame =
+    result(source, "hamming", LongType, rows, fill)
 
   private def result(source: Dataset[_], distance: String, distanceType: DataType,
-      rows: Seq[InternalRow]): DataFrame = {
+      n: Int, fill: Writer => Unit): DataFrame = {
     val output = Seq(
       AttributeReference("query_id", LongType, nullable = false)(),
       AttributeReference("neighbor_id", LongType, nullable = false)(),
       AttributeReference(distance, distanceType, nullable = false)(),
       AttributeReference("rank", IntegerType, nullable = false)())
+    val writer = new Writer(n, distanceType == LongType)
+    fill(writer)
+    require(writer.written == n, s"wrote ${writer.written} of $n result rows")
     val qe = source.queryExecution
+    KnnResultStrategy.inject(qe.sparkSession)
     classic.Dataset.ofRows(qe.sparkSession,
-      CommandResult(output, qe.analyzed, qe.executedPlan, rows))
-      // re-aliased: CommandResult cannot re-instance its own output, so a
-      // self-join would see conflicting attributes; fresh aliases can be
-      .toDF(output.map(_.name): _*)
+      KnnResult(output, new ResultRows(writer.rows), qe.analyzed, qe.executedPlan))
+  }
+
+  /** Writes result rows into one byte buffer: every row is fixed-width
+    * (a null-bit word and four 8-byte slots), so row i is an UnsafeRow
+    * over bytes [40·i, 40·i + 40). */
+  final class Writer private[ResultFrames] (n: Int, longDistance: Boolean) {
+    private val RowBytes = 8 + 4 * 8
+    private val buf = new Array[Byte](n * RowBytes)
+    private[graftx] val rows = new Array[InternalRow](n)
+    private var i = 0
+
+    private[ResultFrames] def written: Int = i
+
+    def add(queryId: Long, neighborId: Long, distance: Double, rank: Int): Unit = {
+      val row = new UnsafeRow(4)
+      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + i * RowBytes, RowBytes)
+      row.setLong(0, queryId)
+      row.setLong(1, neighborId)
+      if (longDistance) row.setLong(2, distance.toLong) else row.setDouble(2, distance)
+      row.setInt(3, rank)
+      rows(i) = row
+      i += 1
+    }
+  }
+}
+
+/** A result's UnsafeRows behind one reference. Plan nodes hold this
+  * rather than the rows themselves: the analyzer's expression walks and
+  * the plan's string form visit every element of a collection argument,
+  * and would visit every row. */
+private[graftx] final class ResultRows(val rows: Array[InternalRow]) {
+  override def toString: String = s"${rows.length} rows"
+}
+
+/** The logical leaf of a driver-merged kNN result. `scanned` (the table
+  * the rows were scanned from) is an inner child: EXPLAIN shows it, no
+  * rule rewrites it. A self-join re-instances the output like any
+  * relation, and the row count gives the planner the statistics a join
+  * needs. */
+private[graftx] case class KnnResult(output: Seq[Attribute], @transient rows: ResultRows,
+    @transient scannedLogical: LogicalPlan, @transient scanned: SparkPlan)
+    extends LeafNode with MultiInstanceRelation {
+
+  override def innerChildren: Seq[QueryPlan[_]] = Seq(scannedLogical)
+
+  override def newInstance(): LogicalPlan = copy(output = output.map(_.newInstance()))
+
+  override def computeStats(): Statistics = Statistics(
+    sizeInBytes = EstimationUtils.getSizePerRow(output) * rows.rows.length,
+    rowCount = Some(rows.rows.length))
+
+  override protected def stringArgs: Iterator[Any] = Iterator(output, rows)
+}
+
+/** [[KnnResult]] planned: collect, `limit` and `tail` answer from the
+  * rows on the driver, and an operator on top reads them as an RDD. */
+private[graftx] case class KnnResultExec(output: Seq[Attribute], @transient rows: ResultRows,
+    @transient scanned: SparkPlan) extends LeafExecNode {
+
+  override def innerChildren: Seq[QueryPlan[_]] = Seq(scanned)
+
+  override protected def stringArgs: Iterator[Any] = Iterator(output, rows)
+
+  override def executeCollect(): Array[InternalRow] = rows.rows.clone()
+
+  override def executeTake(limit: Int): Array[InternalRow] = rows.rows.take(limit)
+
+  override def executeTail(limit: Int): Array[InternalRow] = rows.rows.takeRight(limit)
+
+  override def executeToIterator(): Iterator[InternalRow] = rows.rows.iterator
+
+  protected override def doExecute(): RDD[InternalRow] = {
+    val all = rows.rows
+    if (all.isEmpty) sparkContext.emptyRDD
+    else sparkContext.parallelize(all.toSeq, math.min(all.length, session.leafNodeDefaultParallelism))
+  }
+}
+
+/** Plans [[KnnResult]]. Added to a session's extra strategies the first
+  * time that session builds a result. */
+private[graftx] object KnnResultStrategy extends SparkStrategy {
+
+  def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case r: KnnResult => KnnResultExec(r.output, r.rows, r.scanned) :: Nil
+    case _ => Nil
+  }
+
+  def inject(session: classic.SparkSession): Unit = {
+    val methods = session.experimental
+    if (!methods.extraStrategies.contains(this)) methods.synchronized {
+      if (!methods.extraStrategies.contains(this))
+        methods.extraStrategies = this +: methods.extraStrategies
+    }
   }
 }
