@@ -26,13 +26,6 @@ sealed trait Metric extends Serializable {
     * the serving-cache layout (one primitive array per partition, no
     * per-row object). Identical fold order to the two-array form. */
   def rankKeyScalar(q: Array[Double], data: Array[Double], off: Int, dim: Int): Double
-  /** [[rankKeyScalar]] of the four rows packed at `off`, `off + dim`,
-    * `off + 2·dim` and `off + 3·dim`, into `keys(0)` to `keys(3)`. Each
-    * row folds its own accumulator in the canonical order, so every key
-    * is bit-identical to the one-row form; the four independent add
-    * chains lift the one-row fold's add-latency bound. */
-  def rankKeys4(q: Array[Double], data: Array[Double], off: Int, dim: Int,
-      keys: Array[Double]): Unit
   /** Scalar form of [[finishRank]] for driver-merged serving. */
   def finishRankScalar(rk: Double): Double = rk
 
@@ -117,21 +110,6 @@ object Metric {
       while (i < n) { val t = q(i) - data(off + i); acc += t * t; i += 1 }
       acc
     }
-    def rankKeys4(q: Array[Double], data: Array[Double], off: Int, dim: Int,
-        keys: Array[Double]): Unit = {
-      val n = math.min(q.length, dim)
-      val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
-      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-      var i = 0
-      while (i < n) {
-        val x = q(i)
-        val t0 = x - data(off + i); val t1 = x - data(o1 + i)
-        val t2 = x - data(o2 + i); val t3 = x - data(o3 + i)
-        a0 += t0 * t0; a1 += t1 * t1; a2 += t2 * t2; a3 += t3 * t3
-        i += 1
-      }
-      keys(0) = a0; keys(1) = a1; keys(2) = a2; keys(3) = a3
-    }
     override def finishRankScalar(rk: Double): Double = math.sqrt(rk)
     override def walkKeyScalar(a: Array[Double], b: Array[Double]): Double = {
       val n = math.min(a.length, b.length)
@@ -183,32 +161,6 @@ object Metric {
       if (na == 0.0 || nb == 0.0) 1.0
       else 1.0 - math.min(1.0, math.max(-1.0, dotOff(q, data, off, dim) / (na * nb)))
     }
-    def rankKeys4(q: Array[Double], data: Array[Double], off: Int, dim: Int,
-        keys: Array[Double]): Unit = {
-      val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
-      var b0 = 0.0; var b1 = 0.0; var b2 = 0.0; var b3 = 0.0
-      var i = 0
-      while (i < dim) {
-        val x0 = data(off + i); val x1 = data(o1 + i); val x2 = data(o2 + i); val x3 = data(o3 + i)
-        b0 += x0 * x0; b1 += x1 * x1; b2 += x2 * x2; b3 += x3 * x3
-        i += 1
-      }
-      val n = math.min(q.length, dim)
-      var d0 = 0.0; var d1 = 0.0; var d2 = 0.0; var d3 = 0.0
-      i = 0
-      while (i < n) {
-        val x = q(i)
-        d0 += x * data(off + i); d1 += x * data(o1 + i)
-        d2 += x * data(o2 + i); d3 += x * data(o3 + i)
-        i += 1
-      }
-      val na = math.sqrt(dotS(q, q))
-      keys(0) = cosineKey(na, math.sqrt(b0), d0); keys(1) = cosineKey(na, math.sqrt(b1), d1)
-      keys(2) = cosineKey(na, math.sqrt(b2), d2); keys(3) = cosineKey(na, math.sqrt(b3), d3)
-    }
-    private def cosineKey(na: Double, nb: Double, dot: Double): Double =
-      if (na == 0.0 || nb == 0.0) 1.0
-      else 1.0 - math.min(1.0, math.max(-1.0, dot / (na * nb)))
     override def walkKeyScalar(a: Array[Double], b: Array[Double]): Double = {
       val na = math.sqrt(dotSFast(a, a))
       val nb = math.sqrt(dotSFast(b, b))
@@ -240,20 +192,6 @@ object Metric {
     def rankKeyScalar(a: Array[Double], b: Array[Double]): Double = -dotS(a, b)
     def rankKeyScalar(q: Array[Double], data: Array[Double], off: Int, dim: Int): Double =
       -dotOff(q, data, off, dim)
-    def rankKeys4(q: Array[Double], data: Array[Double], off: Int, dim: Int,
-        keys: Array[Double]): Unit = {
-      val n = math.min(q.length, dim)
-      val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
-      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-      var i = 0
-      while (i < n) {
-        val x = q(i)
-        a0 += x * data(off + i); a1 += x * data(o1 + i)
-        a2 += x * data(o2 + i); a3 += x * data(o3 + i)
-        i += 1
-      }
-      keys(0) = -a0; keys(1) = -a1; keys(2) = -a2; keys(3) = -a3
-    }
     override def walkKeyScalar(a: Array[Double], b: Array[Double]): Double =
       -dotSFast(a, b)
     override def walkKeyScalar(q: Array[Double], data: Array[Double], off: Int,
@@ -280,20 +218,6 @@ object Metric {
       var acc = 0.0; var i = 0
       while (i < n) { acc += math.abs(q(i) - data(off + i)); i += 1 }
       acc
-    }
-    def rankKeys4(q: Array[Double], data: Array[Double], off: Int, dim: Int,
-        keys: Array[Double]): Unit = {
-      val n = math.min(q.length, dim)
-      val o1 = off + dim; val o2 = o1 + dim; val o3 = o2 + dim
-      var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
-      var i = 0
-      while (i < n) {
-        val x = q(i)
-        a0 += math.abs(x - data(off + i)); a1 += math.abs(x - data(o1 + i))
-        a2 += math.abs(x - data(o2 + i)); a3 += math.abs(x - data(o3 + i))
-        i += 1
-      }
-      keys(0) = a0; keys(1) = a1; keys(2) = a2; keys(3) = a3
     }
     override def walkKeyScalar(a: Array[Double], b: Array[Double]): Double = {
       val n = math.min(a.length, b.length)

@@ -107,18 +107,14 @@ private[graft] final class BoundedTopK(val k: Int) extends Serializable {
   def mergeFrom(other: BoundedTopK, distinct: Boolean): Unit = {
     var r = 0
     while (r < other.size) {
-      offer(other.entryIds(r), other.keys(r),
-        if (other.payloads == null) null else other.payloads(r), distinct)
+      val id = other.ids(r)
+      if (!distinct || !holds(id)) {
+        if (other.payloads == null) insert(id, other.dists(r))
+        else insert(id, other.dists(r), other.payloads(r))
+      }
       r += 1
     }
   }
-
-  /** One merged entry: inserted with its payload (none when null),
-    * skipped when `distinct` and its id is already held. */
-  private def offer(id: Long, d: Double, payload: Array[Long], distinct: Boolean): Unit =
-    if (!distinct || !holds(id)) {
-      if (payload == null) insert(id, d) else insert(id, d, payload)
-    }
 
   /** (id, finish(dist), rank) with rank 1..size; `finish` is the
     * metric's last step on a rank key (√ for L2). */
@@ -180,65 +176,24 @@ private[graft] object BoundedTopK {
 
   /** The one top-k merge. `scan` runs once per partition of `rows` and
     * returns that partition's heaps, one per query (or none for a
-    * partition with nothing to offer). Each task sends its heaps back as
-    * primitive arrays ([[Wire]]), and the driver merges each task's
-    * result into `nq` heaps as it arrives (`runJob`'s result handler).
-    * Nothing of size nq ships into a task, and a corpus with zero
-    * partitions — or only empty ones — yields empty heaps rather than an
-    * error. One job, no shuffle: the driver receives at most k entries
-    * per query per partition. `distinct` skips ids already merged (the
-    * replicated routed graph, where one id can surface from several
-    * partitions with the same rank key). */
+    * partition with nothing to offer). The driver merges each task's
+    * heaps into `nq` heaps ([[mergeFrom]]) as the task's result arrives
+    * (`runJob`'s result handler), so nothing of size nq ships into a
+    * task, and a corpus with zero partitions — or only empty ones —
+    * yields empty heaps rather than an error. One job, no shuffle: the
+    * driver receives at most k entries per query per partition.
+    * `distinct` skips ids already merged (the replicated routed graph,
+    * where one id can surface from several partitions with the same rank
+    * key). */
   def merge[T](rows: RDD[T], nq: Int, k: Int, distinct: Boolean = false)(
       scan: Iterator[T] => Array[BoundedTopK]): Array[BoundedTopK] = {
     val merged = Array.fill(nq)(new BoundedTopK(k))
     if (nq > 0)
-      rows.sparkContext.runJob(rows, (it: Iterator[T]) => Wire(scan(it)),
-        (_: Int, part: Wire) => part.mergeInto(merged, distinct))
+      rows.sparkContext.runJob(rows, scan, (_: Int, part: Array[BoundedTopK]) => {
+        var qi = 0
+        while (qi < part.length) { merged(qi).mergeFrom(part(qi), distinct); qi += 1 }
+      })
     merged
-  }
-
-  /** One partition's heaps on the wire: entry counts per query, then every
-    * entry's id, key and (PLAID's) payload, query after query. An empty
-    * `sizes` is a partition with nothing to offer. */
-  private final class Wire(sizes: Array[Int], ids: Array[Long], keys: Array[Double],
-      payloads: Array[Array[Long]]) extends Serializable {
-
-    def mergeInto(heaps: Array[BoundedTopK], distinct: Boolean): Unit = {
-      var e = 0
-      var qi = 0
-      while (qi < sizes.length) {
-        val h = heaps(qi)
-        val end = e + sizes(qi)
-        while (e < end) {
-          h.offer(ids(e), keys(e), if (payloads == null) null else payloads(e), distinct)
-          e += 1
-        }
-        qi += 1
-      }
-    }
-  }
-
-  private object Wire {
-    def apply(heaps: Array[BoundedTopK]): Wire = {
-      val n = entries(heaps)
-      val sizes = new Array[Int](heaps.length)
-      val ids = new Array[Long](n)
-      val keys = new Array[Double](n)
-      val payloads = if (heaps.exists(_.payloads != null)) new Array[Array[Long]](n) else null
-      var e = 0
-      var qi = 0
-      while (qi < heaps.length) {
-        val h = heaps(qi)
-        sizes(qi) = h.size
-        System.arraycopy(h.entryIds, 0, ids, e, h.size)
-        System.arraycopy(h.keys, 0, keys, e, h.size)
-        if (h.payloads != null) System.arraycopy(h.payloads, 0, payloads, e, h.size)
-        e += h.size
-        qi += 1
-      }
-      new Wire(sizes, ids, keys, payloads)
-    }
   }
 
   /** Merged heaps → the kNN result as one leaf relation
@@ -255,8 +210,8 @@ private[graft] object BoundedTopK {
   def toHammingFrame(scanned: Dataset[_], qids: Array[Long], heaps: Array[BoundedTopK]): DataFrame =
     ResultFrames.hammingKnn(scanned, entries(heaps))(write(qids, heaps, identity))
 
-  private def entries(heaps: Array[BoundedTopK]): Int = {
-    var n = 0
+  private def entries(heaps: Array[BoundedTopK]): Long = {
+    var n = 0L
     heaps.foreach(n += _.size)
     n
   }

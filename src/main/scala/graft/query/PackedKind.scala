@@ -128,24 +128,13 @@ private[graft] object PackedKind {
   }
 
   /** Rows [from, until) of a vector block into the heap, keyed by the
-    * metric's rank key: four rows at a time through
-    * [[Metric.rankKeys4]], whose keys are bit-identical to
-    * [[Metric.rankKeyScalar]]'s, inserted in row order. */
-  private[graft] def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
+    * metric's rank key. */
+  private def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
       heap: BoundedTopK, from: Int, until: Int): Unit = {
     val ids = blk.ids
     val data = blk.payload
     val dim = blk.width
-    val keys = new Array[Double](4)
     var r = from
-    while (r + 4 <= until) {
-      metric.rankKeys4(q, data, r * dim, dim, keys)
-      heap.insert(ids(r), keys(0))
-      heap.insert(ids(r + 1), keys(1))
-      heap.insert(ids(r + 2), keys(2))
-      heap.insert(ids(r + 3), keys(3))
-      r += 4
-    }
     while (r < until) {
       heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
       r += 1

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graftx
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeRow}
@@ -12,6 +12,7 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Results the driver already holds, as DataFrames that explain where
   * they came from. */
@@ -24,23 +25,26 @@ object ResultFrames {
     * result (or a `limit`/`tail` of it) runs no job, and its EXPLAIN
     * carries `source`'s physical plan (the scan, with its filters and
     * pruning). An operator on top (a projection, filter, join or
-    * aggregate) runs a job of its own over these rows. */
-  def knn(source: Dataset[_], rows: Int)(fill: Writer => Unit): DataFrame =
+    * aggregate) runs a job of its own over these rows. A count above
+    * [[MaxRows]] is rejected before `fill` runs. */
+  def knn(source: Dataset[_], rows: Long)(fill: Writer => Unit): DataFrame =
     result(source, "distance", DoubleType, rows, fill)
 
   /** [[knn]] with BQ's integer Hamming count as a LONG `hamming` column
     * in place of `distance`: [[Writer.add]] stores the count as a Long. */
-  def hammingKnn(source: Dataset[_], rows: Int)(fill: Writer => Unit): DataFrame =
+  def hammingKnn(source: Dataset[_], rows: Long)(fill: Writer => Unit): DataFrame =
     result(source, "hamming", LongType, rows, fill)
 
   private def result(source: Dataset[_], distance: String, distanceType: DataType,
-      n: Int, fill: Writer => Unit): DataFrame = {
+      n: Long, fill: Writer => Unit): DataFrame = {
+    require(n >= 0 && n <= MaxRows,
+      s"a kNN result of $n rows exceeds the $MaxRows rows one driver-held result can hold")
     val output = Seq(
       AttributeReference("query_id", LongType, nullable = false)(),
       AttributeReference("neighbor_id", LongType, nullable = false)(),
       AttributeReference(distance, distanceType, nullable = false)(),
       AttributeReference("rank", IntegerType, nullable = false)())
-    val writer = new Writer(n, distanceType == LongType)
+    val writer = new Writer(n.toInt, distanceType == LongType)
     fill(writer)
     require(writer.written == n, s"wrote ${writer.written} of $n result rows")
     val qe = source.queryExecution
@@ -49,20 +53,31 @@ object ResultFrames {
       KnnResult(output, new ResultRows(writer.rows), qe.analyzed, qe.executedPlan))
   }
 
-  /** Writes result rows into one byte buffer: every row is fixed-width
-    * (a null-bit word and four 8-byte slots), so row i is an UnsafeRow
-    * over bytes [40·i, 40·i + 40). */
+  /** The most rows one result holds: the longest array the JVM allocates. */
+  val MaxRows: Int = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
+
+  /** Every row is fixed-width: a null-bit word and four 8-byte slots. */
+  private val RowBytes = 8 + 4 * 8
+
+  /** Rows per byte buffer (2.6 MB); a buffer's offsets stay far inside an Int. */
+  val ChunkRows: Int = 1 << 16
+
+  /** Writes result rows into byte buffers of up to [[ChunkRows]] rows
+    * each: row i is an UnsafeRow over bytes [40·j, 40·j + 40) of buffer
+    * i / ChunkRows, where j = i mod ChunkRows. */
   final class Writer private[ResultFrames] (n: Int, longDistance: Boolean) {
-    private val RowBytes = 8 + 4 * 8
-    private val buf = new Array[Byte](n * RowBytes)
     private[graftx] val rows = new Array[InternalRow](n)
+    private var buf: Array[Byte] = null
     private var i = 0
 
     private[ResultFrames] def written: Int = i
 
     def add(queryId: Long, neighborId: Long, distance: Double, rank: Int): Unit = {
+      require(i < n, s"more than the $n result rows announced")
+      val j = i % ChunkRows
+      if (j == 0) buf = new Array[Byte](math.min(n - i, ChunkRows) * RowBytes)
       val row = new UnsafeRow(4)
-      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + i * RowBytes, RowBytes)
+      row.pointTo(buf, Platform.BYTE_ARRAY_OFFSET + j * RowBytes, RowBytes)
       row.setLong(0, queryId)
       row.setLong(1, neighborId)
       if (longDistance) row.setLong(2, distance.toLong) else row.setDouble(2, distance)
@@ -125,8 +140,12 @@ private[graftx] case class KnnResultExec(output: Seq[Attribute], @transient rows
   }
 }
 
-/** Plans [[KnnResult]]. Added to a session's extra strategies the first
-  * time that session builds a result. */
+/** Plans [[KnnResult]]. Added once to a session's extensions, the first
+  * time the session builds a result. The planner reads the extensions'
+  * strategies on every planning, and user code does not assign them (as
+  * it may assign `experimental.extraStrategies`), so a result stays
+  * plannable whatever the session's extra strategies become. Sessions
+  * made with `newSession()` share the extensions, and so the strategy. */
 private[graftx] object KnnResultStrategy extends SparkStrategy {
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
@@ -134,11 +153,11 @@ private[graftx] object KnnResultStrategy extends SparkStrategy {
     case _ => Nil
   }
 
-  def inject(session: classic.SparkSession): Unit = {
-    val methods = session.experimental
-    if (!methods.extraStrategies.contains(this)) methods.synchronized {
-      if (!methods.extraStrategies.contains(this))
-        methods.extraStrategies = this +: methods.extraStrategies
-    }
+  /** The extensions this strategy was added to, by identity. */
+  private val added = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSessionExtensions, java.lang.Boolean]())
+
+  def inject(session: classic.SparkSession): Unit = added.synchronized {
+    if (added.add(session.extensions)) session.extensions.injectPlannerStrategy(_ => this)
   }
 }

@@ -29,6 +29,10 @@ import graft.query._
   *  - Every kind's `visiting(p)` survives Spark's closure serializer and
   *    scans like the original.
   *  - A k far above the corpus size allocates what the corpus offers.
+  *  - A result written over several byte buffers reads back intact, and
+  *    a row count no result can hold is rejected before a row is written.
+  *  - A result stays plannable after user code replaces the session's
+  *    `experimental.extraStrategies`.
   */
 class ResultLeafSpec extends AnyFunSuite {
 
@@ -110,6 +114,39 @@ class ResultLeafSpec extends AnyFunSuite {
     source.unpersist()
   }
 
+  test("a result stays plannable after the session's extra strategies are replaced") {
+    val s = Searcher(FlatKind(corpus, l2)).withK(K)
+    val res = s.search(queries)
+    val want = sorted(res.collect())
+    val saved = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = Seq.empty
+    try {
+      assert(sorted(res.collect()) == want, "collect")
+      assert(res.where(col("rank") === 1).count() == queries.count(), "a filter on top")
+      assert(sorted(s.search(queries).collect()) == want, "a search after the replacement")
+    } finally spark.experimental.extraStrategies = saved
+    s.close()
+  }
+
+  test("the result writer spans several byte buffers; an impossible row count is rejected " +
+      "before any row is written") {
+    import org.apache.spark.sql.graftx.ResultFrames
+    val n = 2 * ResultFrames.ChunkRows + 5
+    def row(i: Int) = (i.toLong, 3L * i, i * 0.25, i % 7)
+    val res = ResultFrames.knn(corpus, n.toLong) { w =>
+      (0 until n).foreach { i => val (q, id, d, r) = row(i); w.add(q, id, d, r) }
+    }
+    val got = res.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+    assert(got.toSeq == (0 until n).map(row))
+    val tooMany = intercept[IllegalArgumentException](
+      ResultFrames.knn(corpus, ResultFrames.MaxRows + 1L)(_ => fail("a row was written")))
+    assert(tooMany.getMessage.contains("exceeds"), tooMany.getMessage)
+    intercept[IllegalArgumentException](ResultFrames.knn(corpus, 2L)(w => w.add(1L, 1L, 0.0, 1)))
+    intercept[IllegalArgumentException](ResultFrames.knn(corpus, 1L) { w =>
+      w.add(1L, 1L, 0.0, 1); w.add(1L, 2L, 0.0, 2)
+    })
+  }
+
   test("BQ's blocked result keeps a LONG hamming column, equal to the plan form") {
     val bq = BqIndex.train(corpus, l2)
     val codes = pin(BqIndex.encode(corpus, bq))
@@ -166,7 +203,7 @@ class ResultLeafSpec extends AnyFunSuite {
     (0 until h.size).map(r => (h.ids(r), java.lang.Double.doubleToRawLongBits(h.dists(r)),
       if (payloads) h.payload(r).toSeq else Nil))
 
-  test("the wire merge ≡ the fold it replaced: ties, distinct, payloads, empty and zero " +
+  test("the runJob merge ≡ the fold it replaced: ties, distinct, payloads, empty and zero " +
       "partitions, an empty batch") {
     val sc = spark.sparkContext
     val rnd = new scala.util.Random(9)
