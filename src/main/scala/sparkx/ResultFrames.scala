@@ -145,7 +145,10 @@ private[graftx] case class KnnResultExec(output: Seq[Attribute], @transient rows
   * strategies on every planning, and user code does not assign them (as
   * it may assign `experimental.extraStrategies`), so a result stays
   * plannable whatever the session's extra strategies become. Sessions
-  * made with `newSession()` share the extensions, and so the strategy. */
+  * made with `newSession()` share the extensions, and so the strategy.
+  * Spark guards the extensions' list with no lock: a planning in another
+  * thread of the same sessions while the first result is built may see
+  * the list change under it and fail once. */
 private[graftx] object KnnResultStrategy extends SparkStrategy {
 
   def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -290,6 +290,21 @@ class ResultLeafSpec extends AnyFunSuite {
     finally plaid.destroy()
   }
 
+  test("a heap grows past its initial slots and keeps the k smallest, payloads with them") {
+    val k = 3 * BoundedTopK.InitialSlots
+    val rnd = new scala.util.Random(11)
+    val entries = (0 until 5 * BoundedTopK.InitialSlots).map(i => (rnd.nextInt(500).toDouble, i.toLong))
+    val want = entries.sortBy { case (d, id) => (d, id) }.take(k)
+    val plain = new BoundedTopK(k)
+    val carried = new BoundedTopK(k)
+    entries.foreach { case (d, id) => plain.insert(id, d); carried.insert(id, d, Array(id)) }
+    for (h <- Seq(plain, carried)) {
+      assert(h.size == k)
+      assert((0 until k).map(r => (h.dists(r), h.ids(r))) == want)
+    }
+    assert((0 until k).forall(r => carried.payload(r).toSeq == Seq(carried.ids(r))))
+  }
+
   test("k = 10^8 over a 20-row corpus: the facade and a bounded range search answer " +
       "with what the corpus holds") {
     val small = pin(corpus.where(col("id") < 20).coalesce(2))
