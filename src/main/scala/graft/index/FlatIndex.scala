@@ -43,7 +43,8 @@ object FlatIndex {
 
   /** Batch kNN via a blocked scan ([[graft.query.BlockedScan]] over
     * [[graft.query.PackedKind.flat]]): each corpus partition is packed
-    * once into a flat primitive block and scanned query-outer into one
+    * once into one primitive array per dimension and scanned query-outer,
+    * by the metric's column fold, into one
     * bounded (dist, id) heap per query — the n·q candidate rows are never
     * materialized — and [[BoundedTopK.merge]] combines the partitions'
     * heaps on the driver. Result-identical to [[knn]] (same rank-key

@@ -95,15 +95,15 @@ object HnswIndex {
 
   /** Build the sharded graph from an (id, vec) frame. One row per node:
     * (shard, id, vec, level, edges) with `edges(l)` the layer-l adjacency
-    * list. The one shuffle is `repartitionByRange` on the shard id — a
-    * Tungsten (UnsafeRow) exchange. (An earlier version used an RDD
-    * identity `Partitioner`, which silently downgraded the shuffle to
-    * JavaSerializer object streams — at 1M vectors that deserialization
-    * dwarfed the graph construction itself. Range partitioning keeps the
-    * wholeness guarantee — equal keys share one range — with the
-    * columnar shuffle path.) Each shard then builds independently inside
-    * its partition; the group-by-shard handles a sampler that ever packs
-    * two shard values into one range. */
+    * list. The one shuffle puts shard s in partition s
+    * (`repartitionById`, [[onePerPartition]]) — a Tungsten (UnsafeRow)
+    * exchange. (An earlier version used an RDD identity `Partitioner`,
+    * which silently downgraded the shuffle to JavaSerializer object
+    * streams — at 1M vectors that deserialization dwarfed the graph
+    * construction itself. Range partitioning kept the columnar path, but
+    * its sampled bounds put two shards in one partition and left another
+    * empty, so one task built two graphs while a core idled.) Each shard
+    * then builds independently inside its partition. */
   def build(vectors: DataFrame, numShards: Int, metric: Metric,
       m: Int = M, efConstruction: Int = EfConstruction): DataFrame = {
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
@@ -285,8 +285,7 @@ object HnswIndex {
       metric: Metric, m: Int, efConstruction: Int): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned
-      .repartitionByRange(numShards, col("shard"))
+    onePerPartition(assigned, numShards)
       .as[(Int, Long, Seq[Double])]
       .mapPartitions { it =>
         val byShard = new mutable.HashMap[Int, mutable.ArrayBuffer[(Long, Array[Double])]]
@@ -392,15 +391,29 @@ object HnswIndex {
   private[graft] def shardCount(graph: DataFrame): Int =
     graph.agg(max(col("shard"))).head.getInt(0) + 1
 
-  /** Graph rows (shard, id, vec, level, edges) range-partitioned by shard
-    * — whole shards per partition through the Tungsten shuffle path (see
-    * [[build]]'s note) — cast to the types [[compileShards]] reads. */
+  /** Graph rows (shard, id, vec, level, edges), shard s in partition s
+    * ([[onePerPartition]]), cast to the types [[compileShards]] reads. */
   private[graft] def shardGrouped(graph: DataFrame, numShards: Int): DataFrame =
-    graph
-      .select(col("shard").cast("int"), col("id").cast("long"),
-        col("vec").cast("array<double>"), col("level").cast("int"),
-        col("edges").cast("array<array<bigint>>"))
-      .repartitionByRange(numShards, col("shard"))
+    onePerPartition(graphColumns(graph), numShards)
+
+  /** [[shardGrouped]] over only the shards `shards` (sorted, distinct),
+    * shards(j) in partition j: the rank in the probed set is the dense
+    * partition id a pruned read needs. */
+  private[graft] def shardGrouped(graph: DataFrame, shards: Array[Int]): DataFrame =
+    graphColumns(graph.where(col("shard").isin(shards.map(Int.box): _*)))
+      .repartitionById(shards.length,
+        (array_position(typedLit(shards), col("shard")) - 1).cast("int"))
+
+  private def graphColumns(graph: DataFrame): DataFrame =
+    graph.select(col("shard").cast("int"), col("id").cast("long"),
+      col("vec").cast("array<double>"), col("level").cast("int"),
+      col("edges").cast("array<array<bigint>>"))
+
+  /** Rows with an int `shard` column, shard s in partition s mod
+    * `numShards`: with shards 0 until numShards, one shard per partition
+    * and no partition empty. */
+  private def onePerPartition(rows: DataFrame, numShards: Int): DataFrame =
+    rows.repartitionById(numShards, pmod(col("shard"), lit(numShards)))
 
   /** One partition of [[shardGrouped]]'s rows → one compiled graph per
     * shard, keyed by shard id ([[CompiledHnsw.fromTuples]]). Graphs

@@ -86,23 +86,21 @@ private[graft] final case class Route[B, P, Q](key: B => Int,
 }
 
 /** A packed kind: the pack is one partition's [[Block]] of [[Pack]]'s
-  * columns, with the payload width the model fixes ([[ServeBlocks]]). */
-private[graft] final class PackedKind[A, P](val pack: Pack[A], val dim: Option[Int],
+  * columns, with the payload width the model fixes ([[ServeBlocks]]): a
+  * row-major code block or a vector block of one array per dimension,
+  * as the kind's `packer` lays it out. */
+private[graft] final class PackedKind[D, P](val pack: Pack[_],
+    val packer: Iterator[InternalRow] => Iterator[Block[D]], val dim: Option[Int],
     val finish: Double => Double)(
-    val scan: P => Array[Double] => (Block[A], BoundedTopK) => Unit)
-    extends ScanKind[Block[A], P, Array[Double]] {
+    val scan: P => Array[Double] => (Block[D], BoundedTopK) => Unit)
+    extends ScanKind[Block[D], P, Array[Double]] {
 
   def frame(df: DataFrame): DataFrame = ServeBlocks.select(df, pack)
 
   def requireQueries(qs: Array[Array[Double]], k: Int, served: Int): Unit =
     PackedKind.requireQueries(qs, k, served)
 
-  val packer: Iterator[InternalRow] => Iterator[Block[A]] = {
-    val p = pack
-    rows => ServeBlocks.packPartition(rows, p).iterator
-  }
-
-  val width: Block[A] => Int = _.width
+  val width: Block[D] => Int = _.width
 }
 
 private[graft] object PackedKind {
@@ -127,42 +125,84 @@ private[graft] object PackedKind {
     }
   }
 
-  /** Rows [from, until) of a vector block into the heap, keyed by the
-    * metric's rank key. */
-  private def scanVectors(metric: Metric, q: Array[Double], blk: Block[Double],
-      heap: BoundedTopK, from: Int, until: Int): Unit = {
-    val ids = blk.ids
-    val data = blk.payload
-    val dim = blk.width
-    var r = from
-    while (r < until) {
-      heap.insert(ids(r), metric.rankKeyScalar(q, data, r * dim, dim))
-      r += 1
+  /** A code kind: row-major blocks of `pack`'s codes. */
+  private def codes[A, P](pack: Pack[A], dim: Option[Int], finish: Double => Double)(
+      scan: P => Array[Double] => (Block[Array[A]], BoundedTopK) => Unit)
+      : PackedKind[Array[A], P] =
+    new PackedKind(pack, rows => ServeBlocks.packPartition(rows, pack).iterator, dim, finish)(scan)
+
+  /** A vector kind: blocks of one array per dimension of `pack`'s
+    * vectors, scanned by the metric's column fold. */
+  private def vectors[P](pack: Pack[Double], dim: Option[Int], metric: Metric)(
+      scan: P => Array[Double] => (Block[Array[Array[Double]]], BoundedTopK) => Unit)
+      : PackedKind[Array[Array[Double]], P] =
+    new PackedKind(pack, rows => ServeBlocks.packColumns(rows, pack).iterator, dim,
+      metric.finishRankScalar _)(scan)
+
+  /** The share of a grouped vector block's rows that its probed ranges
+    * must reach before one fold of the whole block beats a fold per
+    * range. A short range folds at a fraction of the whole block's rate
+    * per row (each component's loop is too short to vectorize well), so
+    * past this share the whole fold costs less than the ranges it
+    * covers. Measured like IVFPQ's `tableAt`: on 1,250-row blocks of 64
+    * dims in 70 clusters (≈18 rows per range), the two cost the same at
+    * 0.36 of the rows; at 0.14 the ranges took 0.3–0.4 of the whole
+    * fold's time, and at 0.72 about 1.7 times it. */
+  private[query] val WholeBlockShare = 0.35
+
+  /** The rows of a vector block's row ranges (`ranges`: (from, until)
+    * pairs, as [[Block.ranges]] gives a grouped block's probed tags) into
+    * the heap, keyed by the metric's column fold: one fold of the whole
+    * block when the ranges hold at least [[WholeBlockShare]] of its rows,
+    * else one fold per range. Either way row r's key lands at `keys(r)`
+    * and is the same bits, so the heap is the same. */
+  private[query] def scanVectors(metric: Metric, q: Array[Double],
+      blk: Block[Array[Array[Double]]], ranges: Array[Int], heap: BoundedTopK): Unit = {
+    val n = blk.ids.length
+    val keys = ScanScratch.doubles(n)
+    var probed = 0
+    var j = 0
+    while (j < ranges.length) { probed += ranges(j + 1) - ranges(j); j += 2 }
+    val whole = probed >= n * WholeBlockShare
+    if (whole) metric.rankKeys(q, blk.payload, 0, n, keys, 0)
+    j = 0
+    while (j < ranges.length) {
+      val from = ranges(j)
+      val until = ranges(j + 1)
+      if (!whole) metric.rankKeys(q, blk.payload, from, until, keys, from)
+      offer(blk.ids, keys, from, until, heap)
+      j += 2
     }
+  }
+
+  /** Rows [from, until) into the heap at their keys `keys(r)`. */
+  private def offer(ids: Array[Long], keys: Array[Double], from: Int, until: Int,
+      heap: BoundedTopK): Unit = {
+    var r = from
+    while (r < until) { heap.insert(ids(r), keys(r)); r += 1 }
   }
 
   /** IVF probe ranking's clamp (ivf.go:127-129): nprobe in [1, nlist]. */
   private def probeCount(nprobe: Int, nlist: Int): Int = math.min(math.max(nprobe, 1), nlist)
 
   /** Exhaustive scan over packed vectors — the flat kind. */
-  def flat(metric: Metric): PackedKind[Double, Unit] =
-    new PackedKind(Pack[Double]("vec", None), None, metric.finishRankScalar _)(_ =>
-      q => (blk, heap) => scanVectors(metric, q, blk, heap, 0, blk.ids.length))
+  def flat(metric: Metric): PackedKind[Array[Array[Double]], Unit] =
+    vectors(Pack[Double]("vec", None), None, metric)(_ =>
+      q => (blk, heap) => scanVectors(metric, q, blk, Array(0, blk.ids.length), heap))
 
   /** IVF: per-query probe ranking, then each probed cluster's rows — one
     * contiguous range of the cluster-grouped block — through the vector
     * scan: cost ∝ probed rows, not n. */
-  def ivf(model: IvfModel): PackedKind[Double, Int] = {
+  def ivf(model: IvfModel): PackedKind[Array[Array[Double]], Int] = {
     val metric = model.metric
     val cents = model.centroids.map(_.toArray).toArray
     val nlist = model.nlist
-    new PackedKind(Pack[Double]("vec", Some("cluster_id"), grouped = true),
-      cents.headOption.map(_.length), metric.finishRankScalar _)(nprobe => {
+    vectors(Pack[Double]("vec", Some("cluster_id"), grouped = true),
+      cents.headOption.map(_.length), metric)(nprobe => {
       val np = probeCount(nprobe, nlist)
       q => {
         val probes = IvfIndex.probeSet(q, cents, metric, np)
-        (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
-          scanVectors(metric, q, blk, heap, from, until))
+        (blk, heap) => scanVectors(metric, q, blk, blk.ranges(probes), heap)
       }
     })
   }
@@ -172,17 +212,15 @@ private[graft] object PackedKind {
     * [[LshIndex.knnMultiProbe]]), each bucket one contiguous range of the
     * bucket-grouped block. Grouping needs int tags, and buckets are
     * < 2^planes, so `planes` must be in [1, 31]. */
-  def lsh(planes: Int, metric: Metric): PackedKind[Double, Int] = {
+  def lsh(planes: Int, metric: Metric): PackedKind[Array[Array[Double]], Int] = {
     require(planes >= 1 && planes <= 31,
       s"planes must be in [1, 31] to group LSH buckets by int tag, got $planes")
-    new PackedKind(Pack[Double]("vec", Some("bucket"), grouped = true), None,
-      metric.finishRankScalar _)(hamming => {
+    vectors(Pack[Double]("vec", Some("bucket"), grouped = true), None, metric)(hamming => {
       require(hamming >= 0 && hamming <= 1, s"hamming radius must be 0 or 1, got $hamming")
       q => {
         val qb = LshIndex.bucketScalar(q, planes).toInt
         val probes = if (hamming == 0) Array(qb) else qb +: Array.tabulate(planes)(p => qb ^ (1 << p))
-        (blk, heap) => blk.foreachRange(probes)((_, from, until) =>
-          scanVectors(metric, q, blk, heap, from, until))
+        (blk, heap) => scanVectors(metric, q, blk, blk.ranges(probes), heap)
       }
     })
   }
@@ -190,13 +228,12 @@ private[graft] object PackedKind {
   /** PQ ADC: the query's flat M·Ksub table ([[PqIndex.adcTableInto]],
     * pq.go:144-155's hoist) once per query, M lookups per row; distances
     * are √ of the summed squares (pq.go:158-168). */
-  def pq(model: PqModel): PackedKind[Int, Unit] = {
+  def pq(model: PqModel): PackedKind[Array[Int], Unit] = {
     val m = model.m
     val ksub = model.ksub
     val dsub = model.dsub
     val cbs = model.codebookArrays
-    new PackedKind(Pack[Int]("code", None, width = Some(m)), Some(model.dim),
-      math.sqrt _)(_ => q => {
+    codes(Pack[Int]("code", None, width = Some(m)), Some(model.dim), math.sqrt _)(_ => q => {
       val tab = PqIndex.adcTableInto(q, cbs, dsub, new Array[Double](m * ksub))
       (blk, heap) => {
         val ids = blk.ids
@@ -212,11 +249,11 @@ private[graft] object PackedKind {
 
   /** OPQ: the query rotated once (one dim² matVec), then the PQ
     * scan over the same code layout. */
-  def opq(model: OpqModel): PackedKind[Int, Unit] = {
+  def opq(model: OpqModel): PackedKind[Array[Int], Unit] = {
     val rot = model.rotation.map(_.toArray).toArray
     val pqKind = pq(model.pq)
     val pqScan = pqKind.scan(())
-    new PackedKind(pqKind.pack, Some(model.dim), pqKind.finish)(_ =>
+    new PackedKind(pqKind.pack, pqKind.packer, Some(model.dim), pqKind.finish)(_ =>
       q => pqScan(OpqIndex.rotateLocal(rot, q)))
   }
 
@@ -231,7 +268,7 @@ private[graft] object PackedKind {
     * distances are bit-identical, and no per-query table outlives the
     * block scan (a driver hoist of nq·nprobe tables is ≈ 160 MB at
     * nq = 1000). */
-  def ivfPq(model: IvfPqModel, hoistAt: Int = -1): PackedKind[Int, Int] = {
+  def ivfPq(model: IvfPqModel, hoistAt: Int = -1): PackedKind[Array[Int], Int] = {
     val metric = model.coarse.metric
     val cents = model.coarse.centroids.map(_.toArray).toArray
     val nlist = model.coarse.nlist
@@ -240,7 +277,7 @@ private[graft] object PackedKind {
     val ksub = model.pq.ksub
     val dsub = model.pq.dsub
     val tableAt = if (hoistAt >= 0) hoistAt else ksub
-    new PackedKind(Pack[Int]("code", Some("cluster_id"), grouped = true, width = Some(m)),
+    codes(Pack[Int]("code", Some("cluster_id"), grouped = true, width = Some(m)),
       Some(model.pq.dim), math.sqrt _)(nprobe => {
       val np = probeCount(nprobe, nlist)
       q => {
@@ -281,12 +318,12 @@ private[graft] object PackedKind {
     * block scan, not per query: a query's table is dim·256 doubles, and
     * the blocked shape holds every query's scan for the whole job. Other
     * metrics dequantize each row and fold it with the metric's rank key. */
-  def sq8(model: Sq8Model): PackedKind[Byte, Unit] = {
+  def sq8(model: Sq8Model): PackedKind[Array[Byte], Unit] = {
     val mins = model.minsArray
     val scales = model.scalesArray
     val metric = model.metric
     val dim = model.dim
-    new PackedKind(Pack[Byte]("code", None, width = Some(dim)), Some(dim),
+    codes(Pack[Byte]("code", None, width = Some(dim)), Some(dim),
       metric.finishRankScalar _)(_ =>
       if (metric == Metric.L2) q => (blk, heap) => {
         val tab = Sq8Index.sqTableInto(q, mins, scales, ScanScratch.doubles(dim << 8))
@@ -316,12 +353,12 @@ private[graft] object PackedKind {
     * [[Sq8Index.tableScanRange]] — cost ∝ probed mass, not n (VERDICT r11
     * wrong #2: a masked per-row branch over all rows benched 3× the
     * exhaustive scan). */
-  def ivfSq8(sq8: Sq8Model, ivf: IvfModel): PackedKind[Byte, Int] = {
+  def ivfSq8(sq8: Sq8Model, ivf: IvfModel): PackedKind[Array[Byte], Int] = {
     val mins = sq8.minsArray
     val scales = sq8.scalesArray
     val cents = ivf.centroids.map(_.toArray).toArray
     val nlist = ivf.nlist
-    new PackedKind(Pack[Byte]("code", Some("cluster_id"), grouped = true, width = Some(sq8.dim)),
+    codes(Pack[Byte]("code", Some("cluster_id"), grouped = true, width = Some(sq8.dim)),
       Some(sq8.dim), math.sqrt _)(nprobe => q => {
       val probes = IvfIndex.probeSet(q, cents, Metric.L2, probeCount(nprobe, nlist))
       // built on first use, by the first pack scan that probes a range
@@ -334,9 +371,9 @@ private[graft] object PackedKind {
   /** BQ: the query packed against the model thresholds
     * ([[BqIndex.packLocal]], bit-identical to the plan-side encode), then
     * XOR + popcount per word; the integer Hamming count is the key. */
-  def bq(model: BqModel): PackedKind[Long, Unit] = {
+  def bq(model: BqModel): PackedKind[Array[Long], Unit] = {
     val th = model.thresholdArray
-    new PackedKind(Pack[Long]("code", None, width = Some(model.words)), Some(model.dim),
+    codes(Pack[Long]("code", None, width = Some(model.words)), Some(model.dim),
       identity[Double] _)(_ => q => {
       val qc = BqIndex.packLocal(q, th)
       val nw = qc.length
@@ -414,8 +451,7 @@ private[graft] object GraphKind {
     new GraphKind[(Int, Int)](model.metric, model.numShards, _._2, distinct = true,
       route = Some(Route[(Int, CompiledHnsw), (Int, Int), Array[Double]](_._1,
         p => q => RoutedHnswIndex.probeShards(q, model, p._1),
-        (df, shards) => HnswIndex.shardGrouped(
-          df.where(col("shard").isin(shards.map(Int.box): _*)), shards.length))))
+        HnswIndex.shardGrouped(_, _))))
 }
 
 /** A PLAID query: the id of the doc it was taken from (the docs-as-queries
@@ -664,8 +700,9 @@ private[graft] object PlaidKind {
     }
 }
 
-/** Per-thread scratch for the tables a block scan builds and drops (the
-  * SQ8 squared-difference table, the IVFPQ residual ADC table). A block
+/** Per-thread scratch for what a block scan builds and drops (a vector
+  * block's rank keys, the SQ8 squared-difference table, the IVFPQ
+  * residual ADC table). A block
   * scan runs start to finish on one thread and never re-enters another,
   * so one buffer per thread is race-free in every shape. */
 private object ScanScratch {
@@ -780,15 +817,21 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
 
   val blocks: RDD[B] = ServeBlocks.cached(df, kind)
 
-  /** The served dim; its job materializes the packs. */
-  private lazy val dim: Int = {
+  /** The served dim and the number of partitions holding packs; its job
+    * materializes the packs. */
+  private lazy val shape: (Int, Int) = {
     val width = kind.width
-    val widths = blocks.map(width).collect()
-    kind.dimOf(widths)
+    val perTask = blocks.mapPartitions(it => Iterator.single(it.map(width).toArray)).collect()
+    (kind.dimOf(perTask.flatten), perTask.count(_.nonEmpty))
   }
 
+  private def dim: Int = shape._1
+
+  /** The partitions holding packs: a batch job's busy tasks. */
+  private[query] def packTasks: Int = shape._2
+
   /** Materialize the packs (call once before timing queries). */
-  def warm(): Unit = { dim; () }
+  def warm(): Unit = { shape; () }
 
   /** One query's merged heap, payloads included. */
   def heap(q: Q, k: Int, p: P): BoundedTopK = {
@@ -813,9 +856,10 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
     * packs query by query into heaps that [[BoundedTopK.merge]] merges on
     * the driver. Serving partitions are sized for the single-query tail
     * ([[ServeBlocks.ServePartitions]]), which would cap a batch at that
-    * many cores, so each task fans its queries out with [[TaskFanout]];
-    * each query owns its heap and packs are read-only, so the fan-out is
-    * race-free. The result is a leaf relation built from the heaps
+    * many cores, so each task fans its queries out with [[TaskFanout]],
+    * as wide as the machine's cores shared by the [[packTasks]] busy
+    * tasks; each query owns its heap and packs are read-only, so the
+    * fan-out is race-free. The result is a leaf relation built from the heaps
     * ([[BoundedTopK.toFrame]]): the job runs when this is called,
     * collecting the result runs none, and an operator applied to it
     * (projection, filter, join) runs a job of its own. A vector kind's
@@ -828,6 +872,7 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
     val nq = qs.length
     val bc = df.sparkSession.sparkContext.broadcast(new QueryBatch(qs, kind.visiting(p)))
     val tag = kind.tag
+    val tasks = packTasks
     val heaps =
       try {
         BoundedTopK.merge(blocks, nq, k, kind.distinct) { it =>
@@ -837,7 +882,7 @@ private[query] final class DistributedScan[B, P, Q](df: DataFrame, kind: ScanKin
             val batch = bc.value
             val first = batch.first
             val heaps = Array.fill(nq)(new BoundedTopK(k))
-            TaskFanout.foreach(nq) { i =>
+            TaskFanout.foreach(nq, TaskFanout.width(tasks)) { i =>
               val qi = (first + i) % nq
               val scan = batch.scan(qi)
               var b = 0

@@ -8,22 +8,26 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
 
-/** One packed partition of a served index: all of its rows' payloads in
-  * ONE flat primitive array (row r's `width` elements at offset
-  * r·width), plus parallel id and tag arrays. The payload is the vector
-  * (doubles), the PQ codes (ints), the SQ8 codes (bytes) or the BQ sign
-  * words (longs). The r3 serving cache was an `RDD[(Long, Array[Double],
-  * Int)]` — ~n boxed tuples + n small arrays whose GC pauses produced a
-  * 78× p50→p95 blowup (VERDICT r3 #3); a handful of large primitive
-  * arrays are old-gen-stable and scan with no pointer chasing.
+/** One packed partition of a served index: its rows' payloads in a few
+  * large primitive arrays, plus parallel id and tag arrays. The payload
+  * `D` is one of two layouts ([[ServeBlocks]]):
+  *  - a code pack (PQ ints, SQ8 bytes, BQ sign words) is ONE row-major
+  *    array, row r's `width` codes at offset r·width;
+  *  - a vector pack is one array per dimension (`payload(i)(r)` is row
+  *    r's component i, `width` the dim), the layout the column fold
+  *    ([[graft.core.Metric.rankKeys]]) vectorizes across rows.
+  * The r3 serving cache was an `RDD[(Long, Array[Double], Int)]` — ~n
+  * boxed tuples + n small arrays whose GC pauses produced a 78× p50→p95
+  * blowup (VERDICT r3 #3); a handful of large primitive arrays are
+  * old-gen-stable and scan with no per-row object.
   *
   * `tags` is the per-row routing key (the IVF cluster id or the sign-LSH
   * bucket, LONG to fit both), or empty when the pack has no tag column.
   * A grouped pack sorts the rows by tag, so each tag's rows are one
   * contiguous range ([[firstRow]]).
   */
-private[graft] final case class Block[A](
-    ids: Array[Long], tags: Array[Long], payload: Array[A], width: Int) {
+private[graft] final case class Block[D](
+    ids: Array[Long], tags: Array[Long], payload: D, width: Int) {
 
   /** In a grouped block: the first row whose tag is ≥ `tag`, so tag t's
     * rows are `[firstRow(t), firstRow(t + 1))`. */
@@ -35,6 +39,21 @@ private[graft] final case class Block[A](
       if (tags(mid) < tag) lo = mid + 1 else hi = mid
     }
     lo
+  }
+
+  /** In a grouped block: the row ranges of the probed tags `probes`
+    * that have rows here, as (from, until) pairs in probe order. */
+  def ranges(probes: Array[Int]): Array[Int] = {
+    val out = new Array[Int](2 * probes.length)
+    var n = 0
+    var i = 0
+    while (i < probes.length) {
+      val from = firstRow(probes(i))
+      val until = firstRow(probes(i) + 1L)
+      if (from < until) { out(n) = from; out(n + 1) = until; n += 2 }
+      i += 1
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
   /** In a grouped block: `range(i, from, until)` for each probed tag
@@ -97,14 +116,29 @@ private[graft] object ServeBlocks {
     df.select(Seq(col("id").cast("long"), col(pack.payload)) ++
       pack.tag.map(col(_).cast("long")): _*)
 
-  /** Pack one partition of [[select]]'s rows into a [[Block]] — None for
-    * an empty partition. The first row's payload width is checked against
-    * the one the model fixes, naming the id. Payloads decode with
-    * `ArrayData`'s primitive bulk copies (what Spark's `Array[Double]` /
-    * `Array[Int]` / `Array[Long]` encoders call; `array<tinyint>` has no
-    * such encoder, since `Array[Byte]` maps to binary), so no element is
-    * boxed. */
-  def packPartition[A](rows: Iterator[InternalRow], pack: Pack[A]): Option[Block[A]] = {
+  /** Pack one partition of [[select]]'s rows into a row-major code
+    * [[Block]] — None for an empty partition. */
+  def packPartition[A](rows: Iterator[InternalRow], pack: Pack[A]): Option[Block[Array[A]]] =
+    packed(rows, pack) { (data, order, width) =>
+      if (order == null) data else gather(data, order, width)(pack.elem)
+    }
+
+  /** Pack one partition of [[select]]'s rows into a vector [[Block]] of
+    * one array per dimension — None for an empty partition. The rows are
+    * read row-major and transposed once; only the columns stay. */
+  def packColumns(rows: Iterator[InternalRow], pack: Pack[Double])
+      : Option[Block[Array[Array[Double]]]] =
+    packed(rows, pack)(columns)
+
+  /** One partition's rows, the payload width checked against the one the
+    * model fixes (naming the id), laid out by `layout` from the row-major
+    * payloads, the tag order of a grouped pack (null: source order) and
+    * the width. Payloads decode with `ArrayData`'s primitive bulk copies
+    * (what Spark's `Array[Double]` / `Array[Int]` / `Array[Long]`
+    * encoders call; `array<tinyint>` has no such encoder, since
+    * `Array[Byte]` maps to binary), so no element is boxed. */
+  private def packed[A, D](rows: Iterator[InternalRow], pack: Pack[A])(
+      layout: (Array[A], Array[Int], Int) => D): Option[Block[D]] = {
     import pack.elem
     val ids = scala.collection.mutable.ArrayBuilder.make[Long]
     val tags = scala.collection.mutable.ArrayBuilder.make[Long]
@@ -134,12 +168,13 @@ private[graft] object ServeBlocks {
       if (pack.tag.isDefined) tags += row.getLong(2)
     }
     if (width < 0) None
-    else if (!pack.grouped) Some(Block(ids.result(), tags.result(), data.result(), width))
+    else if (!pack.grouped)
+      Some(Block(ids.result(), tags.result(), layout(data.result(), null, width), width))
     else {
       val rowTags = tags.result()
       val order = groupOrder(rowTags)
       Some(Block(gatherLongs(ids.result(), order), gatherLongs(rowTags, order),
-        gather(data.result(), order, width), width))
+        layout(data.result(), order, width), width))
     }
   }
 
@@ -169,6 +204,21 @@ private[graft] object ServeBlocks {
     var r = 0
     while (r < order.length) { out(r) = src(order(r)); r += 1 }
     out
+  }
+
+  /** Row-major `src` (rows of `width` doubles) as one array per
+    * dimension, rows permuted to `order` (null: source order). */
+  private def columns(src: Array[Double], order: Array[Int], width: Int): Array[Array[Double]] = {
+    val n = if (width == 0) 0 else src.length / width
+    val cols = Array.fill(width)(new Array[Double](n))
+    var r = 0
+    while (r < n) {
+      val off = (if (order == null) r else order(r)) * width
+      var i = 0
+      while (i < width) { cols(i)(r) = src(off + i); i += 1 }
+      r += 1
+    }
+    cols
   }
 
   /** `src` (rows of `width` elements) permuted to `order`. */

@@ -12,10 +12,13 @@ package graft.query
   *
   *  - `spark.graft.serve.batchThreadsPerTask` (explicit serving-mode
   *    config) wins when set;
-  *  - under a `local[...]` master the serving layer owns the whole JVM
-  *    and runs [[ServeBlocks.ServePartitions]] concurrent tasks, so each
-  *    task takes cores/ServePartitions — the same total width the common
-  *    pool provided (throughput-neutral for the bench rows);
+  *  - under a `local[...]` master the serving layer owns the whole JVM,
+  *    and a job runs one task per partition that holds packs, so each of
+  *    its `tasks` takes cores/tasks — the same total width the common
+  *    pool provided (throughput-neutral for the bench rows). A table of
+  *    fewer partitions than [[ServeBlocks.ServePartitions]] packs into
+  *    fewer (coalescing never adds one), and cores/ServePartitions would
+  *    leave the rest of the machine idle;
   *  - on a cluster the default is `spark.task.cpus`, the cores this task
   *    was actually allotted.
   *
@@ -26,8 +29,13 @@ package graft.query
   */
 private[query] object TaskFanout {
 
-  /** Per-task fan-out width under the rules above; ≥ 1. */
-  def width(): Int = {
+  /** Per-task fan-out width under the rules above for a job of
+    * [[ServeBlocks.ServePartitions]] tasks; ≥ 1. */
+  def width(): Int = width(ServeBlocks.ServePartitions)
+
+  /** Per-task fan-out width under the rules above for a job of `tasks`
+    * concurrent tasks; ≥ 1. */
+  def width(tasks: Int): Int = {
     val env = org.apache.spark.SparkEnv.get
     if (env == null) math.max(1, Runtime.getRuntime.availableProcessors())
     else {
@@ -35,16 +43,19 @@ private[query] object TaskFanout {
       val explicit = conf.getInt("spark.graft.serve.batchThreadsPerTask", -1)
       if (explicit > 0) explicit
       else if (conf.get("spark.master", "").startsWith("local"))
-        math.max(1, Runtime.getRuntime.availableProcessors() / ServeBlocks.ServePartitions)
+        math.max(1, Runtime.getRuntime.availableProcessors() / math.max(1, tasks))
       else math.max(1, conf.getInt("spark.task.cpus", 1))
     }
   }
 
-  /** Run `fn(i)` for every i in [0, n), at most [[width]] at a time.
+  /** [[foreach]] at most [[width]]`()` at a time. */
+  def foreach(n: Int)(fn: Int => Unit): Unit = foreach(n, width())(fn)
+
+  /** Run `fn(i)` for every i in [0, n), at most `width` at a time.
     * `fn` must be safe to run concurrently for distinct i (the serving
     * kernels give each query its own heap; graphs are read-only). */
-  def foreach(n: Int)(fn: Int => Unit): Unit = {
-    val w = math.min(width(), n)
+  def foreach(n: Int, width: Int)(fn: Int => Unit): Unit = {
+    val w = math.min(width, n)
     if (w <= 1) {
       var i = 0
       while (i < n) { fn(i); i += 1 }

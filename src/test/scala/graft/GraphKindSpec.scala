@@ -112,18 +112,17 @@ class GraphKindSpec extends AnyFunSuite {
   }
 
   test("hnsw: a serving partition left empty, and dim 1") {
-    // eleven rows on shard 1, one on shard 0: the range split of two
-    // shards puts every row under its first bound, so the second serving
-    // partition holds no graph
-    val rows = (0L until 12L).map(id => (if (id == 0) 0 else 1, id, Seq((id % 4).toDouble)))
-    val graph = HnswIndex.buildFromShardCol(rows.toDF("shard", "id", "vec"), 2, l2,
+    // one row on shard 0, eleven on shard 2 and none on shard 1: each
+    // shard is served by its own partition, so the second holds no graph
+    val rows = (0L until 12L).map(id => (if (id == 0) 0 else 2, id, Seq((id % 4).toDouble)))
+    val graph = HnswIndex.buildFromShardCol(rows.toDF("shard", "id", "vec"), 3, l2,
       HnswIndex.M, HnswIndex.EfConstruction)
-    val sizes = HnswIndex.shardGrouped(graph, 2).rdd.mapPartitions(it => Iterator(it.size))
+    val sizes = HnswIndex.shardGrouped(graph, 3).rdd.mapPartitions(it => Iterator(it.size))
       .collect()
     assert(sizes.contains(0), s"expected an empty partition, got ${sizes.toSeq}")
     val qdf = queries(Seq(Seq(0.0), Seq(2.5), Seq(-7.0)))
     Seq(1, 3, 12, 20).foreach { k =>
-      assertParity(s"empty partition, dim 1, k = $k", hnsw(graph, 2, k, 16), qdf, k,
+      assertParity(s"empty partition, dim 1, k = $k", hnsw(graph, 3, k, 16), qdf, k,
         math.min(k, 12))
     }
   }
@@ -140,7 +139,11 @@ class GraphKindSpec extends AnyFunSuite {
   }
 
   test("routed: ties, k > n, an empty serving partition, one region or both probed") {
-    val (c, model) = twoRegions
+    val (c, two) = twoRegions
+    // a third region far from every row: its shard, and so its serving
+    // partition, stays empty
+    val model = two.copy(centroids = two.centroids :+ Seq(100.0, 100.0),
+      subShards = two.subShards :+ 1)
     val graph = RoutedHnswIndex.build(c, model)
     val sizes = HnswIndex.shardGrouped(graph, model.numShards).rdd
       .mapPartitions(it => Iterator(it.size)).collect()
