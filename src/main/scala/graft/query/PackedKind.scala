@@ -170,16 +170,10 @@ private[graft] object PackedKind {
       val from = ranges(j)
       val until = ranges(j + 1)
       if (!whole) metric.rankKeys(q, blk.payload, from, until, keys, from)
-      offer(blk.ids, keys, from, until, heap)
+      var r = from
+      while (r < until) { heap.insert(blk.ids(r), keys(r)); r += 1 }
       j += 2
     }
-  }
-
-  /** Rows [from, until) into the heap at their keys `keys(r)`. */
-  private def offer(ids: Array[Long], keys: Array[Double], from: Int, until: Int,
-      heap: BoundedTopK): Unit = {
-    var r = from
-    while (r < until) { heap.insert(ids(r), keys(r)); r += 1 }
   }
 
   /** IVF probe ranking's clamp (ivf.go:127-129): nprobe in [1, nlist]. */
