@@ -44,16 +44,9 @@ private[graft] final case class Block[D](
   /** In a grouped block: the row ranges of the probed tags `probes`
     * that have rows here, as (from, until) pairs in probe order. */
   def ranges(probes: Array[Int]): Array[Int] = {
-    val out = new Array[Int](2 * probes.length)
-    var n = 0
-    var i = 0
-    while (i < probes.length) {
-      val from = firstRow(probes(i))
-      val until = firstRow(probes(i) + 1L)
-      if (from < until) { out(n) = from; out(n + 1) = until; n += 2 }
-      i += 1
-    }
-    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    val out = scala.collection.mutable.ArrayBuilder.make[Int]
+    foreachRange(probes) { (_, from, until) => out += from; out += until }
+    out.result()
   }
 
   /** In a grouped block: `range(i, from, until)` for each probed tag
