@@ -70,6 +70,13 @@ private[graft] final case class Block[D](
 private[graft] final case class Pack[A](payload: String, tag: Option[String],
     grouped: Boolean = false, width: Option[Int] = None)(implicit val elem: ClassTag[A])
 
+/** Packs a served index's partitions into [[Block]]s, in one of two
+  * payload layouts:
+  *  - [[packPartition]]: codes row-major, row r's `width` codes at
+  *    offset r·width (PQ, OPQ, IVFPQ, SQ8, IVF×SQ8, BQ);
+  *  - [[packColumns]]: vectors as one array per dimension, `payload(i)(r)`
+  *    row r's component i (flat, IVF, LSH). No row-major copy is kept.
+  * A grouped pack's rows are sorted by tag in both layouts. */
 private[graft] object ServeBlocks {
 
   /** Serving partition count: enough for parallel scan, few enough that
