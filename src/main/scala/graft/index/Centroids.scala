@@ -81,8 +81,8 @@ object Centroids {
     /** Cached vector sample for Lloyd's iterations. */
     lazy val data: RDD[Array[Double]] = base
       .where(col("id") <= sortedIds.last)
-      .select(col("vec"))
-      .rdd.map(_.getSeq[Double](0).toArray)
+      .select(col("id"), col("vec"))
+      .rdd.map(r => finiteRow(r.getLong(0), r.getSeq[Double](1).toArray))
       .cache()
 
     /** The whole sample collected once, in ascending-id order (ids are
@@ -94,14 +94,7 @@ object Centroids {
       .select(col("id"), col("vec"))
       .collect()
       .sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toArray)
-
-    /** Strided init from the already-collected sample — row rank j·stride
-      * in id order, exactly what [[stridedInit]] computes distributively. */
-    def stridedInitLocal(k: Int): Array[Array[Double]] = {
-      val stride = math.max(1L, n / k)
-      Array.tabulate(k)(j => localData((j * stride).toInt))
-    }
+      .map(r => finiteRow(r.getLong(0), r.getSeq[Double](1).toArray))
 
     /** Strided init (ivf.go:280-290 / pq.go:280-290): the vectors at
       * id-ranks 0, stride, 2·stride, … — fetched by a broadcast semi-join
@@ -118,6 +111,18 @@ object Centroids {
     }
 
     def unpersist(): Unit = data.unpersist()
+  }
+
+  /** A sample row, checked: a NaN or ±∞ component has no mean and no
+    * nearest codeword, so training rejects the row by id and component. */
+  private def finiteRow(id: Long, v: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < v.length) {
+      require(!v(i).isNaN && !v(i).isInfinite,
+        s"training vector id $id has a non-finite component ${v(i)} at index $i")
+      i += 1
+    }
+    v
   }
 
   private[graft] def trainingSample(vectors: DataFrame, cap: Int,
@@ -140,167 +145,32 @@ object Centroids {
     * distributed path. 2^24 doubles ≈ 128 MB driver heap. */
   private[graft] val LocalTrainBudget: Long = 1L << 24
 
-  /** Production trainer: Lloyd's with the reference's exact semantics —
-    * strided init over the (id-ordered) training sample, ≤ maxIter
-    * iterations, early exit when centroids stop moving (ivf.go:255-317;
-    * the reference's comment says k-means++ but the code is plain
-    * striding — SURVEY.md A2 ⚠). Assignment uses the configured metric,
-    * as the reference does (ivf.go:133-135); the update step is the
-    * plain mean, also as the reference does. Empty clusters keep their
-    * previous centroid (ivf.go:296-314).
+  /** Production trainer: [[Lloyd]]'s k-means over the whole vector
+    * (m = 1) with the reference's semantics — strided init over the
+    * id-ordered training sample, ≤ maxIter iterations, early exit when
+    * centroids stop moving (ivf.go:255-317; the reference's comment says
+    * k-means++ but the code is plain striding — SURVEY.md A2 ⚠).
+    * Assignment uses the configured metric, as the reference does
+    * (ivf.go:133-135); the update step is the plain mean, also as the
+    * reference does. Empty clusters keep their previous centroid
+    * (ivf.go:296-314). A sample row with a NaN or ±∞ component is
+    * rejected.
     *
     * Samples within [[LocalTrainBudget]] are collected once and iterated
-    * on the driver ([[lloydLocal]]); above it, each iteration is one
-    * treeAggregate pass: closure argmin + per-cluster sum/count in
-    * primitive arrays — no explode, no shuffle of per-component rows,
-    * only the k×dim matrix reaches the driver. Both paths outperform
-    * MLlib's RDD KMeans by >10× at quantizer shapes (k∈[100,256], capped
-    * training — measured in Bench) while staying deterministic. `seed`
-    * is accepted for API compatibility; determinism comes from the
-    * strided init, as in the reference. */
+    * on the driver; above it, each iteration is one treeAggregate pass —
+    * no explode, no shuffle of per-component rows, only the k×dim sums
+    * reach the driver. Both loops outperform MLlib's RDD KMeans by >10×
+    * at quantizer shapes (k∈[100,256], capped training — measured in
+    * Bench) while staying deterministic. `seed` is accepted for API
+    * compatibility; determinism comes from the strided init, as in the
+    * reference. */
   def kMeans(vectors: DataFrame, k: Int, seed: Long = 42L, maxIter: Int = 10,
       vecCol: String = "vec", idCol: String = "id",
       metric: Metric = Metric.L2,
       sampleCap: Int = DefaultTrainCap): Seq[Seq[Double]] = {
     val ts = trainingSample(vectors, sampleCap, idCol, vecCol)
-    val n = ts.n
-    require(n > 0, "cannot train k-means on an empty vector table")
-    val kk = math.max(1, math.min(k.toLong, n).toInt)
+    require(ts.n > 0, "cannot train k-means on an empty vector table")
     val dim = vectors.select(size(col(vecCol))).first().getInt(0)
-    val cents =
-      if (n * dim <= LocalTrainBudget)
-        lloydLocal(ts.localData, ts.stridedInitLocal(kk), metric, maxIter)
-      else
-        lloydDistributed(vectors.sparkSession.sparkContext, ts, kk, metric, maxIter)
-    ts.unpersist()
-    cents
-  }
-
-  /** One sequential Lloyd's over the collected sample — the same
-    * assignment (metric argmin, ties toward the lower cluster id), mean
-    * update, empty-cluster and early-exit rules as [[lloydDistributed]];
-    * rows fold in ascending-id order so the result is deterministic.
-    * Centroids differ from the distributed path only by floating-point
-    * summation grouping (per-partition partial sums vs one running sum). */
-  private[graft] def lloydLocal(data: Array[Array[Double]], init: Array[Array[Double]],
-      metric: Metric, maxIter: Int): Seq[Seq[Double]] = {
-    val kk = init.length
-    val dim = init.head.length
-    val isL2 = metric == Metric.L2
-    var cents: Array[Array[Double]] = init.map(_.clone())
-    var iter = 0
-    var moved = true
-    val bestIdx = new Array[Int](data.length)
-    while (iter < maxIter && moved) {
-      val sums = Array.ofDim[Double](kk, dim)
-      val counts = new Array[Long](kk)
-      // assignment: pure per row — parallel, each row's argmin lands in
-      // its own slot (bit-identical to the sequential loop; DriverPar)
-      val frozen = cents
-      DriverPar.foreach(data.length) { r =>
-        val v = data(r)
-        var best = -1
-        var bestD = Double.MaxValue
-        var ci = 0
-        while (ci < kk) {
-          val row = frozen(ci)
-          var d = 0.0
-          if (isL2) {
-            var i = 0
-            while (i < dim && d < bestD) { val t = v(i) - row(i); d += t * t; i += 1 }
-          } else d = metric.rankKeyScalar(v, row)
-          if (d < bestD) { bestD = d; best = ci }
-          ci += 1
-        }
-        bestIdx(r) = best
-      }
-      // accumulation: sequential in ascending row order — the adds and
-      // their order are exactly the pre-parallel loop's
-      var r = 0
-      while (r < data.length) {
-        val v = data(r)
-        val target = sums(bestIdx(r))
-        var i = 0
-        while (i < dim) { target(i) += v(i); i += 1 }
-        counts(bestIdx(r)) += 1
-        r += 1
-      }
-      var anyMoved = false
-      val next = Array.tabulate(kk) { ci =>
-        if (counts(ci) > 0) {
-          val nv = sums(ci).map(_ / counts(ci))
-          if (!anyMoved) {
-            var i = 0
-            while (i < dim && !anyMoved) {
-              if (math.abs(nv(i) - cents(ci)(i)) > 1e-12) anyMoved = true
-              i += 1
-            }
-          }
-          nv
-        } else cents(ci)
-      }
-      moved = anyMoved
-      cents = next
-      iter += 1
-    }
-    cents.map(_.toVector).toVector
-  }
-
-  private[graft] def lloydDistributed(sc: org.apache.spark.SparkContext, ts: TrainSample,
-      kk: Int, metric: Metric, maxIter: Int): Seq[Seq[Double]] = {
-    // strided init: every ⌊n/k⌋-th vector in id order
-    var cents: Seq[Seq[Double]] = ts.stridedInit(kk).map(_.toVector).toVector
-    val sample = ts.data
-    val dim = cents.head.size
-    val isL2 = metric == Metric.L2
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      val bc = sc.broadcast(cents.map(_.toArray).toArray)
-      val (sums, counts) = sample.treeAggregate(
-        (Array.ofDim[Double](kk, dim), new Array[Long](kk)))(
-        seqOp = { case ((s, c), v) =>
-          val cb = bc.value
-          var best = -1
-          var bestD = Double.MaxValue
-          var ci = 0
-          while (ci < cb.length) {
-            val row = cb(ci)
-            var d = 0.0
-            if (isL2) {
-              var i = 0
-              while (i < dim && d < bestD) { val t = v(i) - row(i); d += t * t; i += 1 }
-            } else d = metric.rankKeyScalar(v, row)
-            if (d < bestD) { bestD = d; best = ci }
-            ci += 1
-          }
-          val target = s(best)
-          var i = 0
-          while (i < dim) { target(i) += v(i); i += 1 }
-          c(best) += 1
-          (s, c)
-        },
-        combOp = { case ((s1, c1), (s2, c2)) =>
-          var ci = 0
-          while (ci < kk) {
-            val a = s1(ci); val b = s2(ci)
-            var i = 0
-            while (i < dim) { a(i) += b(i); i += 1 }
-            c1(ci) += c2(ci)
-            ci += 1
-          }
-          (s1, c1)
-        })
-      bc.destroy()
-      val next = cents.indices.map { ci =>
-        if (counts(ci) > 0) sums(ci).map(_ / counts(ci)).toVector else cents(ci)
-      }.toVector
-      moved = cents.iterator.zip(next.iterator).exists { case (a, b) =>
-        a.iterator.zip(b.iterator).exists { case (x, y) => math.abs(x - y) > 1e-12 }
-      }
-      cents = next
-      iter += 1
-    }
-    cents
+    Lloyd.train(ts, k, 1, dim, metric, maxIter)(0).map(_.toVector).toVector
   }
 }

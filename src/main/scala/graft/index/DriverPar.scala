@@ -1,8 +1,10 @@
 package graft.index
 
 /** Deterministic driver-side parallel loops for the local quantizer
-  * trainers ([[Centroids.lloydLocal]], [[PqIndex.lloydLocalPq]],
-  * [[OpqIndex.train]]).
+  * trainer ([[Lloyd.local]], behind IVF, PQ and OPQ training, and
+  * [[OpqIndex.train]]'s rotate/reconstruct steps), and the one per-call
+  * thread loop ([[fanOut]]) that executor-side batch serving
+  * ([[graft.query.TaskFanout]]) shares under its own width rule.
   *
   * Those trainers run on the driver over the capped training sample, and
   * before this helper their hot phase — the per-row nearest-centroid /
@@ -45,12 +47,20 @@ private[graft] object DriverPar {
     math.max(1, math.min(p, avail))
   }
 
-  /** Run `fn(i)` for every i in [0, n). `fn` must be pure per index
-    * (reads shared immutable state, writes only slot i of pre-allocated
-    * outputs). Falls back to the plain sequential loop when the work is
-    * too small to amortize thread start. */
-  def foreach(n: Int, chunk: Int = 256)(fn: Int => Unit): Unit = {
-    val w = math.min(width(), math.max(1, n / chunk))
+  /** Run `fn(i)` for every i in [0, n) at the trainer [[width]]. `fn`
+    * must be pure per index (reads shared immutable state, writes only
+    * slot i of pre-allocated outputs). Falls back to the plain sequential
+    * loop when the work is too small to amortize thread start. */
+  def foreach(n: Int, chunk: Int = 256)(fn: Int => Unit): Unit =
+    fanOut(n, width(), chunk)(fn)
+
+  /** Run `fn(i)` for every i in [0, n) on at most `width` daemon threads,
+    * never more than n / `chunk` of them, each taking `chunk` indices at a
+    * time from an atomic cursor; sequential when that leaves one thread.
+    * `fn` must be safe to run concurrently for distinct i. The first
+    * worker throwable is rethrown on the calling thread after join. */
+  def fanOut(n: Int, width: Int, chunk: Int)(fn: Int => Unit): Unit = {
+    val w = math.min(width, math.max(1, n / chunk))
     if (w <= 1) {
       var i = 0
       while (i < n) { fn(i); i += 1 }
@@ -69,7 +79,7 @@ private[graft] object DriverPar {
             lo = next.getAndAdd(chunk)
           }
         } catch { case e: Throwable => err.compareAndSet(null, e) }
-      }, s"graft-train-par-$wi")
+      }, s"graft-fanout-$wi")
       t.setDaemon(true)
       t
     }

@@ -20,7 +20,8 @@ import graft.functions.VectorFunctions
   * Training alternates (on the capped deterministic sample, driver-local
   * like every quantizer trainer here — the rotation update is a dim×dim
   * SVD, pure scheduler overhead as ~10 Spark jobs):
-  *   1. fit PQ codebooks to the rotated sample (PqIndex.lloydLocalPq);
+  *   1. fit PQ codebooks to the rotated sample ([[Lloyd.local]], the
+  *      driver-local loop of PQ's trainer);
   *   2. Procrustes rotation update: with C = Σᵣ xᵣ·ŷᵣᵀ (ŷ = the sample's
   *      PQ reconstruction), svd(C) = U·S·Vᵀ gives R = V·Uᵀ — the
   *      orthogonal minimizer of Σ‖R·x − ŷ‖².
@@ -65,19 +66,7 @@ object OpqIndex {
     var mi = 0
     while (mi < m) {
       val off = mi * dsub
-      val book = cbs(mi)
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < book.length) {
-        val row = book(j)
-        var d = 0.0
-        var i = 0
-        while (i < dsub && d < bestD) { val t = y(off + i) - row(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
-      }
-      System.arraycopy(book(best), 0, out, off, dsub)
+      System.arraycopy(cbs(mi)(Lloyd.nearest(y, off, cbs(mi), Metric.L2)), 0, out, off, dsub)
       mi += 1
     }
     out
@@ -112,13 +101,6 @@ object OpqIndex {
   private def identity(d: Int): Array[Array[Double]] =
     Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)
 
-  private def stridedInit(data: Array[Array[Double]], kk: Int, m: Int,
-      dsub: Int): Array[Array[Array[Double]]] = {
-    val stride = math.max(1, data.length / kk)
-    Array.tabulate(m, kk)((mi, j) =>
-      data((j * stride) % data.length).slice(mi * dsub, (mi + 1) * dsub))
-  }
-
   /** Train rotation + codebooks. Deterministic: capped smallest-id
     * sample, identity init, strided codebook init, LAPACK SVD — no RNG
     * anywhere. `opqIters` alternations of (codebook fit, rotation
@@ -150,7 +132,7 @@ object OpqIndex {
     }
     while (it < opqIters) {
       val y = rotateAll(rot)
-      val cbs = PqIndex.lloydLocalPq(y, stridedInit(y, kk, m, dsub), dsub, maxIter = 4)
+      val cbs = Lloyd.local(y, Lloyd.stridedInit(y, kk, m), Metric.L2, maxIter = 4)
       val yHats = new Array[Array[Double]](x.length)
       DriverPar.foreach(x.length, chunk = 64) { i => yHats(i) = reconstruct(y(i), cbs, dsub) }
       // C = Xᵀ·Ŷ accumulated row by row (dim×dim, ≤ 4.7 MB at dim 768)
@@ -179,8 +161,7 @@ object OpqIndex {
       it += 1
     }
     val yFinal = rotateAll(rot)
-    val cbs = PqIndex.lloydLocalPq(
-      yFinal, stridedInit(yFinal, kk, m, dsub), dsub, maxIter = 10)
+    val cbs = Lloyd.local(yFinal, Lloyd.stridedInit(yFinal, kk, m), Metric.L2, maxIter = 10)
     OpqModel(rot.map(_.toVector).toVector,
       PqModel(cbs.map(_.map(_.toVector).toVector).toVector, metric))
   }

@@ -40,191 +40,25 @@ object PqIndex {
     require(nbits >= 1 && nbits <= 16, s"nbits must be in [1,16], got $nbits")
   }
 
-  /** Production trainer: M per-subspace Lloyd's fits run *jointly* — one
-    * treeAggregate pass per iteration updates all M codebooks at once
-    * (pq.go:273-343 kMeansSubspace semantics: strided init, ≤10 iters,
-    * early exit; running the subspaces jointly turns 10·M Spark jobs into
-    * 10). */
+  /** Production trainer: the M per-subspace Lloyd's fits run *jointly*
+    * in one [[Lloyd]] pass per iteration that updates all M codebooks at
+    * once (pq.go:273-343 kMeansSubspace semantics: strided init, ≤10
+    * iters, early exit; running the subspaces jointly turns 10·M Spark
+    * jobs into 10 above the driver-local budget). Codewords are fitted
+    * under L2 whatever `metric` the model serves. A sample row with a NaN
+    * or ±∞ component is rejected. */
   def train(vectors: DataFrame, m: Int, nbits: Int, metric: Metric,
       seed: Long = 42L, maxIter: Int = 10,
       sampleCap: Int = Centroids.DefaultTrainCap): PqModel = {
     val dim = vectors.select(size(col("vec"))).first().getInt(0)
     validate(dim, m, nbits)
-    val ksub = 1 << nbits
-    val dsub = dim / m
     // shared capped deterministic sample (VERDICT r2 #6: the previous
     // unpartitioned ranking window serialized the corpus through one task,
     // and the uncapped full-corpus cache broke the 100 TB training bound)
     val ts = Centroids.trainingSample(vectors, sampleCap, "id", "vec")
-    val n = ts.n
-    require(n > 0, "cannot train PQ on an empty vector table")
-    val kk = math.max(1, math.min(ksub.toLong, n).toInt)
-    // strided init per subspace over the same sample rows (pq.go:280-290)
-    def initCbs(sample: Array[Array[Double]]): Array[Array[Array[Double]]] =
-      Array.tabulate(m, kk)((mi, j) => sample(j).slice(mi * dsub, (mi + 1) * dsub))
-    val cbs =
-      if (n * dim <= Centroids.LocalTrainBudget)
-        lloydLocalPq(ts.localData, initCbs(ts.stridedInitLocal(kk)), dsub, maxIter)
-      else
-        lloydDistributedPq(vectors.sparkSession.sparkContext, ts,
-          initCbs(ts.stridedInit(kk)), dsub, maxIter)
-    ts.unpersist()
+    require(ts.n > 0, "cannot train PQ on an empty vector table")
+    val cbs = Lloyd.train(ts, 1 << nbits, m, dim / m, Metric.L2, maxIter)
     PqModel(cbs.map(_.map(_.toVector).toVector).toVector, metric)
-  }
-
-  /** Sequential joint-subspace Lloyd's over the collected sample — same
-    * assignment, mean-update, empty-cell and early-exit rules as
-    * [[lloydDistributedPq]]; rows fold in ascending-id order (see
-    * [[Centroids.lloydLocal]] on why small samples train driver-locally). */
-  private[graft] def lloydLocalPq(data: Array[Array[Double]],
-      init: Array[Array[Array[Double]]], dsub: Int,
-      maxIter: Int): Array[Array[Array[Double]]] = {
-    val m = init.length
-    val kk = init(0).length
-    var cbs = init
-    var iter = 0
-    var moved = true
-    val bestCodes = new Array[Int](data.length * m)
-    while (iter < maxIter && moved) {
-      val sums = Array.ofDim[Double](m, kk, dsub)
-      val counts = Array.ofDim[Long](m, kk)
-      // assignment: pure per row — parallel, the m argmins land in the
-      // row's own slots (bit-identical to the sequential loop; DriverPar)
-      val frozen = cbs
-      DriverPar.foreach(data.length) { r =>
-        val v = data(r)
-        var mi = 0
-        while (mi < m) {
-          val book = frozen(mi)
-          val off = mi * dsub
-          var best = -1
-          var bestD = Double.MaxValue
-          var j = 0
-          while (j < book.length) {
-            val row = book(j)
-            var d = 0.0
-            var i = 0
-            while (i < dsub && d < bestD) { val t = v(off + i) - row(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = j }
-            j += 1
-          }
-          bestCodes(r * m + mi) = best
-          mi += 1
-        }
-      }
-      // accumulation: sequential in ascending (row, subspace) order — the
-      // adds and their order are exactly the pre-parallel loop's
-      var r = 0
-      while (r < data.length) {
-        val v = data(r)
-        var mi = 0
-        while (mi < m) {
-          val best = bestCodes(r * m + mi)
-          val off = mi * dsub
-          val target = sums(mi)(best)
-          var i = 0
-          while (i < dsub) { target(i) += v(off + i); i += 1 }
-          counts(mi)(best) += 1
-          mi += 1
-        }
-        r += 1
-      }
-      var anyMoved = false
-      val next = Array.tabulate(m, kk) { (mi, j) =>
-        if (counts(mi)(j) > 0) {
-          val nv = sums(mi)(j).map(_ / counts(mi)(j))
-          if (!anyMoved) {
-            val old = cbs(mi)(j)
-            var i = 0
-            while (i < dsub && !anyMoved) {
-              if (math.abs(nv(i) - old(i)) > 1e-12) anyMoved = true
-              i += 1
-            }
-          }
-          nv
-        } else cbs(mi)(j)
-      }
-      moved = anyMoved
-      cbs = next
-      iter += 1
-    }
-    cbs
-  }
-
-  private[graft] def lloydDistributedPq(sc: org.apache.spark.SparkContext,
-      ts: Centroids.TrainSample, init: Array[Array[Array[Double]]], dsub: Int,
-      maxIter: Int): Array[Array[Array[Double]]] = {
-    val m = init.length
-    val kk = init(0).length
-    var cbs = init
-    val data = ts.data
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      val bc = sc.broadcast(cbs)
-      val (sums, counts) = data.treeAggregate(
-        (Array.ofDim[Double](m, kk, dsub), Array.ofDim[Long](m, kk)))(
-        seqOp = { case ((s, c), v) =>
-          val cb = bc.value
-          var mi = 0
-          while (mi < m) {
-            val book = cb(mi)
-            val off = mi * dsub
-            var best = -1
-            var bestD = Double.MaxValue
-            var j = 0
-            while (j < book.length) {
-              val row = book(j)
-              var d = 0.0
-              var i = 0
-              while (i < dsub && d < bestD) { val t = v(off + i) - row(i); d += t * t; i += 1 }
-              if (d < bestD) { bestD = d; best = j }
-              j += 1
-            }
-            val target = s(mi)(best)
-            var i = 0
-            while (i < dsub) { target(i) += v(off + i); i += 1 }
-            c(mi)(best) += 1
-            mi += 1
-          }
-          (s, c)
-        },
-        combOp = { case ((s1, c1), (s2, c2)) =>
-          var mi = 0
-          while (mi < m) {
-            var j = 0
-            while (j < kk) {
-              val a = s1(mi)(j); val b = s2(mi)(j)
-              var i = 0
-              while (i < dsub) { a(i) += b(i); i += 1 }
-              c1(mi)(j) += c2(mi)(j)
-              j += 1
-            }
-            mi += 1
-          }
-          (s1, c1)
-        })
-      bc.destroy()
-      var anyMoved = false
-      val next = Array.tabulate(m, kk) { (mi, j) =>
-        if (counts(mi)(j) > 0) {
-          val nv = sums(mi)(j).map(_ / counts(mi)(j))
-          if (!anyMoved) {
-            val old = cbs(mi)(j)
-            var i = 0
-            while (i < dsub && !anyMoved) {
-              if (math.abs(nv(i) - old(i)) > 1e-12) anyMoved = true
-              i += 1
-            }
-          }
-          nv
-        } else cbs(mi)(j)
-      }
-      moved = anyMoved
-      cbs = next
-      iter += 1
-    }
-    cbs
   }
 
   /** Deterministic trainer: codebook[m][j] = mean subvector over ids with

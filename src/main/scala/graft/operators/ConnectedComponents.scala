@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * verified near-duplicate PAIRS into duplicate GROUPS (pick one keeper
   * per component, drop the rest).
   *
-  * Two paths under one contract (the Centroids.lloydLocal pattern —
-  * bounded driver-local fast path, distributed general path above it):
+  * Two paths under one contract (the quantizer trainer's pattern,
+  * [[graft.index.Lloyd]] — bounded driver-local fast path, distributed
+  * general path above it):
   *
   *  - edge sets under [[LocalEdgeBudget]] collect to the driver and run
   *    union-find (the NODE table is never collected — only edge-touched

@@ -10,8 +10,6 @@ package graft.query
   * unrelated tasks' batches through one shared pool. This helper gives
   * each TASK its own bounded worker set instead:
   *
-  *  - `spark.graft.serve.batchThreadsPerTask` (explicit serving-mode
-  *    config) wins when set;
   *  - under a `local[...]` master the serving layer owns the whole JVM,
   *    and a job runs one task per partition that holds packs, so each of
   *    its `tasks` takes cores/tasks — the same total width the common
@@ -19,10 +17,11 @@ package graft.query
   *    fewer partitions than [[ServeBlocks.ServePartitions]] packs into
   *    fewer (coalescing never adds one), and cores/ServePartitions would
   *    leave the rest of the machine idle;
-  *  - on a cluster the default is `spark.task.cpus`, the cores this task
-  *    was actually allotted.
+  *  - on a cluster it is `spark.task.cpus`, the cores this task was
+  *    actually allotted.
   *
-  * Threads are created per call (a batch is ≥ hundreds of walks — μs of
+  * The loop is [[graft.index.DriverPar.fanOut]], one query at a time:
+  * threads are created per call (a batch is ≥ hundreds of walks — μs of
   * thread setup against ms of work) so concurrent tasks never share a
   * pool; work is handed out by an atomic cursor, and the first worker
   * throwable is rethrown on the calling thread after join.
@@ -40,9 +39,7 @@ private[query] object TaskFanout {
     if (env == null) math.max(1, Runtime.getRuntime.availableProcessors())
     else {
       val conf = env.conf
-      val explicit = conf.getInt("spark.graft.serve.batchThreadsPerTask", -1)
-      if (explicit > 0) explicit
-      else if (conf.get("spark.master", "").startsWith("local"))
+      if (conf.get("spark.master", "").startsWith("local"))
         math.max(1, Runtime.getRuntime.availableProcessors() / math.max(1, tasks))
       else math.max(1, conf.getInt("spark.task.cpus", 1))
     }
@@ -54,28 +51,6 @@ private[query] object TaskFanout {
   /** Run `fn(i)` for every i in [0, n), at most `width` at a time.
     * `fn` must be safe to run concurrently for distinct i (the serving
     * kernels give each query its own heap; graphs are read-only). */
-  def foreach(n: Int, width: Int)(fn: Int => Unit): Unit = {
-    val w = math.min(width, n)
-    if (w <= 1) {
-      var i = 0
-      while (i < n) { fn(i); i += 1 }
-    } else {
-      val next = new java.util.concurrent.atomic.AtomicInteger(0)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable](null)
-      val workers = Array.tabulate(w) { wi =>
-        val t = new Thread(() => {
-          try {
-            var i = next.getAndIncrement()
-            while (i < n && err.get() == null) { fn(i); i = next.getAndIncrement() }
-          } catch { case e: Throwable => err.compareAndSet(null, e) }
-        }, s"graft-serve-fanout-$wi")
-        t.setDaemon(true)
-        t
-      }
-      workers.foreach(_.start())
-      workers.foreach(_.join())
-      val e = err.get()
-      if (e != null) throw e
-    }
-  }
+  def foreach(n: Int, width: Int)(fn: Int => Unit): Unit =
+    graft.index.DriverPar.fanOut(n, width, chunk = 1)(fn)
 }
